@@ -8,6 +8,32 @@ the environment. Session timezone defaults to UTC so results are directly
 comparable with the DuckDB oracle; the reference's GMT+8 rendering
 (R/utils/DateFormatUtil.java:21) is available via functions.datetime.GMALL_TZ
 for the reference-faithful pipelines.
+
+Driver JIT policy. A fresh driver spends about half of its first-query CPU
+in the JIT compiler threads, and C2 (the optimizing tier) takes most of
+that compiling code that runs once per query rather than the data path:
+ASM class spinning (JDK lambda forms, ClosureCleaner), the ANTLR parser,
+Janino, Jackson and task deserialization. ``get_spark`` therefore puts
+``JIT_POLICY`` into ``spark.driver.defaultJavaOptions``. It raises only
+the tier-4 (C2) invocation and compile thresholds; C1 and the tier-4
+back-edge (OSR) threshold keep their defaults, so hot data-path loops and
+methods still reach C2, later. The launcher puts ``defaultJavaOptions``
+ahead of ``spark.driver.extraJavaOptions``, so a caller's extra options
+still apply, and a caller's own ``defaultJavaOptions`` in ``extra_conf``
+replaces the policy. The options only take effect when ``getOrCreate``
+launches a new driver JVM.
+
+Rejected by measurement (BENCHNOTES.md, "Driver JIT policy"):
+  - C1 only (``-XX:TieredStopAtLevel=1``) halves the cold CPU but never
+    optimizes the data path: executor CPU of a streaming run about
+    doubled and its latency tail passed the 10 s limit. It also shrinks
+    the reserved code cache from 240 MB to 48 MB.
+  - Delaying tier 3, or ``-XX:CompileThresholdScaling`` (which also scales
+    the back-edge thresholds), raised the warm streaming trigger time
+    from about 2.5 s to 3.6-4.5 s.
+  - Fewer compiler threads (``-XX:CICompilerCount=2``) gave no gain.
+  - 20x the default tier-4 thresholds (10x is used) cut more C2 time but
+    pushed a streaming latency tail past its limit.
 """
 
 from __future__ import annotations
@@ -15,6 +41,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=50000 "
+    "-XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000"
+)
 
 
 def default_parallelism() -> int:
@@ -37,6 +70,7 @@ def get_spark(
       - ``spark.sql.shuffle.partitions`` is only the pre-AQE upper bound; on a
         real cluster set it ~2-3x total cores, AQE coalesces the rest.
       - Arrow enabled so any pandas UDF exchange is columnar-batched.
+      - The driver JVM starts with ``JIT_POLICY`` (module docstring).
     """
     cpus = default_parallelism()
     builder = (
@@ -54,6 +88,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.driver.defaultJavaOptions", JIT_POLICY)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from gmall_flink_230422_spark.operators import dedup, text
@@ -67,7 +68,8 @@ def test_shingle_k13_slice_form_equals_element_at_chain(spark):
         .select(F.col("doc_id"), F.explode(F.array_distinct(arr)).alias("shingle"))
     )
     assert via_slice == via_chain
-    # the 40-token doc yields 28 distinct 13-grams; the short docs none
+    # the 40-token doc yields 28 positional 13-grams, 17 of them distinct
+    # (its tokens repeat with period 17); the short docs none
     assert len({s for d_, s in via_slice if d_ == 1}) == 8
 
 
@@ -149,7 +151,7 @@ def test_materialize_modes_agree(spark):
     prev = os.environ.get(key)
     outs = {}
     try:
-        for mode in ("eager_ckpt", "cache", "none"):
+        for mode in ("eager_ckpt", "lazy_ckpt", "cache", "none"):
             os.environ[key] = mode
             outs[mode] = sorted(map(tuple, spec.fn(spark, sf).collect()))
     finally:
@@ -157,4 +159,14 @@ def test_materialize_modes_agree(spark):
             os.environ.pop(key, None)
         else:
             os.environ[key] = prev
-    assert outs["eager_ckpt"] == outs["cache"] == outs["none"]
+    assert outs["eager_ckpt"] == outs["lazy_ckpt"] == outs["cache"] == outs["none"]
+
+
+def test_materialize_rejects_unknown_mode(spark, monkeypatch):
+    """An unknown SPARK_GRAFT_MATERIALIZE value (a typo such as ``lazy``)
+    fails loudly instead of silently running the default mode."""
+    from gmall_flink_230422_spark.plans.llm import _materialize
+
+    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "lazy")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_MATERIALIZE='lazy'"):
+        _materialize(spark.range(3))
