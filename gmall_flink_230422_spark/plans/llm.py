@@ -3534,10 +3534,8 @@ def q_select_pipeline(spark, sf_dir):
     # lookup/normalization overhead on every downstream analysis);
     # the checkpoint form measured 1.77 -> 0.69 s warm min-of-10
     # interleaved, output bit-identical. Materialized through
-    # _materialize, whose default is the eager_ckpt local checkpoint: a
-    # controlled same-machine A/B measured it equal or better than the
-    # truly-lazy form cold and warm (x_select_pipeline 11.4/0.77 s vs
-    # 14.1/2.38 s; numbers in _materialize's docstring).
+    # _materialize, whose default is the eager_ckpt local checkpoint
+    # (see its docstring).
     flags = _materialize(flags)
     # CCNet t2 (head+middle boundary) over stage-2 survivors with a score
     surv = flags.filter(F.col("k2") & F.col("avg_surprisal").isNotNull())

@@ -23,17 +23,11 @@ still apply, and a caller's own ``defaultJavaOptions`` in ``extra_conf``
 replaces the policy. The options only take effect when ``getOrCreate``
 launches a new driver JVM.
 
-Rejected by measurement (BENCHNOTES.md, "Driver JIT policy"):
-  - C1 only (``-XX:TieredStopAtLevel=1``) halves the cold CPU but never
-    optimizes the data path: executor CPU of a streaming run about
-    doubled and its latency tail passed the 10 s limit. It also shrinks
-    the reserved code cache from 240 MB to 48 MB.
-  - Delaying tier 3, or ``-XX:CompileThresholdScaling`` (which also scales
-    the back-edge thresholds), raised the warm streaming trigger time
-    from about 2.5 s to 3.6-4.5 s.
-  - Fewer compiler threads (``-XX:CICompilerCount=2``) gave no gain.
-  - 20x the default tier-4 thresholds (10x is used) cut more C2 time but
-    pushed a streaming latency tail past its limit.
+C1 only (``-XX:TieredStopAtLevel=1``) was rejected: it halves the cold
+CPU but never optimizes the data path, so executor CPU of a streaming run
+about doubled and its latency tail passed the 10 s limit. The other
+settings tried and the measurements are in BENCHNOTES.md, "Driver JIT
+policy".
 """
 
 from __future__ import annotations

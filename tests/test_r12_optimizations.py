@@ -68,9 +68,12 @@ def test_shingle_k13_slice_form_equals_element_at_chain(spark):
         .select(F.col("doc_id"), F.explode(F.array_distinct(arr)).alias("shingle"))
     )
     assert via_slice == via_chain
-    # the 40-token doc yields 28 positional 13-grams, 17 of them distinct
-    # (its tokens repeat with period 17); the short docs none
+    # doc 1 (20 tokens) yields 8 13-grams; doc 3 (40 tokens) yields 28
+    # positional 13-grams, 17 of them distinct (its tokens repeat with
+    # period 17); docs 5 and 6 (under 13 tokens) none
     assert len({s for d_, s in via_slice if d_ == 1}) == 8
+    assert len({s for d_, s in via_slice if d_ == 3}) == 17
+    assert not {d_ for d_, _ in via_slice} & {5, 6}
 
 
 def test_backoff_lm_scan_repeat_bounded(spark):

@@ -1,11 +1,11 @@
 """Split a Spark driver's CPU time over one benchmark phase by thread class.
 
     python tools/jvm_cpu.py --workload log_stream [--phase cold|run] [--reps 3]
-        [--seed 1] [--cores 4] [--java-options "-XX:TieredStopAtLevel=1"] [--json]
+        [--seed 1] [--java-options "-XX:TieredStopAtLevel=1"] [--json]
 
-Starts a fresh driver the way ``perfbench/worker.py`` does, runs one
-benchmark phase in it and prints the CPU seconds its process group spent
-there, by thread class:
+Starts a fresh driver the way ``perfbench/worker.py`` does (``local[4]``,
+the benchmark's 12 s run length), runs one benchmark phase in it and
+prints the CPU seconds its process group spent there, by thread class:
 
   c2, c1      the JIT compiler threads (``C2 CompilerThre``, ``C1 CompilerThre``)
   gc          G1 threads (``GC Thread#N``, ``G1 *``)
@@ -56,6 +56,8 @@ CLASSES = ("c2", "c1", "gc", "executor", "driver", "jvm_other", "jvm_exited", "p
 RUN_METRICS = ("cold_cpu_s", "warm_s", "capacity_eps", "latency_tail_ms")
 TICK = os.sysconf("SC_CLK_TCK")
 SAMPLE_S = 0.2
+CORES = 4  # local[N], as BENCHMARK.json runs perfbench
+SECONDS = 12.0  # BENCHMARK.json's run_seconds
 
 
 def thread_class(comm: str) -> str:
@@ -213,7 +215,7 @@ def measure(args) -> dict:
         spark = _spark(run_root, args.java_options)
         specs = registry()
         spans = tracing.Spans(run_id="jvm_cpu")
-        wargs = argparse.Namespace(run_root=run_root, seed=args.seed, seconds=args.seconds,
+        wargs = argparse.Namespace(run_root=run_root, seed=args.seed, seconds=SECONDS,
                                    inject_wrong_checksum=False)
         sampler = PhaseSampler().start()
         rec = {}
@@ -246,16 +248,13 @@ def main() -> int:
     ap.add_argument("--phase", choices=("cold", "run"), default="cold")
     ap.add_argument("--reps", type=int, default=1, help="fresh processes, one after another")
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=12, help="workload length (--phase run)")
-    ap.add_argument("--cores", type=int, default=4, help="local[N] cores (default 4)")
     ap.add_argument("--java-options", help="driver defaultJavaOptions instead of the policy")
     ap.add_argument("--json", action="store_true", help="print one JSON object only")
     args = ap.parse_args()
 
     if args.reps > 1:
         cmd = [sys.executable, __file__, "--workload", args.workload, "--phase", args.phase,
-               "--seed", str(args.seed), "--seconds", str(args.seconds),
-               "--cores", str(args.cores), "--json"]
+               "--seed", str(args.seed), "--json"]
         if args.java_options is not None:
             cmd.append(f"--java-options={args.java_options}")
         runs = [json.loads(subprocess.run(cmd, check=True, capture_output=True, text=True)
@@ -267,7 +266,7 @@ def main() -> int:
         res = {k: statistics.median(v) for k, v in cols.items()}
         res["reps"] = runs
     else:
-        os.environ["SPARK_GRAFT_CPUS"] = str(args.cores)
+        os.environ["SPARK_GRAFT_CPUS"] = str(CORES)
         os.environ.pop("OMP_NUM_THREADS", None)
         res = measure(args)
     if args.json:
