@@ -26,42 +26,28 @@ def _docs_par(spark, sf_dir):
 def _materialize(df):
     """Materialize-once point for a multi-consumer capstone frame.
 
-    Default is the r11 local checkpoint (``localCheckpoint(eager=False)``,
-    which under AQE materializes at DataFrame-construction time):
-    downstream plans see an O(1) RDD leaf — Catalyst stops re-analyzing
-    the registry's widest trees per action (the r11 warm win). The r12
-    fresh-session interleaved A/B (3 reps × 3 modes × 3 capstones, all
-    checksum-identical) measured, min-of-3 cold/warm:
-      x_curate_funnel   eager 38.6/1.25   cache 37.3/3.09   lazy 45.6/4.74
-      x_curate_corpus   eager 33.7/1.05   cache 38.0/1.58   lazy 34.6/4.18
-      x_select_pipeline eager 11.4/0.77   cache 15.7/1.17   lazy 14.1/2.38
-    i.e. on a controlled same-machine A/B the checkpoint form is equal
-    or better COLD too — the r11 verdict's 9.5 → 26.6 s cold pairing
-    compared two different machine-speed sessions. The truly-lazy form
-    (operators.graph.lazy_checkpoint, AQE-off compile) measured strictly
-    worse on both axes here and stays for the tiny iterative frames it
-    was built for. The structural cold fix is fewer/narrower
-    materialized frames (one combined keep-flags frame per capstone, r12
-    — see q_curate_funnel), not the materialization mode.
-
-    ``SPARK_GRAFT_MATERIALIZE`` selects the strategy explicitly:
-      - ``eager_ckpt`` (default): the r11 localCheckpoint form.
-      - ``lazy_ckpt``: operators.graph.lazy_checkpoint (kept for A/B).
-      - ``cache``: plain .cache() (the pre-r11 form, kept for A/B).
+    ``SPARK_GRAFT_MATERIALIZE`` selects the form:
+      - ``eager_ckpt`` (default): ``localCheckpoint(eager=False)``, which
+        under AQE materializes at DataFrame-construction time. Downstream
+        plans see an O(1) RDD leaf, so Catalyst stops re-analyzing the
+        registry's widest trees per action. It measured equal or better,
+        cold and warm, than plain ``cache()`` and
+        ``operators.graph.lazy_checkpoint`` (BENCHNOTES.md, "Capstone
+        materialization modes").
       - ``none``: no materialization — full lineage visible. Used by
         tools/audit_plans.py so the plan audit sees the construction
-        subtrees of checkpointed queries (r11 verdict item 6: the
-        post-materialization plan has zero FileScans and blinded the
-        BatchEvalPython / scan-repeat / shuffle gates).
+        subtrees of checkpointed queries (the post-materialization plan
+        has zero FileScans and would blind the BatchEvalPython /
+        scan-repeat / shuffle gates).
     Any other value raises ``ValueError``: a typo must not silently run
     the default.
 
-    clearCache note (r11 advice): localCheckpoint blocks are NOT
-    registered with the CacheManager, so ``spark.catalog.clearCache()``
-    (bench.py's SPARK_GRAFT_CLEARCACHE probe) does not free them; they
-    are released when the DataFrame/RDD refs are GC'd. A long session
-    that re-constructs these queries many times should drop the frames
-    (or use mode ``cache``) rather than rely on clearCache.
+    clearCache note: localCheckpoint blocks are NOT registered with the
+    CacheManager, so ``spark.catalog.clearCache()`` (bench.py's
+    SPARK_GRAFT_CLEARCACHE probe) does not free them; they are released
+    when the DataFrame/RDD refs are GC'd. A long session that
+    re-constructs these queries many times should drop the frames rather
+    than rely on clearCache.
 
     Fault-tolerance note (guide §5): localCheckpoint trades the
     intermediates' recomputability for speed — an executor loss mid-query
@@ -75,17 +61,10 @@ def _materialize(df):
     mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "eager_ckpt")
     if mode == "none":
         return df
-    if mode == "cache":
-        return df.cache()
-    if mode == "lazy_ckpt":
-        from ..operators.graph import lazy_checkpoint
-
-        return lazy_checkpoint(df)
     if mode == "eager_ckpt":
         return df.localCheckpoint(eager=False)
     raise ValueError(
-        f"SPARK_GRAFT_MATERIALIZE={mode!r}: expected one of "
-        "eager_ckpt, lazy_ckpt, cache, none"
+        f"SPARK_GRAFT_MATERIALIZE={mode!r}: expected one of eager_ckpt, none"
     )
 
 

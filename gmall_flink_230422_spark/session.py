@@ -28,13 +28,43 @@ CPU but never optimizes the data path, so executor CPU of a streaming run
 about doubled and its latency tail passed the 10 s limit. The other
 settings tried and the measurements are in BENCHNOTES.md, "Driver JIT
 policy".
+
+Driver class-data archive. Most of a fresh driver's start-up is loading,
+parsing and verifying classes from Spark's jars. ``cds.py`` builds a JDK
+dynamic AppCDS archive of them once per JDK and Spark install, into
+``${XDG_CACHE_HOME:-~/.cache}/gmall-spark/driver-<key>.jsa``; the key
+hashes the ``java`` binary (real path, mtime), the Spark ``jars/``
+listing (name, size, mtime) and the source of ``cds.py``. When the
+archive exists, ``get_spark`` adds ``-XX:SharedArchiveFile=<archive>`` to
+the policy and the JVM maps the classes instead of loading them. When it
+is missing, the session starts as before and ``get_spark`` starts the
+builder detached, at idle CPU priority; ``python -m
+gmall_flink_230422_spark.cds`` builds it in the foreground.
+
+- Conf dir: JDK 17 uses no archive while the classpath holds a non-empty
+  directory, and Spark puts its conf dir first on it. ``get_spark``
+  therefore points ``SPARK_CONF_DIR`` at an empty directory beside the
+  archive, but only while ``SPARK_CONF_DIR`` is unset and Spark's default
+  conf dir holds nothing but ``*.template`` files. A real conf file means
+  no archive and no builder.
+- Fallback: on a mismatch (another JDK, changed jars, another heap mode,
+  a damaged file) the JVM silently runs without the archive.
+- Opt-out: a caller's own ``spark.driver.defaultJavaOptions`` replaces
+  the policy and the archive, and starts no builder. A failed build
+  leaves ``driver-<key>.failed`` (its stderr tail) and stops background
+  builds until it is deleted.
+
+Measurements: BENCHNOTES.md, "Driver class-data archive".
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from . import cds
 
 
 JIT_POLICY = (
@@ -64,9 +94,18 @@ def get_spark(
       - ``spark.sql.shuffle.partitions`` is only the pre-AQE upper bound; on a
         real cluster set it ~2-3x total cores, AQE coalesces the rest.
       - Arrow enabled so any pandas UDF exchange is columnar-batched.
-      - The driver JVM starts with ``JIT_POLICY`` (module docstring).
+      - The driver JVM starts with ``JIT_POLICY`` and, once it is built, the
+        class-data archive (module docstring).
     """
     cpus = default_parallelism()
+    extra_conf = extra_conf or {}
+    # the archive and conf dir only matter to a driver JVM launched here
+    conf_dir = cds.conf_dir() if SparkContext._gateway is None else None
+    java_options = JIT_POLICY
+    if conf_dir and "spark.driver.defaultJavaOptions" not in extra_conf:
+        archive = cds.driver_archive()
+        if archive:
+            java_options += f" -XX:SharedArchiveFile={archive}"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -82,8 +121,14 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.defaultJavaOptions", JIT_POLICY)
+        .config("spark.driver.defaultJavaOptions", java_options)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    if not conf_dir:
+        return builder.getOrCreate()
+    os.environ["SPARK_CONF_DIR"] = conf_dir  # read by the launcher only
+    try:
+        return builder.getOrCreate()
+    finally:
+        del os.environ["SPARK_CONF_DIR"]

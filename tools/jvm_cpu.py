@@ -1,6 +1,6 @@
 """Split a Spark driver's CPU time over one benchmark phase by thread class.
 
-    python tools/jvm_cpu.py --workload log_stream [--phase cold|run] [--reps 3]
+    python tools/jvm_cpu.py --workload log_stream [--phase setup|cold|run] [--reps 3]
         [--seed 1] [--java-options "-XX:TieredStopAtLevel=1"] [--json]
 
 Starts a fresh driver the way ``perfbench/worker.py`` does (``local[4]``,
@@ -14,18 +14,26 @@ prints the CPU seconds its process group spent there, by thread class:
               threads and the JVM's main thread
   jvm_other   every other JVM thread (scheduler, RPC, VM thread, ...)
   jvm_exited  JVM CPU of threads that ended between two samples
+  launcher    processes the driver JVM's process reaped: spark-class's
+              short-lived launcher JVM (``launcher.Main``), which runs
+              before the driver JVM starts
   python      the driver's Python process and its Python workers (minus
               this tool's sampler thread)
 
+``--phase setup`` is perfbench's set-up: from the start of this process
+to a running session and a built registry (imports, ``get_spark``,
+``registry()``), so the JVM and launcher count from their start.
 ``--phase cold`` (the default) is perfbench's cold phase: for
 ``warehouse`` the six builds and first actions, for ``log_stream`` the
 source build, query start and first micro-batch. ``--phase run`` runs the
 whole workload (``run_warehouse`` / ``run_log_stream``) and also prints the
 record's ``cold_cpu_s``, ``warm_s``, ``capacity_eps`` and
-``latency_tail_ms``. ``--java-options`` replaces the driver JIT policy
-(``session.JIT_POLICY``) for this run; ``--java-options ""`` runs the JVM's
-defaults. With ``--reps N`` it runs N fresh processes one after another
-and prints each class's median.
+``latency_tail_ms``. ``--java-options`` replaces the driver's
+``defaultJavaOptions`` (``session.JIT_POLICY`` plus the class-data
+archive, ``cds.py``) for this run: ``--java-options ""`` runs the JVM's
+defaults, and the policy alone runs it without the archive. With
+``--reps N`` it runs N fresh processes one after another and prints each
+class's median.
 
 Thread CPU is read from ``/proc/<pid>/task/<tid>/stat`` every 0.2 s, so a
 thread that ends mid-phase (the JVM starts and stops compiler threads on
@@ -52,7 +60,8 @@ ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 sys.path.insert(0, str(ROOT / "perfbench"))
 
-CLASSES = ("c2", "c1", "gc", "executor", "driver", "jvm_other", "jvm_exited", "python")
+CLASSES = ("c2", "c1", "gc", "executor", "driver", "jvm_other", "jvm_exited", "launcher",
+           "python")
 RUN_METRICS = ("cold_cpu_s", "warm_s", "capacity_eps", "latency_tail_ms")
 TICK = os.sysconf("SC_CLK_TCK")
 SAMPLE_S = 0.2
@@ -94,12 +103,13 @@ def _group_pids(pgid: int) -> dict[int, str]:
     return out
 
 
-def process_ticks(pgid: int) -> dict[int, tuple[str, int]]:
-    """{pid: (comm, user + system ticks, reaped children included)}."""
+def process_ticks(pgid: int) -> dict[int, tuple[str, int, int]]:
+    """{pid: (comm, user + system ticks, ticks of its reaped children)}."""
     out = {}
     for pid, comm in _group_pids(pgid).items():
         if st := _stat(f"/proc/{pid}/stat"):
-            out[pid] = (comm, sum(int(x) for x in st[1][11:15]))
+            f = [int(x) for x in st[1][11:15]]
+            out[pid] = (comm, f[0] + f[1], f[2] + f[3])
     return out
 
 
@@ -116,15 +126,17 @@ def thread_ticks(pid: int) -> dict[int, tuple[str, int]]:
     return out
 
 
-def _jvm_pids(procs: dict[int, tuple[str, int]]) -> list[int]:
-    return [p for p, (comm, _) in procs.items() if comm == "java"]
+def _jvm_pids(procs: dict[int, tuple[str, int, int]]) -> list[int]:
+    return [p for p, (comm, *_) in procs.items() if comm == "java"]
 
 
 class PhaseSampler:
     """CPU seconds this process group spends between ``start()`` and
-    ``stop()``, split by ``CLASSES``."""
+    ``stop()``, split by ``CLASSES``; with ``since_start`` from the start
+    of each process instead."""
 
-    def __init__(self):
+    def __init__(self, since_start: bool = False):
+        self.since_start = since_start
         self.pgid = os.getpgrp()
         self._halt = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
@@ -143,7 +155,7 @@ class PhaseSampler:
         self._own = int(st[1][11]) + int(st[1][12])
 
     def start(self) -> PhaseSampler:
-        self._procs0 = process_ticks(self.pgid)
+        self._procs0 = {} if self.since_start else process_ticks(self.pgid)
         self._threads0 = {(p, t): v for p in _jvm_pids(self._procs0)
                           for t, v in thread_ticks(p).items()}
         self._thread.start()
@@ -154,11 +166,13 @@ class PhaseSampler:
         self._thread.join()
         procs1 = process_ticks(self.pgid)
         ticks = dict.fromkeys(CLASSES, 0)
-        for pid, (comm, t1) in procs1.items():
-            d = t1 - self._procs0.get(pid, (comm, 0))[1]
+        for pid, (comm, own1, reaped1) in procs1.items():
+            _, own0, reaped0 = self._procs0.get(pid, (comm, 0, 0))
+            d = own1 - own0
             if comm != "java":
-                ticks["python"] += d
+                ticks["python"] += d + reaped1 - reaped0
                 continue
+            ticks["launcher"] += reaped1 - reaped0
             attributed = 0
             for (p, tid), (tcomm, t) in self._seen.items():
                 if p == pid:
@@ -194,7 +208,7 @@ def _spark(run_root: str, java_options: str | None):
 
 
 def measure(args) -> dict:
-    """One fresh driver: set up, then sample the chosen phase."""
+    """One fresh driver: set up, then sample the chosen phase (or the set-up)."""
     try:
         os.setpgid(0, 0)  # the JVM and its Python workers join this group
     except PermissionError:  # already a session leader
@@ -210,10 +224,13 @@ def measure(args) -> dict:
     spark = None
     try:
         data = os.path.join(run_root, "data")
-        if args.workload == "warehouse":
+        if args.workload == "warehouse" and args.phase != "setup":
             datagen.write_tables(data, args.seed, SCALE)
+        setup = PhaseSampler(since_start=True).start() if args.phase == "setup" else None
         spark = _spark(run_root, args.java_options)
         specs = registry()
+        if setup:
+            return setup.stop()
         spans = tracing.Spans(run_id="jvm_cpu")
         wargs = argparse.Namespace(run_root=run_root, seed=args.seed, seconds=SECONDS,
                                    inject_wrong_checksum=False)
@@ -245,7 +262,7 @@ def measure(args) -> dict:
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--workload", required=True, choices=("warehouse", "log_stream"))
-    ap.add_argument("--phase", choices=("cold", "run"), default="cold")
+    ap.add_argument("--phase", choices=("setup", "cold", "run"), default="cold")
     ap.add_argument("--reps", type=int, default=1, help="fresh processes, one after another")
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--java-options", help="driver defaultJavaOptions instead of the policy")
@@ -274,7 +291,7 @@ def main() -> int:
         return 0
     total = res["total"] or 1.0
     print(f"{args.workload} phase={args.phase} reps={args.reps} "
-          f"java options={'policy' if args.java_options is None else repr(args.java_options)}")
+          f"java options={'default' if args.java_options is None else repr(args.java_options)}")
     for k in (*CLASSES, "total"):
         print(f"  {k:12s} {res[k]:9.2f} s  {100 * res[k] / total:5.1f} %")
     for k in RUN_METRICS:
