@@ -24,23 +24,14 @@ def _docs_par(spark, sf_dir):
 
 
 def _materialize(df):
-    """Materialize-once point for a multi-consumer capstone frame.
-
-    ``SPARK_GRAFT_MATERIALIZE`` selects the form:
-      - ``eager_ckpt`` (default): ``localCheckpoint(eager=False)``, which
-        under AQE materializes at DataFrame-construction time. Downstream
-        plans see an O(1) RDD leaf, so Catalyst stops re-analyzing the
-        registry's widest trees per action. It measured equal or better,
-        cold and warm, than plain ``cache()`` and
-        ``operators.graph.lazy_checkpoint`` (BENCHNOTES.md, "Capstone
-        materialization modes").
-      - ``none``: no materialization — full lineage visible. Used by
-        tools/audit_plans.py so the plan audit sees the construction
-        subtrees of checkpointed queries (the post-materialization plan
-        has zero FileScans and would blind the BatchEvalPython /
-        scan-repeat / shuffle gates).
-    Any other value raises ``ValueError``: a typo must not silently run
-    the default.
+    """Materialize-once point for a multi-consumer capstone frame:
+    ``localCheckpoint(eager=False)``, which under AQE materializes at
+    DataFrame-construction time. Downstream plans see an O(1) RDD leaf, so
+    Catalyst stops re-analyzing the registry's widest trees per action. It
+    measured equal or better, cold and warm, than plain ``cache()`` and
+    ``operators.graph.lazy_checkpoint`` (BENCHNOTES.md, "Capstone
+    materialization modes"). tools/audit_plans.py patches this function to
+    the identity so the plan audit sees the full construction lineage.
 
     clearCache note: localCheckpoint blocks are NOT registered with the
     CacheManager, so ``spark.catalog.clearCache()`` (bench.py's
@@ -56,16 +47,7 @@ def _materialize(df):
     (parquet checkpoint between curation stages) instead; this local
     stand-in models that materialization boundary.
     """
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "eager_ckpt")
-    if mode == "none":
-        return df
-    if mode == "eager_ckpt":
-        return df.localCheckpoint(eager=False)
-    raise ValueError(
-        f"SPARK_GRAFT_MATERIALIZE={mode!r}: expected one of eager_ckpt, none"
-    )
+    return df.localCheckpoint(eager=False)
 
 
 def _embs_par(spark, sf_dir):
@@ -3513,8 +3495,7 @@ def q_select_pipeline(spark, sf_dir):
     # lookup/normalization overhead on every downstream analysis);
     # the checkpoint form measured 1.77 -> 0.69 s warm min-of-10
     # interleaved, output bit-identical. Materialized through
-    # _materialize, whose default is the eager_ckpt local checkpoint
-    # (see its docstring).
+    # _materialize (see its docstring).
     flags = _materialize(flags)
     # CCNet t2 (head+middle boundary) over stage-2 survivors with a score
     surv = flags.filter(F.col("k2") & F.col("avg_surprisal").isNotNull())

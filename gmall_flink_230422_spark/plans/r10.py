@@ -168,39 +168,21 @@ def q_stream_ann_ivf_persisted(spark, sf_dir):
     results are batch-boundary-invariant, so the batch IVF oracle applies
     with the same predicate."""
     from ..sources import files
+    from ..streaming.drain import drain
 
     index_p, cents_p = ensure_ivf_index(spark, sf_dir)
     e = _embs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_annpersist_")
-    src = os.path.join(tmp, "queries")
-    sink = os.path.join(tmp, "sink")
-    ck = os.path.join(tmp, "ck")
+    src = os.path.join(tempfile.mkdtemp(prefix="streamq_annpersist_"), "queries")
     e.filter(F.col("vec_id") % 100 == 1).repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
-    def _probe(batch, batch_id: int) -> None:
+    def _probe(batch, _i: int):
         s = batch.sparkSession
-        out = similarity.ivf_probe_topk(
+        return similarity.ivf_probe_topk(
             _read_index(s, index_p), s.read.parquet(cents_p), batch, k=10, n_probe=4
         )
-        # replay-safe per-batch-dir overwrite (the repo's exactly-once
-        # file-sink pattern, r10 advisor find: a bare append duplicates
-        # rows if a batch is retried after a failure)
-        out.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # drop the discovered batch_id partition column — physical lineage,
-    # not part of the probe result contract
-    return spark.read.parquet(sink).drop("batch_id")
+    return drain(stream, _probe)
 
 
 ORACLE_STREAM_ANN_IVF_PERSISTED = ORACLE_ANN_IVF.replace(
@@ -273,6 +255,7 @@ def q_stream_ann_index_upsert(spark, sf_dir):
     build with the same centroids, which is the correctness statement of
     incremental maintenance."""
     from ..sources import files
+    from ..streaming.drain import drain
 
     e = _embs_par(spark, sf_dir)
     base = e.filter(F.col("vec_id") % 10 != 7)
@@ -282,7 +265,6 @@ def q_stream_ann_index_upsert(spark, sf_dir):
     base_p = os.path.join(tmp, "base")
     delta_p = os.path.join(tmp, "delta")
     src = os.path.join(tmp, "arrivals")
-    ck = os.path.join(tmp, "ck")
 
     similarity.ivf_centroids(base, n_centroids=16).write.parquet(cents_p)
     cents = spark.read.parquet(cents_p)
@@ -293,8 +275,7 @@ def q_stream_ann_index_upsert(spark, sf_dir):
     )
 
     fresh.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _ingest(batch, batch_id: int) -> None:
         s = batch.sparkSession
@@ -303,13 +284,7 @@ def q_stream_ann_index_upsert(spark, sf_dir):
             os.path.join(delta_p, f"ingest_batch={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _ingest)
 
     # hive-style discovery reads both partition levels (ingest_batch, list_id)
     full = spark.read.parquet(base_p).select("vec_id", "list_id").unionByName(

@@ -126,20 +126,17 @@ def q_stream_lsh_persisted(spark, sf_dir):
     static store, so results are batch-boundary-invariant and the batch
     oracle applies with the stream's predicate."""
     from ..sources import files
+    from ..streaming.drain import drain
 
     store_p = ensure_lsh_store(spark, sf_dir)
     d = _docs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_lshpersist_")
-    src = os.path.join(tmp, "docs")
-    sink = os.path.join(tmp, "flags")
-    ck = os.path.join(tmp, "ck")
+    src = os.path.join(tempfile.mkdtemp(prefix="streamq_lshpersist_"), "docs")
     d.filter(F.col("doc_id") % 3 == 1).select("doc_id", "text").repartition(
         4
     ).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
-    def _probe(batch, batch_id: int) -> None:
+    def _probe(batch, _i: int):
         s = batch.sparkSession
         banded = dedup.band_signatures(
             dedup.minhash_signatures(dedup.shingles(batch))
@@ -157,24 +154,13 @@ def q_stream_lsh_persisted(spark, sf_dir):
             .select("doc_id")
             .distinct()
         )
-        flags = batch.select("doc_id").join(
+        return batch.select("doc_id").join(
             dup.withColumn("_dup", F.lit(True)), "doc_id", "left"
         ).select(
             "doc_id", F.coalesce(F.col("_dup"), F.lit(False)).alias("is_dup")
         )
-        # replay-safe per-batch-dir overwrite (exactly-once file sink)
-        flags.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(sink).drop("batch_id")
+    return drain(stream, _probe)
 
 
 _LSH_FROM = "FROM documents d LEFT JOIN dup ON d.doc_id = dup.doc_id"
@@ -237,6 +223,7 @@ def q_stream_lsh_store_upsert(spark, sf_dir):
     the band-health census of base ∪ deltas must equal a from-scratch
     build over the full corpus — the x_lsh_band_health oracle verbatim."""
     from ..sources import files
+    from ..streaming.drain import drain
 
     d = _docs_par(spark, sf_dir)
     base = d.filter(F.col("doc_id") % 3 != 1)
@@ -245,7 +232,6 @@ def q_stream_lsh_store_upsert(spark, sf_dir):
     base_p = os.path.join(tmp, "base")
     delta_p = os.path.join(tmp, "delta")
     src = os.path.join(tmp, "arrivals")
-    ck = os.path.join(tmp, "ck")
 
     (
         dedup.band_signatures(dedup.minhash_signatures(dedup.shingles(base)))
@@ -254,8 +240,7 @@ def q_stream_lsh_store_upsert(spark, sf_dir):
     )
 
     fresh.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _ingest(batch, batch_id: int) -> None:
         sigs = dedup.band_signatures(dedup.minhash_signatures(dedup.shingles(batch)))
@@ -263,13 +248,7 @@ def q_stream_lsh_store_upsert(spark, sf_dir):
             os.path.join(delta_p, f"ingest_batch={batch_id}")
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _ingest)
 
     live = _read_lsh_store(spark, base_p).unionByName(
         _read_lsh_store(spark, delta_p).select("doc_id", "band_sig", "band")
@@ -574,29 +553,14 @@ def q_stream_ingest_gate(spark, sf_dir):
     only on the doc and the standing artifacts, so results are
     batch-boundary-invariant and the batch oracle applies verbatim."""
     from ..sources import files
+    from ..streaming.drain import drain
 
-    tmp = tempfile.mkdtemp(prefix="streamq_ingestgate_")
-    src = os.path.join(tmp, "arrivals")
-    sink = os.path.join(tmp, "verdicts")
-    ck = os.path.join(tmp, "ck")
+    src = os.path.join(tempfile.mkdtemp(prefix="streamq_ingestgate_"), "arrivals")
     _incoming(spark, sf_dir).repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
-
-    def _gate(batch, batch_id: int) -> None:
-        out = _gate_verdicts(batch.sparkSession, sf_dir, batch)
-        out.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    return drain(
+        stream, lambda batch, _i: _gate_verdicts(batch.sparkSession, sf_dir, batch)
     )
-    q.awaitTermination()
-    return spark.read.parquet(sink).drop("batch_id")
 
 
 def _oracle_ingest_gate() -> str:

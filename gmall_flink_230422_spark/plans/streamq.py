@@ -11,9 +11,10 @@ Mechanics per query:
    the deterministic Kafka stand-in (sources/files.py);
 2. run the SAME operator composition as the batch twin
    (``operators/windows.py``) on the ``readStream`` DataFrame;
-3. land the complete-mode aggregate image via ``foreachBatch`` +
-   ``Trigger.AvailableNow`` (process-everything-then-stop) and read the
-   final image back.
+3. run it to completion through ``streaming.drain`` (``foreachBatch`` +
+   ``Trigger.AvailableNow``, process-everything-then-stop) — the one
+   micro-batch loop every twin here, in r10.py and in r11.py shares — and
+   read the landed output back (the final image in complete mode).
 
 Because complete mode emits the full aggregate state and AvailableNow
 drains every file, the result is batch-equal by construction — each query
@@ -41,6 +42,7 @@ from ..operators import windows
 from ..sources import files
 from ..streaming import joins as sjoins
 from ..streaming import stateful as sstate
+from ..streaming.drain import drain
 from . import QuerySpec
 from .analytics import (
     ORACLE_CUMULATE,
@@ -81,8 +83,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(tmp, "events")
     ev = load_table(spark, sf_dir, "events")
     ev.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    return files.stream_parquet(spark, src, schema, files_per_trigger=2)
+    return files.stream_parquet(spark, src, files_per_trigger=2)
 
 
 def _ordered_events_source(
@@ -102,40 +103,6 @@ def _ordered_events_source(
     return src
 
 
-def _drain_complete(out: DataFrame, name: str) -> str:
-    """Run a streaming aggregate to completion (AvailableNow), landing the
-    final complete-mode image as parquet; returns the image path."""
-    tmp = tempfile.mkdtemp(prefix=f"streamq_{name}_")
-    image = os.path.join(tmp, "image")
-    ck = os.path.join(tmp, "ck")
-    q = (
-        out.writeStream.outputMode("complete")
-        .foreachBatch(lambda b, _i: b.write.mode("overwrite").parquet(image))
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return image
-
-
-def _drain_append(out: DataFrame, name: str) -> str:
-    """Run an append-mode streaming pipeline to completion (AvailableNow),
-    landing every emitted row as parquet; returns the output path."""
-    tmp = tempfile.mkdtemp(prefix=f"streamq_{name}_")
-    sink = os.path.join(tmp, "sink")
-    ck = os.path.join(tmp, "ck")
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(lambda b, _i: b.write.mode("append").parquet(sink))
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink
-
-
 def q_stream_tumble_keyed(spark, sf_dir):
     """A1 through the streaming engine: keyed 1-hour tumble on the replayed
     event stream; final image == batch a1_tumble_keyed."""
@@ -147,7 +114,7 @@ def q_stream_tumble_keyed(spark, sf_dir):
         ["event_type"],
         [F.count(F.lit(1)).alias("ct"), F.round(F.sum("value"), 2).alias("value_sum")],
     )
-    return spark.read.parquet(_drain_complete(out, "a1"))
+    return drain(out, mode="complete")
 
 
 def q_stream_union_preagg(spark, sf_dir):
@@ -171,7 +138,7 @@ def q_stream_union_preagg(spark, sf_dir):
             F.sum("err_ct").alias("err_ct"),
         ],
     )
-    return spark.read.parquet(_drain_complete(out, "a4"))
+    return drain(out, mode="complete")
 
 
 def q_stream_sliding_window(spark, sf_dir):
@@ -189,7 +156,7 @@ def q_stream_sliding_window(spark, sf_dir):
         ["event_type"],
         [F.count(F.lit(1)).alias("ct"), F.round(F.sum("value"), 2).alias("value_sum")],
     )
-    return spark.read.parquet(_drain_complete(out, "slide"))
+    return drain(out, mode="complete")
 
 
 def q_stream_cumulate(spark, sf_dir):
@@ -207,7 +174,7 @@ def q_stream_cumulate(spark, sf_dir):
         ["event_type"],
         [F.count(F.lit(1)).alias("ct"), F.round(F.sum("value"), 2).alias("value_sum")],
     )
-    image = spark.read.parquet(_drain_complete(partial, "cum"))
+    image = drain(partial, mode="complete")
     return windows.cumulate_rollup(
         image,
         "1 hour",
@@ -247,15 +214,14 @@ def q_stream_late_data(spark, sf_dir):
         ),
     )
     files.write_chunks_by(chunked, "_chunk", src, LATE_CHUNKS)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     out = (
         stream.withWatermark("ts", f"{LATE_WM_S} seconds")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("ct"))
         .select(F.col("w.start").cast("long").alias("stt"), "ct")
     )
-    return spark.read.parquet(_drain_append(out, "late"))
+    return drain(out)
 
 
 ORACLE_STREAM_LATE = f"""
@@ -301,7 +267,7 @@ def q_stream_topn(spark, sf_dir):
     here makes it batch-equal and oracle-checkable."""
     ev = _events_stream(spark, sf_dir)
     counts = ev.groupBy("event_type", "user_id").agg(F.count(F.lit(1)).alias("ct"))
-    image = spark.read.parquet(_drain_complete(counts, "topn"))
+    image = drain(counts, mode="complete")
     from pyspark.sql import Window
 
     w = Window.partitionBy("event_type").orderBy(F.col("ct").desc(), "user_id")
@@ -337,29 +303,14 @@ def q_stream_hll_distinct(spark, sf_dir):
     batch twin."""
     from ..operators import sketches
 
-    ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_hll_")
-    store = os.path.join(tmp, "registers")
-    ck = os.path.join(tmp, "ck")
-
-    def _land(batch: DataFrame, batch_id: int) -> None:
-        regs = sketches.hll_buckets(
+    regs = drain(
+        _events_stream(spark, sf_dir),
+        lambda batch, _i: sketches.hll_buckets(
             batch, F.col("event_id").cast("string"), ["event_type"]
-        )
-        regs.write.mode("overwrite").parquet(
-            os.path.join(store, f"batch_id={batch_id}")
-        )
-
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination()
     merged = (
-        spark.read.parquet(store)
-        .groupBy("event_type", "_bucket")
+        regs.groupBy("event_type", "_bucket")
         .agg(F.max("_max_rho").alias("_max_rho"))
     )
     est = sketches.hll_estimate(merged, ["event_type"])
@@ -395,7 +346,7 @@ def q_stream_session_window(spark, sf_dir):
             "value_sum",
         )
     )
-    return spark.read.parquet(_drain_complete(out, "sess"))
+    return drain(out, mode="complete")
 
 
 def q_stream_upsert_latest(spark, sf_dir):
@@ -411,11 +362,9 @@ def q_stream_upsert_latest(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="streamq_s8_")
     src = os.path.join(tmp, "src")
     store = os.path.join(tmp, "store")
-    ck = os.path.join(tmp, "ck")
     o = load_table(spark, sf_dir, "orders")
     o.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2)
+    stream = files.stream_parquet(spark, src, files_per_trigger=2)
 
     def _merge(batch: DataFrame, _i: int) -> None:
         sinks.upsert_parquet(
@@ -428,13 +377,7 @@ def q_stream_upsert_latest(spark, sf_dir):
             ["o_orderdate", "o_orderkey"],
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _merge)
     return spark.read.parquet(store).select(
         "o_custkey", "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -448,10 +391,9 @@ def q_stream_daily_uv(spark, sf_dir):
     dedup key, so WHICH first-seen row survives cannot change the per-day
     count — batch-equal regardless of micro-batch boundaries."""
     src = _ordered_events_source(spark, sf_dir, ["user_id", "ts", "event_id"])
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     firsts = sstate.daily_first_stream(stream, ["user_id"], "ts")
-    out = spark.read.parquet(_drain_append(firsts, "t3"))
+    out = drain(firsts)
     return (
         out.withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
         .groupBy("dt")
@@ -466,10 +408,9 @@ def q_stream_is_new(spark, sf_dir):
     counts by repaired flag. Ordering across micro-batches (write_time_chunks)
     makes the stateful first-date identical to the batch min-over-user form."""
     src = _ordered_events_source(spark, sf_dir, ["user_id", "ts"])
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     repaired = sstate.repair_is_new_stream(stream, "user_id", "ts")
-    out = spark.read.parquet(_drain_append(repaired, "t2"))
+    out = drain(repaired)
     return (
         out.withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
         .groupBy("dt", "is_new")
@@ -498,10 +439,9 @@ def q_stream_bounce(spark, sf_dir):
         )
     )
     src = _ordered_events_source(spark, sf_dir, ["user_id", "ts"], extra=sentinels)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     bounces = sstate.bounce_stream(stream, "user_id", "ts", BOUNCE_GAP_S)
-    out = spark.read.parquet(_drain_append(bounces, "t5"))
+    out = drain(bounces)
     return (
         out.withColumn("dt", F.date_format(F.timestamp_seconds("bounce_ts"), "yyyy-MM-dd"))
         .groupBy("dt")
@@ -535,14 +475,13 @@ def q_stream_interval_join(spark, sf_dir):
     emit the complete match set under correct watermarks, so the result is
     batch-equal independent of micro-batch boundaries."""
     src = _ordered_events_source(spark, sf_dir, ["user_id", "ts", "event_type"])
-    schema = spark.read.parquet(src).schema
     views = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .filter(F.col("event_type") == "view")
         .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
     )
     clicks = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
     )
@@ -556,7 +495,7 @@ def q_stream_interval_join(spark, sf_dir):
         lower="0 seconds",
         upper="30 minutes",
     )
-    out = spark.read.parquet(_drain_append(joined, "j7"))
+    out = drain(joined)
     return (
         out.withColumn("dt", F.date_format("view_ts", "yyyy-MM-dd"))
         .groupBy("dt")
@@ -600,14 +539,13 @@ def q_stream_left_outer_join(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "ts", "event_type"], extra=sentinels
     )
-    schema = spark.read.parquet(src).schema
     views = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .filter(F.col("event_type") == "view")
         .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
     )
     clicks = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
     )
@@ -622,7 +560,7 @@ def q_stream_left_outer_join(spark, sf_dir):
         upper="30 minutes",
         how="left_outer",
     )
-    out = spark.read.parquet(_drain_append(joined, "j2")).filter(F.col("v_user") >= 0)
+    out = drain(joined).filter(F.col("v_user") >= 0)
     return (
         out.withColumn("dt", F.date_format("view_ts", "yyyy-MM-dd"))
         .groupBy("dt")
@@ -658,12 +596,11 @@ def q_stream_dedup(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     cols = ["event_id", "ts", "user_id", "value"]
     src = _ordered_events_source(spark, sf_dir, cols, extra=ev.select(*cols))
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2)
+    stream = files.stream_parquet(spark, src, files_per_trigger=2)
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    out = spark.read.parquet(_drain_append(deduped, "dedup"))
+    out = drain(deduped)
     return (
         out.withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
         .groupBy("dt")
@@ -700,7 +637,6 @@ def q_stream_dim_incremental(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="streamq_s4i_")
     src = os.path.join(tmp, "src")
     base = os.path.join(tmp, "dim")
-    ck = os.path.join(tmp, "ck")
     c = load_table(spark, sf_dir, "customer")
     ins, upd = _user_info_branches(c)
     cdc = _materialize([ins, upd], via_json=True)
@@ -708,8 +644,7 @@ def q_stream_dim_incremental(spark, sf_dir):
         "_chunk", F.when(F.col("type") == "insert", 0).otherwise(1)
     )
     files.write_chunks_by(chunked, "_chunk", src, 2)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     changelog = spark.createDataFrame(
         [
@@ -738,13 +673,7 @@ def q_stream_dim_incremental(spark, sf_dir):
         holder["last_wm"] = wm
         _dim_sync_batch(spark, batch, holder["state"], base)
 
-    q = (
-        stream.writeStream.foreachBatch(_sync)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _sync)
     return spark.read.parquet(os.path.join(base, "dim_user_info")).select(
         F.col("id").cast("bigint").alias("id"), "create_time", "user_name"
     )
@@ -788,7 +717,6 @@ def q_stream_lsh_incremental(spark, sf_dir):
     src = os.path.join(tmp, "docs")
     store = os.path.join(tmp, "sig_store")
     flags_dir = os.path.join(tmp, "flags")
-    ck = os.path.join(tmp, "ck")
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     n_docs = d.count()
@@ -800,8 +728,7 @@ def q_stream_lsh_incremental(spark, sf_dir):
         "_chunk", F.least(F.floor(F.col("doc_id") * 4 / F.lit(n_docs)), F.lit(3)).cast("int")
     )
     files.write_chunks_by(chunked, "_chunk", src, 4)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _probe_and_merge(batch: DataFrame, batch_id: int) -> None:
         docs = batch.select("doc_id", "text")
@@ -832,13 +759,7 @@ def q_stream_lsh_incremental(spark, sf_dir):
         flags.write.mode("append").parquet(flags_dir)
         banded.select("band", "band_sig").write.mode("append").parquet(store)
 
-    q = (
-        stream.writeStream.foreachBatch(_probe_and_merge)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _probe_and_merge)
     return spark.read.parquet(flags_dir)
 
 
@@ -885,7 +806,6 @@ def q_stream_mv_merge(spark, sf_dir):
     _clamp_shuffle(spark)
     tmp = tempfile.mkdtemp(prefix="streamq_mv_")
     mv = os.path.join(tmp, "mv")
-    ck = os.path.join(tmp, "ck")
     stream = _events_stream(spark, sf_dir)
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
@@ -907,13 +827,7 @@ def q_stream_mv_merge(spark, sf_dir):
             shutil.rmtree(mv)
         os.rename(gen, mv)
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, _merge)
     return spark.read.parquet(mv).select(
         "dt",
         "event_type",
@@ -1028,22 +942,8 @@ def q_stream_markov(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "event_type", "ts", "event_id"]
     )
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
-    trans = sstate.transitions_stream(stream, key="user_id")
-    tmp = tempfile.mkdtemp(prefix="streamq_markov_")
-    out_dir = os.path.join(tmp, "out")
-    ck = os.path.join(tmp, "ck")
-    q = (
-        trans.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    pairs = spark.read.parquet(out_dir)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    pairs = drain(sstate.transitions_stream(stream, key="user_id"))
     counts = pairs.groupBy("from_type", "to_type").agg(
         F.count(F.lit(1)).alias("n_trans")
     )
@@ -1074,26 +974,13 @@ def q_stream_pit_features(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "event_id", "event_type", "ts", "value"]
     )
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1).select(
+    stream = files.stream_parquet(spark, src, files_per_trigger=1).select(
         "user_id", "event_id", "event_type",
         F.floor(F.col("ts").cast("double")).cast("long").alias("epoch"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
     )
-    feats = sstate.trailing_features_stream(stream, key="user_id")
-    tmp = tempfile.mkdtemp(prefix="streamq_pit_")
-    out_dir = os.path.join(tmp, "out")
-    ck = os.path.join(tmp, "ck")
-    q = (
-        feats.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
+    feats = drain(sstate.trailing_features_stream(stream, key="user_id"))
+    return feats.select(
         "event_id", "user_id", "trail_cnt",
         (F.col("trail_cents") / 100.0).alias("trail_value"),
     )
@@ -1200,8 +1087,7 @@ def q_stream_order_preprocess(spark, sf_dir):
     # 12 chunks: join-state peak ~ one chunk of rows (eviction happens at
     # batch boundaries), so finer chunks bound state independent of SF
     files.write_time_chunks(env.unionByName(sents), "cdc_ts", src, n_chunks=12)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2)
+    stream = files.stream_parquet(spark, src, files_per_trigger=2)
 
     od = stream.filter(
         (F.col("table") == "order_detail") & (F.col("type") == "insert")
@@ -1252,13 +1138,12 @@ def q_stream_order_preprocess(spark, sf_dir):
     out = j3.join(F.broadcast(dic), F.col("source_type") == F.col("_src_code"), "left")
 
     try:
-        sink = _drain_append(out, "preproc")
+        res = drain(out).filter(F.col("id") != "-1")
     finally:
         if _old_provider is None:
             spark.conf.unset(_provider_key)
         else:
             spark.conf.set(_provider_key, _old_provider)
-    res = spark.read.parquet(sink).filter(F.col("id") != "-1")
     from pyspark.sql import Window
 
     w = Window.partitionBy("order_info_id")
@@ -1315,8 +1200,6 @@ def q_stream_dedup_incremental(spark, sf_dir):
     sh_dir = os.path.join(tmp, "base_sh")
     bands_dir = os.path.join(tmp, "base_bands")
     src = os.path.join(tmp, "incoming")
-    sink = os.path.join(tmp, "sink")
-    ck = os.path.join(tmp, "ck")
 
     # ---- index build (batch, once — the persisted artifacts)
     base.select(dedup.fingerprint(F.col("text")).alias("fp")).distinct() \
@@ -1329,10 +1212,9 @@ def q_stream_dedup_incremental(spark, sf_dir):
 
     # ---- incoming delta as a multi-file replay stream
     d.filter(inc_pred).repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
-    def _probe(batch: DataFrame, _i: int) -> None:
+    def _probe(batch: DataFrame, _i: int) -> DataFrame:
         s = batch.sparkSession
         sh_i = dedup.shingles(batch)
         bands_i = dedup.band_signatures(
@@ -1376,7 +1258,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
             .select("doc_id")
             .withColumn("_e", F.lit(1))
         )
-        out = (
+        return (
             batch.select("doc_id")
             .join(F.broadcast(exact), "doc_id", "left")
             .join(F.broadcast(near), "doc_id", "left")
@@ -1389,16 +1271,8 @@ def q_stream_dedup_incremental(spark, sf_dir):
                 F.when(F.col("_e").isNull(), F.col("_mj")).alias("max_jaccard"),
             )
         )
-        out.write.mode("append").parquet(sink)
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(sink)
+    return drain(stream, _probe)
 
 
 from .llm import ORACLE_DEDUP_INCREMENTAL  # noqa: E402
@@ -1433,8 +1307,6 @@ def q_stream_ann_probe(spark, sf_dir):
     cents_dir = os.path.join(tmp, "cents")
     index_dir = os.path.join(tmp, "index")
     src = os.path.join(tmp, "queries")
-    sink = os.path.join(tmp, "sink")
-    ck = os.path.join(tmp, "ck")
 
     # ---- index build (batch, once — the persisted artifacts)
     similarity.ivf_centroids(e, n_centroids=16).write.parquet(cents_dir)
@@ -1443,28 +1315,19 @@ def q_stream_ann_probe(spark, sf_dir):
 
     # ---- query stream as a multi-file replay
     e.filter(F.col("vec_id") % 100 == 0).repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
-    def _probe(batch: DataFrame, _i: int) -> None:
+    def _probe(batch: DataFrame, _i: int) -> DataFrame:
         s = batch.sparkSession
-        out = similarity.ivf_probe_topk(
+        return similarity.ivf_probe_topk(
             s.read.parquet(index_dir),
             s.read.parquet(cents_dir),
             batch,
             k=10,
             n_probe=4,
         )
-        out.write.mode("append").parquet(sink)
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(sink)
+    return drain(stream, _probe)
 
 
 from .llm import ORACLE_ANN_IVF, _QUERY_IDS  # noqa: E402
@@ -1505,14 +1368,13 @@ def q_stream_full_outer_join(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "ts", "event_type"], extra=sentinels
     )
-    schema = spark.read.parquet(src).schema
     views = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .filter(F.col("event_type") == "view")
         .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
     )
     clicks = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
     )
@@ -1527,7 +1389,7 @@ def q_stream_full_outer_join(spark, sf_dir):
         upper="30 minutes",
         how="full_outer",
     )
-    out = spark.read.parquet(_drain_append(joined, "jfo")).filter(
+    out = drain(joined).filter(
         F.coalesce("v_user", "c_user") >= 0
     )
     return (
@@ -1568,13 +1430,10 @@ def q_stream_drift(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     tmp = tempfile.mkdtemp(prefix="streamq_drift_")
     src = os.path.join(tmp, "vectors")
-    store = os.path.join(tmp, "partials")
-    ck = os.path.join(tmp, "ck")
     e.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
-    def _land(batch: DataFrame, batch_id: int) -> None:
+    def _partial(batch: DataFrame, _i: int) -> DataFrame:
         comps = batch.select(
             ((F.col("vec_id") % 2) == 0).alias("is_base"),
             F.posexplode(F.col("embedding")).alias("jpos", "val"),
@@ -1583,25 +1442,15 @@ def q_stream_drift(spark, sf_dir):
             F.col("jpos").cast("int").alias("dim"),
             F.floor(F.col("val").cast("double") * 1000).cast("bigint").alias("milli"),
         )
-        partial = comps.groupBy("dim").agg(
+        return comps.groupBy("dim").agg(
             F.count(F.when(F.col("is_base"), 1)).alias("cnt_a"),
             F.count(F.when(~F.col("is_base"), 1)).alias("cnt_b"),
             F.sum(F.when(F.col("is_base"), F.col("milli")).otherwise(F.lit(0))).alias("sum_a"),
             F.sum(F.when(~F.col("is_base"), F.col("milli")).otherwise(F.lit(0))).alias("sum_b"),
         )
-        partial.write.mode("overwrite").parquet(
-            os.path.join(store, f"batch_id={batch_id}")
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     merged = (
-        spark.read.parquet(store)
+        drain(stream, _partial)
         .groupBy("dim")
         .agg(
             F.sum("cnt_a").alias("cnt_a"),
@@ -1645,10 +1494,9 @@ def q_stream_funnel(spark, sf_dir):
     from ..streaming.stateful import funnel_stream
 
     src = _ordered_events_source(spark, sf_dir, ["user_id", "ts", "event_type"])
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2)
+    stream = files.stream_parquet(spark, src, files_per_trigger=2)
     staged = funnel_stream(stream, key="user_id", ts_col="ts", type_col="event_type")
-    out = spark.read.parquet(_drain_append(staged, "funnel"))
+    out = drain(staged)
     per_user = out.groupBy("user_id").agg(
         F.max("t1").alias("t1"), F.max("t2").alias("t2"), F.max("t3").alias("t3")
     )
@@ -1682,15 +1530,14 @@ def q_stream_ewma(spark, sf_dir):
     from ..streaming.stateful import ewma_stream
 
     src = _ordered_events_source(spark, sf_dir, ["user_id", "event_id", "ts", "value"])
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2).select(
+    stream = files.stream_parquet(spark, src, files_per_trigger=2).select(
         "user_id",
         "event_id",
         "ts",
         F.round(F.col("value") * 100).cast("bigint").alias("v_cents"),
     )
     scored = ewma_stream(stream, key="user_id")
-    return spark.read.parquet(_drain_append(scored, "ewma"))
+    return drain(scored)
 
 
 from .analytics import ORACLE_EWMA  # noqa: E402
@@ -1718,29 +1565,12 @@ def q_stream_cms_heavy(spark, sf_dir):
     a vocabulary-sized table."""
     from ..operators import sketches
 
-    ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_cms_")
-    store = os.path.join(tmp, "grids")
-    ck = os.path.join(tmp, "ck")
-
-    def _land(batch: DataFrame, batch_id: int) -> None:
-        grid = sketches.cms_table(
-            batch, F.col("user_id").cast("string")
-        )
-        grid.write.mode("overwrite").parquet(
-            os.path.join(store, f"batch_id={batch_id}")
-        )
-
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
+    grids = drain(
+        _events_stream(spark, sf_dir),
+        lambda batch, _i: sketches.cms_table(batch, F.col("user_id").cast("string")),
     )
-    q.awaitTermination()
     merged = (
-        spark.read.parquet(store)
-        .groupBy("cms_row", "cms_col")
+        grids.groupBy("cms_row", "cms_col")
         .agg(F.sum("cms_count").alias("cms_count"))
     )
     top = (
@@ -1818,8 +1648,7 @@ def q_stream_window_topk(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "ts", "event_type"], extra=sentinels
     )
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2)
+    stream = files.stream_parquet(spark, src, files_per_trigger=2)
     counts = (
         stream.withWatermark("ts", "10 seconds")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -1827,30 +1656,13 @@ def q_stream_window_topk(spark, sf_dir):
         .select(F.col("w.start").cast("long").alias("stt"), "event_type", "ct")
     )
 
-    tmp = tempfile.mkdtemp(prefix="streamq_topk_")
-    sink = os.path.join(tmp, "sink")
-    ck = os.path.join(tmp, "ck")
-
     def rank_batch(b, _i):
         from pyspark.sql import Window as _W
 
         w = _W.partitionBy("stt").orderBy(F.col("ct").desc(), "event_type")
-        (
-            b.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= 3)
-            .write.mode("append")
-            .parquet(sink)
-        )
+        return b.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 3)
 
-    q = (
-        counts.writeStream.outputMode("append")
-        .foreachBatch(rank_batch)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(sink).filter(
+    return drain(counts, rank_batch).filter(
         F.col("event_type") != "_sentinel"
     ).select("stt", "rk", "event_type", "ct")
 
@@ -1914,9 +1726,8 @@ def q_stream_cusum(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "ts", "event_type", "value"], extra=sentinels
     )
-    schema = spark.read.parquet(src).schema
     stream = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .join(F.broadcast(k_tab), "event_type")
         .select(
             "event_type",
@@ -1928,7 +1739,7 @@ def q_stream_cusum(spark, sf_dir):
         )
     )
     scored = cusum_stream(stream, key="event_type")
-    return spark.read.parquet(_drain_append(scored, "cusum"))
+    return drain(scored)
 
 
 ORACLE_STREAM_CUSUM = """
@@ -1993,26 +1804,9 @@ def q_stream_embedding_cov(spark, sf_dir):
     src = os.path.join(tmp, "embeddings")
     em = load_table(spark, sf_dir, "embeddings")
     em.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=2)
-
-    store = os.path.join(tmp, "grams")
-    ck = os.path.join(tmp, "ck")
-
-    def _land(batch: DataFrame, batch_id: int) -> None:
-        similarity.embedding_gram(batch).write.mode("overwrite").parquet(
-            os.path.join(store, f"batch_id={batch_id}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = files.stream_parquet(spark, src, files_per_trigger=2)
     merged = (
-        spark.read.parquet(store)
+        drain(stream, lambda batch, _i: similarity.embedding_gram(batch))
         .groupBy("i", "j")
         .agg(
             F.sum("n").alias("n"),
@@ -2065,8 +1859,7 @@ def q_stream_benford(spark, sf_dir):
     counts = benford_digits(stream).groupBy("event_type", "digit").agg(
         F.count(F.lit(1)).alias("n")
     )
-    image = _drain_complete(counts, "benford")
-    return benford_from_counts(spark.read.parquet(image))
+    return benford_from_counts(drain(counts, mode="complete"))
 
 
 def _oracle_stream_benford() -> str:
@@ -2109,8 +1902,7 @@ def q_stream_safety_screen(spark, sf_dir):
         "_chunk", F.least(F.floor(F.col("doc_id") * 4 / F.lit(n)), F.lit(3)).cast("int")
     )
     files.write_chunks_by(chunked, "_chunk", src, 4)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     toks = stream.select(
         "doc_id",
         F.explode(
@@ -2122,11 +1914,11 @@ def q_stream_safety_screen(spark, sf_dir):
         .groupBy("doc_id", "category")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
     )
-    image = _drain_complete(per_doc, "safety")
+    image = drain(per_doc, mode="complete")
     n_docs = load_table(spark, sf_dir, "documents").agg(
         F.count(F.lit(1)).alias("total_docs")
     )
-    return safety_tail(spark.read.parquet(image), n_docs)
+    return safety_tail(image, n_docs)
 
 
 def _oracle_stream_safety() -> str:
@@ -2170,9 +1962,8 @@ def q_stream_holt(spark, sf_dir):
     src = _ordered_events_source(
         spark, sf_dir, ["user_id", "ts", "event_type", "value"], extra=sentinels
     )
-    schema = spark.read.parquet(src).schema
     stream = (
-        files.stream_parquet(spark, src, schema, files_per_trigger=2)
+        files.stream_parquet(spark, src, files_per_trigger=2)
         .select(
             "event_type",
             "ts",
@@ -2182,7 +1973,7 @@ def q_stream_holt(spark, sf_dir):
         )
     )
     scored = holt_stream(stream, key="event_type")
-    out = spark.read.parquet(_drain_append(scored, "holt"))
+    out = drain(scored)
     return out.select(
         "event_type",
         F.to_date(F.timestamp_seconds(F.col("day_epoch"))).alias("dt"),
@@ -2232,8 +2023,7 @@ def q_stream_entropy_filter(spark, sf_dir):
         "_chunk", F.least(F.floor(F.col("doc_id") * 4 / F.lit(n)), F.lit(3)).cast("int")
     )
     files.write_chunks_by(chunked, "_chunk", src, 4)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     tc = (
         stream.select(
             "doc_id",
@@ -2244,8 +2034,7 @@ def q_stream_entropy_filter(spark, sf_dir):
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
-    image = _drain_complete(tc, "entropy")
-    return entropy_tail(spark.read.parquet(image))
+    return entropy_tail(drain(tc, mode="complete"))
 
 
 def _oracle_stream_entropy() -> str:
@@ -2285,12 +2074,7 @@ def q_stream_bottomk(spark, sf_dir):
     (event_id unique), so ties cannot split across engines."""
     from ..functions.hashing import portable_hash64
 
-    ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_bk_")
-    store = os.path.join(tmp, "grids")
-    ck = os.path.join(tmp, "ck")
-
-    def _grid(df: DataFrame) -> DataFrame:
+    def _grid(df: DataFrame, _i: int) -> DataFrame:
         h = portable_hash64(
             F.concat(F.lit("bk:"), F.col("event_id").cast("string"))
         )
@@ -2307,19 +2091,7 @@ def q_stream_bottomk(spark, sf_dir):
             .agg(F.min("s").alias("s"))
         )
 
-    def _land(batch: DataFrame, batch_id: int) -> None:
-        _grid(batch).write.mode("overwrite").parquet(
-            os.path.join(store, f"batch_id={batch_id}")
-        )
-
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    merged = spark.read.parquet(store).groupBy("bucket").agg(F.min("s").alias("s"))
+    merged = drain(_events_stream(spark, sf_dir), _grid).groupBy("bucket").agg(F.min("s").alias("s"))
     return merged.select(
         F.col("bucket").cast("bigint").alias("bucket"),
         F.col("s.h").alias("min_hash"),
@@ -2369,12 +2141,7 @@ def q_stream_welch_t2(spark, sf_dir):
 
     Scale/state: a 1-row conditional aggregate per batch (map-side
     combinable), KBs of landed state per trigger at any stream rate."""
-    ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_welch_")
-    store = os.path.join(tmp, "grids")
-    ck = os.path.join(tmp, "ck")
-
-    def _moments(df: DataFrame) -> DataFrame:
+    def _moments(df: DataFrame, _i: int) -> DataFrame:
         cents = F.expr("CAST(round(value * 100) AS BIGINT)")
         is_a = F.col("event_type") == "click"
         return df.filter(F.col("event_type").isin("click", "view")).agg(
@@ -2386,19 +2153,7 @@ def q_stream_welch_t2(spark, sf_dir):
             F.coalesce(F.sum(F.when(~is_a, cents * cents).otherwise(0)), F.lit(0)).cast("bigint").alias("ss_b"),
         )
 
-    def _land(batch: DataFrame, batch_id: int) -> None:
-        _moments(batch).write.mode("overwrite").parquet(
-            os.path.join(store, f"batch_id={batch_id}")
-        )
-
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    m = spark.read.parquet(store).agg(
+    m = drain(_events_stream(spark, sf_dir), _moments).agg(
         F.sum("n_a").cast("bigint").alias("n_a"),
         F.sum("s_a").cast("bigint").alias("s_a"),
         F.sum("ss_a").cast("bigint").alias("ss_a"),
@@ -2452,12 +2207,7 @@ def q_stream_ohlc(spark, sf_dir):
 
     Scale/state: one day-keyed partial aggregate per batch (map-side
     combinable), bar-count-bounded landed state per trigger."""
-    ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_ohlc_")
-    store = os.path.join(tmp, "bars")
-    ck = os.path.join(tmp, "ck")
-
-    def _bars(df: DataFrame) -> DataFrame:
+    def _bars(df: DataFrame, _i: int) -> DataFrame:
         cents = F.expr("CAST(round(value * 100) AS BIGINT)")
         base = df.filter(F.col("event_type") == "purchase").select(
             F.to_date("ts").alias("dt"),
@@ -2474,19 +2224,7 @@ def q_stream_ohlc(spark, sf_dir):
             F.max(key).alias("c_key"),
         )
 
-    def _land(batch: DataFrame, batch_id: int) -> None:
-        _bars(batch).write.mode("overwrite").parquet(
-            os.path.join(store, f"batch_id={batch_id}")
-        )
-
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    merged = spark.read.parquet(store).groupBy("dt").agg(
+    merged = drain(_events_stream(spark, sf_dir), _bars).groupBy("dt").agg(
         F.sum("n_trades").cast("bigint").alias("n_trades"),
         F.min("o_key").alias("o_key"),
         F.max("high_cents").alias("high_cents"),
@@ -2529,23 +2267,10 @@ def q_stream_new_users(spark, sf_dir):
 
     Scale/state: per batch one distinct + one min agg, both
     map-side-combinable and bounded by the batch's own user set."""
-    ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_newu_")
-    store = os.path.join(tmp, "idx")
-    ck = os.path.join(tmp, "ck")
-
-    def _land(batch: DataFrame, batch_id: int) -> None:
-        ud = batch.select("user_id", F.to_date("ts").alias("dt")).distinct()
-        ud.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
-
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    ud = spark.read.parquet(store).select("user_id", "dt").distinct()
+    ud = drain(
+        _events_stream(spark, sf_dir),
+        lambda batch, _i: batch.select("user_id", F.to_date("ts").alias("dt")).distinct(),
+    ).distinct()
     first = ud.groupBy("user_id").agg(F.min("dt").alias("first_seen"))
     return (
         ud.join(first, "user_id")
@@ -2586,29 +2311,17 @@ def q_stream_quantile(spark, sf_dir):
     triangular cumsum of the ≤~hundreds-row bin table. The online latency/
     spend-quantile monitor at stream scale: per-batch state is the bin
     table (KBs), never the value stream."""
-    ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_quant_")
-    store = os.path.join(tmp, "hists")
-    ck = os.path.join(tmp, "ck")
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
 
-    def _land(batch: DataFrame, batch_id: int) -> None:
-        hist = (
+    def _hist(batch: DataFrame, _i: int) -> DataFrame:
+        return (
             batch.select(F.floor(cents / F.lit(1000)).cast("bigint").alias("bin"))
             .groupBy("bin")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        hist.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
 
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     hist = (
-        spark.read.parquet(store)
+        drain(_events_stream(spark, sf_dir), _hist)
         .groupBy("bin")
         .agg(F.sum("cnt").alias("cnt"))
         .cache()
@@ -2678,26 +2391,13 @@ def q_stream_burst(spark, sf_dir):
     at stream rates: per-batch state is |types|x|active hours| rows, and
     the oracle is the batch twin's VERBATIM (same semantics, streaming
     execution path)."""
-    ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_burst_")
-    store = os.path.join(tmp, "hourly")
-    ck = os.path.join(tmp, "ck")
-
-    def _land(batch: DataFrame, batch_id: int) -> None:
-        g = batch.groupBy(
+    def _hourly(batch: DataFrame, _i: int) -> DataFrame:
+        return batch.groupBy(
             "event_type", F.date_trunc("hour", F.col("ts")).cast("long").alias("hr")
         ).agg(F.count(F.lit(1)).alias("cnt"))
-        g.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
 
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     hourly = (
-        spark.read.parquet(store)
+        drain(_events_stream(spark, sf_dir), _hourly)
         .groupBy("event_type", "hr")
         .agg(F.sum("cnt").alias("cnt"))
         .cache()
@@ -2765,8 +2465,6 @@ def q_stream_contam_13gram(spark, sf_dir):
     d = _docs_par(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="streamq_contam13_")
     src = os.path.join(tmp, "eval_docs")
-    store = os.path.join(tmp, "verdicts")
-    ck = os.path.join(tmp, "ck")
 
     # ---- index ensure (batch, once per sf): train split -> distinct 13-grams.
     # Fingerprint folds in the gram width k, an algorithm version, and the
@@ -2788,10 +2486,9 @@ def q_stream_contam_13gram(spark, sf_dir):
 
     # ---- eval docs as a multi-file replay stream
     d.filter(F.col("doc_id") % 17 == 0).repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
-    def _probe(batch: DataFrame, batch_id: int) -> None:
+    def _probe(batch: DataFrame, _i: int) -> DataFrame:
         s = batch.sparkSession
         g = dedup.shingles(batch, k=13)
         idx = s.read.parquet(idx_dir)
@@ -2799,19 +2496,10 @@ def q_stream_contam_13gram(spark, sf_dir):
             F.count(F.lit(1)).alias("n_hit")
         )
         per_doc = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-        per_doc.join(hits, "doc_id").write.mode("overwrite").parquet(
-            os.path.join(store, f"batch_id={batch_id}")
-        )
+        return per_doc.join(hits, "doc_id")
 
-    q = (
-        stream.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.read.parquet(store)
+        drain(stream, _probe)
         .select(
             "doc_id",
             F.col("n_grams").cast("bigint").alias("n_grams"),
@@ -2841,31 +2529,19 @@ def q_stream_band_health(spark, sf_dir):
     d = _docs_par(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="streamq_bandh_")
     src = os.path.join(tmp, "docs")
-    store = os.path.join(tmp, "grids")
-    ck = os.path.join(tmp, "ck")
-
     d.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
-    def _land(batch: DataFrame, batch_id: int) -> None:
+    def _grid(batch: DataFrame, _i: int) -> DataFrame:
         sigs = dedup.minhash_signatures(dedup.shingles(batch), num_hashes=16)
-        grid = (
+        return (
             dedup.band_signatures(sigs, rows_per_band=4)
             .groupBy("band", "band_sig")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        grid.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
 
-    q = (
-        stream.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     buckets = (
-        spark.read.parquet(store)
+        drain(stream, _grid)
         .groupBy("band", "band_sig")
         .agg(F.sum("cnt").alias("sz"))
         .filter(F.col("sz") > 1)
@@ -2921,14 +2597,11 @@ def q_stream_char_class(spark, sf_dir):
     d = _docs_par(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="streamq_charclass_")
     src = os.path.join(tmp, "docs")
-    store = os.path.join(tmp, "grids")
-    ck = os.path.join(tmp, "ck")
     d.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
-    def _land(batch: DataFrame, batch_id: int) -> None:
-        g = (
+    def _grid(batch: DataFrame, _i: int) -> DataFrame:
+        return (
             batch.select(
                 "source",
                 F.length("text").cast("bigint").alias("_n"),
@@ -2945,17 +2618,9 @@ def q_stream_char_class(spark, sf_dir):
                 F.sum("_s").cast("bigint").alias("cs"),
             )
         )
-        g.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
 
-    q = (
-        stream.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     merged = (
-        spark.read.parquet(store)
+        drain(stream, _grid)
         .groupBy("source")
         .agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),
@@ -3003,26 +2668,13 @@ def q_stream_seasonal_index(spark, sf_dir):
     sum to the identical daily grid and applies e_seasonal_index's
     cross-multiplied dow rollup. Per-batch state is |types|×|active days|
     rows; the oracle is ORACLE_SEASONAL_INDEX VERBATIM."""
-    ev = _events_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_seasonal_")
-    store = os.path.join(tmp, "daily")
-    ck = os.path.join(tmp, "ck")
-
-    def _land(batch: DataFrame, batch_id: int) -> None:
-        g = batch.groupBy("event_type", F.to_date("ts").alias("day")).agg(
+    def _daily(batch: DataFrame, _i: int) -> DataFrame:
+        return batch.groupBy("event_type", F.to_date("ts").alias("day")).agg(
             F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")).alias("c")
         )
-        g.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
 
-    q = (
-        ev.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     daily = (
-        spark.read.parquet(store)
+        drain(_events_stream(spark, sf_dir), _daily)
         .groupBy("event_type", "day")
         .agg(F.sum("c").cast("bigint").alias("c"))
         .withColumn(
@@ -3084,15 +2736,12 @@ def q_stream_shard_skew(spark, sf_dir):
     d = _docs_par(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="streamq_shard_")
     src = os.path.join(tmp, "docs")
-    store = os.path.join(tmp, "grids")
-    ck = os.path.join(tmp, "ck")
     d.repartition(4).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+    stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
-    def _land(batch: DataFrame, batch_id: int) -> None:
+    def _grid(batch: DataFrame, _i: int) -> DataFrame:
         toks = _dedup.whitespace_tokens(_dedup.normalize_text(F.col("text")))
-        g = (
+        return (
             batch.select(
                 F.pmod(
                     portable_hash64(
@@ -3108,17 +2757,9 @@ def q_stream_shard_skew(spark, sf_dir):
                 F.sum("_nt").cast("bigint").alias("n_tokens"),
             )
         )
-        g.write.mode("overwrite").parquet(os.path.join(store, f"batch_id={batch_id}"))
 
-    q = (
-        stream.writeStream.foreachBatch(_land)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     per = (
-        spark.read.parquet(store)
+        drain(stream, _grid)
         .groupBy("shard")
         .agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),

@@ -1,4 +1,4 @@
-"""Sink helpers (SURVEY §2.1 S8, S10, S11, S12).
+"""Sink helpers (SURVEY §2.1 S8, S10, S11).
 
   - column-order contract writer: the reference's ClickHouse sink binds JDBC
     placeholders by reflecting declared bean-field order and skipping
@@ -57,9 +57,24 @@ def upsert_parquet(
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def console_sink(df: DataFrame, n: int = 20) -> None:
-    """S12: the reference's ``.print()`` debug sink."""
-    df.show(n, truncate=False)
+def land_batch(batch: DataFrame, batch_id: int, branches: dict, out_dir: str) -> None:
+    """Land one micro-batch's named outputs: ``branches[name]`` goes to
+    ``out_dir/<name>/batch_id=<batch_id>`` with ``mode("overwrite")``, so a
+    crash-and-replay of batch N overwrites the same directories instead of
+    appending duplicates — the idempotent-replay pattern, same as
+    upsert_parquet. ``batch`` is persisted only while more than one branch
+    reads it. Shared by fan_out_sink and streaming.drain."""
+    many = len(branches) > 1
+    if many:
+        batch.persist()
+    try:
+        for name, frame in branches.items():
+            frame.write.mode("overwrite").parquet(
+                os.path.join(out_dir, name, f"batch_id={batch_id}")
+            )
+    finally:
+        if many:
+            batch.unpersist()
 
 
 def fan_out_sink(
@@ -69,7 +84,7 @@ def fan_out_sink(
     checkpoint: str,
     query_name: str = "fan_out",
 ):
-    """T6/S12: one streaming query, N outputs — the side-output pattern.
+    """T6: one streaming query, N outputs — the side-output pattern.
 
     The reference fans BaseLogApp into 5 topics + dirty via side outputs
     (BaseLogApp.java:93-174). In Spark the cheap equivalent is a single
@@ -77,29 +92,19 @@ def fan_out_sink(
     writes every branch to its own parquet "topic" — the source is read
     once per batch (N writeStream queries would read it N times).
 
-    Exactly-once story: each branch batch lands in a ``batch_id=N``
-    subdirectory with ``mode("overwrite")``, so a crash-and-replay of batch N
-    overwrites the same directories instead of appending duplicates — the
-    idempotent-replay pattern, same as upsert_parquet. Consumers read
-    ``out_dir/<name>`` and see ``batch_id`` as a discovered partition column
-    (the Kafka offset analog); drop it if unwanted.
+    Exactly-once story: each branch batch lands through ``land_batch`` in a
+    ``batch_id=N`` subdirectory with overwrite, so a replayed batch is
+    idempotent. Consumers read ``out_dir/<name>`` and see ``batch_id`` as a
+    discovered partition column (the Kafka offset analog); drop it if
+    unwanted.
 
     ``split_fn``: batch DataFrame -> dict[name, DataFrame].
     Returns the started StreamingQuery (caller awaits/stops).
     """
-
-    def write_all(batch_df, batch_id):
-        batch_df.persist()
-        try:
-            for name, branch in split_fn(batch_df).items():
-                branch.write.mode("overwrite").parquet(
-                    os.path.join(out_dir, name, f"batch_id={batch_id}")
-                )
-        finally:
-            batch_df.unpersist()
-
     return (
-        raw_stream.writeStream.foreachBatch(write_all)
+        raw_stream.writeStream.foreachBatch(
+            lambda batch, batch_id: land_batch(batch, batch_id, split_fn(batch), out_dir)
+        )
         .queryName(query_name)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)

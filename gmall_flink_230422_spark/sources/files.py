@@ -15,15 +15,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def batch_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def stream_parquet(
-    spark: SparkSession, path: str, schema: T.StructType, files_per_trigger: int = 1
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType | None = None,
+    files_per_trigger: int = 1,
 ) -> DataFrame:
     """Streaming file source: replays a parquet directory as micro-batches —
-    the deterministic stand-in for a Kafka topic in tests."""
+    the deterministic stand-in for a Kafka topic in tests. Without a
+    ``schema`` the one the files at ``path`` already hold is used."""
+    if schema is None:
+        schema = spark.read.parquet(path).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", files_per_trigger)
@@ -101,16 +103,6 @@ def write_chunks_by(
         ).parquet(path)
         seen = _force_mtime(path, seen, base + i)
     return path
-
-
-def stream_json_lines(
-    spark: SparkSession, path: str, schema: T.StructType, files_per_trigger: int = 1
-) -> DataFrame:
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .json(path)
-    )
 
 
 def stream_text(spark: SparkSession, path: str, files_per_trigger: int = 1) -> DataFrame:

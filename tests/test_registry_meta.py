@@ -176,3 +176,16 @@ def test_make_evidence_name_set_gate():
         {"fake_sweep.json": reg_names | {"zz_not_in_registry"}}, reg_names
     )
     assert not ok
+
+
+def test_plans_drain_through_streaming_drain():
+    """Every streaming twin runs its micro-batch loop through
+    streaming.drain: no plan module starts its own streaming query."""
+    plans = Path(__file__).resolve().parent.parent / "gmall_flink_230422_spark" / "plans"
+    hits = [
+        f"{p.name}:{i}"
+        for p in sorted(plans.glob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if ".writeStream" in line or "availableNow" in line
+    ]
+    assert not hits, hits

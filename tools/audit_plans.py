@@ -35,10 +35,11 @@ from __future__ import annotations
 import re
 import sys
 from pathlib import Path
+from unittest import mock
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from gmall_flink_230422_spark.plans import registry
+from gmall_flink_230422_spark.plans import llm, registry
 from gmall_flink_230422_spark.session import get_spark
 
 # Queries whose plan legitimately contains a NON-scalar-aggregate
@@ -75,7 +76,7 @@ SCAN_REPEAT_OK: dict[str, int] = {
     # q_select_pipeline's docstring A/B). 9 = the 4 flag-stage scans x 2
     # consumers (threshold pass + funnel) + base.
     "x_select_pipeline": 9,
-    # r12: the audit now runs with SPARK_GRAFT_MATERIALIZE=none (full
+    # r12: the audit now runs with _materialize patched out (full
     # construction lineage, r11 verdict item 6), so the capstones' plans
     # show one scan per CONSUMER of the frames production materializes
     # behind plans.llm._materialize (funnel: shingles + 3 keep lists +
@@ -256,14 +257,12 @@ def main() -> None:
     # showed O(1) RDD leaves — zero FileScans — so the BatchEvalPython /
     # CartesianProduct / scan-repeat / shuffle gates no longer saw the
     # construction subtrees of the three widest queries. The audit now
-    # builds every plan with materialization DISABLED
-    # (plans.llm._materialize honors this env var), so PLANS.md shows the
-    # full construction lineage. Production/bench runs keep the default
-    # (materialized) form; the full-lineage plan is a strict superset of
-    # what executes, so the invariants gate the right tree.
-    import os
-
-    os.environ["SPARK_GRAFT_MATERIALIZE"] = "none"
+    # builds every plan with plans.llm._materialize patched to the
+    # identity (materialization DISABLED), so PLANS.md shows the full
+    # construction lineage. Production/bench runs keep the materialized
+    # form; the full-lineage plan is a strict superset of what executes,
+    # so the invariants gate the right tree.
+    mock.patch.object(llm, "_materialize", lambda df: df).start()
     spark = get_spark("audit-plans")
     specs = registry()
     # Subset runs write PLANS_partial.md so a spot-check can never
