@@ -9,11 +9,17 @@ long (``spark.sql.legacy.parquet.nanosAsLong=true``, set at RUNTIME inside
 ``load_table`` so any caller-supplied session works — not only ones built by
 session.get_spark) and we convert to a microsecond timestamp here, matching
 DuckDB's nanos→micros truncation so oracle comparisons line up exactly.
+
+Scratch space (``scratch_dir``) for plans and streaming drains lives under
+one root per process, removed when the process exits.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +61,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # wall-clock values are unchanged and match DuckDB's naive reads.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+_scratch_root: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new empty directory under this process's scratch root. The root
+    (``$TMPDIR/gmall_spark_<pid>_*``) is made on first use and removed,
+    with everything under it, when the process exits."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix=f"gmall_spark_{os.getpid()}_")
+        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

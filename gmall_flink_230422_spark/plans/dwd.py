@@ -21,7 +21,7 @@ codegen stage per source — no extra shuffle beyond what the final query
 needs. At 100 TB the JSON parse is the dominant cost, exactly as in the
 reference's Kafka consumers, and it is JVM-side (`from_json`), not Python.
 
-Envelope materialization comes in two forms (``_materialize``): the
+The envelope union comes in two forms (``_union_envelope``): the
 ``via_json`` path serializes each record to JSON and re-parses through the
 real ``parse_cdc`` (full P1 fidelity — used by the five single-table
 queries), while the typed path unpacks the record structs directly. The
@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import ensure_parallelism, load_table
+from ..io import ensure_parallelism, load_table, scratch_dir
 from ..operators import cdc as cdc_ops
 from . import QuerySpec
 
@@ -58,7 +58,7 @@ def _rec(table: str, type_: str, data: Column, old: Column | None = None) -> Col
     )
 
 
-def _materialize(branches: list[DataFrame], via_json: bool) -> DataFrame:
+def _union_envelope(branches: list[DataFrame], via_json: bool) -> DataFrame:
     """Union per-table record branches (each a single struct column ``r``)
     into one envelope stream — through JSON + ``parse_cdc`` for P1 fidelity,
     or typed for multi-consumer pruning (see module docstring)."""
@@ -104,7 +104,7 @@ def _order_info_branches(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
 
 
 def _order_info_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _materialize(_order_info_branches(spark, sf_dir), via_json=True)
+    return _union_envelope(_order_info_branches(spark, sf_dir), via_json=True)
 
 
 def _cart_info_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,7 +245,7 @@ def _trade_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     # typed path: J6's four consumers each route on `table`, and per-table
     # branches let that filter constant-fold the other branches to empty —
     # one scan per source instead of four re-parses (see module docstring)
-    return _materialize(branches, via_json=False)
+    return _union_envelope(branches, via_json=False)
 
 
 def _coupon_use_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,7 +293,7 @@ def _refund_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("refund_reason_type"), (F.col("o_custkey") % 25).cast("string"),
         F.lit("create_time"), ct,
     )
-    return _materialize(
+    return _union_envelope(
         [o.select(_rec("order_refund_info", "insert", data).alias("r"))], via_json=True
     )
 
@@ -311,7 +311,7 @@ def _comment_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("create_time"), ct,
         F.lit("appraise"), (F.col("o_custkey") % 25).cast("string"),
     )
-    return _materialize(
+    return _union_envelope(
         [o.select(_rec("comment_info", "insert", data).alias("r"))], via_json=True
     )
 
@@ -329,7 +329,7 @@ def _user_info_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("id"), F.col("c_custkey").cast("string"),
         F.lit("create_time"), ct,
     )
-    return _materialize(
+    return _union_envelope(
         [c.select(_rec("user_info", "insert", data).alias("r"))], via_json=True
     )
 
@@ -597,13 +597,11 @@ def q_dim_app_sync(spark, sf_dir):
     through TWO config generations (the superseded one selects an extra
     column — the latest config wins, proving the re-read). Returns the
     synced dim table."""
-    import tempfile
-
     from ..apps import dim_app
 
     c = load_table(spark, sf_dir, "customer")
     ins, upd = _user_info_branches(c)
-    cdc = _materialize([ins, upd], via_json=True)
+    cdc = _union_envelope([ins, upd], via_json=True)
 
     config = spark.createDataFrame(
         [
@@ -614,7 +612,7 @@ def q_dim_app_sync(spark, sf_dir):
         ],
         ["source_table", "sink_table", "sink_columns", "sink_pk", "config_seq"],
     )
-    base = tempfile.mkdtemp(prefix="dim_app_sync_")
+    base = scratch_dir("dim_app_sync_")
     out = dim_app(spark, cdc, config, base)["dim_user_info"]
     return out.select(
         F.col("id").cast("bigint").alias("id"), F.col("create_time")
@@ -643,14 +641,12 @@ def q_dim_app_sync_incremental(spark, sf_dir):
     path can't produce (it applies gen 2 to everything). Output compares
     the two paths: create_time must agree (paths_agree), user_name is the
     incremental path's generation-dependent column."""
-    import tempfile
-
     from ..apps import dim_app, dim_app_incremental
 
     c = load_table(spark, sf_dir, "customer")
     ins, upd = _user_info_branches(c)
-    batch1 = _materialize([ins], via_json=True)
-    batch2 = _materialize([upd], via_json=True)
+    batch1 = _union_envelope([ins], via_json=True)
+    batch2 = _union_envelope([upd], via_json=True)
     changelog = spark.createDataFrame(
         [
             ("user_info", "dim_user_info", "id,create_time,user_name", "id", 1, "u"),
@@ -658,13 +654,13 @@ def q_dim_app_sync_incremental(spark, sf_dir):
         ],
         ["source_table", "sink_table", "sink_columns", "sink_pk", "config_seq", "op"],
     )
-    base_i = tempfile.mkdtemp(prefix="dim_incr_")
+    base_i = scratch_dir("dim_incr_")
     incr = dim_app_incremental(
         spark, [(batch1, 1), (batch2, 2)], changelog, base_i
     )["dim_user_info"]
-    base_s = tempfile.mkdtemp(prefix="dim_snap_")
+    base_s = scratch_dir("dim_snap_")
     snap = dim_app(
-        spark, _materialize([ins, upd], via_json=True), changelog.drop("op"), base_s
+        spark, _union_envelope([ins, upd], via_json=True), changelog.drop("op"), base_s
     )["dim_user_info"]
     return (
         incr.select(
@@ -712,7 +708,7 @@ def q_scd2_history(spark, sf_dir):
     by the dimension key so state is bounded by versions-per-key."""
     from pyspark.sql import Window
 
-    env = _materialize(_order_info_branches(spark, sf_dir), via_json=False)
+    env = _union_envelope(_order_info_branches(spark, sf_dir), via_json=False)
     rows = env.filter(F.col("table") == "order_info").select(
         F.col("data")["id"].cast("bigint").alias("id"),
         F.col("data")["order_status"].alias("order_status"),

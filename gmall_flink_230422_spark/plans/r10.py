@@ -39,11 +39,11 @@ instead of a server-side index structure.
 from __future__ import annotations
 
 import os
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import functions as F
 
+from ..io import scratch_dir
 from ..operators import similarity
 from . import QuerySpec
 from .llm import ORACLE_ANN_IVF, _QUERY_IDS, _embs_par
@@ -172,7 +172,7 @@ def q_stream_ann_ivf_persisted(spark, sf_dir):
 
     index_p, cents_p = ensure_ivf_index(spark, sf_dir)
     e = _embs_par(spark, sf_dir)
-    src = os.path.join(tempfile.mkdtemp(prefix="streamq_annpersist_"), "queries")
+    src = os.path.join(scratch_dir("streamq_annpersist_"), "queries")
     e.filter(F.col("vec_id") % 100 == 1).repartition(4).write.parquet(src)
     stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
@@ -260,7 +260,7 @@ def q_stream_ann_index_upsert(spark, sf_dir):
     e = _embs_par(spark, sf_dir)
     base = e.filter(F.col("vec_id") % 10 != 7)
     fresh = e.filter(F.col("vec_id") % 10 == 7)
-    tmp = tempfile.mkdtemp(prefix="streamq_annupsert_")
+    tmp = scratch_dir("streamq_annupsert_")
     cents_p = os.path.join(tmp, "cents")
     base_p = os.path.join(tmp, "base")
     delta_p = os.path.join(tmp, "delta")

@@ -31,10 +31,10 @@ server-side state.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
+from ..io import scratch_dir
 from ..operators import dedup, text
 from . import QuerySpec
 from .llm import ORACLE_BPE_APPLY, ORACLE_LM_SCORE, _docs_par
@@ -130,7 +130,7 @@ def q_stream_lsh_persisted(spark, sf_dir):
 
     store_p = ensure_lsh_store(spark, sf_dir)
     d = _docs_par(spark, sf_dir)
-    src = os.path.join(tempfile.mkdtemp(prefix="streamq_lshpersist_"), "docs")
+    src = os.path.join(scratch_dir("streamq_lshpersist_"), "docs")
     d.filter(F.col("doc_id") % 3 == 1).select("doc_id", "text").repartition(
         4
     ).write.parquet(src)
@@ -228,7 +228,7 @@ def q_stream_lsh_store_upsert(spark, sf_dir):
     d = _docs_par(spark, sf_dir)
     base = d.filter(F.col("doc_id") % 3 != 1)
     fresh = d.filter(F.col("doc_id") % 3 == 1).select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="streamq_lshupsert_")
+    tmp = scratch_dir("streamq_lshupsert_")
     base_p = os.path.join(tmp, "base")
     delta_p = os.path.join(tmp, "delta")
     src = os.path.join(tmp, "arrivals")
@@ -271,7 +271,7 @@ def q_lsh_store_compact(spark, sf_dir):
     d = _docs_par(spark, sf_dir)
     base = d.filter(F.col("doc_id") % 3 != 1)
     fresh = d.filter(F.col("doc_id") % 3 == 1)
-    tmp = tempfile.mkdtemp(prefix="r11_lshcompact_")
+    tmp = scratch_dir("r11_lshcompact_")
     base_p = os.path.join(tmp, "base")
     delta_p = os.path.join(tmp, "delta")
     compact_p = os.path.join(tmp, "compacted")
@@ -555,7 +555,7 @@ def q_stream_ingest_gate(spark, sf_dir):
     from ..sources import files
     from ..streaming.drain import drain
 
-    src = os.path.join(tempfile.mkdtemp(prefix="streamq_ingestgate_"), "arrivals")
+    src = os.path.join(scratch_dir("streamq_ingestgate_"), "arrivals")
     _incoming(spark, sf_dir).repartition(4).write.parquet(src)
     stream = files.stream_parquet(spark, src, files_per_trigger=1)
     return drain(
@@ -638,7 +638,7 @@ def q_ann_index_compact(spark, sf_dir):
     e = _embs_par(spark, sf_dir)
     base = e.filter(F.col("vec_id") % 10 != 7)
     fresh = e.filter(F.col("vec_id") % 10 == 7)
-    tmp = tempfile.mkdtemp(prefix="r11_compact_")
+    tmp = scratch_dir("r11_compact_")
     cents_p = os.path.join(tmp, "cents")
     base_p = os.path.join(tmp, "base")
     delta_p = os.path.join(tmp, "delta")

@@ -31,13 +31,12 @@ MyKafkaUtil.java:21-60 (file-stream stand-in — no broker in the sandbox).
 
 from __future__ import annotations
 
-import tempfile
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, scratch_dir
 from ..operators import windows
 from ..sources import files
 from ..streaming import joins as sjoins
@@ -79,7 +78,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as a replayed multi-file micro-batch stream (ts already
     micros — the nanos conversion happens in the batch re-chunk write)."""
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_src_")
+    tmp = scratch_dir("streamq_src_")
     src = os.path.join(tmp, "events")
     ev = load_table(spark, sf_dir, "events")
     ev.repartition(8).write.mode("overwrite").parquet(src)
@@ -94,7 +93,7 @@ def _ordered_events_source(
     watermarked joins see in-order arrival across micro-batches, the same
     contract a Kafka topic keyed by mid gives the reference's keyed streams."""
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_ord_")
+    tmp = scratch_dir("streamq_ord_")
     src = os.path.join(tmp, "events")
     ev = load_table(spark, sf_dir, "events").select(*cols)
     if extra is not None:
@@ -203,7 +202,7 @@ def q_stream_late_data(spark, sf_dir):
     from ..functions.hashing import portable_hash64
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_late_")
+    tmp = scratch_dir("streamq_late_")
     src = os.path.join(tmp, "events")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
     chunked = ev.withColumn(
@@ -359,7 +358,7 @@ def q_stream_upsert_latest(spark, sf_dir):
     from .. import sinks
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_s8_")
+    tmp = scratch_dir("streamq_s8_")
     src = os.path.join(tmp, "src")
     store = os.path.join(tmp, "store")
     o = load_table(spark, sf_dir, "orders")
@@ -631,15 +630,15 @@ def q_stream_dim_incremental(spark, sf_dir):
     generation-dependent state the batch twin s4_dim_app_sync_incremental
     proves: updated rows lose user_name, untouched rows keep it."""
     from ..apps import _dim_sync_batch
-    from .dwd import _materialize, _user_info_branches
+    from .dwd import _union_envelope, _user_info_branches
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_s4i_")
+    tmp = scratch_dir("streamq_s4i_")
     src = os.path.join(tmp, "src")
     base = os.path.join(tmp, "dim")
     c = load_table(spark, sf_dir, "customer")
     ins, upd = _user_info_branches(c)
-    cdc = _materialize([ins, upd], via_json=True)
+    cdc = _union_envelope([ins, upd], via_json=True)
     chunked = cdc.withColumn(
         "_chunk", F.when(F.col("type") == "insert", 0).otherwise(1)
     )
@@ -713,7 +712,7 @@ def q_stream_lsh_incremental(spark, sf_dir):
     from ..operators import dedup
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_lshinc_")
+    tmp = scratch_dir("streamq_lshinc_")
     src = os.path.join(tmp, "docs")
     store = os.path.join(tmp, "sig_store")
     flags_dir = os.path.join(tmp, "flags")
@@ -804,7 +803,7 @@ def q_stream_mv_merge(spark, sf_dir):
     full recompute (e_mv_merge's oracle verbatim) — the green row proves
     stream-merge == recompute end-to-end."""
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_mv_")
+    tmp = scratch_dir("streamq_mv_")
     mv = os.path.join(tmp, "mv")
     stream = _events_stream(spark, sf_dir)
 
@@ -1082,7 +1081,7 @@ def q_stream_order_preprocess(spark, sf_dir):
         F.lit(None).cast("map<string,string>").alias("old"),
         F.lit(far).cast("timestamp").alias("cdc_ts"),
     )
-    tmp = tempfile.mkdtemp(prefix="streamq_preproc_")
+    tmp = scratch_dir("streamq_preproc_")
     src = os.path.join(tmp, "env")
     # 12 chunks: join-state peak ~ one chunk of rows (eviction happens at
     # batch boundaries), so finer chunks bound state independent of SF
@@ -1195,7 +1194,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
     d = _docs_par(spark, sf_dir)
     inc_pred = F.col("doc_id") % 5 == 0
     base = d.filter(~inc_pred)
-    tmp = tempfile.mkdtemp(prefix="streamq_incdedup_")
+    tmp = scratch_dir("streamq_incdedup_")
     fp_dir = os.path.join(tmp, "base_fp")
     sh_dir = os.path.join(tmp, "base_sh")
     bands_dir = os.path.join(tmp, "base_bands")
@@ -1303,7 +1302,7 @@ def q_stream_ann_probe(spark, sf_dir):
 
     _clamp_shuffle(spark)
     e = _embs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_annprobe_")
+    tmp = scratch_dir("streamq_annprobe_")
     cents_dir = os.path.join(tmp, "cents")
     index_dir = os.path.join(tmp, "index")
     src = os.path.join(tmp, "queries")
@@ -1428,7 +1427,7 @@ def q_stream_drift(spark, sf_dir):
     commutative, so the merged drift equals batch x_embedding_drift
     REGARDLESS of micro-batch boundaries or replays. Same oracle."""
     e = load_table(spark, sf_dir, "embeddings")
-    tmp = tempfile.mkdtemp(prefix="streamq_drift_")
+    tmp = scratch_dir("streamq_drift_")
     src = os.path.join(tmp, "vectors")
     e.repartition(4).write.parquet(src)
     stream = files.stream_parquet(spark, src, files_per_trigger=1)
@@ -1800,7 +1799,7 @@ def q_stream_embedding_cov(spark, sf_dir):
     from ..operators import similarity
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_cov_")
+    tmp = scratch_dir("streamq_cov_")
     src = os.path.join(tmp, "embeddings")
     em = load_table(spark, sf_dir, "embeddings")
     em.repartition(8).write.mode("overwrite").parquet(src)
@@ -1892,7 +1891,7 @@ def q_stream_safety_screen(spark, sf_dir):
     from .llm import safety_tail, safety_terms_df
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_safety_")
+    tmp = scratch_dir("streamq_safety_")
     src = os.path.join(tmp, "docs")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     n = d.count()
@@ -2013,7 +2012,7 @@ def q_stream_entropy_filter(spark, sf_dir):
     from .llm import entropy_tail
 
     _clamp_shuffle(spark)
-    tmp = tempfile.mkdtemp(prefix="streamq_entropy_")
+    tmp = scratch_dir("streamq_entropy_")
     src = os.path.join(tmp, "docs")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     n = d.count()
@@ -2463,7 +2462,7 @@ def q_stream_contam_13gram(spark, sf_dir):
 
     _clamp_shuffle(spark)
     d = _docs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_contam13_")
+    tmp = scratch_dir("streamq_contam13_")
     src = os.path.join(tmp, "eval_docs")
 
     # ---- index ensure (batch, once per sf): train split -> distinct 13-grams.
@@ -2527,7 +2526,7 @@ def q_stream_band_health(spark, sf_dir):
 
     _clamp_shuffle(spark)
     d = _docs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_bandh_")
+    tmp = scratch_dir("streamq_bandh_")
     src = os.path.join(tmp, "docs")
     d.repartition(4).write.parquet(src)
     stream = files.stream_parquet(spark, src, files_per_trigger=1)
@@ -2595,7 +2594,7 @@ def q_stream_char_class(spark, sf_dir):
 
     _clamp_shuffle(spark)
     d = _docs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_charclass_")
+    tmp = scratch_dir("streamq_charclass_")
     src = os.path.join(tmp, "docs")
     d.repartition(4).write.parquet(src)
     stream = files.stream_parquet(spark, src, files_per_trigger=1)
@@ -2734,7 +2733,7 @@ def q_stream_shard_skew(spark, sf_dir):
 
     _clamp_shuffle(spark)
     d = _docs_par(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="streamq_shard_")
+    tmp = scratch_dir("streamq_shard_")
     src = os.path.join(tmp, "docs")
     d.repartition(4).write.parquet(src)
     stream = files.stream_parquet(spark, src, files_per_trigger=1)

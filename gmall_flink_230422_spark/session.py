@@ -29,6 +29,32 @@ about doubled and its latency tail passed the 10 s limit. The other
 settings tried and the measurements are in BENCHNOTES.md, "Driver JIT
 policy".
 
+C2 off once-per-query libraries. The policy also names a HotSpot compiler
+directives file, ``jit_directives.json`` beside this module
+(``-XX:CompilerDirectivesFile``, a diagnostic flag on JDK 17, hence
+``-XX:+UnlockDiagnosticVMOptions``). It excludes from C2 only, never C1,
+the methods of libraries that run once per query, plan or closure and
+never per row:
+
+- Janino (``org/codehaus/janino``, ``org/codehaus/commons``), which
+  compiles the generated code;
+- the shaded ASM of Spark's ClosureCleaner (``org/apache/xbean``);
+- the ANTLR runtime of the SQL parser (``org/antlr/v4``);
+- the JDK's own ASM (``jdk/internal/org/objectweb``), which spins lambda
+  forms.
+
+When such a method reaches the tier-4 threshold, C2 refuses it and the
+tiered policy recompiles it at tier 1 (C1 without profiling), so it pays
+neither C2 compile time nor tier-3 profiling from then on. The classes
+Janino generates, ``unsafe``, Parquet and Jackson still reach C2. Jackson
+is not listed because ``from_json``/``to_json`` run it per row: with it
+in the list, one log_stream run's capacity fell to about 1.1k events/s,
+against 4-5k. The
+directives file prints one line when the JVM loads it, so
+``-XX:+DisplayVMOutputToStderr`` sends the VM's own output to stderr and
+leaves the driver's stdout to the application. Measurements:
+BENCHNOTES.md, "C2 off once-per-query libraries".
+
 Driver class-data archive. Most of a fresh driver's start-up is loading,
 parsing and verifying classes from Spark's jars. ``cds.py`` builds a JDK
 dynamic AppCDS archive of them once per JDK and Spark install, into
@@ -50,9 +76,9 @@ gmall_flink_230422_spark.cds`` builds it in the foreground.
 - Fallback: on a mismatch (another JDK, changed jars, another heap mode,
   a damaged file) the JVM silently runs without the archive.
 - Opt-out: a caller's own ``spark.driver.defaultJavaOptions`` replaces
-  the policy and the archive, and starts no builder. A failed build
-  leaves ``driver-<key>.failed`` (its stderr tail) and stops background
-  builds until it is deleted.
+  the policy (with its directives file) and the archive, and starts no
+  builder. A failed build leaves ``driver-<key>.failed`` (its stderr
+  tail) and stops background builds until it is deleted.
 
 Measurements: BENCHNOTES.md, "Driver class-data archive".
 """
@@ -60,6 +86,8 @@ Measurements: BENCHNOTES.md, "Driver class-data archive".
 from __future__ import annotations
 
 import os
+import shlex
+from pathlib import Path
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
@@ -67,10 +95,15 @@ from pyspark.sql import SparkSession
 from . import cds
 
 
+JIT_DIRECTIVES = Path(__file__).with_name("jit_directives.json")
+
 JIT_POLICY = (
     "-XX:Tier4InvocationThreshold=50000 "
     "-XX:Tier4MinInvocationThreshold=6000 "
-    "-XX:Tier4CompileThreshold=150000"
+    "-XX:Tier4CompileThreshold=150000 "
+    "-XX:+UnlockDiagnosticVMOptions "
+    "-XX:+DisplayVMOutputToStderr "
+    f"-XX:CompilerDirectivesFile={shlex.quote(str(JIT_DIRECTIVES))}"
 )
 
 
@@ -94,8 +127,9 @@ def get_spark(
       - ``spark.sql.shuffle.partitions`` is only the pre-AQE upper bound; on a
         real cluster set it ~2-3x total cores, AQE coalesces the rest.
       - Arrow enabled so any pandas UDF exchange is columnar-batched.
-      - The driver JVM starts with ``JIT_POLICY`` and, once it is built, the
-        class-data archive (module docstring).
+      - The driver JVM starts with ``JIT_POLICY`` (C2 thresholds and the
+        compiler directives file) and, once it is built, the class-data
+        archive (module docstring).
     """
     cpus = default_parallelism()
     extra_conf = extra_conf or {}

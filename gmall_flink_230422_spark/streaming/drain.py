@@ -4,10 +4,11 @@ one micro-batch loop every streaming twin in ``plans/`` goes through."""
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 
 from pyspark.sql import DataFrame
 
+from ..io import scratch_dir
 from ..sinks import land_batch
 
 
@@ -25,11 +26,14 @@ def drain(out: DataFrame, each=None, mode: str = "append") -> DataFrame | None:
 
     A callback that does its own side effects returns None; if no batch
     landed anything, ``drain`` returns None. The temp and checkpoint
-    directories belong to ``drain``. A failed query raises
+    directories belong to ``drain``: both sit in an ``io.scratch_dir``, and
+    the checkpoint is deleted as soon as the query stops, whether it
+    succeeded or failed. The landed output stays until the process exits,
+    since the returned frame reads it lazily. A failed query raises
     ``StreamingQueryException``, whose message carries the callback's
     original error.
     """
-    tmp = tempfile.mkdtemp(prefix="drain_")
+    tmp = scratch_dir("drain_")
 
     def _land(batch: DataFrame, batch_id: int) -> None:
         frame = batch if each is None else each(batch, batch_id)
@@ -37,14 +41,19 @@ def drain(out: DataFrame, each=None, mode: str = "append") -> DataFrame | None:
             key = 0 if mode == "complete" else batch_id
             land_batch(batch, key, {"out": frame}, tmp)
 
-    (
+    checkpoint = os.path.join(tmp, "ck")
+    query = (
         out.writeStream.outputMode(mode)
         .foreachBatch(_land)
-        .option("checkpointLocation", os.path.join(tmp, "ck"))
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
-        .awaitTermination()
     )
+    try:
+        query.awaitTermination()
+    finally:
+        query.stop()
+        shutil.rmtree(checkpoint, ignore_errors=True)
     landed = os.path.join(tmp, "out")
     if not os.path.isdir(landed):
         return None

@@ -1,10 +1,16 @@
 """streaming.drain: the one AvailableNow micro-batch loop of the streaming
 twins — append lands the union of the batches, complete lands only the
 final image, a failing callback fails the drain, a side-effect-only
-callback makes it return None."""
+callback makes it return None, and nothing it writes outlives its
+process."""
 
+import json
+import os
 import shutil
+import subprocess
+import sys
 import tempfile
+from pathlib import Path
 
 import pytest
 from pyspark.errors import StreamingQueryException
@@ -14,6 +20,7 @@ from gmall_flink_230422_spark.sources.files import stream_parquet
 from gmall_flink_230422_spark.streaming.drain import drain
 
 N_FILES = 3
+ROOT = Path(__file__).resolve().parent.parent
 
 
 @pytest.fixture(scope="module")
@@ -70,3 +77,35 @@ def test_side_effect_callback_returns_none(spark, src):
 
     assert drain(stream_parquet(spark, src), each) is None
     assert len(rows) == 4 * N_FILES
+
+
+TWO_DRAINS = """
+import json, os, sys
+sys.path.insert(0, sys.argv[1])
+from gmall_flink_230422_spark import io
+from gmall_flink_230422_spark.session import get_spark
+from gmall_flink_230422_spark.sources.files import stream_parquet
+from gmall_flink_230422_spark.streaming.drain import drain
+
+spark = get_spark("drain-probe", master="local[1]")
+rows = [sorted(map(list, drain(stream_parquet(spark, sys.argv[2])).collect())) for _ in range(2)]
+print(json.dumps({"root": io._scratch_root, "rows": rows,
+                  "left": sorted(os.path.relpath(os.path.join(d, n), io._scratch_root)
+                                 for d, dirs, _ in os.walk(io._scratch_root) for n in dirs)}))
+"""
+
+
+def test_drain_leaves_nothing_after_exit(src, tmp_path):
+    out = subprocess.run([sys.executable, "-c", TWO_DRAINS, str(ROOT), src],
+                         capture_output=True, text=True, timeout=300, cwd=tmp_path)
+    assert out.returncode == 0, out.stderr[-2000:]
+    rec = json.loads(out.stdout.strip().splitlines()[-1])
+    want = sorted([i, i * 10 + j] for i in range(N_FILES) for j in range(4))
+    assert rec["rows"] == [want, want]
+    # while the process ran: two drains, their landed output, no checkpoint
+    drains = [d for d in rec["left"] if os.sep not in d]
+    assert len(drains) == 2 and all(d.startswith("drain_") for d in drains)
+    assert {d + os.sep + "out" for d in drains} <= set(rec["left"])
+    assert not [d for d in rec["left"] if os.path.basename(d) == "ck"]
+    # after it exited: the scratch root is gone
+    assert not os.path.exists(rec["root"])

@@ -180,12 +180,14 @@ def test_make_evidence_name_set_gate():
 
 def test_plans_drain_through_streaming_drain():
     """Every streaming twin runs its micro-batch loop through
-    streaming.drain: no plan module starts its own streaming query."""
+    streaming.drain: no plan module starts its own streaming query, nor
+    makes a temp dir outside ``io.scratch_dir`` (which removes its root
+    when the process exits)."""
     plans = Path(__file__).resolve().parent.parent / "gmall_flink_230422_spark" / "plans"
     hits = [
         f"{p.name}:{i}"
         for p in sorted(plans.glob("*.py"))
         for i, line in enumerate(p.read_text().splitlines(), 1)
-        if ".writeStream" in line or "availableNow" in line
+        if ".writeStream" in line or "availableNow" in line or "mkdtemp" in line
     ]
     assert not hits, hits

@@ -1,7 +1,8 @@
 """What a freshly launched driver JVM gets from ``get_spark``.
 
-``get_spark`` passes ``session.JIT_POLICY`` and, once it is built, the
-class-data archive (``cds.py``) as ``spark.driver.defaultJavaOptions``.
+``get_spark`` passes ``session.JIT_POLICY`` (C2 thresholds and the
+compiler directives file) and, once it is built, the class-data archive
+(``cds.py``) as ``spark.driver.defaultJavaOptions``.
 The test session's JVM is already running, so each check launches its own
 driver in a subprocess and reads the JVM's input arguments back through
 py4j. The archive checks run against a private cache directory
@@ -20,7 +21,7 @@ from pathlib import Path
 import pytest
 
 from gmall_flink_230422_spark import cds
-from gmall_flink_230422_spark.session import JIT_POLICY
+from gmall_flink_230422_spark.session import JIT_DIRECTIVES, JIT_POLICY
 
 ROOT = Path(__file__).resolve().parent.parent
 
@@ -70,6 +71,50 @@ def test_driver_jvm_gets_jit_policy_and_caller_options(tmp_path):
     assert args.index(JIT_POLICY.split()[-1]) < args.index("-Dgraft.probe=1")
     # C2 stays on: C1-only (TieredStopAtLevel=1) would shrink this to 48 MB
     assert rec["code_cache"] >= 240 * 2**20
+
+
+def _hotspot_match(pattern: str, method: str) -> bool:
+    """HotSpot's method-pattern match: ``pkg/Class.method``, with ``*``
+    allowed only at either end of the class and of the method part."""
+    def part(p: str, s: str) -> bool:
+        if p == "*":
+            return True
+        if p.startswith("*") and p.endswith("*"):
+            return p[1:-1] in s
+        if p.startswith("*"):
+            return s.endswith(p[1:])
+        if p.endswith("*"):
+            return s.startswith(p[:-1])
+        return p == s
+
+    pc, pm = pattern.rsplit(".", 1)
+    mc, mm = method.rsplit(".", 1)
+    return part(pc, mc) and part(pm, mm)
+
+
+def test_directives_keep_c2_off_once_per_query_code_only():
+    blocks = json.loads(JIT_DIRECTIVES.read_text())
+    patterns = [p for b in blocks for p in b["match"]]
+    for b in blocks:
+        assert set(b) == {"match", "c2"}  # no c1 block: C1 compiles everything
+        assert b["c2"] == {"Exclude": True}
+    for p in patterns:
+        c, m = p.rsplit(".", 1)
+        assert "*" not in c[1:-1] and "*" not in m[1:-1], p
+    listed = ["org/codehaus/janino/UnitCompiler.compile2",
+              "org/apache/xbean/asm9/ClassReader.readCode",
+              "org/antlr/v4/runtime/atn/ParserATNSimulator.adaptivePredict"]
+    data_path = ["com/fasterxml/jackson/core/json/UTF8StreamJsonParser.nextToken",
+                 "org/apache/parquet/column/impl/ColumnReaderBase.readValue",
+                 "org/apache/spark/unsafe/types/UTF8String.hashCode",
+                 "org/apache/spark/sql/catalyst/expressions/"
+                 "GeneratedClass$GeneratedIteratorForCodegenStage1.processNext",
+                 "org/apache/spark/sql/catalyst/expressions/"
+                 "GeneratedClass$SpecificUnsafeProjection.apply"]
+    for m in listed:
+        assert any(_hotspot_match(p, m) for p in patterns), m
+    for m in data_path:
+        assert not any(_hotspot_match(p, m) for p in patterns), m
 
 
 @pytest.fixture(scope="module")
@@ -171,6 +216,7 @@ def test_callers_java_options_turn_off_archive_and_builder(tmp_path):
                  XDG_CACHE_HOME=str(xdg))
     assert "-Dgraft.own=1" in rec["args"]
     assert _archive_flags(rec["args"]) == []
+    assert not [a for a in rec["args"] if a in JIT_POLICY.split()]
     assert not list(xdg.glob("gmall-spark/driver-*"))
     assert not (xdg / "gmall-spark" / "build.lock").exists()
 
