@@ -59,25 +59,20 @@ SINGLE_PARTITION_OK: set[str] = set()
 #   - MAX_SCAN_REPEAT: the SAME scan signature (Location + ReadSchema +
 #     PushedFilters) appearing more than this many times in one plan.
 #     Legit self-joins (kNN bucket join, LSH pair-gen, wedge closure)
-#     land at 2-4; the registry's honest max today is 6 (x_backoff_lm's
-#     three n-gram orders × two sides of the backoff join; x_dsir_resample
-#     dropped 6→1 in r10 via the tokenize-once cache).
+#     land at 2-5 (x_label_prop_seeds and x_ccnet_bucket at 5).
 #     Every known instance of the bug class lands >10.
-#   - MAX_SHUFFLES: absolute exchange-count cap. The registry's widest
-#     honest plan is x_dedup_residual at 43 (a deliberate exact→LSH→
-#     keep-one→anti-join composition); uncached-lineage bugs land 100+.
+#   - MAX_SHUFFLES: absolute exchange-count cap. Outside the curation
+#     capstones below, the widest honest plan is x_dedup_residual at 29
+#     (a deliberate exact→LSH→keep-one→anti-join composition);
+#     uncached-lineage bugs land 100+.
+# Every query is audited from an empty cache (plan_of), so these counts
+# are per-query facts, independent of audit order.
 # Raise a name's budget here ONLY with a justification comment.
 MAX_SCAN_REPEAT = 8
 MAX_SHUFFLES = 60
 SCAN_REPEAT_OK: dict[str, int] = {
-    # Deliberately uncached corpus frame, measured: caching the doc frame
-    # was 1.4x SLOWER at sf0.1 (InMemoryRelation breaks per-stage column
-    # pruning / scan fusion; re-scanning parquet is the cheap path — see
-    # q_select_pipeline's docstring A/B). 9 = the 4 flag-stage scans x 2
-    # consumers (threshold pass + funnel) + base.
-    "x_select_pipeline": 9,
-    # r12: the audit now runs with _materialize patched out (full
-    # construction lineage, r11 verdict item 6), so the capstones' plans
+    # The audit runs with _materialize patched out (full
+    # construction lineage), so the capstones' plans
     # show one scan per CONSUMER of the frames production materializes
     # behind plans.llm._materialize (funnel: shingles + 3 keep lists +
     # s4 fan out to the contamination probe, dedup chain and the 6-stage
@@ -91,6 +86,13 @@ SHUFFLE_OK: dict[str, int] = {}
 
 
 def plan_of(spark, spec, sf_dir: str) -> str:
+    """Formatted plan of one query, built from an empty cache: frames that
+    earlier queries cached (or memoized in plans.llm) would otherwise
+    replace subtrees of this plan with InMemoryRelation leaves, so a row
+    would depend on audit order instead of on the query."""
+    spark.catalog.clearCache()
+    llm._DUP_MEMBERS_MEMO.clear()
+    llm._BPE_MEMO.clear()
     df = spec.fn(spark, sf_dir)
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
