@@ -13,9 +13,17 @@ oracle-checkable in DuckDB. Scale design:
     step (verification) runs per-bucket after LSH pruning.
   - SimHash: bit-level fold of token hashes; candidates via half-signature
     banding (pigeonhole: hamming ≤ k ⇒ some half matches for k ≤ 1 per half).
+
+Near-duplicate pairs have one entry point: :func:`near_dup_chain`
+(shingles → MinHash → LSH candidates → Jaccard verify, returned as named
+stages with one caching rule). Index builds and micro-batch probes that
+need only the band rows use :func:`doc_bands`. Plans call these two and
+never compose the stage operators by hand.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -55,15 +63,14 @@ def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k:
     equivalent DuckDB formulation (lead() over token positions) produces the
     same sets, keeping downstream MinHash oracle-checkable.
 
-    Expression form is k-dependent (r11, guide §1.2 per-task work): the
-    k-ary ``concat_ws(' ', element_at×k)`` chain is fastest for small k
-    (the MinHash k=3 default — measured ~5 % better than the slice form),
-    but for the long decontamination grams the 13-node chain loses to one
-    ``array_join(slice(_toks, i, k), ' ')`` (interleaved A/B min-of-12 at
-    sf0.1: x_contam_13gram 1.54 → 1.38 s, ~−10 %; k=8 measured a tie).
+    Expression form is k-dependent: the k-ary ``concat_ws(' ',
+    element_at×k)`` chain is faster for small k (the MinHash k=3 default),
+    one ``array_join(slice(_toks, i, k), ' ')`` is faster for the long
+    decontamination grams (BENCHNOTES.md, "Measurements behind
+    `operators/dedup.py` design choices").
     Both build the IDENTICAL string (tokens are whitespace-free, so the
-    single-space join is the same bytes), checksum-verified — the oracle
-    formulation is untouched.
+    single-space join is the same bytes) — the oracle formulation is
+    untouched.
     """
     toks = whitespace_tokens(normalize_text(F.col(text_col)))
     if k >= 13:
@@ -266,6 +273,55 @@ def jaccard_pairs(
     )
 
 
+class NearDupChain(NamedTuple):
+    """Named stages of :func:`near_dup_chain`."""
+
+    sh: DataFrame  # (id, shingle), cached
+    sigs: DataFrame  # (id, seed, minhash), uncached
+    cands: DataFrame  # LSH candidate pairs (doc_a < doc_b), cached
+    near: DataFrame  # verified pairs (doc_a, doc_b, jaccard), uncached
+
+
+def near_dup_chain(
+    shingle_df: DataFrame,
+    *,
+    threshold: float = 0.5,
+    num_hashes: int = 16,
+    bands: int = 4,
+    rows_per_band: int = 4,
+    id_col: str = "doc_id",
+) -> NearDupChain:
+    """The one near-duplicate chain: shingles → MinHash signatures → LSH
+    band candidates → Jaccard verify at ``threshold``. Returns every stage
+    by name, so a caller that needs the candidate set (recall audits) or
+    the signatures (estimator audits) reads it off the same chain instead
+    of rebuilding it.
+
+    Caching rule: a stage the chain itself reads more than once is cached.
+    ``sh`` feeds the signatures, the shingle counts and both verify sides;
+    ``cands`` feeds both side prunes and the final pair semi-join.
+    ``sigs`` and ``near`` are read once here and stay uncached — a caller
+    that reads them again caches them itself."""
+    sh = shingle_df.cache()
+    sigs = minhash_signatures(sh, id_col, num_hashes)
+    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band).cache()
+    near = jaccard_pairs(sh, id_col, threshold, candidates=cands)
+    return NearDupChain(sh, sigs, cands, near)
+
+
+def doc_bands(
+    docs: DataFrame, num_hashes: int = 16, rows_per_band: int = 4
+) -> DataFrame:
+    """(doc_id, band, band_sig) of a doc frame: the LSH index row shape
+    that persisted band stores hold and micro-batch probes compute.
+    Nothing is cached: inside ``foreachBatch`` a per-batch cache entry
+    would outlive its batch."""
+    return band_signatures(
+        minhash_signatures(shingles(docs), num_hashes=num_hashes),
+        rows_per_band=rows_per_band,
+    )
+
+
 def canonical_near_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -277,43 +333,39 @@ def canonical_near_pairs(
     shingle_df: DataFrame | None = None,
 ) -> tuple:
     """The shared front half of :func:`dedup_corpus` and
-    :func:`dedup_corpus_cc`: exact canonicals, then MinHash/LSH verified
-    near-dup pairs AMONG canonicals. Returns ``(docs_c, near)`` — the
+    :func:`dedup_corpus_cc`: exact canonicals, then :func:`near_dup_chain`
+    over the canonicals' shingles. Returns ``(docs_c, near)`` — the
     canonical-doc frame and the verified pair frame. Callers auditing
     several keep-one policies over one corpus snapshot (x_dedup_residual)
-    compute this once, cache both frames, and pass them to each policy
-    via ``prepared=`` instead of re-deriving the whole candidate chain
-    per policy (the old shape paid 2× the shuffles for identical work).
+    compute this once and pass it to each policy via ``prepared=``
+    instead of re-deriving the candidate chain per policy.
 
-    Caching contract: this function cache()s the shingle and candidate
-    frames internally (each has ≥2 consumers — signatures+verify, and
-    verify+any caller probe), and a ``prepared=`` caller typically caches
-    ``docs_c``/``near`` on top. All of these are MEMORY_AND_DISK with LRU
-    eviction — Spark frees the blocks under memory pressure, so nothing
-    is pinned harder than any other cached frame — and all are bounded
-    (shingles ≈ token count, candidates/near ≈ verified-pair count, never
-    corpus²). A long-lived session recycling many corpus snapshots should
-    call ``spark.catalog.clearCache()`` (or ``.unpersist()`` on the frames
-    it holds) between snapshots; per-query sweeps don't need to — eviction
-    handles it (r7 advisor note)."""
+    Every cached frame here (the canonical ids, and the chain's shingles
+    and candidates) is MEMORY_AND_DISK with LRU eviction and bounded by
+    the token or verified-pair count, never corpus². A long-lived session
+    recycling many corpus snapshots should call
+    ``spark.catalog.clearCache()`` between snapshots."""
     groups = exact_dedup_groups(docs, id_col, text_col)
-    # r12: the canonical-id list has two consumers (the shingle prune
-    # below — one-time, it feeds the cached sh — and docs_c's semi-join,
-    # which dedup_corpus's final anti-join re-executes per action).
-    # Uncached, every downstream action re-ran the full-text md5
-    # aggregate; the id list is narrow (one row per distinct text), so
-    # it is cached rather than the wide docs_c (r10 rule: cache derived
-    # narrow frames, never the raw corpus).
+    # The canonical-id list feeds the shingle prune and docs_c's
+    # semi-join, which dedup_corpus's final anti-join re-executes per
+    # action; uncached, each of those re-runs the full-text md5
+    # aggregate. It is cached rather than docs_c because it is narrow:
+    # one id per distinct text, against the raw corpus rows.
     canon_ids = groups.select(F.col("canonical_id").alias(id_col)).cache()
     docs_c = docs.join(canon_ids, id_col, "left_semi")
     if shingle_df is not None:
-        sh = shingle_df.join(docs_c.select(id_col), id_col, "left_semi").cache()
+        sh = shingle_df.join(docs_c.select(id_col), id_col, "left_semi")
     else:
-        sh = shingles(docs_c, id_col, text_col).cache()
-    sigs = minhash_signatures(sh, id_col, num_hashes)
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band).cache()
-    near = jaccard_pairs(sh, id_col, threshold, candidates=cands)
-    return docs_c, near
+        sh = shingles(docs_c, id_col, text_col)
+    chain = near_dup_chain(
+        sh,
+        threshold=threshold,
+        num_hashes=num_hashes,
+        bands=bands,
+        rows_per_band=rows_per_band,
+        id_col=id_col,
+    )
+    return docs_c, chain.near
 
 
 def dedup_corpus(
@@ -377,26 +429,22 @@ def connected_components(
     the min), monotonically pull edges toward component minima, and reach
     the fixed point — a forest of stars centered on each component's min
     id — in O(log n) rounds. Label PROPAGATION by contrast needs O(graph
-    diameter) rounds: fine for the clique-ish LSH-bucket graphs this was
-    built for, but round 5 found the DBSCAN core-core graph (density
-    chains walking a curve through the projected plane) still unconverged
-    at a 20-round cap — a silent-truncation hazard at any scale, since
-    chain diameter grows with the data. The sf0.001 chain that exhausted
-    20 propagation rounds converges (edge set stable) in 8 star rounds.
+    diameter) rounds: fine for clique-ish LSH-bucket graphs, but a DBSCAN
+    core-core graph (density chains walking a curve through the projected
+    plane) can stay unconverged at any fixed round cap — a
+    silent-truncation hazard, since chain diameter grows with the data.
 
     Round cost: 4 keyed shuffles (two groupBy-min aggs, two distincts) on
     a frame that never exceeds the input edge count, and — every SECOND
-    round (r6: star contraction tolerates extra rounds, so halving the
-    convergence probes halves the driver-side action count that dominated
-    the fresh-session cost of the CC-bound queries) — ONE scalar driver
+    round (star contraction tolerates extra rounds, so probing every other
+    round halves the driver-side action count) — ONE scalar driver
     action: count plus TWO order-insensitive edge checksums
     (bit_xor(xxhash64(a,b)) and bit_xor(xxhash64(b,a,42)); a simultaneous
     collision on both independent hashes, ~2^-128, is the accepted risk
     of declaring convergence from checksums). That action also
     materializes the intervening rounds' LAZY localCheckpoints, so
-    lineage is truncated to a leaf at no extra job — the eager-checkpoint
-    variant measured 2.5-5 s per truncation at sf0.001 because it
-    re-plans and re-runs the round as a separate job. Superseded round
+    lineage is truncated to a leaf at no extra job — an eager checkpoint
+    would re-plan and re-run each round as a separate job. Superseded round
     RDDs are freed by the ContextCleaner as Python drops the refs. At
     100 TB the edge table holds only docs that occur in a pair — tiny
     next to the corpus — and the star rewrites keep it shrinking toward
@@ -404,21 +452,19 @@ def connected_components(
 
     Self-pairs (doc_a == doc_b) are honored: a node whose only evidence
     is a self-pair appears in the output as its own singleton cluster
-    (node, node) — matching the pre-r5 label-propagation behavior. An
-    empty edge set short-circuits: no star rounds run.
+    (node, node). An empty edge set short-circuits: no star rounds run.
 
     ``max_iter`` is a backstop only: 30 rounds cover any graph a 2^30
     diameter could produce; a non-converged exit warns loudly instead of
     silently returning partial clusters.
 
-    Small-graph fast path (r6): when the deduped edge count is at most
+    Small-graph fast path: when the deduped edge count is at most
     ``small_graph_threshold`` (default 500k edges ≈ tens of MB on the
     driver), the edges are pulled to the driver via Arrow and labeled by
     union-find-by-min in one pass — exactly the size-adaptive strategy
-    Spark itself applies with its broadcast threshold. The CC-bound
-    queries spent their whole fresh-session budget scheduling star-round
-    jobs over a few thousand edges (r5 verdict: x_dbscan 14 s of
-    plan-time actions); the dedup/DBSCAN pair graphs are SPARSE BY
+    Spark itself applies with its broadcast threshold. Scheduling
+    star-round jobs over a few thousand edges costs far more than the
+    labeling itself; the dedup/DBSCAN pair graphs are SPARSE BY
     CONSTRUCTION (only docs that collide in an LSH band / share a grid
     cell emit pairs), so even multi-TB corpora commonly land under the
     threshold. Above it, the distributed star rounds run unchanged; pass
@@ -428,8 +474,8 @@ def connected_components(
     # cache: the UPSTREAM pair-generation lineage (LSH self-joins,
     # grid-cell neighbor joins, knn graphs — all self-referencing trees)
     # would otherwise be re-printed exponentially in every round's plan
-    # string; at r4 the dbscan chain OOMed the driver building that
-    # explain string before any data moved. Truncating to a leaf makes
+    # string, which can exhaust driver memory before any data moves (the
+    # dbscan chain did). Truncating to a leaf makes
     # each round's plan O(1) regardless of how the caller built the pairs.
     e0 = (
         pairs.select(
@@ -495,7 +541,7 @@ def connected_components(
             ).select(F.col("a").alias("u"), F.col("b").alias("v"))
             # large-star: m(u) = min(closed neighborhood); larger neighbors
             # v > u re-attach as (m, v) — m <= u < v keeps the a < b
-            # invariant. No distinct here (r6): duplicates don't change
+            # invariant. No distinct here: duplicates don't change
             # the small-star min and are swept by e2's distinct, so the
             # round costs 3 keyed shuffles instead of 4.
             m = nb.groupBy("u").agg(F.least(F.col("u"), F.min("v")).alias("m"))
@@ -736,15 +782,13 @@ def dup_ngram_stats(
     excising the repeated spans, documents past a duplication threshold are
     dropped whole).
 
-    Scale design (r4 rewrite of the 4.4x SCALING outlier): one explode →
-    hash each shingle to the portable 60-bit int (8-byte shuffle keys
-    instead of ~56-byte 8-word strings) → ONE count-window partitioned by
-    the hash → per-doc aggregate. The previous agg+join shape compiled
-    the corpus-wide shingle explode TWICE (both the counts aggregate and
-    the join probe re-derived it) and, under AQE, broadcast a
-    multi-million-row counts table; the window form explodes once and
-    never builds a counts table at all (A/B at sf0.1: 1.70 s → 1.00 s
-    warm). Hash collisions are result-identical across engines because
+    Scale design: one explode → hash each shingle to the portable 60-bit
+    int (8-byte shuffle keys instead of ~56-byte 8-word strings) → ONE
+    count-window partitioned by the hash → per-doc aggregate. An agg+join
+    shape would compile the corpus-wide shingle explode TWICE (the counts
+    aggregate and the join probe each re-derive it) and, under AQE,
+    broadcast a multi-million-row counts table; the window form explodes
+    once and never builds a counts table at all. Hash collisions are result-identical across engines because
     the oracle counts over the SAME md5-derived hash. Docs with fewer
     than k tokens have no k-grams and are vacuously clean (absent),
     matching the other shingle operators.

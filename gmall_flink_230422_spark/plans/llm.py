@@ -104,11 +104,7 @@ def _dup_members(spark, sf_dir):
     if hit is not None:
         return hit
     _evict_stale(_DUP_MEMBERS_MEMO, key[0])
-    d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
-    near = dedup.jaccard_pairs(sh, threshold=0.5, candidates=cands)
+    near = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir))).near
     members = dedup.connected_components(near).cache()
     _DUP_MEMBERS_MEMO[key] = members
     return members
@@ -353,14 +349,7 @@ def q_minhash_lsh(spark, sf_dir):
     """MinHash(16) + LSH(4 bands × 4 rows) candidate pairs, exact-verified at
     Jaccard ≥ 0.5. Candidate generation joins band-signature buckets only —
     the scale path for 100 TB dedup."""
-    d = _docs_par(spark, sf_dir)
-    # shingles feed both the signature and the verify stage; candidates feed
-    # three consumers in the verify join — cache both (tiny vs the corpus:
-    # one row per distinct shingle / per surviving pair)
-    sh = dedup.shingles(d).cache()
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4).cache()
-    return dedup.jaccard_pairs(sh, threshold=0.5, candidates=cands)
+    return dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir))).near
 
 
 ORACLE_MINHASH_LSH = f"""
@@ -375,11 +364,9 @@ def q_lsh_recall(spark, sf_dir):
     (the quadratic baseline — run on a sample in production; the sample IS
     this query shape) vs the MinHash(16)/LSH(4×4) candidate set. Integer
     hit counts; recall emitted by integer division on the 1e-4 grid."""
-    d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    truth = dedup.jaccard_pairs(sh, threshold=0.5)
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4).cache()
+    chain = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir)))
+    truth = dedup.jaccard_pairs(chain.sh, threshold=0.5)
+    cands = chain.cands
     flagged = truth.join(
         cands.withColumn("_c", F.lit(1)), ["doc_a", "doc_b"], "left"
     )
@@ -463,10 +450,10 @@ def q_minhash_estimate(spark, sf_dir):
     side-by-side with the exact shingle Jaccard — the calibration table
     that justifies trusting signatures at 100 TB where exact Jaccard is
     unaffordable. Integer agreement counts; both ratios on the 1e-4 grid."""
-    d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4).cache()
+    chain = dedup.near_dup_chain(
+        dedup.shingles(_docs_par(spark, sf_dir)), threshold=0.0
+    )
+    sigs, cands = chain.sigs.cache(), chain.cands
     a = sigs.select(
         F.col("doc_id").alias("doc_a"), "seed", F.col("minhash").alias("mh_a")
     )
@@ -480,8 +467,7 @@ def q_minhash_estimate(spark, sf_dir):
         .agg(F.sum((F.col("mh_a") == F.col("mh_b")).cast("bigint")).alias("n_agree"))
         .withColumn("est_jaccard", F.expr("(n_agree * 10000) div 16") / F.lit(10000.0))
     )
-    exact = dedup.jaccard_pairs(sh, threshold=0.0, candidates=cands)
-    return agree.join(exact, ["doc_a", "doc_b"]).select(
+    return agree.join(chain.near, ["doc_a", "doc_b"]).select(
         "doc_a", "doc_b", "n_agree", "est_jaccard", "jaccard"
     )
 
@@ -676,14 +662,12 @@ def q_dedup_residual(spark, sf_dir):
     One verified-pairs computation feeds both policies; residual = pairs
     whose BOTH endpoints survive. The canonical-doc + verified-pair front
     half (canonical_near_pairs) is computed ONCE and shared across the
-    two policies and the residual probe — the r6 registry-max 37 shuffles
-    came from each policy re-deriving the identical candidate chain; the
-    pair frames differ from full-corpus pairs only on non-canonical
+    two policies and the residual probe, instead of each policy
+    re-deriving the identical candidate chain; the pair frames differ from full-corpus pairs only on non-canonical
     endpoints, which the survivor semi-joins remove anyway (survivors ⊆
     canonicals), so the audited statistic is unchanged."""
     d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    docs_c, near = dedup.canonical_near_pairs(d, threshold=0.5, shingle_df=sh)
+    docs_c, near = dedup.canonical_near_pairs(d, threshold=0.5)
     docs_c = docs_c.cache()
     pairs = near.cache()
     prep = (docs_c, pairs)
@@ -2239,28 +2223,30 @@ def q_lsh_tune(spark, sf_dir):
     S-curve steepens left); the sweep quantifies the candidate-budget
     tradeoff. One shingle pass and one signature pass feed all three
     configs — only the banding aggregate differs per config."""
-    d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    sigs = dedup.minhash_signatures(sh, num_hashes=16).cache()
-    # r11 optimization (guide §1.2): the three configs' candidate sets are
-    # nested for the same 16 hashes (an 8-row band match implies both 4-row
-    # band matches implies all 2-row band matches), so the expensive
-    # shingle-intersection verification runs ONCE over the UNION of the
-    # candidate sets, and each config's verified count is a cheap pair
-    # semi-join against that shared cached frame — 3 verification joins -> 1.
-    # jaccard is a pure function of the pair, so ver ∩ cands_cfg is exactly
-    # the per-config verification result.
+    chain = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir)))
+    sigs = chain.sigs.cache()
+    # The configs' candidate sets are nested for the same 16 hashes (an
+    # 8-row band match implies both 4-row band matches implies all 2-row
+    # band matches), so the shingle-intersection verification runs ONCE
+    # over the UNION of the candidate sets, and each config's verified
+    # count is a pair semi-join against that shared cached frame. jaccard
+    # is a pure function of the pair, so ver ∩ cands_cfg is exactly the
+    # per-config verification result.
     cands_by_cfg = {
         (bands, rpb): dedup.lsh_candidate_pairs(
             sigs, bands=bands, rows_per_band=rpb
         ).cache()
+        if (bands, rpb) != (4, 4)
+        else chain.cands
         for bands, rpb in ((2, 8), (4, 4), (8, 2))
     }
     cands_union = None
     for c in cands_by_cfg.values():
         cands_union = c if cands_union is None else cands_union.unionByName(c)
     cands_union = cands_union.distinct()
-    ver_all = dedup.jaccard_pairs(sh, threshold=0.5, candidates=cands_union).cache()
+    ver_all = dedup.jaccard_pairs(
+        chain.sh, threshold=0.5, candidates=cands_union
+    ).cache()
     outs = []
     for (bands, rpb), cands in cands_by_cfg.items():
         ver = ver_all.join(cands, ["doc_a", "doc_b"], "left_semi")
@@ -2980,11 +2966,8 @@ def q_containment(spark, sf_dir):
     (operators/dedup.containment_pairs) — the subset/quote-duplication
     signal Jaccard misses. Candidates from the same MinHash/LSH banding as
     x_minhash_lsh; verification is left-semi pruned to candidate docs."""
-    d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4).cache()
-    return dedup.containment_pairs(sh, threshold=0.8, candidates=cands)
+    chain = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir)))
+    return dedup.containment_pairs(chain.sh, threshold=0.8, candidates=chain.cands)
 
 
 ORACLE_CONTAINMENT = f"""
@@ -3701,32 +3684,14 @@ def q_dedup_incremental(spark, sf_dir):
         .select("doc_id")
         .withColumn("_e", F.lit(1))
     )
-    sh = dedup.shingles(d).cache()
-    # r12: the band-signature frame feeds BOTH sides of the bucket join
-    # (incoming bi / base bb) — uncached, the whole MinHash+banding
-    # aggregate chain compiled and ran twice per action. The frame is
-    # narrow (4 rows per doc); cache it. The candidate pair set likewise
-    # has three consumers inside jaccard_pairs (both side prunes + the
-    # final pair semi-join) — same fix canonical_near_pairs already has.
-    bands = dedup.band_signatures(
-        dedup.minhash_signatures(sh, num_hashes=16), rows_per_band=4
-    ).cache()
-    bi = bands.filter(F.col("doc_id") % 5 == 0).select(
-        "band", "band_sig", F.col("doc_id").alias("_i")
+    chain = dedup.near_dup_chain(dedup.shingles(d))
+    # incoming × base candidates are the chain's candidate pairs with
+    # exactly one incoming endpoint: the same pairs as a (band, band_sig)
+    # bucket join between the two sides
+    candidates = chain.cands.filter(
+        (F.col("doc_a") % 5 == 0) != (F.col("doc_b") % 5 == 0)
     )
-    bb = bands.filter(F.col("doc_id") % 5 != 0).select(
-        "band", "band_sig", F.col("doc_id").alias("_b")
-    )
-    candidates = (
-        bi.join(bb, ["band", "band_sig"])
-        .select(
-            F.least("_i", "_b").alias("doc_a"),
-            F.greatest("_i", "_b").alias("doc_b"),
-        )
-        .distinct()
-        .cache()
-    )
-    jac = dedup.jaccard_pairs(sh, threshold=0.5, candidates=candidates)
+    jac = dedup.jaccard_pairs(chain.sh, threshold=0.5, candidates=candidates)
     near = (
         jac.select(
             F.when(F.col("doc_a") % 5 == 0, F.col("doc_a"))
@@ -4363,10 +4328,7 @@ def q_source_overlap(spark, sf_dir):
     is the tiny LSH-verified set, so the source joins are trivially
     broadcast-able; no new corpus scan beyond the shared shingle frame."""
     d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4).cache()
-    near = dedup.jaccard_pairs(sh, threshold=0.5, candidates=cands)
+    near = dedup.near_dup_chain(dedup.shingles(d)).near
     src = d.select("doc_id", "source")
     pairs = (
         near.join(src.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("_sa")), "doc_a")
@@ -7252,11 +7214,9 @@ def q_dedup_f1(spark, sf_dir):
     bucketed shared-shingle join (never all-pairs; run on a sample in
     production, this query IS the sample shape), the candidate side the
     banded LSH self-join; one scalar aggregate each."""
-    d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    truth = dedup.jaccard_pairs(sh, threshold=0.5)
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4).cache()
+    chain = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir)))
+    truth = dedup.jaccard_pairs(chain.sh, threshold=0.5)
+    cands = chain.cands
     flagged = truth.join(
         cands.withColumn("_c", F.lit(1)), ["doc_a", "doc_b"], "left"
     )
@@ -7644,18 +7604,14 @@ def q_dedup_threshold_curve(spark, sf_dir):
     cached shingle frame feeds the candidate set and all three truth
     evaluations; the truth side stays the bucketed shared-shingle join,
     never all-pairs."""
-    d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4).cache()
-    # r11 optimization (guide §1.2 "don't compute things you throw away"):
-    # the three truth sets differ ONLY in the final threshold filter over
+    chain = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir)))
+    cands = chain.cands
+    # The three truth sets differ ONLY in the final threshold filter over
     # the same floored-1e-4 jaccard column, and thresholds are nested
-    # (jac >= 0.5 ⊆ jac >= 0.3) — so run the expensive shingle-intersection
-    # verification ONCE at the lowest threshold and filter the cached
-    # verified-pair frame per curve point, instead of paying the full
-    # intersection join three times (plan: 3 shingle self-joins -> 1).
-    truth_all = dedup.jaccard_pairs(sh, threshold=0.3).cache()
+    # (jac >= 0.5 ⊆ jac >= 0.3) — so the shingle-intersection verification
+    # runs ONCE at the lowest threshold and the cached verified-pair frame
+    # is filtered per curve point (one shingle self-join, not three).
+    truth_all = dedup.jaccard_pairs(chain.sh, threshold=0.3).cache()
     out = None
     for thr_e1 in (3, 5, 7):
         truth = truth_all.filter(F.col("jaccard") >= thr_e1 / 10.0)
@@ -7728,10 +7684,7 @@ def q_split_leakage(spark, sf_dir):
     count is a distinct over the cross-pair endpoints, bounded by the
     pair count."""
     d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
-    pairs = dedup.jaccard_pairs(sh, threshold=0.5, candidates=cands)
+    pairs = dedup.near_dup_chain(dedup.shingles(d)).near
     t = pairs.select(
         "doc_a",
         "doc_b",
@@ -8167,18 +8120,15 @@ def q_kcore_peel(spark, sf_dir):
     LSH chain at Jaccard ≥ 0.3 (the looser threshold keeps enough graph
     to have a non-trivial core)."""
     d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
     # EAGER checkpoint of the input edge set (the connected_components
     # convention): the LSH chain upstream is the expensive lineage, and
     # without truncating it HERE the 5-round stats union re-embeds the
-    # corpus scan 15x in one plan (the r7 audit's recompiled-lineage
-    # gate); after this leaf the whole output plan contains no parquet
-    # scan at all, and the per-round lazy checkpoints keep depth O(1).
+    # corpus scan once per reference in one plan; after this leaf the
+    # whole output plan contains no parquet scan at all, and the
+    # per-round lazy checkpoints keep depth O(1).
     e = (
-        dedup.jaccard_pairs(sh, threshold=0.3, candidates=cands)
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+        dedup.near_dup_chain(dedup.shingles(d), threshold=0.3)
+        .near.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .localCheckpoint()
     )
 
@@ -8263,10 +8213,7 @@ def q_source_mirror(spark, sf_dir):
     Scale shape: the banded LSH chain, two broadcast-sized joins onto the
     (doc_id, source) projection, one |sources|²-bounded aggregate."""
     d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
-    pairs = dedup.jaccard_pairs(sh, threshold=0.5, candidates=cands)
+    pairs = dedup.near_dup_chain(dedup.shingles(d)).near
     src = d.select("doc_id", "source")
     j = (
         pairs.join(src.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("source", "src_a"), "doc_a")
@@ -8441,10 +8388,7 @@ def q_detector_agreement(spark, sf_dir):
     production shapes (never all-pairs); the comparison is one full outer
     join on the (doc_a, doc_b) key plus a scalar aggregate."""
     d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
-    mh = dedup.jaccard_pairs(sh, threshold=0.5, candidates=cands).select(
+    mh = dedup.near_dup_chain(dedup.shingles(d)).near.select(
         "doc_a", "doc_b", F.lit(1).alias("_m")
     )
     sim = dedup.simhash_near_pairs(dedup.simhash(d, bits=16), bits=16, max_hamming=1).select(
@@ -8635,10 +8579,9 @@ def q_length_strata_lsh(spark, sf_dir):
     id-keyed joins of the (doc_id, n_chars) projection; two 4-row
     aggregates full-outer-joined on the stratum key."""
     d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4).cache()
-    truth = dedup.jaccard_pairs(sh, threshold=0.5, candidates=None)
+    chain = dedup.near_dup_chain(dedup.shingles(d))
+    cands = chain.cands
+    truth = dedup.jaccard_pairs(chain.sh, threshold=0.5)
     lens = d.select(
         "doc_id",
         F.when(F.col("n_chars") < 400, "1_short")

@@ -24,20 +24,6 @@ from .llm import _docs_par, _embs_par, _minhash_lsh_ctes, _shingles_cte
 SPECS: list[QuerySpec] = []
 
 
-def _near_pairs(spark, sf_dir, threshold: float = 0.5):
-    """Verified near-dup pairs (doc_a < doc_b) via the standard chain —
-    shingles → MinHash16 → LSH 4×4 → Jaccard verify — shared by the r8
-    graph-structure probes. Cached by the caller when consumed more than
-    once."""
-    d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d)
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
-    return dedup.jaccard_pairs(sh, threshold=threshold, candidates=cands).select(
-        "doc_a", "doc_b"
-    )
-
-
 _PAIRS_CTES = f"""{_shingles_cte()},
 {_minhash_lsh_ctes()},
 pairs AS (SELECT doc_a, doc_b FROM verified WHERE jaccard >= 0.5)"""
@@ -52,8 +38,8 @@ def q_bfs_layers(spark, sf_dir):
     runs before acting on a flagged-document list ("if we drop these, how
     much of the dup neighborhood goes with them?").
 
-    Scale shape (r9 rewrite — MIN-DEPTH formulation over lazy RDD
-    leaves): instead of the frontier/visited/anti-join loop, each round
+    Scale shape (MIN-DEPTH formulation over lazy RDD leaves): instead
+    of a frontier/visited/anti-join loop, each round
     is simply h_r = distinct(neighbors(h_{r-1})): the set of nodes
     reachable in EXACTLY r steps (revisits allowed). A node first
     reachable at depth d appears in h_d, so min over the unioned
@@ -62,8 +48,8 @@ def q_bfs_layers(spark, sf_dir):
     anti-join. Lineage: the verified-pair frame and every h_r are
     truncated with graph.lazy_checkpoint (AQE-off compile — a plain lazy
     localCheckpoint under AQE runs all its stages at CONSTRUCTION time,
-    which this query used to pay as ~2.5 s / 27 jobs of plan_actions_s;
-    and a cache()-only variant re-pays seconds of Catalyst analysis of
+    charged as plan_actions_s; and a cache()-only variant re-pays
+    seconds of Catalyst analysis of
     the exponentially nested logical plan on EVERY action). Result:
     construction runs zero jobs, the first action materializes each
     leaf exactly once, and repeat actions read O(1) RDD leaves. Every
@@ -72,7 +58,8 @@ def q_bfs_layers(spark, sf_dir):
     are a FIXED constant, so plan depth is bounded."""
     from ..operators.graph import lazy_checkpoint
 
-    pairs = lazy_checkpoint(_near_pairs(spark, sf_dir))
+    near = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir))).near
+    pairs = lazy_checkpoint(near.select("doc_a", "doc_b"))
     und = pairs.unionByName(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )
@@ -129,7 +116,8 @@ def q_bridge_edges(spark, sf_dir):
     evidence by joining the undirected adjacency on both endpoints
     (wedge join — the x_triangle_count shape, bounded by Σ deg², never
     corpus²), then one left-anti against the supported-edge set."""
-    pairs = _near_pairs(spark, sf_dir).cache()
+    near = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir))).near
+    pairs = near.select("doc_a", "doc_b").cache()
     und = pairs.unionByName(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )
@@ -176,11 +164,7 @@ def q_lsh_band_health(spark, sf_dir):
     blows up. At 100 TB this reads the band-signature table (a write-time
     artifact) with two hash aggregates; the quadratic term is computed
     arithmetically from bucket sizes, never by expanding pairs."""
-    d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d)
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    banded = dedup.band_signatures(sigs, rows_per_band=4)
-    buckets = banded.groupBy("band", "band_sig").agg(
+    buckets = dedup.doc_bands(_docs_par(spark, sf_dir)).groupBy("band", "band_sig").agg(
         F.count(F.lit(1)).alias("sz")
     ).filter(F.col("sz") > 1)
     return (
@@ -276,7 +260,7 @@ def q_cross_shard_dup(spark, sf_dir):
     grand-total aggregate (benign single-partition)."""
     from ..functions.hashing import portable_hash64
 
-    pairs = _near_pairs(spark, sf_dir)
+    pairs = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir))).near
     sh_a = F.pmod(portable_hash64(F.col("doc_a").cast("string")), F.lit(8))
     sh_b = F.pmod(portable_hash64(F.col("doc_b").cast("string")), F.lit(8))
     return pairs.select((sh_a != sh_b).alias("x")).agg(
@@ -709,10 +693,8 @@ def q_weighted_jaccard(spark, sf_dir):
     every LSH consumer (never all-pairs); the corpus-size scalar attaches
     via one benign broadcast. All integer sums; milli ratios by truncating
     division in both engines."""
-    d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d).cache()
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
+    chain = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir)))
+    sh, cands = chain.sh, chain.cands
     n_docs = sh.select("doc_id").distinct().agg(F.count(F.lit(1)).alias("_n"))
     w = (
         sh.groupBy("shingle")
@@ -1069,11 +1051,7 @@ def q_jaccard_hist(spark, sf_dir):
     you whether a 0.5 threshold sits in a valley (robust) or on a cliff
     (threshold-sensitive, re-tune before trusting the dedup). One extra
     ≤6-row aggregate on top of the standard verified-pair chain."""
-    d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d)
-    sigs = dedup.minhash_signatures(sh, num_hashes=16)
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4)
-    near = dedup.jaccard_pairs(sh, threshold=0.5, candidates=cands)
+    near = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir))).near
     return (
         near.groupBy(F.floor(F.col("jaccard") * 10).cast("int").alias("decile"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
@@ -2086,7 +2064,8 @@ def q_degree_assortativity(spark, sf_dir):
     the doubled edge list), node-keyed degree agg CACHED (joined on both
     endpoints), then one scalar aggregate. Nothing beyond the LSH chain
     that produced the pairs."""
-    pairs = _near_pairs(spark, sf_dir).cache()
+    near = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir))).near
+    pairs = near.select("doc_a", "doc_b").cache()
     und = pairs.unionByName(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )

@@ -1291,10 +1291,8 @@ def q_minhash_accuracy(spark, sf_dir):
     corner). Scale shape: the signature match join is candidates × 16
     seed rows; the exact join is the candidate-first pruned co-shingle
     join the verify stage already pays — nothing beyond the LSH chain."""
-    d = _docs_par(spark, sf_dir)
-    sh = dedup.shingles(d)
-    sigs = dedup.minhash_signatures(sh, num_hashes=16).cache()
-    cands = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4).cache()
+    chain = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir)))
+    sh, sigs, cands = chain.sh, chain.sigs.cache(), chain.cands
     sa = sigs.select(F.col("doc_id").alias("doc_a"), "seed", F.col("minhash").alias("mh_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"), "seed", F.col("minhash").alias("mh_b"))
     est = (
@@ -1512,15 +1510,9 @@ def q_dedup_audit_sample(spark, sf_dir):
 
     from ..functions.hashing import portable_hash64
 
-    pairs = dedup.jaccard_pairs(
-        dedup.shingles(_docs_par(spark, sf_dir)),
-        threshold=0.0,
-        candidates=dedup.lsh_candidate_pairs(
-            dedup.minhash_signatures(dedup.shingles(_docs_par(spark, sf_dir)), num_hashes=16),
-            bands=4,
-            rows_per_band=4,
-        ),
-    )
+    pairs = dedup.near_dup_chain(
+        dedup.shingles(_docs_par(spark, sf_dir)), threshold=0.0
+    ).near
     dec = pairs.select(
         "doc_a",
         "doc_b",

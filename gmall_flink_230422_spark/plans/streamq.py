@@ -731,9 +731,7 @@ def q_stream_lsh_incremental(spark, sf_dir):
 
     def _probe_and_merge(batch: DataFrame, batch_id: int) -> None:
         docs = batch.select("doc_id", "text")
-        banded = dedup.band_signatures(
-            dedup.minhash_signatures(dedup.shingles(docs))
-        )
+        banded = dedup.doc_bands(docs)
         a, b = banded.alias("a"), banded.alias("b")
         intra = a.join(
             b,
@@ -1204,10 +1202,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
     base.select(dedup.fingerprint(F.col("text")).alias("fp")).distinct() \
         .write.parquet(fp_dir)
     dedup.shingles(base).write.parquet(sh_dir)
-    base_sh = spark.read.parquet(sh_dir)
-    dedup.band_signatures(
-        dedup.minhash_signatures(base_sh, num_hashes=16), rows_per_band=4
-    ).write.parquet(bands_dir)
+    dedup.doc_bands(base).write.parquet(bands_dir)
 
     # ---- incoming delta as a multi-file replay stream
     d.filter(inc_pred).repartition(4).write.parquet(src)
@@ -1216,9 +1211,9 @@ def q_stream_dedup_incremental(spark, sf_dir):
     def _probe(batch: DataFrame, _i: int) -> DataFrame:
         s = batch.sparkSession
         sh_i = dedup.shingles(batch)
-        bands_i = dedup.band_signatures(
-            dedup.minhash_signatures(sh_i, num_hashes=16), rows_per_band=4
-        ).select("band", "band_sig", F.col("doc_id").alias("_i"))
+        bands_i = dedup.doc_bands(batch).select(
+            "band", "band_sig", F.col("doc_id").alias("_i")
+        )
         bands_b = s.read.parquet(bands_dir).select(
             "band", "band_sig", F.col("doc_id").alias("_b")
         )
@@ -2532,9 +2527,8 @@ def q_stream_band_health(spark, sf_dir):
     stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _grid(batch: DataFrame, _i: int) -> DataFrame:
-        sigs = dedup.minhash_signatures(dedup.shingles(batch), num_hashes=16)
         return (
-            dedup.band_signatures(sigs, rows_per_band=4)
+            dedup.doc_bands(batch)
             .groupBy("band", "band_sig")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )

@@ -56,6 +56,38 @@ def test_minhash_lsh_finds_exact_dup(spark):
     assert (0, 2) not in cands
 
 
+
+def _pairs(df):
+    return sorted(tuple(r) for r in df.select("doc_a", "doc_b", "jaccard").collect())
+
+
+def test_near_dup_chain_matches_hand_composition(spark):
+    """The chain's verified pairs equal shingles → MinHash → LSH →
+    Jaccard composed by hand, at the default threshold and a looser one."""
+    sh = dedup.shingles(docs_df(spark))
+    for kw in ({}, {"threshold": 0.3}):
+        thr = kw.get("threshold", 0.5)
+        cands = dedup.lsh_candidate_pairs(
+            dedup.minhash_signatures(sh, num_hashes=16), bands=4, rows_per_band=4
+        )
+        hand = dedup.jaccard_pairs(sh, threshold=thr, candidates=cands)
+        chain = dedup.near_dup_chain(dedup.shingles(docs_df(spark)), **kw)
+        assert _pairs(chain.near) == _pairs(hand)
+        assert (0, 3, 1.0) in _pairs(chain.near)
+    spark.catalog.clearCache()
+
+
+def test_doc_bands_caches_nothing(spark):
+    """doc_bands runs inside foreachBatch, where a cache entry would
+    outlive its batch: building and collecting it must leave the
+    session's CacheManager empty."""
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    assert cache_manager.isEmpty()
+    rows = dedup.doc_bands(docs_df(spark)).collect()
+    assert len(rows) == 4 * 4  # four docs with >= 3 tokens, four bands each
+    assert cache_manager.isEmpty()
+
 def test_simhash_similar_docs_close(spark):
     sig = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs_df(spark)).collect()}
     assert sig[0] == sig[3]  # same normalized tokens

@@ -191,3 +191,25 @@ def test_plans_drain_through_streaming_drain():
         if ".writeStream" in line or "availableNow" in line or "mkdtemp" in line
     ]
     assert not hits, hits
+
+
+def test_plans_build_near_dup_through_chain():
+    """Every plan builds near-duplicate state through
+    operators.dedup.near_dup_chain (or doc_bands for band rows): no plan
+    module composes MinHash signatures, band signatures or LSH candidates
+    by hand. The one exception is x_lsh_tune, which sweeps band shapes
+    over the chain's signatures with one lsh_candidate_pairs call."""
+    plans = Path(__file__).resolve().parent.parent / "gmall_flink_230422_spark" / "plans"
+    patterns = ("minhash_signatures(", "band_signatures(", "lsh_candidate_pairs(")
+    llm = (plans / "llm.py").read_text().splitlines()
+    start = llm.index("def q_lsh_tune(spark, sf_dir):") + 1
+    end = next(i for i in range(start, len(llm)) if llm[i].startswith("def "))
+    hits = [
+        (p.name, i, line.strip())
+        for p in sorted(plans.glob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if any(pat in line for pat in patterns)
+    ]
+    in_tune = [h for h in hits if h[0] == "llm.py" and start <= h[1] <= end]
+    assert [h for h in hits if h not in in_tune] == []
+    assert len(in_tune) <= 1 and all("lsh_candidate_pairs(" in h[2] for h in in_tune)

@@ -262,9 +262,11 @@ def test_graph_modularity_mirror_given_edges(spark):
 def test_degree_assortativity_bounds(spark):
     """r_milli is a Pearson correlation scaled to milli: |r| <= 1000, and
     the edge count equals twice the undirected verified-pair count."""
-    from gmall_flink_230422_spark.plans.r8 import _near_pairs, q_degree_assortativity
+    from gmall_flink_230422_spark.operators import dedup
+    from gmall_flink_230422_spark.plans.llm import _docs_par
+    from gmall_flink_230422_spark.plans.r8 import q_degree_assortativity
 
-    n_pairs = _near_pairs(spark, SF).count()
+    n_pairs = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, SF))).near.count()
     r = q_degree_assortativity(spark, SF).collect()[0]
     assert r["n_edges"] == 2 * n_pairs
     if r["r_milli"] is not None:
