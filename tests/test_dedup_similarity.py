@@ -56,7 +56,6 @@ def test_minhash_lsh_finds_exact_dup(spark):
     assert (0, 2) not in cands
 
 
-
 def _pairs(df):
     return sorted(tuple(r) for r in df.select("doc_a", "doc_b", "jaccard").collect())
 
@@ -87,6 +86,7 @@ def test_doc_bands_caches_nothing(spark):
     rows = dedup.doc_bands(docs_df(spark)).collect()
     assert len(rows) == 4 * 4  # four docs with >= 3 tokens, four bands each
     assert cache_manager.isEmpty()
+
 
 def test_simhash_similar_docs_close(spark):
     sig = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs_df(spark)).collect()}
