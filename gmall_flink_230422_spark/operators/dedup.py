@@ -23,7 +23,7 @@ never compose the stage operators by hand.
 
 from __future__ import annotations
 
-from typing import NamedTuple
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -170,13 +170,13 @@ def band_signatures(
 def lsh_candidate_pairs(
     sigs: DataFrame,
     id_col: str = "doc_id",
-    bands: int = 4,
     rows_per_band: int = 4,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """LSH banding: docs sharing any band signature become candidate pairs.
 
-    Band signature = ordered concat of the band's minhashes. Pairs are
+    Band signature = ordered concat of the band's minhashes; the band
+    count is the signature length over ``rows_per_band``. Pairs are
     generated per bucket by a single hash aggregation (collect ids, emit
     i<j combinations with a higher-order expression) — one pass over the
     signatures, no self-join, no lineage recompute. Returns distinct
@@ -273,63 +273,53 @@ def jaccard_pairs(
     )
 
 
-class NearDupChain(NamedTuple):
-    """Named stages of :func:`near_dup_chain`."""
+class NearDupChain:
+    """Named stages of :func:`near_dup_chain`: ``sh`` (doc_id, shingle),
+    cached; ``sigs`` (doc_id, seed, minhash), uncached; ``cands``, the LSH
+    candidate pairs (doc_a < doc_b), cached; ``near``, the verified pairs
+    (doc_a, doc_b, jaccard), uncached and built on first read, because
+    building the verify plan costs Catalyst analysis time that callers
+    reading only the earlier stages should not pay."""
 
-    sh: DataFrame  # (id, shingle), cached
-    sigs: DataFrame  # (id, seed, minhash), uncached
-    cands: DataFrame  # LSH candidate pairs (doc_a < doc_b), cached
-    near: DataFrame  # verified pairs (doc_a, doc_b, jaccard), uncached
+    def __init__(self, shingle_df: DataFrame, threshold: float) -> None:
+        self.sh = shingle_df.cache()
+        self.sigs = minhash_signatures(self.sh)
+        self.cands = lsh_candidate_pairs(self.sigs).cache()
+        self._threshold = threshold
+
+    @cached_property
+    def near(self) -> DataFrame:
+        return jaccard_pairs(self.sh, threshold=self._threshold, candidates=self.cands)
 
 
-def near_dup_chain(
-    shingle_df: DataFrame,
-    *,
-    threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    id_col: str = "doc_id",
-) -> NearDupChain:
-    """The one near-duplicate chain: shingles → MinHash signatures → LSH
-    band candidates → Jaccard verify at ``threshold``. Returns every stage
-    by name, so a caller that needs the candidate set (recall audits) or
-    the signatures (estimator audits) reads it off the same chain instead
-    of rebuilding it.
+def near_dup_chain(shingle_df: DataFrame, *, threshold: float = 0.5) -> NearDupChain:
+    """The one near-duplicate chain: shingles → 16 MinHashes → LSH
+    candidates from 4 bands of 4 rows → Jaccard verify at ``threshold``.
+    Returns every stage by name, so a caller that needs the candidate set
+    (recall audits) or the signatures (estimator audits) reads it off the
+    same chain instead of rebuilding it.
 
     Caching rule: a stage the chain itself reads more than once is cached.
     ``sh`` feeds the signatures, the shingle counts and both verify sides;
     ``cands`` feeds both side prunes and the final pair semi-join.
-    ``sigs`` and ``near`` are read once here and stay uncached — a caller
-    that reads them again caches them itself."""
-    sh = shingle_df.cache()
-    sigs = minhash_signatures(sh, id_col, num_hashes)
-    cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band).cache()
-    near = jaccard_pairs(sh, id_col, threshold, candidates=cands)
-    return NearDupChain(sh, sigs, cands, near)
+    ``sigs`` is read once here and ``near`` not at all; both stay
+    uncached — a caller that reads them more than once caches them
+    itself."""
+    return NearDupChain(shingle_df, threshold)
 
 
-def doc_bands(
-    docs: DataFrame, num_hashes: int = 16, rows_per_band: int = 4
-) -> DataFrame:
-    """(doc_id, band, band_sig) of a doc frame: the LSH index row shape
-    that persisted band stores hold and micro-batch probes compute.
-    Nothing is cached: inside ``foreachBatch`` a per-batch cache entry
-    would outlive its batch."""
-    return band_signatures(
-        minhash_signatures(shingles(docs), num_hashes=num_hashes),
-        rows_per_band=rows_per_band,
-    )
+def doc_bands(shingle_df: DataFrame) -> DataFrame:
+    """(doc_id, band, band_sig) of a shingle frame, with the chain's 16
+    hashes in 4 bands of 4: the LSH index row shape that persisted band
+    stores hold and micro-batch probes compute. Nothing is cached: inside
+    ``foreachBatch`` a per-batch cache entry would outlive its batch."""
+    return band_signatures(minhash_signatures(shingle_df))
 
 
 def canonical_near_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    rows_per_band: int = 4,
     shingle_df: DataFrame | None = None,
 ) -> tuple:
     """The shared front half of :func:`dedup_corpus` and
@@ -345,43 +335,31 @@ def canonical_near_pairs(
     the token or verified-pair count, never corpus². A long-lived session
     recycling many corpus snapshots should call
     ``spark.catalog.clearCache()`` between snapshots."""
-    groups = exact_dedup_groups(docs, id_col, text_col)
+    groups = exact_dedup_groups(docs, "doc_id", text_col)
     # The canonical-id list feeds the shingle prune and docs_c's
     # semi-join, which dedup_corpus's final anti-join re-executes per
     # action; uncached, each of those re-runs the full-text md5
     # aggregate. It is cached rather than docs_c because it is narrow:
     # one id per distinct text, against the raw corpus rows.
-    canon_ids = groups.select(F.col("canonical_id").alias(id_col)).cache()
-    docs_c = docs.join(canon_ids, id_col, "left_semi")
+    canon_ids = groups.select(F.col("canonical_id").alias("doc_id")).cache()
+    docs_c = docs.join(canon_ids, "doc_id", "left_semi")
     if shingle_df is not None:
-        sh = shingle_df.join(docs_c.select(id_col), id_col, "left_semi")
+        sh = shingle_df.join(docs_c.select("doc_id"), "doc_id", "left_semi")
     else:
-        sh = shingles(docs_c, id_col, text_col)
-    chain = near_dup_chain(
-        sh,
-        threshold=threshold,
-        num_hashes=num_hashes,
-        bands=bands,
-        rows_per_band=rows_per_band,
-        id_col=id_col,
-    )
-    return docs_c, chain.near
+        sh = shingles(docs_c, "doc_id", text_col)
+    return docs_c, near_dup_chain(sh, threshold=threshold).near
 
 
 def dedup_corpus(
     docs: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    rows_per_band: int = 4,
     shingle_df: DataFrame | None = None,
     prepared: tuple | None = None,
 ) -> DataFrame:
     """End-to-end keep-one dedup pass: exact canonicals → MinHash/LSH
     near-dup pairs among canonicals → drop the higher id of each verified
-    pair. Returns the surviving ids (one column, ``id_col``).
+    pair. Returns the surviving ids (one column, ``doc_id``).
 
     The single-hop drop rule (doc_b of every pair) is the standard
     large-scale approximation of connected-component dedup — transitive
@@ -389,7 +367,7 @@ def dedup_corpus(
     iterative and reserved for offline compaction. Every stage is the
     shuffle-lean pipeline documented on the operators above.
 
-    ``shingle_df``: optional precomputed ``(id_col, shingle)`` frame for a
+    ``shingle_df``: optional precomputed ``(doc_id, shingle)`` frame for a
     SUPERSET of ``docs`` (it is semi-join-pruned to the canonical ids
     here). Pipelines that shingle the corpus for several consumers —
     contamination probe + dedup in the curation capstones — compute the
@@ -399,10 +377,10 @@ def dedup_corpus(
     several policy runs.
     """
     docs_c, near = prepared if prepared is not None else canonical_near_pairs(
-        docs, id_col, text_col, threshold, num_hashes, bands, rows_per_band, shingle_df
+        docs, text_col, threshold, shingle_df
     )
-    drop = near.select(F.col("doc_b").alias(id_col)).distinct()
-    return docs_c.join(drop, id_col, "left_anti").select(id_col)
+    drop = near.select(F.col("doc_b").alias("doc_id")).distinct()
+    return docs_c.join(drop, "doc_id", "left_anti").select("doc_id")
 
 
 def connected_components(
@@ -620,30 +598,24 @@ def connected_components(
 
 def dedup_corpus_cc(
     docs: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    num_hashes: int = 16,
-    bands: int = 4,
-    rows_per_band: int = 4,
     shingle_df: DataFrame | None = None,
     prepared: tuple | None = None,
 ) -> DataFrame:
     """Component-exact keep-one dedup: like `dedup_corpus` but transitively
     correct — exact canonicals → LSH/Jaccard near-dup pairs → connected
     components → keep the min-id doc per component plus every unpaired doc.
-    Returns surviving ids (one column, ``id_col``). ``shingle_df`` shares a
+    Returns surviving ids (one column, ``doc_id``). ``shingle_df`` shares a
     precomputed superset shingle frame exactly as in `dedup_corpus`;
     ``prepared`` shares a `(docs_c, near)` pair from
     :func:`canonical_near_pairs`."""
     docs_c, near = prepared if prepared is not None else canonical_near_pairs(
-        docs, id_col, text_col, threshold, num_hashes, bands, rows_per_band, shingle_df
+        docs, text_col, threshold, shingle_df
     )
     clusters = connected_components(near)
-    drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
-    )
-    return docs_c.join(drop, id_col, "left_anti").select(id_col)
+    drop = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
+    return docs_c.join(drop, "doc_id", "left_anti").select("doc_id")
 
 
 def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 16) -> DataFrame:

@@ -2233,9 +2233,7 @@ def q_lsh_tune(spark, sf_dir):
     # is a pure function of the pair, so ver ∩ cands_cfg is exactly the
     # per-config verification result.
     cands_by_cfg = {
-        (bands, rpb): dedup.lsh_candidate_pairs(
-            sigs, bands=bands, rows_per_band=rpb
-        ).cache()
+        (bands, rpb): dedup.lsh_candidate_pairs(sigs, rows_per_band=rpb).cache()
         if (bands, rpb) != (4, 4)
         else chain.cands
         for bands, rpb in ((2, 8), (4, 4), (8, 2))
@@ -3684,14 +3682,23 @@ def q_dedup_incremental(spark, sf_dir):
         .select("doc_id")
         .withColumn("_e", F.lit(1))
     )
-    chain = dedup.near_dup_chain(dedup.shingles(d))
-    # incoming × base candidates are the chain's candidate pairs with
-    # exactly one incoming endpoint: the same pairs as a (band, band_sig)
-    # bucket join between the two sides
-    candidates = chain.cands.filter(
-        (F.col("doc_a") % 5 == 0) != (F.col("doc_b") % 5 == 0)
+    sh = dedup.shingles(d).cache()
+    # the band rows feed both sides of the bucket join and the candidate
+    # pairs feed jaccard_pairs' two side prunes and its pair semi-join;
+    # both are narrow, and uncached each would be recomputed per reader
+    bands = dedup.doc_bands(sh).cache()
+    bi = bands.filter(inc_pred).select("band", "band_sig", F.col("doc_id").alias("_i"))
+    bb = bands.filter(~inc_pred).select("band", "band_sig", F.col("doc_id").alias("_b"))
+    candidates = (
+        bi.join(bb, ["band", "band_sig"])
+        .select(
+            F.least("_i", "_b").alias("doc_a"),
+            F.greatest("_i", "_b").alias("doc_b"),
+        )
+        .distinct()
+        .cache()
     )
-    jac = dedup.jaccard_pairs(chain.sh, threshold=0.5, candidates=candidates)
+    jac = dedup.jaccard_pairs(sh, threshold=0.5, candidates=candidates)
     near = (
         jac.select(
             F.when(F.col("doc_a") % 5 == 0, F.col("doc_a"))

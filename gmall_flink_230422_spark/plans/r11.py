@@ -51,7 +51,7 @@ _BPE_VOCAB_VERSION = 1
 _LM_MODEL_VERSION = 1
 
 
-def ensure_lsh_store(spark, sf_dir, num_hashes: int = 16, rows_per_band: int = 4) -> str:
+def ensure_lsh_store(spark, sf_dir) -> str:
     """Build-if-absent persisted LSH band-signature store: (doc_id, band,
     band_sig) PARTITIONED BY band — the standing near-dup index a nightly
     ingest probes (s_stream_lsh_incremental built a per-invocation fixture
@@ -66,13 +66,11 @@ def ensure_lsh_store(spark, sf_dir, num_hashes: int = 16, rows_per_band: int = 4
     d = _docs_par(spark, sf_dir)
 
     def _build(staging: str) -> None:
-        dedup.doc_bands(
-            d, num_hashes=num_hashes, rows_per_band=rows_per_band
-        ).write.partitionBy("band").parquet(staging)
+        dedup.doc_bands(dedup.shingles(d)).write.partitionBy("band").parquet(staging)
 
     return ensure_dataset(
         base,
-        f"v{_LSH_STORE_VERSION}-h{num_hashes}-r{rows_per_band}-"
+        f"v{_LSH_STORE_VERSION}-h16-r4-"
         + corpus_token(sf_dir, "documents"),
         _build,
     )
@@ -133,7 +131,7 @@ def q_stream_lsh_persisted(spark, sf_dir):
 
     def _probe(batch, _i: int):
         s = batch.sparkSession
-        banded = dedup.doc_bands(batch)
+        banded = dedup.doc_bands(dedup.shingles(batch))
         store = _read_lsh_store(s, store_p).alias("b")
         dup = (
             banded.alias("a")
@@ -226,13 +224,13 @@ def q_stream_lsh_store_upsert(spark, sf_dir):
     delta_p = os.path.join(tmp, "delta")
     src = os.path.join(tmp, "arrivals")
 
-    dedup.doc_bands(base).write.partitionBy("band").parquet(base_p)
+    dedup.doc_bands(dedup.shingles(base)).write.partitionBy("band").parquet(base_p)
 
     fresh.repartition(4).write.parquet(src)
     stream = files.stream_parquet(spark, src, files_per_trigger=1)
 
     def _ingest(batch, batch_id: int) -> None:
-        dedup.doc_bands(batch).write.mode("overwrite").partitionBy("band").parquet(
+        dedup.doc_bands(dedup.shingles(batch)).write.mode("overwrite").partitionBy("band").parquet(
             os.path.join(delta_p, f"ingest_batch={batch_id}")
         )
 
@@ -264,12 +262,12 @@ def q_lsh_store_compact(spark, sf_dir):
     delta_p = os.path.join(tmp, "delta")
     compact_p = os.path.join(tmp, "compacted")
 
-    dedup.doc_bands(base).write.partitionBy("band").parquet(base_p)
+    dedup.doc_bands(dedup.shingles(base)).write.partitionBy("band").parquet(base_p)
     # three accumulated ingest deltas (the upsert twin's sink shape);
     # doc_id = 3m+1 here, so (doc_id div 3) % 3 splits fresh 3 ways
     for i in range(3):
         dedup.doc_bands(
-            fresh.filter(F.expr("(doc_id div 3) % 3") == i)
+            dedup.shingles(fresh.filter(F.expr("(doc_id div 3) % 3") == i))
         ).write.partitionBy("band").parquet(os.path.join(delta_p, f"ingest_batch={i}"))
 
     merged = _read_lsh_store(spark, base_p).select(
@@ -468,7 +466,7 @@ def _gate_verdicts(spark, sf_dir, incoming):
         .filter(F.col("first_id") < F.col("doc_id"))
         .select("doc_id")
     )
-    banded = dedup.doc_bands(incoming)
+    banded = dedup.doc_bands(dedup.shingles(incoming))
     near = (
         banded.alias("a")
         .join(

@@ -164,7 +164,8 @@ def q_lsh_band_health(spark, sf_dir):
     blows up. At 100 TB this reads the band-signature table (a write-time
     artifact) with two hash aggregates; the quadratic term is computed
     arithmetically from bucket sizes, never by expanding pairs."""
-    buckets = dedup.doc_bands(_docs_par(spark, sf_dir)).groupBy("band", "band_sig").agg(
+    banded = dedup.doc_bands(dedup.shingles(_docs_par(spark, sf_dir)))
+    buckets = banded.groupBy("band", "band_sig").agg(
         F.count(F.lit(1)).alias("sz")
     ).filter(F.col("sz") > 1)
     return (

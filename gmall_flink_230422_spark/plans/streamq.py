@@ -731,7 +731,7 @@ def q_stream_lsh_incremental(spark, sf_dir):
 
     def _probe_and_merge(batch: DataFrame, batch_id: int) -> None:
         docs = batch.select("doc_id", "text")
-        banded = dedup.doc_bands(docs)
+        banded = dedup.doc_bands(dedup.shingles(docs))
         a, b = banded.alias("a"), banded.alias("b")
         intra = a.join(
             b,
@@ -1202,7 +1202,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
     base.select(dedup.fingerprint(F.col("text")).alias("fp")).distinct() \
         .write.parquet(fp_dir)
     dedup.shingles(base).write.parquet(sh_dir)
-    dedup.doc_bands(base).write.parquet(bands_dir)
+    dedup.doc_bands(spark.read.parquet(sh_dir)).write.parquet(bands_dir)
 
     # ---- incoming delta as a multi-file replay stream
     d.filter(inc_pred).repartition(4).write.parquet(src)
@@ -1211,7 +1211,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
     def _probe(batch: DataFrame, _i: int) -> DataFrame:
         s = batch.sparkSession
         sh_i = dedup.shingles(batch)
-        bands_i = dedup.doc_bands(batch).select(
+        bands_i = dedup.doc_bands(sh_i).select(
             "band", "band_sig", F.col("doc_id").alias("_i")
         )
         bands_b = s.read.parquet(bands_dir).select(
@@ -2528,7 +2528,7 @@ def q_stream_band_health(spark, sf_dir):
 
     def _grid(batch: DataFrame, _i: int) -> DataFrame:
         return (
-            dedup.doc_bands(batch)
+            dedup.doc_bands(dedup.shingles(batch))
             .groupBy("band", "band_sig")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )

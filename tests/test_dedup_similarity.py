@@ -67,7 +67,7 @@ def test_near_dup_chain_matches_hand_composition(spark):
     for kw in ({}, {"threshold": 0.3}):
         thr = kw.get("threshold", 0.5)
         cands = dedup.lsh_candidate_pairs(
-            dedup.minhash_signatures(sh, num_hashes=16), bands=4, rows_per_band=4
+            dedup.minhash_signatures(sh, num_hashes=16), rows_per_band=4
         )
         hand = dedup.jaccard_pairs(sh, threshold=thr, candidates=cands)
         chain = dedup.near_dup_chain(dedup.shingles(docs_df(spark)), **kw)
@@ -83,7 +83,7 @@ def test_doc_bands_caches_nothing(spark):
     spark.catalog.clearCache()
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     assert cache_manager.isEmpty()
-    rows = dedup.doc_bands(docs_df(spark)).collect()
+    rows = dedup.doc_bands(dedup.shingles(docs_df(spark))).collect()
     assert len(rows) == 4 * 4  # four docs with >= 3 tokens, four bands each
     assert cache_manager.isEmpty()
 
