@@ -11,10 +11,12 @@ Spark-first mapping:
   - lookup join → ``broadcast()`` hash join: the dim snapshot per micro-batch
     IS proc-time semantics, and at 100 TB a broadcast of a small dim avoids
     shuffling the fact side entirely.
-  - stream-stream joins → watermarked joins; in batch the same builder
-    returns a plain shuffled hash/sort-merge join that AQE can re-plan.
-  - join-state TTL (5 s / 905 s wall clock) → event-time watermark eviction;
-    documented semantic gap (SURVEY §2.3 J7): Spark evicts by event time.
+  - stream-stream joins → watermarked interval joins
+    (``streaming/joins.py::interval_join``); join-state TTL (5 s / 905 s wall
+    clock) → event-time watermark eviction, a documented semantic gap
+    (SURVEY §2.3 J7): Spark evicts by event time.
+  - broadcast-state config join → ``apps.py::dim_app``: the latest config
+    snapshot routes and prunes each CDC batch.
 """
 
 from __future__ import annotations
@@ -36,29 +38,6 @@ def lookup_join(
     shape that does zero fact-side shuffle.
     """
     return fact.join(F.broadcast(dim), on, how)
-
-
-def stream_stream_join(
-    left: DataFrame,
-    right: DataFrame,
-    on,
-    how: str = "inner",
-    left_watermark: tuple[str, str] | None = None,
-    right_watermark: tuple[str, str] | None = None,
-) -> DataFrame:
-    """J1/J2/J5/J6: equi-join of two (possibly streaming) DataFrames.
-
-    For streaming inputs pass watermarks ``(ts_col, "5 seconds")`` on both
-    sides — that bounds join state exactly where the reference used
-    IdleStateRetention (DwdTradeOrderPreProcess.java:20). For batch inputs
-    the watermarks are inert and this is a plain shuffled equi-join whose
-    physical strategy (broadcast/SMJ/skew split) is left to Catalyst + AQE.
-    """
-    if left_watermark and left.isStreaming:
-        left = left.withWatermark(*left_watermark)
-    if right_watermark and right.isStreaming:
-        right = right.withWatermark(*right_watermark)
-    return left.join(right, on, how)
 
 
 def salted_join(
@@ -240,15 +219,3 @@ def range_join(
     )
     return out.drop("_bin")
 
-
-def config_broadcast_join(
-    main: DataFrame,
-    config: DataFrame,
-    main_key: str = "table",
-    config_key: str = "source_table",
-) -> DataFrame:
-    """J8/T10: the broadcast-state pattern (DimApp.java:178-187,
-    TableProcessFunction.java:169-205) — every row of the main stream is
-    routed by the latest config row for its table. Re-reading the config DF
-    each micro-batch reproduces the CDC-updated broadcast state."""
-    return main.join(F.broadcast(config), main[main_key] == config[config_key], "inner")

@@ -109,39 +109,6 @@ def bm25_topk(docs: DataFrame, terms: tuple[str, ...], k: int = 20,
     )
 
 
-def bm25_oracle_sql(terms: tuple[str, ...], k: int, toks_expr: str) -> str:
-    """DuckDB oracle for :func:`bm25_topk` — the same expression tree,
-    floor-per-term on the 1e-4 integer grid before the per-doc sum."""
-    in_list = ", ".join(f"'{t}'" for t in terms)
-    return f"""
-WITH dls AS (
-  SELECT doc_id, len({toks_expr}) AS dl FROM documents
-),
-stats AS (SELECT count(*) AS n_docs, sum(dl) AS sum_dl FROM dls),
-tfs AS (
-  SELECT t.doc_id, d.dl, t.term, count(*) AS tf
-  FROM (SELECT doc_id, unnest({toks_expr}) AS term FROM documents) t
-  JOIN dls d ON t.doc_id = d.doc_id
-  WHERE t.term IN ({in_list})
-  GROUP BY 1, 2, 3
-),
-dfs AS (SELECT term, count(DISTINCT doc_id) AS df FROM tfs GROUP BY 1),
-parts AS (
-  SELECT tfs.doc_id,
-         floor(
-           ln(1.0 + (s.n_docs - dfs.df + 0.5) / (dfs.df + 0.5))
-           * ((tfs.tf * {K1 + 1.0}) /
-              (tfs.tf + {K1} * ({1.0 - B} + {B} * ((tfs.dl * s.n_docs) * 1.0 / s.sum_dl))))
-           * 10000.0
-         )::BIGINT AS part_e4
-  FROM tfs JOIN dfs ON tfs.term = dfs.term CROSS JOIN stats s
-)
-SELECT doc_id, sum(part_e4) / 10000.0 AS score
-FROM parts GROUP BY doc_id
-ORDER BY score DESC, doc_id LIMIT {k}
-"""
-
-
 def pmi_bigrams(docs: DataFrame, min_count: int = 5, k: int = 100,
                 id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Top-k collocations by pointwise mutual information.

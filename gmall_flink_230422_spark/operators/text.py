@@ -1017,44 +1017,6 @@ def bpe_encoded_length_with_vocab(
     )
 
 
-def weighted_sample(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    weight_col: str = "n_chars",
-    scale: int = 256,
-    salt: str = "wsample",
-) -> DataFrame:
-    """Per-row weighted sampling: keep a document with probability
-    min(1, weight/scale), deterministically — the quality-weighted
-    upsampling/downsampling primitive (e.g. keep long documents, thin
-    boilerplate) complementing the per-stratum :func:`stratified_sample`.
-
-    Decision is pure integer arithmetic: salted id-hash bucket in [0,10000)
-    vs threshold ``min(10000, weight·10000 div scale)`` — no float at the
-    boundary, engine-portable, stable under corpus growth and re-runs.
-    Map-side projection+filter: zero shuffles.
-    """
-    from ..functions.hashing import portable_hash64
-
-    bucket = F.pmod(
-        portable_hash64(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))),
-        F.lit(10000),
-    )
-    thr = F.least(
-        F.lit(10000).cast("bigint"),
-        F.expr(f"({weight_col} * 10000) div {scale}").cast("bigint"),
-    )
-    return (
-        docs.select(
-            F.col(id_col),
-            F.col(weight_col),
-            bucket.cast("bigint").alias("bucket"),
-            thr.alias("keep_thr"),
-        )
-        .filter(F.col("bucket") < F.col("keep_thr"))
-    )
-
-
 def stratified_sample(
     docs: DataFrame,
     rates: dict[str, float],

@@ -130,14 +130,15 @@ sh AS (
 """
 
 
-def _minhash_lsh_ctes() -> str:
-    """hashed → seeded → banded → cand → sz → inter → verified, over ``sh``."""
-    return f"""
+def _minhash_band_ctes() -> str:
+    """hashed → seeded → banded over ``sh``: 16 MinHashes per doc in 4
+    bands of 4, the SQL twin of ``dedup.doc_bands``."""
+    return """
 hashed AS (
-  SELECT doc_id, {{base}} AS hp FROM sh
+  SELECT doc_id, {base} AS hp FROM sh
 ),
 seeded AS (
-  SELECT doc_id, seed, min({{value}}) AS minhash
+  SELECT doc_id, seed, min({value}) AS minhash
   FROM hashed CROSS JOIN (SELECT unnest(range(0, 16)) AS seed) seeds
   GROUP BY doc_id, seed
 ),
@@ -145,7 +146,15 @@ banded AS (
   SELECT doc_id, (seed // 4)::INT AS band,
          string_agg(minhash::VARCHAR, ',' ORDER BY seed) AS band_sig
   FROM seeded GROUP BY doc_id, band
-),
+)""".format(
+        base=dedup.minhash_base_sql("shingle"),
+        value=dedup.minhash_value_sql("seed", "hp"),
+    )
+
+
+def _minhash_lsh_ctes() -> str:
+    """``_minhash_band_ctes`` → cand → sz → inter → verified, over ``sh``."""
+    return _minhash_band_ctes() + """,
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM banded a JOIN banded b
@@ -163,10 +172,7 @@ verified AS (
   JOIN cand c ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
   JOIN sz x ON i.doc_a = x.doc_id JOIN sz y ON i.doc_b = y.doc_id
 )
-""".format(
-        base=dedup.minhash_base_sql("shingle"),
-        value=dedup.minhash_value_sql("seed", "hp"),
-    )
+"""
 
 
 _SHINGLES_CTE = _shingles_cte()
@@ -3725,20 +3731,7 @@ def q_dedup_incremental(spark, sf_dir):
 
 
 ORACLE_DEDUP_INCREMENTAL = rf"""
-WITH {_SHINGLES_CTE},
-hashed AS (
-  SELECT doc_id, {dedup.minhash_base_sql("shingle")} AS hp FROM sh
-),
-seeded AS (
-  SELECT doc_id, seed, min({dedup.minhash_value_sql("seed", "hp")}) AS minhash
-  FROM hashed CROSS JOIN (SELECT unnest(range(0, 16)) AS seed) seeds
-  GROUP BY doc_id, seed
-),
-banded AS (
-  SELECT doc_id, (seed // 4)::INT AS band,
-         string_agg(minhash::VARCHAR, ',' ORDER BY seed) AS band_sig
-  FROM seeded GROUP BY doc_id, band
-),
+WITH {_SHINGLES_CTE},{_minhash_band_ctes()},
 cand AS (
   SELECT DISTINCT least(a.doc_id, b.doc_id) AS doc_a,
                   greatest(a.doc_id, b.doc_id) AS doc_b

@@ -86,10 +86,9 @@ _IVF_INDEX_VERSION = 1
 
 def corpus_token(sf_dir: str, table: str) -> str:
     """Footer-stats freshness token of one fixture table — the corpus leg
-    of every standing-artifact fingerprint. Replaces the r10 per-probe
-    ``df.count()`` Spark job (r10 verdict item 3): at 100 TB a freshness
-    check that scans the corpus per probing session is the wrong cost
-    shape; this reads only parquet footers (io.dataset_fingerprint)."""
+    of every standing-artifact fingerprint. It reads only parquet footers
+    (io.dataset_fingerprint), never the rows: at 100 TB a freshness check
+    that scans the corpus per probing session is the wrong cost shape."""
     from ..io import dataset_fingerprint
 
     return dataset_fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
@@ -172,9 +171,7 @@ def q_stream_ann_ivf_persisted(spark, sf_dir):
 
     index_p, cents_p = ensure_ivf_index(spark, sf_dir)
     e = _embs_par(spark, sf_dir)
-    src = os.path.join(scratch_dir("streamq_annpersist_"), "queries")
-    e.filter(F.col("vec_id") % 100 == 1).repartition(4).write.parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(e.filter(F.col("vec_id") % 100 == 1))
 
     def _probe(batch, _i: int):
         s = batch.sparkSession
@@ -264,7 +261,6 @@ def q_stream_ann_index_upsert(spark, sf_dir):
     cents_p = os.path.join(tmp, "cents")
     base_p = os.path.join(tmp, "base")
     delta_p = os.path.join(tmp, "delta")
-    src = os.path.join(tmp, "arrivals")
 
     similarity.ivf_centroids(base, n_centroids=16).write.parquet(cents_p)
     cents = spark.read.parquet(cents_p)
@@ -274,8 +270,7 @@ def q_stream_ann_index_upsert(spark, sf_dir):
         .parquet(base_p)
     )
 
-    fresh.repartition(4).write.parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(fresh)
 
     def _ingest(batch, batch_id: int) -> None:
         s = batch.sparkSession

@@ -123,11 +123,7 @@ def q_stream_lsh_persisted(spark, sf_dir):
 
     store_p = ensure_lsh_store(spark, sf_dir)
     d = _docs_par(spark, sf_dir)
-    src = os.path.join(scratch_dir("streamq_lshpersist_"), "docs")
-    d.filter(F.col("doc_id") % 3 == 1).select("doc_id", "text").repartition(
-        4
-    ).write.parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(d.filter(F.col("doc_id") % 3 == 1).select("doc_id", "text"))
 
     def _probe(batch, _i: int):
         s = batch.sparkSession
@@ -222,12 +218,10 @@ def q_stream_lsh_store_upsert(spark, sf_dir):
     tmp = scratch_dir("streamq_lshupsert_")
     base_p = os.path.join(tmp, "base")
     delta_p = os.path.join(tmp, "delta")
-    src = os.path.join(tmp, "arrivals")
 
     dedup.doc_bands(dedup.shingles(base)).write.partitionBy("band").parquet(base_p)
 
-    fresh.repartition(4).write.parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(fresh)
 
     def _ingest(batch, batch_id: int) -> None:
         dedup.doc_bands(dedup.shingles(batch)).write.mode("overwrite").partitionBy("band").parquet(
@@ -531,31 +525,18 @@ def q_stream_ingest_gate(spark, sf_dir):
     from ..sources import files
     from ..streaming.drain import drain
 
-    src = os.path.join(scratch_dir("streamq_ingestgate_"), "arrivals")
-    _incoming(spark, sf_dir).repartition(4).write.parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
     return drain(
-        stream, lambda batch, _i: _gate_verdicts(batch.sparkSession, sf_dir, batch)
+        files.replay(_incoming(spark, sf_dir)),
+        lambda batch, _i: _gate_verdicts(batch.sparkSession, sf_dir, batch),
     )
 
 
 def _oracle_ingest_gate() -> str:
-    from .llm import _shingles_cte
+    from .llm import _minhash_band_ctes, _shingles_cte
     from .r8 import _GRAM13, _TOKS_NORM
 
     return f"""
-WITH {_shingles_cte()},
-hashed AS (SELECT doc_id, {dedup.minhash_base_sql("shingle")} AS hp FROM sh),
-seeded AS (
-  SELECT doc_id, seed, min({dedup.minhash_value_sql("seed", "hp")}) AS minhash
-  FROM hashed CROSS JOIN (SELECT unnest(range(0, 16)) AS seed) seeds
-  GROUP BY doc_id, seed
-),
-banded AS (
-  SELECT doc_id, (seed // 4)::INT AS band,
-         string_agg(minhash::VARCHAR, ',' ORDER BY seed) AS band_sig
-  FROM seeded GROUP BY doc_id, band
-),
+WITH {_shingles_cte()},{_minhash_band_ctes()},
 incoming AS (SELECT doc_id FROM documents WHERE {_INCOMING_PRED_SQL}),
 fps AS (SELECT doc_id, md5(lower(trim(text))) AS fp FROM documents),
 firsts AS (SELECT fp, min(doc_id) AS first_id FROM fps GROUP BY 1),

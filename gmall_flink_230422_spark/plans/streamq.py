@@ -6,11 +6,11 @@ twin.
 
 Mechanics per query:
 
-1. re-chunk the fixture table into a multi-file parquet dir (8 files) so the
-   file stream replays as several micro-batches (``maxFilesPerTrigger``) —
-   the deterministic Kafka stand-in (sources/files.py);
+1. replay the fixture table through ``sources.files.replay`` — one parquet
+   file per micro-batch, 4 by default, cut into event-time or key ranges
+   where arrival order matters — the deterministic Kafka stand-in;
 2. run the SAME operator composition as the batch twin
-   (``operators/windows.py``) on the ``readStream`` DataFrame;
+   (``operators/windows.py``) on the streaming DataFrame;
 3. run it to completion through ``streaming.drain`` (``foreachBatch`` +
    ``Trigger.AvailableNow``, process-everything-then-stop) — the one
    micro-batch loop every twin here, in r10.py and in r11.py shares — and
@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..io import load_table, scratch_dir
@@ -61,51 +61,10 @@ from .gmall import (
 )
 
 
-def _clamp_shuffle(spark: SparkSession) -> None:
-    """On a vanilla session (driver harness) the 200-partition default makes
-    every micro-batch state shuffle ~6× wider than the core count for the
-    small per-batch volumes here — pure task-launch overhead. Clamp to the
-    scheduler's parallelism ONLY when the config is still the untouched
-    default; a deliberate setting (session factory, cluster tuning) wins.
-    Runtime-settable, affects only subsequent jobs on this session."""
-    if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-        )
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events as a replayed multi-file micro-batch stream (ts already
-    micros — the nanos conversion happens in the batch re-chunk write)."""
-    _clamp_shuffle(spark)
-    tmp = scratch_dir("streamq_src_")
-    src = os.path.join(tmp, "events")
-    ev = load_table(spark, sf_dir, "events")
-    ev.repartition(8).write.mode("overwrite").parquet(src)
-    return files.stream_parquet(spark, src, files_per_trigger=2)
-
-
-def _ordered_events_source(
-    spark: SparkSession, sf_dir: str, cols: list[str], extra: DataFrame | None = None
-) -> str:
-    """Land events (optionally ∪ ``extra``) as event-time-ordered replay
-    chunks; returns the source dir. Per-key stateful operators (T2/T5) and
-    watermarked joins see in-order arrival across micro-batches, the same
-    contract a Kafka topic keyed by mid gives the reference's keyed streams."""
-    _clamp_shuffle(spark)
-    tmp = scratch_dir("streamq_ord_")
-    src = os.path.join(tmp, "events")
-    ev = load_table(spark, sf_dir, "events").select(*cols)
-    if extra is not None:
-        ev = ev.unionByName(extra.select(*cols))
-    files.write_time_chunks(ev, "ts", src, n_chunks=6)
-    return src
-
-
 def q_stream_tumble_keyed(spark, sf_dir):
     """A1 through the streaming engine: keyed 1-hour tumble on the replayed
     event stream; final image == batch a1_tumble_keyed."""
-    ev = _events_stream(spark, sf_dir)
+    ev = files.replay(load_table(spark, sf_dir, "events"))
     out = windows.tumble(
         ev,
         "ts",
@@ -119,7 +78,7 @@ def q_stream_tumble_keyed(spark, sf_dir):
 def q_stream_union_preagg(spark, sf_dir):
     """A4+T8 through the streaming engine: three filtered branches 1-hot
     encoded, unioned, day-tumbled; final image == batch a4_union_preagg."""
-    ev = _events_stream(spark, sf_dir)
+    ev = files.replay(load_table(spark, sf_dir, "events"))
     branches = [
         (ev.filter(F.col("event_type") == "view"), {"pv_ct": F.lit(1)}),
         (ev.filter(F.col("event_type") == "click"), {"click_ct": F.lit(1)}),
@@ -146,7 +105,7 @@ def q_stream_sliding_window(spark, sf_dir):
     lives in 2 windows simultaneously; Spark's window generator expands
     before the stateful aggregate). Final complete-mode image == batch
     e_sliding_window, same oracle."""
-    ev = _events_stream(spark, sf_dir)
+    ev = files.replay(load_table(spark, sf_dir, "events"))
     out = windows.slide(
         ev,
         "ts",
@@ -164,7 +123,7 @@ def q_stream_cumulate(spark, sf_dir):
     drained via AvailableNow, growing windows rolled up read-side). value_sum
     partials are exact on the fixture's 2-dec value grid, so the re-rounded
     rollup equals the batch/oracle total exactly."""
-    ev = _events_stream(spark, sf_dir)
+    ev = files.replay(load_table(spark, sf_dir, "events"))
     partial = windows.cumulate_streaming(
         ev,
         "ts",
@@ -201,9 +160,6 @@ def q_stream_late_data(spark, sf_dir):
     not just to itself."""
     from ..functions.hashing import portable_hash64
 
-    _clamp_shuffle(spark)
-    tmp = scratch_dir("streamq_late_")
-    src = os.path.join(tmp, "events")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
     chunked = ev.withColumn(
         "_chunk",
@@ -212,8 +168,7 @@ def q_stream_late_data(spark, sf_dir):
             F.lit(LATE_CHUNKS),
         ),
     )
-    files.write_chunks_by(chunked, "_chunk", src, LATE_CHUNKS)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(chunked, batches=LATE_CHUNKS, order="_chunk")
     out = (
         stream.withWatermark("ts", f"{LATE_WM_S} seconds")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -264,7 +219,7 @@ def q_stream_topn(spark, sf_dir):
     once AvailableNow drains the replay. In production the rank runs per
     emitted image (update-mode sink re-ranks each trigger); the final image
     here makes it batch-equal and oracle-checkable."""
-    ev = _events_stream(spark, sf_dir)
+    ev = files.replay(load_table(spark, sf_dir, "events"))
     counts = ev.groupBy("event_type", "user_id").agg(F.count(F.lit(1)).alias("ct"))
     image = drain(counts, mode="complete")
     from pyspark.sql import Window
@@ -303,7 +258,7 @@ def q_stream_hll_distinct(spark, sf_dir):
     from ..operators import sketches
 
     regs = drain(
-        _events_stream(spark, sf_dir),
+        files.replay(load_table(spark, sf_dir, "events")),
         lambda batch, _i: sketches.hll_buckets(
             batch, F.col("event_id").cast("string"), ["event_type"]
         ),
@@ -328,7 +283,7 @@ def q_stream_session_window(spark, sf_dir):
     keyed by user. Complete mode retains every open session and re-merges
     on each micro-batch, so after AvailableNow drains the replay the final
     image equals the batch e_session_window result exactly — same oracle."""
-    ev = _events_stream(spark, sf_dir)
+    ev = files.replay(load_table(spark, sf_dir, "events"))
     out = (
         ev.groupBy(
             F.session_window("ts", f"{SESSION_GAP_S} seconds").alias("w"), "user_id"
@@ -357,13 +312,8 @@ def q_stream_upsert_latest(spark, sf_dir):
     equals batch s8_upsert_latest regardless of micro-batch boundaries."""
     from .. import sinks
 
-    _clamp_shuffle(spark)
-    tmp = scratch_dir("streamq_s8_")
-    src = os.path.join(tmp, "src")
-    store = os.path.join(tmp, "store")
-    o = load_table(spark, sf_dir, "orders")
-    o.repartition(8).write.mode("overwrite").parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=2)
+    store = os.path.join(scratch_dir("streamq_s8_"), "store")
+    stream = files.replay(load_table(spark, sf_dir, "orders"))
 
     def _merge(batch: DataFrame, _i: int) -> None:
         sinks.upsert_parquet(
@@ -389,8 +339,8 @@ def q_stream_daily_uv(spark, sf_dir):
     appended rows aggregated read-side to UV per day. The day is part of the
     dedup key, so WHICH first-seen row survives cannot change the per-day
     count — batch-equal regardless of micro-batch boundaries."""
-    src = _ordered_events_source(spark, sf_dir, ["user_id", "ts", "event_id"])
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+    stream = files.replay(ev, batches=6, order="ts")
     firsts = sstate.daily_first_stream(stream, ["user_id"], "ts")
     out = drain(firsts)
     return (
@@ -404,10 +354,10 @@ def q_stream_is_new(spark, sf_dir):
     """T2 through the streaming engine: per-visitor first-seen-date GroupState
     (streaming/stateful.repair_is_new_stream ≙ BaseLogApp.java:56-91's
     ValueState<lastVisitDate>) over an event-time-ordered replay, then daily
-    counts by repaired flag. Ordering across micro-batches (write_time_chunks)
-    makes the stateful first-date identical to the batch min-over-user form."""
-    src = _ordered_events_source(spark, sf_dir, ["user_id", "ts"])
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    counts by repaired flag. The event-time-ordered replay makes the
+    stateful first-date identical to the batch min-over-user form."""
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
+    stream = files.replay(ev, batches=6, order="ts")
     repaired = sstate.repair_is_new_stream(stream, "user_id", "ts")
     out = drain(repaired)
     return (
@@ -437,8 +387,9 @@ def q_stream_bounce(spark, sf_dir):
             + F.expr(f"INTERVAL {BOUNCE_GAP_S + 60} SECONDS"),
         )
     )
-    src = _ordered_events_source(spark, sf_dir, ["user_id", "ts"], extra=sentinels)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(
+        ev.select("user_id", "ts").unionByName(sentinels), batches=6, order="ts"
+    )
     bounces = sstate.bounce_stream(stream, "user_id", "ts", BOUNCE_GAP_S)
     out = drain(bounces)
     return (
@@ -473,15 +424,14 @@ def q_stream_interval_join(spark, sf_dir):
     click events within [0, 30 min], aggregated per view-day. Inner joins
     emit the complete match set under correct watermarks, so the result is
     batch-equal independent of micro-batch boundaries."""
-    src = _ordered_events_source(spark, sf_dir, ["user_id", "ts", "event_type"])
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
+    stream = files.replay(ev, batches=3, order="ts")
     views = (
-        files.stream_parquet(spark, src, files_per_trigger=2)
-        .filter(F.col("event_type") == "view")
+        stream.filter(F.col("event_type") == "view")
         .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
     )
     clicks = (
-        files.stream_parquet(spark, src, files_per_trigger=2)
-        .filter(F.col("event_type") == "click")
+        stream.filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
     )
     joined = sjoins.interval_join(
@@ -535,17 +485,17 @@ def q_stream_left_outer_join(spark, sf_dir):
             F.when(F.col("id") == 0, F.lit("view")).otherwise(F.lit("click")).alias("event_type"),
         )
     )
-    src = _ordered_events_source(
-        spark, sf_dir, ["user_id", "ts", "event_type"], extra=sentinels
+    stream = files.replay(
+        ev.select("user_id", "ts", "event_type").unionByName(sentinels),
+        batches=3,
+        order="ts",
     )
     views = (
-        files.stream_parquet(spark, src, files_per_trigger=2)
-        .filter(F.col("event_type") == "view")
+        stream.filter(F.col("event_type") == "view")
         .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
     )
     clicks = (
-        files.stream_parquet(spark, src, files_per_trigger=2)
-        .filter(F.col("event_type") == "click")
+        stream.filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
     )
     joined = sjoins.interval_join(
@@ -592,10 +542,8 @@ def q_stream_dedup(spark, sf_dir):
     per event_id, holding state only until the watermark passes the dup's
     event time — bounded state, unlike a global dropDuplicates. Oracle: the
     raw events table (dedup must exactly cancel the double delivery)."""
-    ev = load_table(spark, sf_dir, "events")
-    cols = ["event_id", "ts", "user_id", "value"]
-    src = _ordered_events_source(spark, sf_dir, cols, extra=ev.select(*cols))
-    stream = files.stream_parquet(spark, src, files_per_trigger=2)
+    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id", "value")
+    stream = files.replay(ev.unionByName(ev), batches=3, order="ts")
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
@@ -622,7 +570,7 @@ FROM events GROUP BY 1
 def q_stream_dim_incremental(spark, sf_dir):
     """S4 incremental config semantics through the STREAMING engine: the
     user_info CDC stream replays as two micro-batches (inserts, then the
-    every-4th-key updates — write_chunks_by pins the order), a checkpointed
+    every-4th-key updates, replayed in ``_chunk`` order), a checkpointed
     foreachBatch applies the config-changelog DELTA for each batch's
     watermark to the broadcast map state (generation 1 with user_name for
     batch 1; generation 2 pruned to id,create_time for batch 2) and runs
@@ -632,18 +580,14 @@ def q_stream_dim_incremental(spark, sf_dir):
     from ..apps import _dim_sync_batch
     from .dwd import _union_envelope, _user_info_branches
 
-    _clamp_shuffle(spark)
-    tmp = scratch_dir("streamq_s4i_")
-    src = os.path.join(tmp, "src")
-    base = os.path.join(tmp, "dim")
+    base = os.path.join(scratch_dir("streamq_s4i_"), "dim")
     c = load_table(spark, sf_dir, "customer")
     ins, upd = _user_info_branches(c)
     cdc = _union_envelope([ins, upd], via_json=True)
     chunked = cdc.withColumn(
         "_chunk", F.when(F.col("type") == "insert", 0).otherwise(1)
     )
-    files.write_chunks_by(chunked, "_chunk", src, 2)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(chunked, batches=2, order="_chunk").drop("_chunk")
 
     changelog = spark.createDataFrame(
         [
@@ -711,23 +655,12 @@ def q_stream_lsh_incremental(spark, sf_dir):
     """
     from ..operators import dedup
 
-    _clamp_shuffle(spark)
     tmp = scratch_dir("streamq_lshinc_")
-    src = os.path.join(tmp, "docs")
     store = os.path.join(tmp, "sig_store")
     flags_dir = os.path.join(tmp, "flags")
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n_docs = d.count()
-    chunked = d.withColumn(
-        # least(...,3): floor(doc_id*4/n) assumes 0-based dense ids — a
-        # 1-based or sparse corpus puts its max id at chunk 4, which
-        # write_chunks_by never writes, silently dropping the row from
-        # the replay. Clamp so every row lands in a written chunk.
-        "_chunk", F.least(F.floor(F.col("doc_id") * 4 / F.lit(n_docs)), F.lit(3)).cast("int")
-    )
-    files.write_chunks_by(chunked, "_chunk", src, 4)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(d, order="doc_id")
 
     def _probe_and_merge(batch: DataFrame, batch_id: int) -> None:
         docs = batch.select("doc_id", "text")
@@ -761,24 +694,10 @@ def q_stream_lsh_incremental(spark, sf_dir):
 
 
 def _oracle_lsh_incremental() -> str:
-    from ..operators.dedup import minhash_base_sql, minhash_value_sql
-    from .llm import _shingles_cte
+    from .llm import _minhash_band_ctes, _shingles_cte
 
-    base = minhash_base_sql("shingle")
-    value = minhash_value_sql("seed", "hp")
     return f"""
-WITH {_shingles_cte()},
-hashed AS (SELECT doc_id, {base} AS hp FROM sh),
-seeded AS (
-  SELECT doc_id, seed, min({value}) AS minhash
-  FROM hashed CROSS JOIN (SELECT unnest(range(0, 16)) AS seed) seeds
-  GROUP BY doc_id, seed
-),
-banded AS (
-  SELECT doc_id, (seed // 4)::INT AS band,
-         string_agg(minhash::VARCHAR, ',' ORDER BY seed) AS band_sig
-  FROM seeded GROUP BY doc_id, band
-),
+WITH {_shingles_cte()},{_minhash_band_ctes()},
 dup AS (
   SELECT DISTINCT b.doc_id
   FROM banded a JOIN banded b
@@ -800,10 +719,9 @@ def q_stream_mv_merge(spark, sf_dir):
     read time, so merge order never double-rounds. Batch twin / oracle: the
     full recompute (e_mv_merge's oracle verbatim) — the green row proves
     stream-merge == recompute end-to-end."""
-    _clamp_shuffle(spark)
     tmp = scratch_dir("streamq_mv_")
     mv = os.path.join(tmp, "mv")
-    stream = _events_stream(spark, sf_dir)
+    stream = files.replay(load_table(spark, sf_dir, "events"))
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         partial = batch.groupBy(
@@ -936,10 +854,8 @@ def q_stream_markov(spark, sf_dir):
     oracle: e_markov_transitions' lead()-window form VERBATIM — the green
     row proves the one-batch-at-a-time state walk reproduces the
     all-history window exactly on an ordered replay."""
-    src = _ordered_events_source(
-        spark, sf_dir, ["user_id", "event_type", "ts", "event_id"]
-    )
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
+    stream = files.replay(ev, batches=6, order="ts")
     pairs = drain(sstate.transitions_stream(stream, key="user_id"))
     counts = pairs.groupBy("from_type", "to_type").agg(
         F.count(F.lit(1)).alias("n_trans")
@@ -968,10 +884,10 @@ def q_stream_pit_features(spark, sf_dir):
     GroupState pruned as event time advances, emitting each purchase's
     leakage-free trailing count/value online. Oracle: e_pit_features'
     batch RANGE-frame form VERBATIM."""
-    src = _ordered_events_source(
-        spark, sf_dir, ["user_id", "event_id", "event_type", "ts", "value"]
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_id", "event_type", "ts", "value"
     )
-    stream = files.stream_parquet(spark, src, files_per_trigger=1).select(
+    stream = files.replay(ev, batches=6, order="ts").select(
         "user_id", "event_id", "event_type",
         F.floor(F.col("ts").cast("double")).cast("long").alias("epoch"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
@@ -1035,7 +951,6 @@ def q_stream_order_preprocess(spark, sf_dir):
 
     from .dwd import _base_dic, _trade_envelope
 
-    _clamp_shuffle(spark)
     _provider_key = "spark.sql.streaming.stateStore.providerClass"
     _old_provider = spark.conf.get(_provider_key, None)
     spark.conf.set(
@@ -1079,12 +994,9 @@ def q_stream_order_preprocess(spark, sf_dir):
         F.lit(None).cast("map<string,string>").alias("old"),
         F.lit(far).cast("timestamp").alias("cdc_ts"),
     )
-    tmp = scratch_dir("streamq_preproc_")
-    src = os.path.join(tmp, "env")
-    # 12 chunks: join-state peak ~ one chunk of rows (eviction happens at
-    # batch boundaries), so finer chunks bound state independent of SF
-    files.write_time_chunks(env.unionByName(sents), "cdc_ts", src, n_chunks=12)
-    stream = files.stream_parquet(spark, src, files_per_trigger=2)
+    # join-state peak ~ one batch of rows (eviction happens at batch
+    # boundaries), so finer batches bound state independent of SF
+    stream = files.replay(env.unionByName(sents), batches=6, order="cdc_ts")
 
     od = stream.filter(
         (F.col("table") == "order_detail") & (F.col("type") == "insert")
@@ -1188,7 +1100,6 @@ def q_stream_dedup_incremental(spark, sf_dir):
     from ..operators import dedup
     from .llm import _docs_par
 
-    _clamp_shuffle(spark)
     d = _docs_par(spark, sf_dir)
     inc_pred = F.col("doc_id") % 5 == 0
     base = d.filter(~inc_pred)
@@ -1196,7 +1107,6 @@ def q_stream_dedup_incremental(spark, sf_dir):
     fp_dir = os.path.join(tmp, "base_fp")
     sh_dir = os.path.join(tmp, "base_sh")
     bands_dir = os.path.join(tmp, "base_bands")
-    src = os.path.join(tmp, "incoming")
 
     # ---- index build (batch, once — the persisted artifacts)
     base.select(dedup.fingerprint(F.col("text")).alias("fp")).distinct() \
@@ -1205,8 +1115,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
     dedup.doc_bands(spark.read.parquet(sh_dir)).write.parquet(bands_dir)
 
     # ---- incoming delta as a multi-file replay stream
-    d.filter(inc_pred).repartition(4).write.parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(d.filter(inc_pred))
 
     def _probe(batch: DataFrame, _i: int) -> DataFrame:
         s = batch.sparkSession
@@ -1295,12 +1204,10 @@ def q_stream_ann_probe(spark, sf_dir):
     from ..operators import similarity
     from .llm import _embs_par
 
-    _clamp_shuffle(spark)
     e = _embs_par(spark, sf_dir)
     tmp = scratch_dir("streamq_annprobe_")
     cents_dir = os.path.join(tmp, "cents")
     index_dir = os.path.join(tmp, "index")
-    src = os.path.join(tmp, "queries")
 
     # ---- index build (batch, once — the persisted artifacts)
     similarity.ivf_centroids(e, n_centroids=16).write.parquet(cents_dir)
@@ -1308,8 +1215,7 @@ def q_stream_ann_probe(spark, sf_dir):
     similarity.ivf_assign(e, cents).write.partitionBy("list_id").parquet(index_dir)
 
     # ---- query stream as a multi-file replay
-    e.filter(F.col("vec_id") % 100 == 0).repartition(4).write.parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(e.filter(F.col("vec_id") % 100 == 0))
 
     def _probe(batch: DataFrame, _i: int) -> DataFrame:
         s = batch.sparkSession
@@ -1359,17 +1265,17 @@ def q_stream_full_outer_join(spark, sf_dir):
             F.when(F.col("id") == 0, F.lit("view")).otherwise(F.lit("click")).alias("event_type"),
         )
     )
-    src = _ordered_events_source(
-        spark, sf_dir, ["user_id", "ts", "event_type"], extra=sentinels
+    stream = files.replay(
+        ev.select("user_id", "ts", "event_type").unionByName(sentinels),
+        batches=3,
+        order="ts",
     )
     views = (
-        files.stream_parquet(spark, src, files_per_trigger=2)
-        .filter(F.col("event_type") == "view")
+        stream.filter(F.col("event_type") == "view")
         .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
     )
     clicks = (
-        files.stream_parquet(spark, src, files_per_trigger=2)
-        .filter(F.col("event_type") == "click")
+        stream.filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
     )
     joined = sjoins.interval_join(
@@ -1422,10 +1328,7 @@ def q_stream_drift(spark, sf_dir):
     commutative, so the merged drift equals batch x_embedding_drift
     REGARDLESS of micro-batch boundaries or replays. Same oracle."""
     e = load_table(spark, sf_dir, "embeddings")
-    tmp = scratch_dir("streamq_drift_")
-    src = os.path.join(tmp, "vectors")
-    e.repartition(4).write.parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(e)
 
     def _partial(batch: DataFrame, _i: int) -> DataFrame:
         comps = batch.select(
@@ -1487,8 +1390,8 @@ def q_stream_funnel(spark, sf_dir):
     the same stage counts as the batch twin — oracle VERBATIM."""
     from ..streaming.stateful import funnel_stream
 
-    src = _ordered_events_source(spark, sf_dir, ["user_id", "ts", "event_type"])
-    stream = files.stream_parquet(spark, src, files_per_trigger=2)
+    ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
+    stream = files.replay(ev, batches=3, order="ts")
     staged = funnel_stream(stream, key="user_id", ts_col="ts", type_col="event_type")
     out = drain(staged)
     per_user = out.groupBy("user_id").agg(
@@ -1523,8 +1426,8 @@ def q_stream_ewma(spark, sf_dir):
     e_ewma VERBATIM."""
     from ..streaming.stateful import ewma_stream
 
-    src = _ordered_events_source(spark, sf_dir, ["user_id", "event_id", "ts", "value"])
-    stream = files.stream_parquet(spark, src, files_per_trigger=2).select(
+    ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    stream = files.replay(ev, batches=3, order="ts").select(
         "user_id",
         "event_id",
         "ts",
@@ -1560,7 +1463,7 @@ def q_stream_cms_heavy(spark, sf_dir):
     from ..operators import sketches
 
     grids = drain(
-        _events_stream(spark, sf_dir),
+        files.replay(load_table(spark, sf_dir, "events")),
         lambda batch, _i: sketches.cms_table(batch, F.col("user_id").cast("string")),
     )
     merged = (
@@ -1639,10 +1542,11 @@ def q_stream_window_topk(spark, sf_dir):
         (F.lit(max_ts).cast("timestamp") + F.expr("INTERVAL 7200 SECONDS")).alias("ts"),
         F.lit("_sentinel").alias("event_type"),
     )
-    src = _ordered_events_source(
-        spark, sf_dir, ["user_id", "ts", "event_type"], extra=sentinels
+    stream = files.replay(
+        ev.select("user_id", "ts", "event_type").unionByName(sentinels),
+        batches=3,
+        order="ts",
     )
-    stream = files.stream_parquet(spark, src, files_per_trigger=2)
     counts = (
         stream.withWatermark("ts", "10 seconds")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -1717,11 +1621,9 @@ def q_stream_cusum(spark, sf_dir):
             F.lit(0.0).alias("value"),
         )
     )
-    src = _ordered_events_source(
-        spark, sf_dir, ["user_id", "ts", "event_type", "value"], extra=sentinels
-    )
+    ordered = ev.select("user_id", "ts", "event_type", "value").unionByName(sentinels)
     stream = (
-        files.stream_parquet(spark, src, files_per_trigger=2)
+        files.replay(ordered, batches=3, order="ts")
         .join(F.broadcast(k_tab), "event_type")
         .select(
             "event_type",
@@ -1793,12 +1695,7 @@ def q_stream_embedding_cov(spark, sf_dir):
     CMS (additive) and HLL (register-max) sketches lean on."""
     from ..operators import similarity
 
-    _clamp_shuffle(spark)
-    tmp = scratch_dir("streamq_cov_")
-    src = os.path.join(tmp, "embeddings")
-    em = load_table(spark, sf_dir, "embeddings")
-    em.repartition(8).write.mode("overwrite").parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=2)
+    stream = files.replay(load_table(spark, sf_dir, "embeddings"))
     merged = (
         drain(stream, lambda batch, _i: similarity.embedding_gram(batch))
         .groupBy("i", "j")
@@ -1849,7 +1746,7 @@ def q_stream_benford(spark, sf_dir):
     pipeline (map-side expr + stateful count) reproduces it."""
     from .analytics import benford_digits, benford_from_counts
 
-    stream = _events_stream(spark, sf_dir)
+    stream = files.replay(load_table(spark, sf_dir, "events"))
     counts = benford_digits(stream).groupBy("event_type", "digit").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -1885,18 +1782,8 @@ def q_stream_safety_screen(spark, sf_dir):
     from ..operators import dedup
     from .llm import safety_tail, safety_terms_df
 
-    _clamp_shuffle(spark)
-    tmp = scratch_dir("streamq_safety_")
-    src = os.path.join(tmp, "docs")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n = d.count()
-    chunked = d.withColumn(
-        # least(...,3): clamp the top id into a written chunk — see
-        # q_stream_lsh_incremental's note on 1-based/sparse doc_ids.
-        "_chunk", F.least(F.floor(F.col("doc_id") * 4 / F.lit(n)), F.lit(3)).cast("int")
-    )
-    files.write_chunks_by(chunked, "_chunk", src, 4)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(d, order="doc_id")
     toks = stream.select(
         "doc_id",
         F.explode(
@@ -1953,11 +1840,9 @@ def q_stream_holt(spark, sf_dir):
             F.lit(0.0).alias("value"),
         )
     )
-    src = _ordered_events_source(
-        spark, sf_dir, ["user_id", "ts", "event_type", "value"], extra=sentinels
-    )
+    ordered = ev.select("user_id", "ts", "event_type", "value").unionByName(sentinels)
     stream = (
-        files.stream_parquet(spark, src, files_per_trigger=2)
+        files.replay(ordered, batches=3, order="ts")
         .select(
             "event_type",
             "ts",
@@ -2006,18 +1891,8 @@ def q_stream_entropy_filter(spark, sf_dir):
     from ..operators import dedup
     from .llm import entropy_tail
 
-    _clamp_shuffle(spark)
-    tmp = scratch_dir("streamq_entropy_")
-    src = os.path.join(tmp, "docs")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n = d.count()
-    chunked = d.withColumn(
-        # least(...,3): clamp the top id into a written chunk — see
-        # q_stream_lsh_incremental's note on 1-based/sparse doc_ids.
-        "_chunk", F.least(F.floor(F.col("doc_id") * 4 / F.lit(n)), F.lit(3)).cast("int")
-    )
-    files.write_chunks_by(chunked, "_chunk", src, 4)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(d, order="doc_id")
     tc = (
         stream.select(
             "doc_id",
@@ -2085,7 +1960,8 @@ def q_stream_bottomk(spark, sf_dir):
             .agg(F.min("s").alias("s"))
         )
 
-    merged = drain(_events_stream(spark, sf_dir), _grid).groupBy("bucket").agg(F.min("s").alias("s"))
+    ev = files.replay(load_table(spark, sf_dir, "events"))
+    merged = drain(ev, _grid).groupBy("bucket").agg(F.min("s").alias("s"))
     return merged.select(
         F.col("bucket").cast("bigint").alias("bucket"),
         F.col("s.h").alias("min_hash"),
@@ -2147,7 +2023,8 @@ def q_stream_welch_t2(spark, sf_dir):
             F.coalesce(F.sum(F.when(~is_a, cents * cents).otherwise(0)), F.lit(0)).cast("bigint").alias("ss_b"),
         )
 
-    m = drain(_events_stream(spark, sf_dir), _moments).agg(
+    ev = files.replay(load_table(spark, sf_dir, "events"))
+    m = drain(ev, _moments).agg(
         F.sum("n_a").cast("bigint").alias("n_a"),
         F.sum("s_a").cast("bigint").alias("s_a"),
         F.sum("ss_a").cast("bigint").alias("ss_a"),
@@ -2218,7 +2095,8 @@ def q_stream_ohlc(spark, sf_dir):
             F.max(key).alias("c_key"),
         )
 
-    merged = drain(_events_stream(spark, sf_dir), _bars).groupBy("dt").agg(
+    ev = files.replay(load_table(spark, sf_dir, "events"))
+    merged = drain(ev, _bars).groupBy("dt").agg(
         F.sum("n_trades").cast("bigint").alias("n_trades"),
         F.min("o_key").alias("o_key"),
         F.max("high_cents").alias("high_cents"),
@@ -2262,7 +2140,7 @@ def q_stream_new_users(spark, sf_dir):
     Scale/state: per batch one distinct + one min agg, both
     map-side-combinable and bounded by the batch's own user set."""
     ud = drain(
-        _events_stream(spark, sf_dir),
+        files.replay(load_table(spark, sf_dir, "events")),
         lambda batch, _i: batch.select("user_id", F.to_date("ts").alias("dt")).distinct(),
     ).distinct()
     first = ud.groupBy("user_id").agg(F.min("dt").alias("first_seen"))
@@ -2315,7 +2193,7 @@ def q_stream_quantile(spark, sf_dir):
         )
 
     hist = (
-        drain(_events_stream(spark, sf_dir), _hist)
+        drain(files.replay(load_table(spark, sf_dir, "events")), _hist)
         .groupBy("bin")
         .agg(F.sum("cnt").alias("cnt"))
         .cache()
@@ -2391,7 +2269,7 @@ def q_stream_burst(spark, sf_dir):
         ).agg(F.count(F.lit(1)).alias("cnt"))
 
     hourly = (
-        drain(_events_stream(spark, sf_dir), _hourly)
+        drain(files.replay(load_table(spark, sf_dir, "events")), _hourly)
         .groupBy("event_type", "hr")
         .agg(F.sum("cnt").alias("cnt"))
         .cache()
@@ -2445,9 +2323,9 @@ def q_stream_contam_13gram(spark, sf_dir):
     ORACLE_CONTAM_13GRAM VERBATIM. Per-batch state: the incoming docs'
     gram lists; the index side stays parquet-pruned to the join.
 
-    r10: the gram index is a STANDING artifact (io.ensure_dataset under
-    the warehouse root, fingerprinted by the train-split doc count) —
-    built on first touch per sf, reused by every later invocation and
+    The gram index is a STANDING artifact (io.ensure_dataset under the
+    warehouse root, fingerprinted by the documents table's footer stats)
+    — built on first touch per sf, reused by every later invocation and
     session, exactly like the persisted IVF index. A decontamination
     service does not re-shingle its train corpus per probe."""
     from ..io import ensure_dataset
@@ -2455,18 +2333,15 @@ def q_stream_contam_13gram(spark, sf_dir):
     from .llm import _docs_par
     from .r10 import _sf_tag, _warehouse_root, corpus_token
 
-    _clamp_shuffle(spark)
     d = _docs_par(spark, sf_dir)
-    tmp = scratch_dir("streamq_contam13_")
-    src = os.path.join(tmp, "eval_docs")
 
     # ---- index ensure (batch, once per sf): train split -> distinct 13-grams.
     # Fingerprint folds in the gram width k, an algorithm version, and the
     # documents table's FOOTER stats (corpus_token — no corpus-count job in
-    # the probe path, r10 verdict item 3) so a shingling change or a corpus
-    # regeneration rebuilds instead of serving stale grams; version 1 =
+    # the probe path) so a shingling change or a corpus regeneration
+    # rebuilds instead of serving stale grams; version 1 =
     # whitespace-normalized 13-gram md5. Publication is atomic (fp-addressed
-    # immutable dir, io.ensure_dataset r11 contract).
+    # immutable dir, see io.ensure_dataset).
     _GRAM_INDEX_VERSION = 1
     train = d.filter(F.col("doc_id") % 17 != 0)
     idx_dir = ensure_dataset(
@@ -2478,9 +2353,8 @@ def q_stream_contam_13gram(spark, sf_dir):
         .write.parquet(p),
     )
 
-    # ---- eval docs as a multi-file replay stream
-    d.filter(F.col("doc_id") % 17 == 0).repartition(4).write.parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    # ---- eval docs as a replayed stream
+    stream = files.replay(d.filter(F.col("doc_id") % 17 == 0))
 
     def _probe(batch: DataFrame, _i: int) -> DataFrame:
         s = batch.sparkSession
@@ -2519,12 +2393,8 @@ def q_stream_band_health(spark, sf_dir):
     from ..operators import dedup
     from .llm import _docs_par
 
-    _clamp_shuffle(spark)
     d = _docs_par(spark, sf_dir)
-    tmp = scratch_dir("streamq_bandh_")
-    src = os.path.join(tmp, "docs")
-    d.repartition(4).write.parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(d)
 
     def _grid(batch: DataFrame, _i: int) -> DataFrame:
         return (
@@ -2586,12 +2456,8 @@ def q_stream_char_class(spark, sf_dir):
     ORACLE_CHAR_CLASS_MIX VERBATIM."""
     from .llm import _docs_par
 
-    _clamp_shuffle(spark)
     d = _docs_par(spark, sf_dir)
-    tmp = scratch_dir("streamq_charclass_")
-    src = os.path.join(tmp, "docs")
-    d.repartition(4).write.parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(d)
 
     def _grid(batch: DataFrame, _i: int) -> DataFrame:
         return (
@@ -2667,7 +2533,7 @@ def q_stream_seasonal_index(spark, sf_dir):
         )
 
     daily = (
-        drain(_events_stream(spark, sf_dir), _daily)
+        drain(files.replay(load_table(spark, sf_dir, "events")), _daily)
         .groupBy("event_type", "day")
         .agg(F.sum("c").cast("bigint").alias("c"))
         .withColumn(
@@ -2725,12 +2591,8 @@ def q_stream_shard_skew(spark, sf_dir):
     from ..operators import dedup as _dedup
     from .llm import _docs_par
 
-    _clamp_shuffle(spark)
     d = _docs_par(spark, sf_dir)
-    tmp = scratch_dir("streamq_shard_")
-    src = os.path.join(tmp, "docs")
-    d.repartition(4).write.parquet(src)
-    stream = files.stream_parquet(spark, src, files_per_trigger=1)
+    stream = files.replay(d)
 
     def _grid(batch: DataFrame, _i: int) -> DataFrame:
         toks = _dedup.whitespace_tokens(_dedup.normalize_text(F.col("text")))

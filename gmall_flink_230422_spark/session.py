@@ -5,9 +5,7 @@ The reference pins every app to parallelism 1 on a single TaskManager
 We instead size for a real cluster: AQE on (runtime re-plan + skew-join
 handling), Arrow for any pandas exchange, and shuffle partitions sized from
 the environment. Session timezone defaults to UTC so results are directly
-comparable with the DuckDB oracle; the reference's GMT+8 rendering
-(R/utils/DateFormatUtil.java:21) is available via functions.datetime.GMALL_TZ
-for the reference-faithful pipelines.
+comparable with the DuckDB oracle.
 
 Driver JIT policy. A fresh driver spends about half of its first-query CPU
 in the JIT compiler threads, and C2 (the optimizing tier) takes most of

@@ -9,10 +9,14 @@ ingestion at 100 TB: immutable files + checkpointed offsets).
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..io import scratch_dir
 
 
 def stream_parquet(
@@ -33,76 +37,42 @@ def stream_parquet(
     )
 
 
-def _force_mtime(path: str, seen: set[str], stamp: float) -> set[str]:
-    """Pin every not-yet-seen file under ``path`` to mtime ``stamp``.
+def replay(df: DataFrame, batches: int = 4, order: str | None = None) -> DataFrame:
+    """Replay ``df`` as a file stream of ``batches`` micro-batches — the
+    deterministic stand-in for a Kafka topic every streaming twin reads.
 
-    The file-stream source replays files oldest-mtime-first; consecutive
-    ``coalesce(1)`` writes *usually* get increasing mtimes, but on
-    filesystems with coarse mtime granularity (1 s on HFS+/some network
-    mounts) chunks can tie and replay order becomes nondeterministic. An
-    explicit ``os.utime`` per chunk makes the ordering a guarantee instead
-    of a timing accident. Returns the updated seen-set."""
-    import os
-
-    current: set[str] = set()
-    for root, _dirs, names in os.walk(path):
-        for n in names:
-            current.add(os.path.join(root, n))
-    for f in current - seen:
-        os.utime(f, (stamp, stamp))
-    return current
-
-
-def write_time_chunks(df: DataFrame, ts_col: str, path: str, n_chunks: int = 6) -> str:
-    """Replay-harness writer: land ``df`` as ``n_chunks`` sequential
-    single-file parquet chunks partitioned by event-time ranges, so the
-    streaming file source (which processes files oldest-modification-first)
-    replays them in event-time order — the deterministic stand-in for a
-    Kafka topic whose producer emits in event order.
-
-    Harness-side only (test/oracle replay at fixture scale): the sequential
-    single-file writes are intentional — they give strictly increasing file
-    mtimes, one time-range per micro-batch. Production ingestion is the
-    multi-file checkpointed path in ``stream_parquet``.
+    ``df`` lands under an ``io.scratch_dir`` as one parquet file per
+    micro-batch, and the stream reads one file per trigger with
+    ``df.schema``, so no schema-read job runs. With ``order=None`` rows are
+    split arbitrarily across the files. With the name of a timestamp or
+    integer column, file k holds the k-th of ``batches`` equal ranges of
+    that column (an integer column holding 0…n−1 cut into n ranges puts
+    each value in its own batch), and the files' mtimes are pinned one
+    second apart, so the source — which replays oldest mtime first —
+    replays them in range order even where mtimes are coarse.
     """
-    from pyspark.sql import functions as F
-
-    lo, hi = (
-        df.agg(
-            F.min(F.unix_micros(F.col(ts_col))),
-            F.max(F.unix_micros(F.col(ts_col))),
-        ).first()
+    path = os.path.join(scratch_dir("replay_"), "topic")
+    if order is None:
+        df.repartition(batches).write.parquet(path)
+    else:
+        key = F.col(order)
+        if isinstance(df.schema[order].dataType, T.TimestampType):
+            key = F.unix_micros(key)
+        lo, hi = df.agg(F.min(key), F.max(key)).first()
+        step = (hi - lo) // batches + 1
+        stamp = time.time()
+        landed: set[str] = set()
+        for i in range(batches):
+            part = df.filter((key >= lo + i * step) & (key < lo + (i + 1) * step))
+            part.coalesce(1).write.mode("append").parquet(path)
+            for name in set(os.listdir(path)) - landed:
+                os.utime(os.path.join(path, name), (stamp + i, stamp + i))
+                landed.add(name)
+    return (
+        df.sparkSession.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
     )
-    step = max(1, (hi - lo) // n_chunks + 1)
-    us = F.unix_micros(F.col(ts_col))
-    seen: set[str] = set()
-    base = time.time()
-    for i in range(n_chunks):
-        chunk = df.filter((us >= lo + i * step) & (us < lo + (i + 1) * step))
-        chunk.coalesce(1).write.mode("append").parquet(path)
-        seen = _force_mtime(path, seen, base + i)
-    return path
-
-
-def write_chunks_by(
-    df: DataFrame, chunk_col: str, path: str, n_chunks: int
-) -> str:
-    """Replay-harness writer, arbitrary chunk assignment: land chunk k as
-    the k-th single-file parquet write (mtimes pinned strictly increasing
-    via ``_force_mtime`` ⇒ the file stream replays chunks in index order
-    even on coarse-mtime filesystems). With a hash-derived ``chunk_col``
-    this produces a DETERMINISTIC out-of-order arrival pattern — the
-    harness for exercising watermark late-data semantics."""
-    from pyspark.sql import functions as F
-
-    seen: set[str] = set()
-    base = time.time()
-    for i in range(n_chunks):
-        df.filter(F.col(chunk_col) == i).drop(chunk_col).coalesce(1).write.mode(
-            "append"
-        ).parquet(path)
-        seen = _force_mtime(path, seen, base + i)
-    return path
 
 
 def stream_text(spark: SparkSession, path: str, files_per_trigger: int = 1) -> DataFrame:

@@ -11,6 +11,8 @@ from pyspark.sql import DataFrame
 from ..io import scratch_dir
 from ..sinks import land_batch
 
+_SHUFFLE = "spark.sql.shuffle.partitions"
+
 
 def drain(out: DataFrame, each=None, mode: str = "append") -> DataFrame | None:
     """Drain the streaming frame ``out`` with ``Trigger.AvailableNow``
@@ -42,13 +44,21 @@ def drain(out: DataFrame, each=None, mode: str = "append") -> DataFrame | None:
             land_batch(batch, key, {"out": frame}, tmp)
 
     checkpoint = os.path.join(tmp, "ck")
-    query = (
-        out.writeStream.outputMode(mode)
-        .foreachBatch(_land)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    conf = out.sparkSession.conf
+    clamp = conf.get(_SHUFFLE, "200") == "200"
+    if clamp:
+        conf.set(_SHUFFLE, str(out.sparkSession.sparkContext.defaultParallelism))
+    try:
+        query = (
+            out.writeStream.outputMode(mode)
+            .foreachBatch(_land)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        if clamp:
+            conf.set(_SHUFFLE, "200")
     try:
         query.awaitTermination()
     finally:

@@ -1,8 +1,8 @@
 """streaming.drain: the one AvailableNow micro-batch loop of the streaming
 twins — append lands the union of the batches, complete lands only the
 final image, a failing callback fails the drain, a side-effect-only
-callback makes it return None, and nothing it writes outlives its
-process."""
+callback makes it return None, the shuffle clamp stays inside the query,
+and nothing it writes outlives its process."""
 
 import json
 import os
@@ -10,6 +10,7 @@ import shutil
 import subprocess
 import sys
 import tempfile
+import time
 from pathlib import Path
 
 import pytest
@@ -49,6 +50,47 @@ def test_append_returns_union_without_batch_id(spark, src):
     assert out.columns == ["k", "v", "w"]
     want = sorted((i, i * 10 + j, i * 10 + j + 1) for i in range(N_FILES) for j in range(4))
     assert sorted(map(tuple, out.collect())) == want
+
+
+def test_shuffle_clamp_scoped_to_the_query(spark, src):
+    """On a session at Spark's untouched default of 200 shuffle partitions,
+    the drained query's stateful shuffles run at defaultParallelism and the
+    session reads 200 again afterwards."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            self.parts = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.parts += [op.numShufflePartitions for op in event.progress.stateOperators]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    listener = Progress()
+    spark.streams.addListener(listener)
+    spark.conf.set(key, "200")
+    try:
+        counts = stream_parquet(spark, src).groupBy("k").agg(F.count(F.lit(1)).alias("n"))
+        drain(counts, mode="complete")
+        assert spark.conf.get(key) == "200"
+        deadline = time.time() + 60  # progress events reach Python asynchronously
+        while len(listener.parts) < N_FILES and time.time() < deadline:
+            time.sleep(0.2)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, before)
+    assert len(listener.parts) == N_FILES
+    assert set(listener.parts) == {spark.sparkContext.defaultParallelism}
 
 
 def test_complete_returns_only_final_image(spark, src):

@@ -1,4 +1,4 @@
-"""Tokenizer, hashing, datetime helpers."""
+"""Tokenizer and hashing helpers."""
 
 import duckdb
 from pyspark.sql import functions as F

@@ -213,3 +213,42 @@ def test_plans_build_near_dup_through_chain():
     in_tune = [h for h in hits if h[0] == "llm.py" and start <= h[1] <= end]
     assert [h for h in hits if h not in in_tune] == []
     assert len(in_tune) <= 1 and all("lsh_candidate_pairs(" in h[2] for h in in_tune)
+
+
+_REPLAY_BYPASSES = (
+    "stream_parquet(",
+    "readStream",
+    "write_chunks_by",
+    "write_time_chunks",
+    "shuffle.partitions",
+    ".count()",
+)
+
+
+def _replay_bypasses(sources: dict[str, str]) -> list[str]:
+    return [
+        f"{name}:{i}: {line.strip()}"
+        for name, text in sorted(sources.items())
+        for i, line in enumerate(text.splitlines(), 1)
+        if any(pat in line for pat in _REPLAY_BYPASSES)
+    ]
+
+
+def test_plans_replay_through_files_replay():
+    """Every streaming twin gets its micro-batch input from
+    sources.files.replay: no plan module opens its own file stream, lands
+    its own replay chunks, sizes a replay with a row count, or sets the
+    session's shuffle partitions (streaming.drain scopes that to the
+    query). A planted hand-built source is caught."""
+    plans = Path(__file__).resolve().parent.parent / "gmall_flink_230422_spark" / "plans"
+    sources = {p.name: p.read_text() for p in plans.glob("*.py")}
+    assert _replay_bypasses(sources) == []
+    planted = dict(sources)
+    planted["streamq.py"] += '\nstream = files.stream_parquet(spark, src, files_per_trigger=1)\n'
+    assert len(_replay_bypasses(planted)) == 1
+    package = plans.parent
+    assert not [
+        p.name
+        for p in package.rglob("*.py")
+        if "write_chunks_by" in p.read_text() or "write_time_chunks" in p.read_text()
+    ]

@@ -15,8 +15,6 @@ stateful ops over many micro-batches and pin the state-store metrics
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from gmall_flink_230422_spark.sources import files
@@ -32,9 +30,7 @@ def _state_rows(progresses) -> list[int]:
     return out
 
 
-def _run_stream(spark, src, build, sink, ck) -> list[int]:
-    schema = spark.read.parquet(src).schema
-    stream = files.stream_parquet(spark, src, schema, files_per_trigger=1)
+def _run_stream(stream, build, sink, ck) -> list[int]:
     q = (
         build(stream)
         .writeStream.format("parquet")
@@ -61,11 +57,10 @@ def test_trailing_features_state_plateaus_at_key_count(spark, tmp_path):
         rows, "event_id bigint, user_id bigint, event_type string, "
         "epoch bigint, cents bigint, _chunk int",
     )
-    src = str(tmp_path / "events")
-    files.write_chunks_by(df, "_chunk", src, n_batches)
+    stream = files.replay(df, batches=n_batches, order="_chunk").drop("_chunk")
 
     state = _run_stream(
-        spark, src,
+        stream,
         lambda s: stateful.trailing_features_stream(s, horizon_s=horizon),
         str(tmp_path / "sink"), str(tmp_path / "ck"),
     )
@@ -87,11 +82,10 @@ def test_daily_first_state_evicted_by_watermark(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "mid bigint, epoch bigint, _chunk int"
     ).withColumn("ts", F.timestamp_seconds("epoch")).drop("epoch")
-    src = str(tmp_path / "logs")
-    files.write_chunks_by(df, "_chunk", src, n_days)
+    stream = files.replay(df, batches=n_days, order="_chunk").drop("_chunk")
 
     state = _run_stream(
-        spark, src,
+        stream,
         lambda s: stateful.daily_first_stream(s, ["mid"], "ts"),
         str(tmp_path / "sink"), str(tmp_path / "ck"),
     )

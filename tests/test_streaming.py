@@ -74,33 +74,33 @@ def batch_df(spark):
     return spark.createDataFrame(ROWS, SCHEMA)
 
 
-def test_write_time_chunks_ordered_replay(spark):
-    """The replay-harness writer must yield micro-batches in nondecreasing
-    event-time order — the contract T2/T5 streaming determinism rests on."""
-    from gmall_flink_230422_spark.sources.files import write_time_chunks
+def test_replay_ordered_and_unordered(spark):
+    """files.replay: with ``order`` the micro-batches arrive in nondecreasing
+    event-time order — the contract T2/T5 streaming determinism rests on;
+    without it every row still arrives, in exactly ``batches`` micro-batches."""
+    from gmall_flink_230422_spark.sources.files import replay
 
-    d = tempfile.mkdtemp(prefix="gmall_chunks_")
-    try:
-        df = batch_df(spark)
-        write_time_chunks(df, "ts", f"{d}/src", n_chunks=3)
-        schema = spark.read.parquet(f"{d}/src").schema
-        src = stream_parquet(spark, f"{d}/src", schema, files_per_trigger=1)
+    def micro_batches(stream):
         seen = []
 
         def cap(b, i):
             r = b.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi"), F.count(F.lit(1)).alias("n")).first()
-            if r["n"]:
-                seen.append((i, r["lo"], r["hi"], r["n"]))
+            seen.append((i, r["lo"], r["hi"], r["n"]))
 
-        q = src.writeStream.foreachBatch(cap).trigger(availableNow=True).start()
+        q = stream.writeStream.foreachBatch(cap).trigger(availableNow=True).start()
         q.awaitTermination(120)
-        seen.sort()
-        assert sum(n for _, _, _, n in seen) == len(ROWS)
-        assert len(seen) > 1  # actually multi-batch
-        for (_, _, prev_hi, _), (_, lo, _, _) in zip(seen, seen[1:]):
-            assert lo >= prev_hi
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return sorted(seen)
+
+    df = batch_df(spark)
+    ordered = [b for b in micro_batches(replay(df, batches=3, order="ts")) if b[3]]
+    assert sum(n for _, _, _, n in ordered) == len(ROWS)
+    assert len(ordered) > 1  # actually multi-batch
+    for (_, _, prev_hi, _), (_, lo, _, _) in zip(ordered, ordered[1:]):
+        assert lo >= prev_hi
+
+    unordered = micro_batches(replay(df, batches=3))
+    assert len(unordered) == 3
+    assert sum(n for _, _, _, n in unordered) == len(ROWS)
 
 
 def test_daily_first_stream_matches_batch(spark, stream_dir):

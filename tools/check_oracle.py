@@ -17,13 +17,18 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 import time
 from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = str(Path(__file__).resolve().parent.parent)
+sys.path.insert(0, ROOT)
+# Python workers inherit the JVM's environment, not this process's sys.path:
+# pickled UDFs that import the package need the repo on PYTHONPATH too.
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 from gmall_flink_230422_spark.io import TABLES
 from gmall_flink_230422_spark.plans import registry
