@@ -21,6 +21,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .io import read_parquet
 from .operators import cdc as cdc_ops
 from .operators.envelope import LOG_SCHEMA, parse_with_dirty_split, split_log_streams
 from .operators.joins import lookup_join
@@ -344,7 +345,7 @@ def _dim_sync_batch(
         sinks.upsert_parquet(
             spark, projected, f"{base_path}/{row['sink_table']}", [pk], ["_seq", "_arr"]
         )
-        out[row["sink_table"]] = spark.read.parquet(f"{base_path}/{row['sink_table']}")
+        out[row["sink_table"]] = read_parquet(spark, f"{base_path}/{row['sink_table']}")
     return out
 
 

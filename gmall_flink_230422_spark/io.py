@@ -4,11 +4,18 @@ Tables per TESTDATA.md: region nation customer supplier part orders lineitem
 events documents embeddings — one parquet file each under
 ``/root/testdata/sf{0.001,0.01,0.1}``.
 
-``events.ts`` is written as parquet TIMESTAMP(NANOS); Spark reads it as a
-long (``spark.sql.legacy.parquet.nanosAsLong=true``, set at RUNTIME inside
-``load_table`` so any caller-supplied session works — not only ones built by
-session.get_spark) and we convert to a microsecond timestamp here, matching
-DuckDB's nanos→micros truncation so oracle comparisons line up exactly.
+``events.ts`` (like ``orders`` and ``lineitem``'s timestamps) is stored as
+parquet ``TIMESTAMP(MICROS, isAdjustedToUTC=false)`` at every tier, which
+Spark reads as ``timestamp_ntz``; ``load_table`` casts it to the session-tz
+``timestamp`` the query surface is built on. Files that store
+``TIMESTAMP(NANOS)`` instead (the first fixture generation did) are still
+read: ``load_table`` sets ``spark.sql.legacy.parquet.nanosAsLong`` at
+runtime, so any caller-supplied session reads them as a long, and converts
+them to a microsecond timestamp, matching DuckDB's nanos→micros truncation.
+
+``read_parquet`` is the package's one schema-less parquet reader: it takes
+the schema from the file footer on the driver, so building a DataFrame runs
+no Spark job.
 
 Scratch space (``scratch_dir``) for plans and streaming drains lives under
 one root per process, removed when the process exits.
@@ -17,12 +24,14 @@ one root per process, removed when the process exits.
 from __future__ import annotations
 
 import atexit
+import json
 import os
 import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -40,25 +49,131 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
+
+    Spark infers a parquet schema with a one-task job that reads one
+    footer. Here the driver reads that footer itself (pyarrow) and hands
+    the schema over with ``spark.read.schema``, so the same DataFrame is
+    built with no job. The footer is the one Spark would read: ``path``
+    itself, or for a directory the first data file in sorted path order,
+    skipping hidden names (``_x``, ``.x``). Partition columns
+    (``batch_id=N``) are left to Spark's discovery, as before.
+
+    A Spark-written file carries its Spark schema in the footer, which is
+    used as is. For other files the parquet types are mapped as Spark maps
+    them, honouring ``spark.sql.parquet.inferTimestampNTZ.enabled`` and
+    ``spark.sql.legacy.parquet.nanosAsLong``. Whatever this mapping cannot
+    vouch for (INT96, unsigned or nested nanosecond columns, summary files,
+    ``mergeSchema``, a missing, empty or non-local path) is left to Spark's
+    own inference, job and errors included.
+    """
+    schema = _footer_schema(spark, path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    if spark.conf.get("spark.sql.parquet.mergeSchema") == "true":
+        return None
+    first = _first_data_file(path)
+    if first is None:
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    meta = pq.read_metadata(first)
+    stored = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None:
+        return T.StructType.fromJson(json.loads(stored))
+    if any(meta.schema.column(i).physical_type == "INT96" for i in range(meta.num_columns)):
+        return None
+    conf = spark.conf
+    ntz = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    nanos_as_long = conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    fields = []
+    for f in meta.schema.to_arrow_schema():
+        if _is_nanos(f.type) and nanos_as_long:
+            f = f.with_type(pa.int64())
+        if any(
+            _is_nanos(t) or pa.types.is_null(t) or (pa.types.is_decimal(t) and t.precision > 38)
+            for t in _types(f.type)
+        ):
+            return None
+        fields.append(f)
+    try:
+        return from_arrow_schema(pa.schema(fields), prefer_timestamp_ntz=ntz)
+    except TypeError:  # unsigned, time, float16: types Spark widens or rejects
+        return None
+
+
+def _is_nanos(t) -> bool:
+    import pyarrow as pa
+
+    return pa.types.is_timestamp(t) and t.unit == "ns"
+
+
+def _types(t):
+    """``t`` and every type nested in it."""
+    yield t
+    for i in range(t.num_fields):
+        yield from _types(t.field(i).type)
+
+
+def _first_data_file(path: str) -> str | None:
+    """The file whose footer Spark's schema inference reads for ``path``,
+    or None where that is not a plain local data file."""
+    if os.path.isfile(path):
+        return path
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for n in names:
+            if n.startswith(("_metadata", "_common_metadata")):
+                return None  # summary files: Spark reads those first
+            if not _hidden(n):
+                files.append(os.path.join(root, n))
+    return min(files, default=None)
+
+
+def _hidden(name: str) -> bool:
+    """Spark's listing filter: ``_x`` (not a ``k=v`` partition), ``.x``
+    and in-flight ``._COPYING_`` copies are not data."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Runtime-settable: make TIMESTAMP(NANOS) parquet readable on ANY session,
     # including a vanilla one the caller built without our session factory.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
+            # TIMESTAMP(NANOS) files (no fixture tier stores these today):
             # nanos → micros with INTEGER division (truncating, same as
             # DuckDB's parquet reader). `ts div 1000` stays in bigint; a float
             # `/` would round-trip through double (ulp 256 ns at 1.7e18) and
             # can truncate to the wrong microsecond at exact boundaries.
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
-            # Newer fixtures write plain TIMESTAMP(MICROS) (no UTC adjust),
-            # which Spark reads as TIMESTAMP_NTZ. Normalize to the session-tz
-            # TIMESTAMP the whole query surface (epoch casts, watermarks,
-            # window()) was built against; sessions here run UTC so the
-            # wall-clock values are unchanged and match DuckDB's naive reads.
+            # The live branch: every fixture tier stores plain
+            # TIMESTAMP(MICROS) (no UTC adjust), which Spark reads as
+            # TIMESTAMP_NTZ. Normalize to the session-tz TIMESTAMP the whole
+            # query surface (epoch casts, watermarks, window()) was built
+            # against; sessions here run UTC so the wall-clock values are
+            # unchanged and match DuckDB's naive reads.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 

@@ -1,18 +1,13 @@
-"""Sparse-retrieval operators (LLM-pipeline extension): BM25 scoring and
-PMI collocation mining over the ``documents`` table.
+"""Sparse-retrieval operators (LLM-pipeline extension) over the
+``documents`` table: PMI collocation mining, an inverted index and
+conjunctive posting-list retrieval.
 
-These are the lexical half of a training-data pipeline: BM25 powers
-decontamination-by-retrieval and quality filtering against a reference set;
-PMI collocations feed tokenizer/vocab construction. Both are pure DataFrame
-compositions — tokenize at scan, one narrow aggregate per statistic, scalar
-corpus stats carried via a broadcast 1-row join (never ``collect``).
-
-Scale design: per-term statistics for a *query* term set are a handful of
-rows (broadcast); per-doc term frequencies are filtered to the query terms
-BEFORE the aggregate, so the shuffled data is O(matching docs × terms), not
-O(corpus tokens). Float parity with the DuckDB oracle follows the repo rule:
-every per-term partial score is floor-truncated to an integer 1e-4 grid and
-summed as exact integers — summation order can never move the result.
+These are the lexical half of a training-data pipeline: PMI collocations
+feed tokenizer/vocab construction, posting lists serve keyword retrieval.
+All are pure DataFrame compositions — tokenize at scan, one narrow
+aggregate per statistic, scalar corpus stats carried via a broadcast 1-row
+join (never ``collect``). Float parity with the DuckDB oracle follows the
+repo rule: exact integer counts, one final float op, floor-truncated.
 """
 
 from __future__ import annotations
@@ -22,91 +17,6 @@ from pyspark.sql import functions as F
 
 from ..functions.tokenize import whitespace_tokens
 from .dedup import normalize_text
-
-# BM25 constants (Robertson k1/b defaults, fixed for oracle parity)
-K1 = 1.2
-B = 0.75
-
-
-def doc_term_freqs(docs: DataFrame, terms: tuple[str, ...],
-                   id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(doc_id, dl, term, tf) for the given term set only.
-
-    The per-token explode is filtered to the query terms *before* the
-    aggregate, so the shuffle carries only matching (doc, term) pairs.
-    ``dl`` (total token count) rides along as a plain column — it is
-    constant per doc, so it survives the groupBy as ``first``-free key.
-    """
-    toks = whitespace_tokens(normalize_text(F.col(text_col)))
-    exploded = docs.select(
-        F.col(id_col), F.size(toks).alias("dl"), F.explode(toks).alias("term")
-    ).filter(F.col("term").isin(*terms))
-    return exploded.groupBy(id_col, "dl", "term").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-
-
-def bm25_topk(docs: DataFrame, terms: tuple[str, ...], k: int = 20,
-              id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """BM25 top-k retrieval for a fixed bag-of-words query.
-
-    score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl·N/Σdl))
-    with idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5)) (Lucene's non-negative
-    form). Corpus scalars N and Σdl come from one tiny aggregate broadcast
-    to the scorers; df per query term is a ≤|terms|-row broadcast.
-
-    Parity: each term's partial score is floored onto the 1e-4 grid as a
-    BIGINT and the per-doc sum runs over those integers, so Spark's
-    unordered aggregation cannot diverge from the oracle by a ulp.
-    Output: (doc_id, score) — top ``k`` by score desc, doc_id asc.
-    """
-    tfs = doc_term_freqs(docs, terms, id_col, text_col)
-    # corpus scalars over ALL docs (not just matches): N docs, Σ dl
-    toks_all = docs.select(
-        F.size(whitespace_tokens(normalize_text(F.col(text_col)))).alias("dl")
-    )
-    stats = toks_all.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
-    dfs = tfs.groupBy("term").agg(F.countDistinct(id_col).alias("df"))
-
-    scored = (
-        tfs.join(F.broadcast(dfs), "term")
-        .join(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn(
-            "rel_dl",
-            (F.col("dl") * F.col("n_docs")).cast("double") / F.col("sum_dl"),
-        )
-        .withColumn(
-            "part_e4",
-            F.floor(
-                F.col("idf")
-                * (
-                    (F.col("tf") * F.lit(K1 + 1.0))
-                    / (
-                        F.col("tf")
-                        + F.lit(K1)
-                        * (F.lit(1.0 - B) + F.lit(B) * F.col("rel_dl"))
-                    )
-                )
-                * F.lit(10000.0)
-            ).cast("bigint"),
-        )
-    )
-    return (
-        scored.groupBy(id_col)
-        .agg((F.sum("part_e4") / F.lit(10000.0)).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col))
-        .limit(k)
-    )
 
 
 def pmi_bigrams(docs: DataFrame, min_count: int = 5, k: int = 100,

@@ -43,7 +43,7 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from ..io import scratch_dir
+from ..io import read_parquet, scratch_dir
 from ..operators import similarity
 from . import QuerySpec
 from .llm import ORACLE_ANN_IVF, _QUERY_IDS, _embs_par
@@ -125,7 +125,7 @@ def ensure_ivf_index(spark, sf_dir, n_centroids: int = 16) -> tuple[str, str]:
         # assign against the read-back centroids so the persisted artifacts
         # are self-consistent even if frame and files ever diverge
         (
-            similarity.ivf_assign(e, spark.read.parquet(cents_s))
+            similarity.ivf_assign(e, read_parquet(spark, cents_s))
             .write.partitionBy("list_id")
             .parquet(os.path.join(staging, "index"))
         )
@@ -141,7 +141,7 @@ def ensure_ivf_index(spark, sf_dir, n_centroids: int = 16) -> tuple[str, str]:
 def _read_index(spark, index_p: str):
     # the partition column comes back type-inferred (int) — restore the
     # bigint the join/oracle contract expects
-    return spark.read.parquet(index_p).withColumn(
+    return read_parquet(spark, index_p).withColumn(
         "list_id", F.col("list_id").cast("bigint")
     )
 
@@ -155,7 +155,7 @@ def q_ann_ivf_persisted(spark, sf_dir):
     index_p, cents_p = ensure_ivf_index(spark, sf_dir)
     q = _embs_par(spark, sf_dir).filter(F.col("vec_id").isin(*_QUERY_IDS))
     return similarity.ivf_probe_topk(
-        _read_index(spark, index_p), spark.read.parquet(cents_p), q, k=10, n_probe=4
+        _read_index(spark, index_p), read_parquet(spark, cents_p), q, k=10, n_probe=4
     )
 
 
@@ -176,7 +176,7 @@ def q_stream_ann_ivf_persisted(spark, sf_dir):
     def _probe(batch, _i: int):
         s = batch.sparkSession
         return similarity.ivf_probe_topk(
-            _read_index(s, index_p), s.read.parquet(cents_p), batch, k=10, n_probe=4
+            _read_index(s, index_p), read_parquet(s, cents_p), batch, k=10, n_probe=4
         )
 
     return drain(stream, _probe)
@@ -263,7 +263,7 @@ def q_stream_ann_index_upsert(spark, sf_dir):
     delta_p = os.path.join(tmp, "delta")
 
     similarity.ivf_centroids(base, n_centroids=16).write.parquet(cents_p)
-    cents = spark.read.parquet(cents_p)
+    cents = read_parquet(spark, cents_p)
     (
         similarity.ivf_assign(base, cents)
         .write.partitionBy("list_id")
@@ -274,7 +274,7 @@ def q_stream_ann_index_upsert(spark, sf_dir):
 
     def _ingest(batch, batch_id: int) -> None:
         s = batch.sparkSession
-        out = similarity.ivf_assign(batch, s.read.parquet(cents_p))
+        out = similarity.ivf_assign(batch, read_parquet(s, cents_p))
         out.write.mode("overwrite").partitionBy("list_id").parquet(
             os.path.join(delta_p, f"ingest_batch={batch_id}")
         )
@@ -282,8 +282,8 @@ def q_stream_ann_index_upsert(spark, sf_dir):
     drain(stream, _ingest)
 
     # hive-style discovery reads both partition levels (ingest_batch, list_id)
-    full = spark.read.parquet(base_p).select("vec_id", "list_id").unionByName(
-        spark.read.parquet(delta_p).select("vec_id", "list_id")
+    full = read_parquet(spark, base_p).select("vec_id", "list_id").unionByName(
+        read_parquet(spark, delta_p).select("vec_id", "list_id")
     )
     return (
         full.groupBy(F.col("list_id").cast("bigint").alias("list_id"))

@@ -34,7 +34,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from ..io import scratch_dir
+from ..io import read_parquet, scratch_dir
 from ..operators import dedup, text
 from . import QuerySpec
 from .llm import ORACLE_BPE_APPLY, ORACLE_LM_SCORE, _docs_par
@@ -79,7 +79,7 @@ def ensure_lsh_store(spark, sf_dir) -> str:
 def _read_lsh_store(spark, store_p: str):
     # the partition column comes back type-inferred — restore the int the
     # band_signatures contract emits
-    return spark.read.parquet(store_p).withColumn("band", F.col("band").cast("int"))
+    return read_parquet(spark, store_p).withColumn("band", F.col("band").cast("int"))
 
 
 def q_lsh_persisted(spark, sf_dir):
@@ -318,7 +318,7 @@ def q_bpe_persisted(spark, sf_dir):
     vocab joined back to the corpus token stream on the word key."""
     _merges_p, vocab_p = ensure_bpe_vocab(spark, sf_dir)
     return text.bpe_encoded_length_with_vocab(
-        _docs_par(spark, sf_dir), spark.read.parquet(vocab_p)
+        _docs_par(spark, sf_dir), read_parquet(spark, vocab_p)
     )
 
 
@@ -359,8 +359,8 @@ def q_lm_persisted(spark, sf_dir):
     uni_p, bg_p = ensure_lm_model(spark, sf_dir)
     comp = text.lm_score_with_model(
         _docs_par(spark, sf_dir),
-        spark.read.parquet(uni_p),
-        spark.read.parquet(bg_p),
+        read_parquet(spark, uni_p),
+        read_parquet(spark, bg_p),
     )
     return comp.select(
         "doc_id",
@@ -450,9 +450,9 @@ def _gate_verdicts(spark, sf_dir, incoming):
 
     Verdict priority: exact > near-dup > contamination > accept (an exact
     duplicate is rejected before its gram overlap is ever consulted)."""
-    fps = spark.read.parquet(ensure_fp_index(spark, sf_dir))
+    fps = read_parquet(spark, ensure_fp_index(spark, sf_dir))
     store = _read_lsh_store(spark, ensure_lsh_store(spark, sf_dir)).alias("b")
-    bench = spark.read.parquet(ensure_bench_grams(spark, sf_dir))
+    bench = read_parquet(spark, ensure_bench_grams(spark, sf_dir))
 
     exact = (
         incoming.select("doc_id", dedup.fingerprint(F.col("text")).alias("fp"))
@@ -602,7 +602,7 @@ def q_ann_index_compact(spark, sf_dir):
     compact_p = os.path.join(tmp, "compacted")
 
     similarity.ivf_centroids(base, n_centroids=16).write.parquet(cents_p)
-    cents = spark.read.parquet(cents_p)
+    cents = read_parquet(spark, cents_p)
     similarity.ivf_assign(base, cents).write.partitionBy("list_id").parquet(base_p)
     # three accumulated ingest deltas (the upsert query's sink shape)
     for i in range(3):
@@ -613,15 +613,15 @@ def q_ann_index_compact(spark, sf_dir):
         )
 
     # the compactor: one partition-key rewrite of base ∪ deltas
-    merged = spark.read.parquet(base_p).select(
+    merged = read_parquet(spark, base_p).select(
         "vec_id", "embedding", "list_id"
     ).unionByName(
-        spark.read.parquet(delta_p).select("vec_id", "embedding", "list_id")
+        read_parquet(spark, delta_p).select("vec_id", "embedding", "list_id")
     )
     merged.write.partitionBy("list_id").parquet(compact_p)
 
     return (
-        spark.read.parquet(compact_p)
+        read_parquet(spark, compact_p)
         .groupBy(F.col("list_id").cast("bigint").alias("list_id"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs"))
         .orderBy("list_id")

@@ -36,7 +36,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import load_table, scratch_dir
+from ..io import load_table, read_parquet, scratch_dir
 from ..operators import windows
 from ..sources import files
 from ..streaming import joins as sjoins
@@ -327,7 +327,7 @@ def q_stream_upsert_latest(spark, sf_dir):
         )
 
     drain(stream, _merge)
-    return spark.read.parquet(store).select(
+    return read_parquet(spark, store).select(
         "o_custkey", "o_orderkey", "o_orderstatus", "o_totalprice"
     )
 
@@ -617,7 +617,7 @@ def q_stream_dim_incremental(spark, sf_dir):
         _dim_sync_batch(spark, batch, holder["state"], base)
 
     drain(stream, _sync)
-    return spark.read.parquet(os.path.join(base, "dim_user_info")).select(
+    return read_parquet(spark, os.path.join(base, "dim_user_info")).select(
         F.col("id").cast("bigint").alias("id"), "create_time", "user_name"
     )
 
@@ -674,7 +674,7 @@ def q_stream_lsh_incremental(spark, sf_dir):
             "left_semi",
         ).select("doc_id")
         if os.path.exists(store):
-            prior = spark.read.parquet(store).select("band", "band_sig")
+            prior = read_parquet(spark, store).select("band", "band_sig")
             inter = banded.join(prior, ["band", "band_sig"], "left_semi").select(
                 "doc_id"
             )
@@ -690,7 +690,7 @@ def q_stream_lsh_incremental(spark, sf_dir):
         banded.select("band", "band_sig").write.mode("append").parquet(store)
 
     drain(stream, _probe_and_merge)
-    return spark.read.parquet(flags_dir)
+    return read_parquet(spark, flags_dir)
 
 
 def _oracle_lsh_incremental() -> str:
@@ -728,7 +728,7 @@ def q_stream_mv_merge(spark, sf_dir):
             F.date_format("ts", "yyyy-MM-dd").alias("dt"), "event_type"
         ).agg(F.count(F.lit(1)).alias("_n"), F.sum("value").alias("_s"))
         if os.path.exists(mv):
-            partial = spark.read.parquet(mv).unionByName(partial)
+            partial = read_parquet(spark, mv).unionByName(partial)
         merged = partial.groupBy("dt", "event_type").agg(
             F.sum("_n").alias("_n"), F.sum("_s").alias("_s")
         )
@@ -743,7 +743,7 @@ def q_stream_mv_merge(spark, sf_dir):
         os.rename(gen, mv)
 
     drain(stream, _merge)
-    return spark.read.parquet(mv).select(
+    return read_parquet(spark, mv).select(
         "dt",
         "event_type",
         F.col("_n").cast("bigint").alias("n_events"),
@@ -1112,7 +1112,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
     base.select(dedup.fingerprint(F.col("text")).alias("fp")).distinct() \
         .write.parquet(fp_dir)
     dedup.shingles(base).write.parquet(sh_dir)
-    dedup.doc_bands(spark.read.parquet(sh_dir)).write.parquet(bands_dir)
+    dedup.doc_bands(read_parquet(spark, sh_dir)).write.parquet(bands_dir)
 
     # ---- incoming delta as a multi-file replay stream
     stream = files.replay(d.filter(inc_pred))
@@ -1123,7 +1123,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
         bands_i = dedup.doc_bands(sh_i).select(
             "band", "band_sig", F.col("doc_id").alias("_i")
         )
-        bands_b = s.read.parquet(bands_dir).select(
+        bands_b = read_parquet(s, bands_dir).select(
             "band", "band_sig", F.col("doc_id").alias("_b")
         )
         cand = (
@@ -1139,7 +1139,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
             .filter(F.col("doc_id") % 5 != 0)
             .distinct()
         )
-        sh_b_pruned = s.read.parquet(sh_dir).join(
+        sh_b_pruned = read_parquet(s, sh_dir).join(
             cand_base_ids, "doc_id", "left_semi"
         )
         jac = dedup.jaccard_pairs(
@@ -1157,7 +1157,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
         )
         exact = (
             batch.select("doc_id", dedup.fingerprint(F.col("text")).alias("fp"))
-            .join(s.read.parquet(fp_dir), "fp", "left_semi")
+            .join(read_parquet(s, fp_dir), "fp", "left_semi")
             .select("doc_id")
             .withColumn("_e", F.lit(1))
         )
@@ -1211,7 +1211,7 @@ def q_stream_ann_probe(spark, sf_dir):
 
     # ---- index build (batch, once — the persisted artifacts)
     similarity.ivf_centroids(e, n_centroids=16).write.parquet(cents_dir)
-    cents = spark.read.parquet(cents_dir)
+    cents = read_parquet(spark, cents_dir)
     similarity.ivf_assign(e, cents).write.partitionBy("list_id").parquet(index_dir)
 
     # ---- query stream as a multi-file replay
@@ -1220,8 +1220,8 @@ def q_stream_ann_probe(spark, sf_dir):
     def _probe(batch: DataFrame, _i: int) -> DataFrame:
         s = batch.sparkSession
         return similarity.ivf_probe_topk(
-            s.read.parquet(index_dir),
-            s.read.parquet(cents_dir),
+            read_parquet(s, index_dir),
+            read_parquet(s, cents_dir),
             batch,
             k=10,
             n_probe=4,
@@ -2359,7 +2359,7 @@ def q_stream_contam_13gram(spark, sf_dir):
     def _probe(batch: DataFrame, _i: int) -> DataFrame:
         s = batch.sparkSession
         g = dedup.shingles(batch, k=13)
-        idx = s.read.parquet(idx_dir)
+        idx = read_parquet(s, idx_dir)
         hits = g.join(idx, "shingle").groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("n_hit")
         )

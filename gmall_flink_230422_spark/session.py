@@ -147,8 +147,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", tz)
-        # testdata events.parquet stores TIMESTAMP(NANOS) which vanilla Spark
-        # rejects; read as long and convert in io.load_table.
+        # The fixture tiers store TIMESTAMP(MICROS) (read as timestamp_ntz);
+        # parquet TIMESTAMP(NANOS), which Spark otherwise rejects, is read as
+        # a long and converted in io.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .io import read_parquet
 from .operators.stateful import latest_by_key
 
 
@@ -42,7 +43,7 @@ def upsert_parquet(
     """S8/S11: MERGE-by-key into a parquet table: new batch wins over
     existing rows with the same key when its sequence columns are newer."""
     if os.path.exists(path):
-        existing = spark.read.parquet(path)
+        existing = read_parquet(spark, path)
         merged = existing.unionByName(batch, allowMissingColumns=True)
     else:
         merged = batch
@@ -50,7 +51,7 @@ def upsert_parquet(
     # write via temp dir to avoid reading+overwriting the same files
     tmp = path.rstrip("/") + "._tmp"
     latest.write.mode("overwrite").parquet(tmp)
-    final = spark.read.parquet(tmp)
+    final = read_parquet(spark, tmp)
     final.write.mode("overwrite").parquet(path)
     import shutil
 
@@ -149,7 +150,7 @@ def compact_parquet(
         if os.path.exists(stale):
             shutil.rmtree(stale)
 
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     files = df.inputFiles()
     total = sum(
         os.path.getsize(f[len("file:") :] if f.startswith("file:") else f)
@@ -245,4 +246,4 @@ def snapshot_read(spark, table_dir: str, version: int | None = None) -> DataFram
     if version is None:
         with open(os.path.join(table_dir, "_latest")) as fh:
             version = json.load(fh)["version"]
-    return spark.read.parquet(os.path.join(table_dir, f"v={version}"))
+    return read_parquet(spark, os.path.join(table_dir, f"v={version}"))

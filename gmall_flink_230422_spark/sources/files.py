@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import scratch_dir
+from ..io import read_parquet, scratch_dir
 
 
 def stream_parquet(
@@ -29,7 +29,7 @@ def stream_parquet(
     the deterministic stand-in for a Kafka topic in tests. Without a
     ``schema`` the one the files at ``path`` already hold is used."""
     if schema is None:
-        schema = spark.read.parquet(path).schema
+        schema = read_parquet(spark, path).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", files_per_trigger)

@@ -8,7 +8,7 @@ import shutil
 
 from pyspark.sql import DataFrame
 
-from ..io import scratch_dir
+from ..io import read_parquet, scratch_dir
 from ..sinks import land_batch
 
 _SHUFFLE = "spark.sql.shuffle.partitions"
@@ -67,4 +67,4 @@ def drain(out: DataFrame, each=None, mode: str = "append") -> DataFrame | None:
     landed = os.path.join(tmp, "out")
     if not os.path.isdir(landed):
         return None
-    return out.sparkSession.read.parquet(landed).drop("batch_id")
+    return read_parquet(out.sparkSession, landed).drop("batch_id")

@@ -252,3 +252,48 @@ def test_plans_replay_through_files_replay():
         for p in package.rglob("*.py")
         if "write_chunks_by" in p.read_text() or "write_time_chunks" in p.read_text()
     ]
+
+
+def _schema_less_reads(sources: dict[str, str]) -> list[str]:
+    """``<x>.read.parquet(...)`` calls (Spark infers the schema with a job)
+    outside ``io.read_parquet``, as ``file:line``."""
+    import ast
+
+    found = []
+    for name, text in sources.items():
+        tree = ast.parse(text)
+        allowed = set()
+        if name == "io.py":
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and fn.name == "read_parquet":
+                    allowed |= {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            f = getattr(node, "func", None)
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(f, ast.Attribute)
+                and f.attr == "parquet"
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "read"
+                and id(node) not in allowed
+            ):
+                found.append(f"{name}:{node.lineno}")
+    return found
+
+
+def test_parquet_reads_through_read_parquet():
+    """Every schema-less parquet read in the package goes through
+    io.read_parquet, which takes the schema from the footer so building the
+    DataFrame runs no Spark job. cds.py is exempt: its source keys the
+    class-data archive. A planted direct read is caught."""
+    package = Path(__file__).resolve().parent.parent / "gmall_flink_230422_spark"
+    sources = {
+        str(p.relative_to(package)): p.read_text()
+        for p in package.rglob("*.py")
+        if p.name != "cds.py"
+    }
+    assert "io.py" in sources
+    assert _schema_less_reads(sources) == []
+    planted = dict(sources)
+    planted["sinks.py"] += "\n\ndef _f(spark, p):\n    return spark.read.parquet(p)\n"
+    assert _schema_less_reads(planted) == [f"sinks.py:{len(planted['sinks.py'].splitlines())}"]
