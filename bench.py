@@ -29,6 +29,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from gmall_flink_230422_spark.io import query_scope
 from gmall_flink_230422_spark.plans import registry
 from gmall_flink_230422_spark.session import get_spark
 
@@ -307,6 +308,13 @@ CANARY_MID = [
 CANARY_ALL = CANARY + CANARY_MID
 
 
+def _action_s(df) -> float:
+    """Seconds one full action on ``df`` (a ``noop`` write) takes."""
+    t0 = time.time()
+    df.write.format("noop").mode("overwrite").save()
+    return time.time() - t0
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT", "BENCH_local_latest.json")
@@ -322,23 +330,20 @@ def main() -> None:
         names = [n.strip() for n in subset.split(",") if n.strip()]
 
     # warm the JVM + parquet footers once so timings measure the queries
-    specs["q1_pricing_summary"].fn(spark, sf_dir).count()
+    with query_scope(spark):
+        specs["q1_pricing_summary"].fn(spark, sf_dir).count()
 
-    # ---- canary anchors (r9 verdict item 2): build each canary once,
-    # re-time it warm best-of-3 at three session positions
-    canary_dfs = {n: specs[n].fn(spark, sf_dir) for n in CANARY_ALL}
-    for df in canary_dfs.values():  # absorb codegen/first-action cost up front
-        df.write.format("noop").mode("overwrite").save()
-
+    # ---- canary anchors (r9 verdict item 2): time each canary warm
+    # best-of-3 at three session positions. Every pass builds each canary
+    # in its own query_scope and runs one untimed action first (codegen,
+    # cache materialization), so a pass holds no state from the last one.
     def canary_pass() -> dict[str, float]:
         out = {}
-        for n, df in canary_dfs.items():
-            reps = []
-            for _ in range(3):
-                t0 = time.time()
-                df.write.format("noop").mode("overwrite").save()
-                reps.append(time.time() - t0)
-            out[n] = round(min(reps), 3)
+        for n in CANARY_ALL:
+            with query_scope(spark):
+                df = specs[n].fn(spark, sf_dir)
+                _action_s(df)
+                out[n] = round(min(_action_s(df) for _ in range(3)), 3)
         return out
 
     canary_at: dict[str, dict[str, float]] = {"start": canary_pass()}
@@ -350,7 +355,9 @@ def main() -> None:
     # Catalyst analysis of the (for the capstones, very large) logical plan
     # per repetition. Construction runs under a per-query job group; jobs
     # observed there mark the query with plan_actions_s (r6 fix: eager CC
-    # rounds no longer hide in the plan phase). A System.gc() between
+    # rounds no longer hide in the plan phase). Build, cold and warm runs
+    # share one query_scope, so warm repeats reuse the query's own caches
+    # and the next query starts from none. A System.gc() between
     # queries paces the session so GC pressure from a ~110-query run
     # doesn't bleed into later timings (the r2 1.21x common-set drift).
     times: dict[str, float] = {}
@@ -366,28 +373,23 @@ def main() -> None:
         if qi == len(names) // 2:
             canary_at["middle"] = canary_pass()
         group = f"plan:{name}"
-        sc.setJobGroup(group, f"construction of {name}")
-        t0 = time.time()
-        df = specs[name].fn(spark, sf_dir)
-        plan[name] = round(time.time() - t0, 3)
-        n_jobs = len(tracker.getJobIdsForGroup(group))
-        plan_jobs[name] = n_jobs
-        if n_jobs >= 1:
-            # construction executed real Spark jobs (eager checkpoints /
-            # convergence loops): charge the whole construction time to
-            # the query, visibly. Parquet reads take their schema from the
-            # footer (io.read_parquet), so building a plain plan runs no
-            # job at all.
-            plan_actions[name] = plan[name]
-        sc.setJobGroup(f"exec:{name}", f"execution of {name}")
-
-        def run() -> float:
+        with query_scope(spark):
+            sc.setJobGroup(group, f"construction of {name}")
             t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            return time.time() - t0
-
-        cold[name] = round(plan[name] + run(), 3)
-        reps = sorted(run() for _ in range(3))
+            df = specs[name].fn(spark, sf_dir)
+            plan[name] = round(time.time() - t0, 3)
+            n_jobs = len(tracker.getJobIdsForGroup(group))
+            plan_jobs[name] = n_jobs
+            if n_jobs >= 1:
+                # construction executed real Spark jobs (eager checkpoints /
+                # convergence loops): charge the whole construction time to
+                # the query, visibly. Parquet reads take their schema from
+                # the footer (io.read_parquet), so building a plain plan
+                # runs no job at all.
+                plan_actions[name] = plan[name]
+            sc.setJobGroup(f"exec:{name}", f"execution of {name}")
+            cold[name] = round(plan[name] + _action_s(df), 3)
+            reps = sorted(_action_s(df) for _ in range(3))
         times[name] = round(reps[0], 3)
         # per-query relative spread of the warm repetitions: how much of a
         # cross-round delta is just run-to-run noise (r4 verdict: ±10%
@@ -395,12 +397,6 @@ def main() -> None:
         # noise floor part of the artifact instead of folklore)
         spread[name] = round((reps[-1] - reps[0]) / max(reps[0], 1e-9), 3)
         jvm_system.gc()
-        # A/B probe for driver-session cache pressure (BENCHNOTES.md): with
-        # SPARK_GRAFT_CLEARCACHE=1 every query starts from an empty block
-        # store, bounding how much of a long session's per-query drift is
-        # cache eviction vs everything else
-        if os.environ.get("SPARK_GRAFT_CLEARCACHE"):
-            spark.catalog.clearCache()
 
     canary_at["end"] = canary_pass()
     canary_totals = {
@@ -451,12 +447,15 @@ def main() -> None:
         "cold_non_canary_total": round(
             sum(v for k, v in cold.items() if k not in CANARY_ALL), 3
         ),
-        "method": "same-plan warm best-of-3; gc pacing between queries; "
+        "method": "same-plan warm best-of-3; one query_scope per query "
+        "(its caches, checkpoints and scratch dirs released after its warm "
+        "runs); gc pacing between queries; "
         "construction under a job group so eager plan-time actions are "
         "charged to their query (plan_actions_s); fixed 13-query canary "
         "(10 light + 3 mid-weight) re-timed at start/middle/end as the "
-        "session-speed anchor. NOTE: "
-        "the canary warm-up compiles the 13 canary plans before the main "
+        "session-speed anchor, each canary rebuilt in its own scope per "
+        "pass. NOTE: "
+        "the start canary pass compiles the 13 canary plans before the main "
         "loop, so those queries' cold/plan values are codegen-warm-biased "
         "— compare cold across rounds via cold_non_canary_total",
         "variance": {

@@ -19,11 +19,15 @@ no Spark job.
 
 Scratch space (``scratch_dir``) for plans and streaming drains lives under
 one root per process, removed when the process exits.
+
+``query_scope`` owns one query's state: its caches, checkpoint blocks and
+scratch dirs are released when the scope exits.
 """
 
 from __future__ import annotations
 
 import atexit
+import contextlib
 import json
 import os
 import shutil
@@ -190,6 +194,32 @@ def scratch_dir(prefix: str) -> str:
         _scratch_root = tempfile.mkdtemp(prefix=f"gmall_spark_{os.getpid()}_")
         atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
     return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
+
+
+@contextlib.contextmanager
+def query_scope(spark: SparkSession):
+    """The one owner of a query's state: released when the scope exits.
+
+    On exit, normal or by exception, it drops every cached frame
+    (``clearCache``), unpersists every RDD still persisted
+    (``localCheckpoint`` blocks, which ``clearCache`` does not release)
+    and deletes the ``scratch_dir`` directories made since entry.
+
+    Frames built inside the scope belong to it: after exit a cached frame
+    recomputes from its lineage, and reading a checkpointed one fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. Run one query per scope, its
+    build and every action on it inside, so its plan and its time depend
+    on that query alone, not on what ran before it in the session."""
+    before = set(os.listdir(_scratch_root)) if _scratch_root else set()
+    try:
+        yield
+    finally:
+        spark.catalog.clearCache()
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist(True)
+        if _scratch_root is not None:
+            for name in set(os.listdir(_scratch_root)) - before:
+                shutil.rmtree(os.path.join(_scratch_root, name), ignore_errors=True)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

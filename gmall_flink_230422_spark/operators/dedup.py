@@ -333,8 +333,8 @@ def canonical_near_pairs(
     Every cached frame here (the canonical ids, and the chain's shingles
     and candidates) is MEMORY_AND_DISK with LRU eviction and bounded by
     the token or verified-pair count, never corpus². A long-lived session
-    recycling many corpus snapshots should call
-    ``spark.catalog.clearCache()`` between snapshots."""
+    recycling many corpus snapshots should run each one inside an
+    ``io.query_scope``, which releases them on exit."""
     groups = exact_dedup_groups(docs, "doc_id", text_col)
     # The canonical-id list feeds the shingle prune and docs_c's
     # semi-join, which dedup_corpus's final anti-join re-executes per

@@ -302,11 +302,8 @@ def triangle_count(
     # drops it to the ~15 the algorithm actually needs).
     # Retention is INTENTIONAL: the caches back the lazily-returned frame,
     # so an unpersist here would silently recompile exactly that lineage
-    # on the caller's first action. Like connected_components' superseded
-    # round RDDs, they are MEMORY_AND_DISK blocks the executor evicts LRU
-    # under pressure — a long session (the ~110-query bench loop) sheds
-    # them without driver involvement; callers wanting determinism can
-    # spark.catalog.clearCache() after materializing the result.
+    # on the caller's first action. The caller's io.query_scope releases
+    # them, with the rest of the query's state, when the query is done.
     e = (
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("a"),

@@ -33,12 +33,10 @@ def _materialize(df):
     materialization modes"). tools/audit_plans.py patches this function to
     the identity so the plan audit sees the full construction lineage.
 
-    clearCache note: localCheckpoint blocks are NOT registered with the
-    CacheManager, so ``spark.catalog.clearCache()`` (bench.py's
-    SPARK_GRAFT_CLEARCACHE probe) does not free them; they are released
-    when the DataFrame/RDD refs are GC'd. A long session that
-    re-constructs these queries many times should drop the frames rather
-    than rely on clearCache.
+    Lifetime: localCheckpoint blocks are not registered with the
+    CacheManager, so ``spark.catalog.clearCache()`` alone does not free
+    them. ``io.query_scope`` releases them with the query's caches when it
+    exits; the frame cannot be read after that.
 
     Fault-tolerance note (guide §5): localCheckpoint trades the
     intermediates' recomputability for speed — an executor loss mid-query
@@ -55,59 +53,26 @@ def _embs_par(spark, sf_dir):
     return ensure_parallelism(spark, load_table(spark, sf_dir, "embeddings"), "vec_id")
 
 
-_DUP_MEMBERS_MEMO: dict = {}
-_BPE_MEMO: dict = {}
-
-
-def _evict_stale(memo: dict, app_id: str) -> None:
-    """Drop memo entries whose SparkContext is gone: keys are
-    (applicationId, ...) and a long-lived driver process that stops and
-    restarts sessions (repeated vanilla sweeps in one interpreter) would
-    otherwise pin dead DataFrame/JVM references for the process lifetime
-    (r7 advisor find). Called on every insert — at most a handful of keys,
-    so the scan is O(1) in practice."""
-    for k in [k for k in memo if k[0] != app_id]:
-        del memo[k]
-
-
 def _bpe_trained(spark, sf_dir, n_merges: int = 3):
-    """BPE training (text._bpe_train) memoized per (SparkContext, sf_dir,
-    n_merges): x_bpe_train publishes the merge table and x_bpe_apply
-    encodes the corpus with it — one trained model serves both, exactly
-    as a production tokenizer pipeline trains once per snapshot. Returns
-    (merges list, encoded-vocab frame); the vocab frame is cached so the
-    merge folds run once."""
-    key = (spark.sparkContext.applicationId, sf_dir, n_merges)
-    hit = _BPE_MEMO.get(key)
-    if hit is None:
-        _evict_stale(_BPE_MEMO, key[0])
-        merges, vocab = text._bpe_train(_docs_par(spark, sf_dir), n_merges)
-        hit = (merges, vocab.cache())
-        _BPE_MEMO[key] = hit
-    return hit
+    """BPE training (text._bpe_train) over the corpus: x_bpe_train
+    publishes the merge table and x_bpe_apply encodes the corpus with it.
+    Returns (merges list, encoded-vocab frame); the vocab frame is cached
+    so the merge folds run once per query."""
+    merges, vocab = text._bpe_train(_docs_par(spark, sf_dir), n_merges)
+    return merges, vocab.cache()
 
 
 def _dup_members(spark, sf_dir):
     """Near-duplicate cluster map (shingles → MinHash16 → LSH 4×4 →
-    Jaccard ≥ 0.5 verify → connected components), memoized per
-    (SparkContext, sf_dir) and cached: six registry queries
-    (x_dedup_clusters, x_dedup_keep_best, x_cluster_stats, x_soft_dedup,
-    x_quality_vs_dup, x_cluster_size_hist) consume the SAME cluster
-    assignment, and in production this is a corpus-snapshot-level
-    artifact materialized ONCE per snapshot and joined by everything
-    downstream — the memo is that materialization. Keyed by
-    applicationId so a fresh session (vanilla sweeps, new driver) never
-    sees frames from a stopped context; per-entry cost is the small
-    (doc_id, cluster_id) map, not the shingle frame."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DUP_MEMBERS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    _evict_stale(_DUP_MEMBERS_MEMO, key[0])
+    Jaccard ≥ 0.5 verify → connected components), cached: the
+    (doc_id, cluster_id) map that eight cluster queries (x_dedup_clusters,
+    x_dedup_keep_best, x_dedup_corpus_cc, x_cluster_stats, x_soft_dedup,
+    x_quality_vs_dup, x_cluster_size_hist, x_dedup_savings) join against.
+    Each query builds its own; the cache lives until the caller's
+    ``io.query_scope`` exits."""
     near = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, sf_dir))).near
-    members = dedup.connected_components(near).cache()
-    _DUP_MEMBERS_MEMO[key] = members
-    return members
+    return dedup.connected_components(near).cache()
+
 
 # shared SQL fragments --------------------------------------------------------
 _TOKS = r"list_filter(string_split_regex(lower(trim(text)), '\s+'), t -> t <> '')"
@@ -825,7 +790,7 @@ def q_dedup_corpus_cc(spark, sf_dir):
     unpaired docs (the transitive-closure-correct variant of
     x_dedup_corpus).
 
-    Rides the shared _dup_members memo (r8, verdict #7): the full-corpus
+    Joins the _dup_members cluster map: the full-corpus
     CC restricted to canonical ids IS the canonical-only CC the operator
     computes, because exact duplicates have identical normalized text
     (fingerprint and shingles both factor through lower∘trim), hence
@@ -834,7 +799,7 @@ def q_dedup_corpus_cc(spark, sf_dir):
     canonicals never depends on a non-canonical node (any path through a
     duplicate d has the same path through its canonical c), and (b) every
     component's min id is a canonical (the exact-group canonical is the
-    group min). The memoized snapshot-level cluster map therefore serves
+    group min). The snapshot-level cluster map therefore serves
     this query too — in production this is exactly "join the corpus
     against the materialized cluster assignment", not a per-query re-run
     of the LSH chain. The operator's own chain stays exercised (and

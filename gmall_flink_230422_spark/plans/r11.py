@@ -287,9 +287,9 @@ def ensure_bpe_vocab(spark, sf_dir, n_merges: int = 3) -> tuple[str, str]:
     and the ``vocab`` companion (word, freq, sym[] — the corpus vocabulary
     already folded through every merge, which is what the apply stage
     joins against). Both live in ONE fingerprint directory, so a
-    gate-passing vocab always matches its merges. This replaces the
-    in-session ``_bpe_trained`` memo for cross-session use: training is a
-    per-snapshot cost, paid once, never per JVM."""
+    gate-passing vocab always matches its merges. Unlike ``_bpe_trained``,
+    which trains inside each query, training here is a per-snapshot cost,
+    paid once, never per JVM."""
     from ..io import ensure_dataset
 
     base = str(_warehouse_root() / f"bpe_vocab_{_sf_tag(sf_dir)}")
@@ -312,8 +312,8 @@ def ensure_bpe_vocab(spark, sf_dir, n_merges: int = 3) -> tuple[str, str]:
 
 def q_bpe_persisted(spark, sf_dir):
     """Tokenizer apply against the PERSISTED vocabulary (build-if-absent):
-    identical semantics and oracle as x_bpe_apply, which trains (memoized
-    per session) and applies in-session — the equality through parquet is
+    identical semantics and oracle as x_bpe_apply, which trains and
+    applies in-query — the equality through parquet is
     the storage round-trip proof. The apply itself is unchanged: encoded
     vocab joined back to the corpus token stream on the word key."""
     _merges_p, vocab_p = ensure_bpe_vocab(spark, sf_dir)

@@ -436,9 +436,8 @@ def q_bpe_compression(spark, sf_dir):
     symbols aggregated over each source's token stream — the
     tokens-per-byte dashboard that decides whether a tokenizer retrain is
     warranted for a new source mix (code-heavy or non-Latin sources
-    compress visibly worse under a text-trained vocab). Rides the shared
-    _bpe_trained memo (train once per snapshot) and the per-doc encoded
-    counts; one broadcast-sized vocab join, two hash aggregates."""
+    compress visibly worse under a text-trained vocab). Rides
+    _bpe_trained's cached vocab and the per-doc encoded counts; one broadcast-sized vocab join, two hash aggregates."""
     from ..operators import text as _text
     from .llm import _bpe_trained
 
@@ -665,7 +664,7 @@ SPECS += [
               doc="Flesch-style readability banding on the integer-milli grid (5-band histogram)",
               tags=("llm", "text", "quality")),
     QuerySpec("x_bpe_compression", q_bpe_compression, _bpe_compression_oracle(),
-              doc="per-source BPE compression ratio — tokenizer-fit dashboard (rides the trained-vocab memo)",
+              doc="per-source BPE compression ratio — tokenizer-fit dashboard (rides the trained vocab)",
               tags=("llm", "text", "tokenizer")),
     QuerySpec("x_temporal_split", q_temporal_split, ORACLE_TEMPORAL_SPLIT,
               doc="temporal train/eval split contamination: users active on both sides of the midpoint cut",
@@ -990,9 +989,8 @@ def q_dedup_savings(spark, sf_dir):
     """The curation deliverable behind every dedup run: per source, docs
     and token mass BEFORE vs AFTER component-exact keep-one dedup, with
     integer milli retention — the table a data lead reads to see which
-    feeds are mostly duplicates. Survivors ride the shared cluster-map
-    memo exactly like x_dedup_corpus_cc (join the materialized snapshot
-    artifact, don't re-run the LSH chain); token counts are one narrow map
+    feeds are mostly duplicates. Survivors join the _dup_members
+    cluster map exactly like x_dedup_corpus_cc; token counts are one narrow map
     over the corpus."""
     from .llm import _dup_members
 
@@ -1076,7 +1074,7 @@ SPECS += [
               doc="type-token ratio per source — lexical-diversity / boilerplate signal",
               tags=("llm", "text", "stats")),
     QuerySpec("x_dedup_savings", q_dedup_savings, _dedup_savings_oracle(),
-              doc="per-source docs/token mass before vs after CC keep-one dedup (rides the cluster-map memo)",
+              doc="per-source docs/token mass before vs after CC keep-one dedup (rides the cluster map)",
               tags=("llm", "dedup", "eval")),
     QuerySpec("x_jaccard_hist", q_jaccard_hist, ORACLE_JACCARD_HIST,
               doc="verified near-dup pair counts per Jaccard decile — threshold-sensitivity gauge",

@@ -30,8 +30,9 @@ def drain(out: DataFrame, each=None, mode: str = "append") -> DataFrame | None:
     landed anything, ``drain`` returns None. The temp and checkpoint
     directories belong to ``drain``: both sit in an ``io.scratch_dir``, and
     the checkpoint is deleted as soon as the query stops, whether it
-    succeeded or failed. The landed output stays until the process exits,
-    since the returned frame reads it lazily. A failed query raises
+    succeeded or failed. The returned frame reads the landed output
+    lazily, so it stays until the enclosing ``io.query_scope`` exits, or
+    until the process exits when there is no scope. A failed query raises
     ``StreamingQueryException``, whose message carries the callback's
     original error.
     """

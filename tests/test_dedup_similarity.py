@@ -4,6 +4,7 @@ import math
 
 from pyspark.sql import functions as F
 
+from gmall_flink_230422_spark.io import query_scope
 from gmall_flink_230422_spark.operators import dedup, similarity
 
 
@@ -63,29 +64,31 @@ def _pairs(df):
 def test_near_dup_chain_matches_hand_composition(spark):
     """The chain's verified pairs equal shingles → MinHash → LSH →
     Jaccard composed by hand, at the default threshold and a looser one."""
-    sh = dedup.shingles(docs_df(spark))
-    for kw in ({}, {"threshold": 0.3}):
-        thr = kw.get("threshold", 0.5)
-        cands = dedup.lsh_candidate_pairs(
-            dedup.minhash_signatures(sh, num_hashes=16), rows_per_band=4
-        )
-        hand = dedup.jaccard_pairs(sh, threshold=thr, candidates=cands)
-        chain = dedup.near_dup_chain(dedup.shingles(docs_df(spark)), **kw)
-        assert _pairs(chain.near) == _pairs(hand)
-        assert (0, 3, 1.0) in _pairs(chain.near)
-    spark.catalog.clearCache()
+    with query_scope(spark):
+        sh = dedup.shingles(docs_df(spark))
+        for kw in ({}, {"threshold": 0.3}):
+            thr = kw.get("threshold", 0.5)
+            cands = dedup.lsh_candidate_pairs(
+                dedup.minhash_signatures(sh, num_hashes=16), rows_per_band=4
+            )
+            hand = dedup.jaccard_pairs(sh, threshold=thr, candidates=cands)
+            chain = dedup.near_dup_chain(dedup.shingles(docs_df(spark)), **kw)
+            assert _pairs(chain.near) == _pairs(hand)
+            assert (0, 3, 1.0) in _pairs(chain.near)
 
 
 def test_doc_bands_caches_nothing(spark):
     """doc_bands runs inside foreachBatch, where a cache entry would
     outlive its batch: building and collecting it must leave the
     session's CacheManager empty."""
-    spark.catalog.clearCache()
+    with query_scope(spark):  # release what earlier tests cached
+        pass
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     assert cache_manager.isEmpty()
-    rows = dedup.doc_bands(dedup.shingles(docs_df(spark))).collect()
-    assert len(rows) == 4 * 4  # four docs with >= 3 tokens, four bands each
-    assert cache_manager.isEmpty()
+    with query_scope(spark):
+        rows = dedup.doc_bands(dedup.shingles(docs_df(spark))).collect()
+        assert len(rows) == 4 * 4  # four docs with >= 3 tokens, four bands each
+        assert cache_manager.isEmpty()
 
 
 def test_simhash_similar_docs_close(spark):

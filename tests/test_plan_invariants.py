@@ -17,6 +17,9 @@ Invariants per headliner plan (built at sf0.001 — plan shape, not data):
     row; anything else fails. (Round-3 verdict: the old literal match on
     ``Exchange SinglePartition`` was vacuous in formatted mode, where the
     distribution prints on a separate ``Arguments:`` line.)
+
+Each headliner is built inside its own ``io.query_scope``, so its plan does
+not depend on what earlier tests cached or checkpointed in the session.
 """
 
 import sys
@@ -36,6 +39,7 @@ from audit_plans import (  # noqa: E402
     single_partition_audit,
 )
 
+from gmall_flink_230422_spark.io import query_scope
 from gmall_flink_230422_spark.plans import registry
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -53,6 +57,14 @@ def _headline_names():
     return mod.HEADLINE
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _released_session(spark):
+    """Start the module from what earlier test modules left released, so
+    the first headliner's plan is as free of their caches as the rest."""
+    with query_scope(spark):
+        pass
+
+
 def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
@@ -62,7 +74,8 @@ def plan_of(df) -> str:
 @pytest.mark.parametrize("name", _headline_names())
 def test_headliner_plan_invariants(spark, name):
     spec = registry()[name]
-    plan = plan_of(spec.fn(spark, SF_DIR))
+    with query_scope(spark):
+        plan = plan_of(spec.fn(spark, SF_DIR))
     assert "BatchEvalPython" not in plan, (
         f"{name}: row-at-a-time Python UDF in the plan"
     )

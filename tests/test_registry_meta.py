@@ -297,3 +297,108 @@ def test_parquet_reads_through_read_parquet():
     planted = dict(sources)
     planted["sinks.py"] += "\n\ndef _f(spark, p):\n    return spark.read.parquet(p)\n"
     assert _schema_less_reads(planted) == [f"sinks.py:{len(planted['sinks.py'].splitlines())}"]
+
+
+_RELEASE_CALLS = ("clearCache", "getPersistentRDDs", "unpersist")
+_RELEASE_OWNERS = {
+    ("gmall_flink_230422_spark/io.py", "query_scope"),
+    ("gmall_flink_230422_spark/sinks.py", "land_batch"),  # per-batch persist
+}
+_CONTAINERS = ("dict", "list", "set", "defaultdict", "OrderedDict")
+_MUTATORS = {
+    "append", "extend", "insert", "remove", "pop", "popitem", "clear",
+    "update", "setdefault", "add", "discard",
+}
+
+
+def _module_containers(tree) -> dict[str, int]:
+    """Module-level names bound to a dict, list or set: name -> line."""
+    import ast
+
+    names = {}
+    for node in tree.body:
+        if not isinstance(node, (ast.Assign, ast.AnnAssign)):
+            continue
+        v = node.value
+        if isinstance(v, (ast.Dict, ast.List, ast.Set, ast.DictComp, ast.ListComp)) or (
+            isinstance(v, ast.Call) and isinstance(v.func, ast.Name) and v.func.id in _CONTAINERS
+        ):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update({t.id: node.lineno for t in targets if isinstance(t, ast.Name)})
+    return names
+
+
+def _query_state_outside_scope(sources: dict[str, str]) -> list[str]:
+    """``file:line`` of every place that releases query state outside
+    ``io.query_scope`` (a ``clearCache``, ``getPersistentRDDs`` or
+    ``unpersist`` call; ``sinks.land_batch`` unpersists its own batch), and
+    of every module-level dict/list/set a function writes to: state kept
+    across queries. Constant tables (``HEADLINE``, the ``SPECS`` registries
+    filled at import) are only read once the module is loaded."""
+    import ast
+
+    found = []
+    for name, text in sorted(sources.items()):
+        tree = ast.parse(text)
+        allowed = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and (name, fn.name) in _RELEASE_OWNERS
+            for n in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            f = getattr(node, "func", None)
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(f, ast.Attribute)
+                and f.attr in _RELEASE_CALLS
+                and id(node) not in allowed
+            ):
+                found.append(f"{name}:{node.lineno}")
+        containers = _module_containers(tree)
+        written = set()
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Global):
+                    written |= set(node.names)
+                elif isinstance(node, ast.Subscript) and isinstance(node.ctx, (ast.Store, ast.Del)):
+                    if isinstance(node.value, ast.Name):
+                        written.add(node.value.id)
+                elif (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in _MUTATORS
+                    and isinstance(node.func.value, ast.Name)
+                ):
+                    written.add(node.func.value.id)
+        found += [f"{name}:{line}" for n, line in containers.items() if n in written]
+    return found
+
+
+def test_query_state_released_only_by_query_scope():
+    """One owner for a query's state: only io.query_scope clears the cache
+    or unpersists RDDs, and no module keeps a container that functions
+    fill across queries (the shape of the removed plans.llm memos). Covers
+    the package, tools/ and bench.py. A planted clearCache and a planted
+    memo are both caught."""
+    root = Path(__file__).resolve().parent.parent
+    paths = [
+        *(root / "gmall_flink_230422_spark").rglob("*.py"),
+        *(root / "tools").glob("*.py"),
+        root / "bench.py",
+    ]
+    sources = {str(p.relative_to(root)): p.read_text() for p in paths}
+    assert "gmall_flink_230422_spark/io.py" in sources and "bench.py" in sources
+    assert _query_state_outside_scope(sources) == []
+    planted = dict(sources)
+    llm = "gmall_flink_230422_spark/plans/llm.py"
+    memo_line = len(planted[llm].splitlines()) + 2
+    planted[llm] += "\n_SEEN: dict = {}\n\n\ndef _remember(k, v):\n    _SEEN[k] = v\n"
+    clear_line = len(planted["bench.py"].splitlines()) + 4
+    planted["bench.py"] += "\n\ndef _reset(spark):\n    spark.catalog.clearCache()\n"
+    assert _query_state_outside_scope(planted) == [
+        f"bench.py:{clear_line}",
+        f"{llm}:{memo_line}",
+    ]

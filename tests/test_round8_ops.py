@@ -74,16 +74,6 @@ def test_mmr_rerank_null_rel_excluded(spark):
     assert picked == {2, 4}
 
 
-def test_memo_evicts_stale_app_ids():
-    """r7 advisor (low): memo entries from stopped SparkContexts are
-    evicted on insert, not pinned for the process lifetime."""
-    from gmall_flink_230422_spark.plans.llm import _evict_stale
-
-    memo = {("app-old", "sf"): "dead", ("app-new", "sf"): "live"}
-    _evict_stale(memo, "app-new")
-    assert memo == {("app-new", "sf"): "live"}
-
-
 def _rows(spark, name, sf="/root/testdata/sf0.001"):
     from gmall_flink_230422_spark.plans import registry
 

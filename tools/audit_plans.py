@@ -39,6 +39,7 @@ from unittest import mock
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from gmall_flink_230422_spark.io import query_scope
 from gmall_flink_230422_spark.plans import llm, registry
 from gmall_flink_230422_spark.session import get_spark
 
@@ -86,17 +87,15 @@ SHUFFLE_OK: dict[str, int] = {}
 
 
 def plan_of(spark, spec, sf_dir: str) -> str:
-    """Formatted plan of one query, built from an empty cache: frames that
-    earlier queries cached (or memoized in plans.llm) would otherwise
-    replace subtrees of this plan with InMemoryRelation leaves, so a row
-    would depend on audit order instead of on the query."""
-    spark.catalog.clearCache()
-    llm._DUP_MEMBERS_MEMO.clear()
-    llm._BPE_MEMO.clear()
-    df = spec.fn(spark, sf_dir)
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    """Formatted plan of one query, built inside its own query_scope:
+    frames that earlier queries cached would otherwise replace subtrees of
+    this plan with InMemoryRelation leaves, so a row would depend on audit
+    order instead of on the query."""
+    with query_scope(spark):
+        df = spec.fn(spark, sf_dir)
+        return df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        )
 
 
 def _tree_section(plan: str) -> list[str]:

@@ -30,7 +30,7 @@ sys.path.insert(0, ROOT)
 # pickled UDFs that import the package need the repo on PYTHONPATH too.
 os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
-from gmall_flink_230422_spark.io import TABLES
+from gmall_flink_230422_spark.io import TABLES, query_scope
 from gmall_flink_230422_spark.plans import registry
 from gmall_flink_230422_spark.session import get_spark
 
@@ -112,21 +112,15 @@ def main():
         }
         report[name] = rec
         try:
-            sdf = spec.fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            with query_scope(spark):
+                sdf = spec.fn(spark, sf_dir)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             rec["err"] = f"spark error: {e}"
             failures.append(name)
             continue
-        finally:
-            # queries cache() intermediates (shingles, candidates, graph
-            # frames) and rightly never unpersist inside a composable plan
-            # fn; across a 196-query run in the driver-like vanilla session
-            # (default 1g heap) the accumulation OOMs at sf0.1 — drop all
-            # cached data between queries, it belongs to the finished one
-            spark.catalog.clearCache()
         rec["spark_rows"] = len(srows)
         if spec.oracle is None:
             print(f"ok   {name}: rows-only ({len(srows)} rows) [{time.time()-t0:.1f}s]")

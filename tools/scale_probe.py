@@ -16,6 +16,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from gmall_flink_230422_spark.io import query_scope
 from gmall_flink_230422_spark.plans import registry
 from gmall_flink_230422_spark.session import get_spark
 
@@ -309,9 +310,10 @@ def _indexed_builders():
 
 
 def run_once(spec, spark, sf):
-    t0 = time.time()
-    spec.fn(spark, sf).write.format("noop").mode("overwrite").save()
-    return time.time() - t0
+    with query_scope(spark):
+        t0 = time.time()
+        spec.fn(spark, sf).write.format("noop").mode("overwrite").save()
+        return time.time() - t0
 
 
 def main_sf1() -> None:
