@@ -17,7 +17,7 @@ replacement mirrors its two public modes over a small built-in lexicon:
       * ``smart``: non-overlapping forward longest-match; unmatched single
         chars emitted as-is.
   - runs with no dictionary hits fall back to all bigrams (single char for
-    length-1 runs) — the round-1 approximation, still deterministic.
+    length-1 runs) — an approximation, still deterministic.
 
 The lexicon is intentionally small (common e-commerce/search nouns from the
 reference's keyword domain) and extensible at call time. Documented as a

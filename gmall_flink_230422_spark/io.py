@@ -32,6 +32,7 @@ import json
 import os
 import shutil
 import tempfile
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -256,8 +257,7 @@ def dataset_fingerprint(path: str) -> str:
     is a file-listing plus one ~8 KB footer per file (parallelizable over
     the listing on a cluster; serial over the local listing here), which is
     the right cost shape for a freshness check that runs per probing
-    session (r10 verdict item 3: the previous gate ran a full-corpus
-    ``count()`` job per probe).
+    session (never a full-corpus ``count()`` job per probe).
 
     Regenerating the corpus — even to identical row counts — changes file
     sizes with overwhelming probability and therefore the token; appending
@@ -286,10 +286,10 @@ def _footer_num_rows(f: str) -> int:
 
 def fingerprint_token(*parts) -> str:
     """Join fingerprint components into one filesystem-safe token. String
-    components replace the r10 integer bit-packing (``index_fingerprint``),
-    whose fixed-width fields could collide on out-of-range inputs (r10
-    advisor find: n_rows ≥ 1e12 bled into the params field); distinct
-    string tuples can never alias because the separator is escaped."""
+    components, not integer bit-packing, whose fixed-width fields collide
+    on out-of-range inputs (n_rows ≥ 1e12 bleeds into the params field);
+    distinct string tuples can never alias because the separator is
+    escaped."""
     toks = []
     for x in parts:
         s = str(x)
@@ -300,9 +300,9 @@ def fingerprint_token(*parts) -> str:
 
 
 def ensure_dataset(path: str, fingerprint, build) -> str:
-    """Build-IF-ABSENT persisted artifact with ATOMIC publication (r10
-    standing-artifact contract, hardened per r10 verdict item 2): the live
-    artifact is the IMMUTABLE directory ``<path>/fp=<fingerprint>/``.
+    """Build-IF-ABSENT persisted artifact with ATOMIC publication (the
+    standing-artifact contract): the live artifact is the IMMUTABLE
+    directory ``<path>/fp=<fingerprint>/``.
 
     - ``fingerprint`` (any str/int; sanitized into the dir name) addresses
       the artifact: an algorithm bump, parameter change, or corpus change
@@ -313,9 +313,9 @@ def ensure_dataset(path: str, fingerprint, build) -> str:
     - ``build(staging_dir)`` writes the artifact's dataset(s) UNDER the
       staging directory (a single parquet dataset directly at the staging
       path, or several companion datasets as subdirectories — companions
-      share the one gate by construction, closing the r10 advisor's
-      missing-centroids hole). Publication is one ``os.rename`` of the
-      staging dir to ``fp=<token>`` — atomic on POSIX, so a concurrent
+      share the one gate by construction, so an index can never be
+      published without its centroids). Publication is one ``os.rename``
+      of the staging dir to ``fp=<token>`` — atomic on POSIX, so a concurrent
       reader sees either no artifact or a complete one, NEVER a partial
       write.
     - Concurrent ensure calls are safe without a lock: each builds in a
@@ -356,6 +356,53 @@ def ensure_dataset(path: str, fingerprint, build) -> str:
             raise
         shutil.rmtree(staging, ignore_errors=True)
     return final
+
+
+# Path-addressed warehouse for standing artifacts (gitignored; overridable so
+# tests can isolate). The layout under it is exactly what a catalog table
+# would manage: <root>/<kind>_<tag>/fp=<fingerprint>/part-*.parquet.
+_WAREHOUSE_ENV = "SPARK_GRAFT_INDEX_DIR"
+
+
+def _warehouse_root() -> Path:
+    env = os.environ.get(_WAREHOUSE_ENV)
+    if env:
+        return Path(env)
+    return Path(__file__).resolve().parents[1] / "spark-warehouse"
+
+
+def _sf_tag(sf_dir: str) -> str:
+    """Corpus-location tag for warehouse paths: basename for readability
+    PLUS an 8-hex digest of the normalized absolute path, so two distinct
+    corpora whose directories share a basename (regenerated testdata in
+    another tree) can never alias to one persisted artifact."""
+    import hashlib
+
+    norm = os.path.normpath(os.path.abspath(sf_dir))
+    base = os.path.basename(norm)
+    safe = "".join(c if c.isalnum() else "_" for c in base)
+    return f"{safe}_{hashlib.md5(norm.encode()).hexdigest()[:8]}"
+
+
+def corpus_token(sf_dir: str, table: str) -> str:
+    """Footer-stats freshness token of one fixture table — the corpus leg
+    of every standing-artifact fingerprint. It reads only parquet footers
+    (dataset_fingerprint), never the rows: at 100 TB a freshness check
+    that scans the corpus per probing session is the wrong cost shape."""
+    return dataset_fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
+
+
+def ensure_artifact(kind: str, sf_dir: str, table: str, key: str, build) -> str:
+    """Build-if-absent standing artifact derived from one fixture table:
+    the :func:`ensure_dataset` directory ``<warehouse>/<kind>_<sf tag>/``,
+    addressed by ``key`` (algorithm version and build parameters, e.g.
+    ``"v1-h16-r4"``) plus the table's :func:`corpus_token`. Returns the
+    published ``fp=`` directory; ``build(staging)`` writes it."""
+    return ensure_dataset(
+        str(_warehouse_root() / f"{kind}_{_sf_tag(sf_dir)}"),
+        f"{key}-{corpus_token(sf_dir, table)}",
+        build,
+    )
 
 
 def write_bucketed(

@@ -30,8 +30,8 @@ redistribution" PageRank variant, identical on both engines. Callers
 building an undirected graph (every node then has out-degree ≥ 1) avoid
 the question entirely.
 
-LINEAGE CONVENTION for iterative operators (r5, unifying what pagerank /
-connected_components / mmr_rerank each grew ad hoc): an iterative op
+LINEAGE CONVENTION for iterative operators (one rule for pagerank /
+connected_components / mmr_rerank): an iterative op
 whose loop body runs a per-round ACTION anyway (a convergence count)
 truncates lineage every round for free with a LAZY
 ``localCheckpoint(eager=False)`` — the round's action materializes it,
@@ -55,8 +55,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Serializes the AQE-conf flip in lazy_checkpoint: without it two
-# overlapping calls can race the restore and leave AQE off session-wide
-# (r9 advice). NOTE the residual assumption, documented in the
+# overlapping calls can race the restore and leave AQE off session-wide.
+# NOTE the residual assumption, documented in the
 # lazy_checkpoint docstring: any OTHER plan compiled concurrently on the
 # same session during the (lock-held, milliseconds) flip window compiles
 # without AQE.
@@ -85,7 +85,7 @@ def lazy_checkpoint(df: DataFrame) -> DataFrame:
 
     Concurrency: the session-global conf flip is serialized by
     _AQE_FLIP_LOCK so overlapping lazy_checkpoint calls cannot race the
-    restore (r9 advice). A plan compiled by ANOTHER thread on the same
+    restore. A plan compiled by ANOTHER thread on the same
     session inside the held window still sees AQE off — callers running
     concurrent compilation (parallel bench drivers, streaming
     micro-batch threads) should compile via a child ``spark.newSession()``
@@ -137,10 +137,10 @@ def pagerank(
     the seed set, so rank measures proximity to the seeds (the
     recommendation / related-entity signal) instead of global authority.
     The seed table rides as a broadcast flag join — same shuffle count.
-    The node universe is edge endpoints UNION seeds (ADVICE r3: an
-    isolated seed — no edges at all — still carries its restart mass and
-    appears in the output at rank base_micro, instead of being silently
-    dropped). The oracle builds the same union.
+    The node universe is edge endpoints UNION seeds (an isolated seed — no
+    edges at all — still carries its restart mass and appears in the
+    output at rank base_micro, instead of being silently dropped). The
+    oracle builds the same union.
 
     ``checkpoint_every=N`` truncates the lineage every N iterations with
     an eager localCheckpoint — without it, a 100-iteration run re-analyzes
@@ -167,7 +167,7 @@ def pagerank(
     else:
         nodes = edge_nodes.distinct().withColumn("_seed", F.lit(1)).cache()
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
-    # r11 optimization (guide §2.4/§3.1): hash-partition the static edge
+    # Hash-partition the static edge
     # side by the per-iteration join key ONCE before caching — the cached
     # InMemoryRelation keeps that outputPartitioning, so every iteration's
     # ed ⋈ ranks join re-shuffles only the small ranks side instead of
@@ -220,7 +220,7 @@ def pagerank_oracle_sql(
     (personalized PageRank)."""
     if seeded:
         # node universe includes isolated seeds (UNION seeds) — mirrors
-        # pagerank()'s ADVICE-r3 fix exactly
+        # pagerank()'s seed-universe rule exactly
         nodes_cte = (
             "nodes AS (SELECT n.node, CASE WHEN s.node IS NULL THEN 0 ELSE 1 END AS _seed"
             " FROM (SELECT DISTINCT src AS node FROM edges"

@@ -211,9 +211,3 @@ def window_signal(
             ).alias("energy"),
         )
     )
-
-
-def frame_sample(decoded: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling analog: deterministic 1-in-N selection by id (stands in
-    for video frame sampling; selection logic is the real, scalable part)."""
-    return decoded.filter(F.col("doc_id") % every_n == 0)

@@ -164,9 +164,9 @@ def conjunctive_topdf_query(docs: DataFrame, ranks: tuple[int, ...] = (2, 3),
     The picked-term table is a ≤|ranks|-row broadcast; the intersection is
     one semi-ish equi-join plus a per-doc count — the AND of posting lists
     without ever materializing them. The df-rank is a distributed
-    TakeOrderedAndProject of the top-``max(ranks)`` terms (r4: replaces
-    the global row_number window over the whole vocabulary, whose Sort
-    was a single-partition exchange — the one the r3 audit flagged);
+    TakeOrderedAndProject of the top-``max(ranks)`` terms (not a global
+    row_number window over the whole vocabulary, whose Sort is a
+    single-partition exchange);
     ranks within that ≤max(ranks)-row cached frame come from a broadcast
     ordering self-join, not a window.
     """

@@ -545,13 +545,13 @@ def random_projection(
     projection is an exact bigint sum — order-free, bit-identical across
     engines — rather than an aggregation-order-dependent float fold.
 
-    Scale shape (r7): the sign matrix packs into ONE broadcast row of
+    Scale shape: the sign matrix packs into ONE broadcast row of
     per-direction sign arrays (the _centroid_array pattern); each corpus
     row computes all n_dirs projections as zip_with/aggregate folds over
     its own components — a pure narrow map with ZERO data-proportional
-    shuffle (the r4–r6 form posexploded 64·N component rows through a
-    (vec_id, r)-keyed hash aggregate; at 10⁹ vectors that shuffle was the
-    whole cost of every projection consumer). The fold is sequential per
+    shuffle (posexploding 64·N component rows through a (vec_id, r)-keyed
+    hash aggregate instead makes that shuffle the whole cost of every
+    projection consumer at 10⁹ vectors). The fold is sequential per
     row, so the exact-BIGINT milli sums are unchanged — bit-identical to
     the aggregate form and the oracle.
 
@@ -581,7 +581,7 @@ def random_projection(
     # partial sums the legacy posexplode+join-on-j form and the DuckDB
     # oracle compute. Without the slice, zip_with null-pads the shorter
     # array and one null product nulls the whole aggregate, so any
-    # non-`dim`-length vector silently projected to NULL (r7 advisor find).
+    # non-`dim`-length vector would silently project to NULL.
     projs = F.transform(
         F.col("_dirs"),
         lambda d: F.struct(
@@ -724,9 +724,9 @@ def mmr_rerank(
     k_candidates rows per query: one windowed prune, one candidate×candidate
     self-join (k² per query, never corpus²), then ONE Arrow-batched
     grouped-map that runs the inherently-sequential greedy selection per
-    query_id group over the ≤k² pre-computed integer sims. The former
-    join-loop form (r4–r6) scheduled k_select−1 GLOBAL stage barriers —
-    at 10⁶ queries every step waited on the slowest straggler; the
+    query_id group over the ≤k² pre-computed integer sims. A join-loop
+    form schedules k_select−1 GLOBAL stage barriers — at 10⁶ queries
+    every step waits on the slowest straggler; the
     grouped map is one shuffle keyed by query_id, embarrassingly parallel
     across queries, with per-group work bounded by k². All sims/rels are
     pre-computed JVM-side on the decimilli grid, so the Python kernel
@@ -744,10 +744,10 @@ def mmr_rerank(
     # cand feeds THREE consumers (both sides of the pairwise self-join and
     # the grouped-map input's left side); uncached, Catalyst recompiled —
     # and the executor re-RAN — the dominant broadcast-scoring + window-
-    # prune subtree once per consumer (PLANS.md max_scan_repeat=3, r7
-    # verdict #1). cache() collapses them onto one InMemoryRelation: the
-    # scoring pass executes once, and the cached frame is k_candidates·|Q|
-    # pruned rows (bounded), not the corpus.
+    # prune subtree once per consumer (PLANS.md max_scan_repeat=3).
+    # cache() collapses them onto one InMemoryRelation: the scoring pass
+    # executes once, and the cached frame is k_candidates·|Q| pruned rows
+    # (bounded), not the corpus.
     cand = mmr_candidates(
         corpus, query, k_candidates, id_col, vec_col, probe_partitions, n_queries
     ).cache()
@@ -794,8 +794,7 @@ def mmr_rerank(
         # which still hash-matches its int candidate key. NULL rel (e.g.
         # cosine of a zero-norm vector) excludes the candidate; NULL sim is
         # skipped inside the max — SQL aggregate semantics, matching the
-        # former pure-DataFrame loop where NULL never won a `>` comparison
-        # (r7 advisor find).
+        # pure-DataFrame loop form where NULL never wins a `>` comparison.
         qid = pdf["query_id"].iloc[0]
         rel = {}
         sim = {}
@@ -1090,9 +1089,9 @@ def dbscan_2d(
 def tdiv(a: int, b: int) -> int:
     """Truncate-toward-zero integer division — the exact semantics of both
     Spark's ``DIV`` and DuckDB's ``//`` (Python's ``//`` floors instead,
-    off by one on negative numerators; the same trap the r4 review found
-    in ewma_stream). Driver-side integer math that must stay bit-identical
-    to either engine goes through this helper."""
+    off by one on negative numerators; the same trap as in ewma_stream).
+    Driver-side integer math that must stay bit-identical to either engine
+    goes through this helper."""
     q = abs(a) // abs(b)
     return q if (a >= 0) == (b >= 0) else -q
 
@@ -1238,9 +1237,9 @@ def kcenter_greedy(
     chains of narrow broadcast crossJoin + least() maps over the cached
     corpus — whole-stage-codegen'd, no shuffle — so memory stays O(N),
     not O(k·N): caching every round's corpus-sized frame would hold k
-    full-corpus InMemoryRelations simultaneously (the r8 advisor
-    finding). Recompute cost of the uncached chains is O(k²·N) distance
-    evaluations instead of O(k·N) — for the fixed small k this is the
+    full-corpus InMemoryRelations simultaneously. Recompute cost of the
+    uncached chains is O(k²·N) distance evaluations instead of O(k·N) —
+    for the fixed small k this is the
     right trade at 100 TB, where k corpus-sized caches cannot fit but k²
     scans of one cached frame stream fine. Deterministic: (min-dist
     DESC, id) argmax tiebreak on the fixed-point grid."""

@@ -298,7 +298,7 @@ def repetition_features(
     - ``mean_word_len``   — degenerate-token guard
     - ``keep``            — the composite repetition filter verdict
 
-    Shape (r11 optimization, guide §2.4 "remove shuffles outright"): every
+    Shape (remove shuffles outright): every
     signal is a PER-DOCUMENT statistic, so nothing needs to leave the row —
     the old explode→count→re-aggregate→join shape (two word/bigram explode
     chains, four hash aggregates, one doc_id exchange) is replaced by pure
@@ -680,7 +680,7 @@ def lm_crossentropy_components(
     unchanged: two hash aggregates for the model, natural-key joins for
     scoring, V as a broadcast scalar.
 
-    Tokenize-once contract (r9 verdict item 5): a frame that already
+    Tokenize-once contract: a frame that already
     carries a ``_toks`` array column is used as-is — callers scoring the
     same corpus under several models (DSIR) tokenize ONCE into a cached
     frame and pass it as ``docs``/``model_docs``, collapsing the text-scan
@@ -712,7 +712,7 @@ def lm_bigram_model(
 ) -> tuple[DataFrame, DataFrame]:
     """The bigram-LM MODEL as two count tables — ``uni`` (tok, c1) and
     ``bg`` (w1, w2, c2) — the persistable standing artifact of LM scoring
-    (r11: plans/r11.ensure_lm_model writes exactly these two frames as
+    (plans/artifactq.ensure_lm_model writes exactly these two frames as
     companion parquet datasets; vocabulary size V is derived from ``uni``
     at score time, so the artifact carries no extra scalar sidecar).
     Respects the tokenize-once ``_toks`` contract of
@@ -1210,13 +1210,12 @@ def backoff_trigram_score(
     scalar. Nothing collects; no Python touches a row.
 
     The tokenized ``base`` frame is deliberately NOT cached (scan repeat
-    7 = 3 n-gram orders × 2 join sides + N): the r9 A/B at sf0.1 (hot
-    session, best-of-3) measured cache-base warm 1.06 s / cold 1.39 s vs
-    no-cache warm 1.09 s / cold 1.02 s — a tie on warm, a loss on cold,
-    because the n-gram explodes dominate and re-tokenizing from the
-    pruned parquet scan is cheap next to them. At 100 TB a corpus-sized
+    7 = 3 n-gram orders × 2 join sides + N): caching it measured a tie
+    warm and a loss cold at sf0.1 (BENCHNOTES.md), because the n-gram
+    explodes dominate and re-tokenizing from the pruned parquet scan is
+    cheap next to them. At 100 TB a corpus-sized
     token-array cache is also the wrong memory trade; the no-cache form
-    is the keeper (BENCHNOTES.md r9).
+    is the keeper.
 
     Output: (doc_id, n_trigrams, sum_score_micro, avg_score_micro), one row
     per held-out doc with ≥3 tokens.
@@ -1245,15 +1244,15 @@ def backoff_trigram_score(
             id_col, *[F.col(f"_g.w{i + 1}").alias(f"w{i + 1}") for i in range(n)]
         )
 
-    # r12 (guide §1.2 don't recompute, §5 cache the derived small frame):
-    # c2 and c1 each feed TWO join sides of the backoff chain, so the
-    # uncached form compiled each model aggregate twice — two extra full
-    # corpus explode→aggregate passes per action (scan-repeat 7). The
+    # Don't recompute; cache the derived small frame: c2 and c1 each feed
+    # TWO join sides of the backoff chain, so the uncached form compiled
+    # each model aggregate twice — two extra full corpus
+    # explode→aggregate passes per action (scan-repeat 7). The
     # model COUNT tables (≪ corpus, the right thing to cache at any
     # scale — they are the LM artifact a production run persists) are
     # cached instead; n_train = Σ c1 replaces its own corpus scan (the
     # sum of per-token counts IS the train token total, exactly).
-    # Scan-repeat 7 → 4; the r9 A/B that rejected caching the TOKENIZED
+    # Scan-repeat 7 → 4; the A/B that rejected caching the TOKENIZED
     # CORPUS frame (corpus-sized memory for a tie) still holds and is a
     # different trade from caching the model tables.
     c3 = _grams(train, 3).groupBy("w1", "w2", "w3").agg(F.count(F.lit(1)).alias("c3"))
@@ -1330,7 +1329,7 @@ def curriculum_phases(
     by the grid, a few thousand rows regardless of corpus size) via
     ``distributed_cumsum``, and phases broadcast-join back to the corpus by
     logit bucket — the same grid-histogram trick as the selection capstone
-    (plans/llm.py select_pipeline). Phase boundaries therefore land on
+    (plans/curationq.py select_pipeline). Phase boundaries therefore land on
     difficulty-grid bucket edges: every doc with the same logit gets the
     same phase — a deterministic, engine-exact semantic (no hash
     tie-breaking inside a bucket).

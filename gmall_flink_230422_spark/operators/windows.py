@@ -224,8 +224,8 @@ def distributed_cumsum(
 ) -> DataFrame:
     """Distributed prefix (cumulative) sum over a global ordering — the
     scale-safe replacement for ``Window.orderBy(...)`` running sums, which
-    compile to an Exchange SinglePartition + global Sort (the round-3 plan
-    audit's one real violation class).
+    compile to an Exchange SinglePartition + global Sort (the plan audit's
+    single-partition violation class).
 
     Three declarative stages, no driver collect:
       1. range-partition by the order key (``repartitionByRange`` — the

@@ -22,10 +22,16 @@ class QuerySpec:
 
 
 def registry() -> dict[str, QuerySpec]:
-    from . import analytics, dwd, gmall, graphq, llm, r8, r9, r10, r11, streamq, tpch, tpch_ext
+    from . import (
+        analytics, artifactq, curationq, dedupq, dwd, evalq, gmall, graphq, mediaq, streamq,
+        textq, tpch, tpch_ext, vectorq,
+    )
 
     out: dict[str, QuerySpec] = {}
-    for mod in (gmall, llm, tpch, tpch_ext, analytics, dwd, streamq, graphq, r8, r9, r10, r11):
+    for mod in (
+        gmall, dwd, tpch, tpch_ext, analytics, dedupq, textq, vectorq, curationq, evalq,
+        graphq, mediaq, artifactq, streamq,
+    ):
         for spec in mod.SPECS:
             assert spec.name not in out, f"duplicate query name {spec.name}"
             out[spec.name] = spec

@@ -9,8 +9,11 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from ..operators import dedup
 from ..operators.windows import distributed_cumsum
+from ..streaming.joins import session_agg
 from . import QuerySpec
+from .common import _docs_par, _TOKS
 
 SESSION_GAP_S = 1800
 
@@ -191,22 +194,19 @@ def q_session_window(spark, sf_dir):
     """Session windows (gap 1800 s) per user via Spark's native
     ``session_window`` — the streaming-capable sessionizer; emitted as
     epoch-second bounds (end = last event + gap)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.session_window("ts", f"{SESSION_GAP_S} seconds").alias("w"), "user_id"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("value_sum"),
-        )
-        .select(
-            F.col("user_id"),
-            F.col("w.start").cast("long").alias("session_start"),
-            F.col("w.end").cast("long").alias("session_end"),
-            "n_events",
-            "value_sum",
-        )
+    return user_sessions(load_table(spark, sf_dir, "events"))
+
+
+def user_sessions(ev):
+    """Per-user sessions of ``ev`` (batch or streaming) through
+    streaming.joins.session_agg: event count and 2-dp value sum per
+    session."""
+    return session_agg(
+        ev,
+        "ts",
+        f"{SESSION_GAP_S} seconds",
+        ["user_id"],
+        [F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("value_sum")],
     )
 
 
@@ -612,7 +612,7 @@ def q_hll_distinct(spark, sf_dir):
     )
 
 
-def _oracle_hll() -> str:
+def oracle_hll() -> str:
     from ..functions.hashing import portable_hash64_sql
     from ..operators import sketches
 
@@ -1262,8 +1262,8 @@ def q_rolling_window(spark, sf_dir):
     range-interval frame (`RANGE BETWEEN INTERVAL 6 DAYS PRECEDING`)
     rows-based frames can't express over a sparse day grid. Pre-aggregate
     to the day grid first (the 100 TB discipline: the rolling pass runs
-    over ~days rows, not raw orders), then — r4, replacing the
-    unpartitioned rangeBetween window the r3 audit flagged — EXPLODE each
+    over ~days rows, not raw orders), then — instead of an unpartitioned
+    rangeBetween window — EXPLODE each
     day's contribution to the 6 following target days and hash-aggregate
     by target day: every stage is a keyed shuffle, no global sort, and
     the 7x expansion is of the tiny cached day grid. The rolling sum runs
@@ -1596,7 +1596,6 @@ def q_mv_merge(spark, sf_dir):
     so the query IS the proof that merge == recompute. At 100 TB this is
     the difference between touching one day's partition and re-scanning
     the table."""
-    from ..io import load_table
 
     ev = load_table(spark, sf_dir, "events")
     dt = F.date_format("ts", "yyyy-MM-dd").alias("dt")
@@ -1632,7 +1631,6 @@ def q_group_quantiles(spark, sf_dir):
     the emitted values are actual data points, so parity is exact. The
     grouped complement of the global e_quantiles; the sketch-based
     alternative for unsorted 100 TB inputs is e_hist_quantile."""
-    from ..io import load_table
 
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy(F.col("value").asc(), F.col("event_id"))
@@ -1670,7 +1668,6 @@ def q_skew_distinct(spark, sf_dir):
     form is the standard rewrite when group cardinality is tiny and group
     sizes are huge (the definition of skew). Result is identical — the
     oracle computes the direct form."""
-    from ..io import load_table
 
     ev = load_table(spark, sf_dir, "events")
     stage1 = ev.select("event_type", "user_id").distinct()
@@ -1737,7 +1734,7 @@ SPECS = [
     QuerySpec("e_hll_sliding", q_hll_sliding, _oracle_hll_sliding(),
               doc="sliding-window distinct via HLL register merging (3h windows, 1h hop)",
               tags=("ext", "sketch", "window")),
-    QuerySpec("e_hll_distinct", q_hll_distinct, _oracle_hll(),
+    QuerySpec("e_hll_distinct", q_hll_distinct, oracle_hll(),
               doc="deterministic HLL distinct sketch vs exact, per event_type",
               tags=("ext", "sketch", "agg")),
     QuerySpec("e_asof_join", q_asof_join, ORACLE_ASOF,
@@ -1942,17 +1939,14 @@ def q_mad_outliers(spark, sf_dir):
     e_winsorize, twice. Thresholds broadcast back for the flag count; all
     arithmetic integer cents.
 
-    The per-type med/mad frames are CACHED (r4, the r3 verdict's named
-    fix): med feeds dev, mad, AND flagged — uncached, the same
+    The per-type med/mad frames are CACHED: med feeds dev, mad, AND flagged — uncached, the same
     scan->histogram->window->agg chain compiled three times (17 shuffles,
     the registry's worst; three full fact scans at 100 TB where one
     suffices per pass). Cached, the plan is the inherent three passes:
     med histogram, deviation histogram, flag count.
 
-    r9 A/B (the r8 verdict's remaining stats-family straggler, scan
-    repeat 5): caching the 2-column projected `ev` frame too measured
-    warm 0.193 s vs 0.233 s and cold 1.22 s vs 1.28 s at sf0.1 (hot
-    session, best-of-3) — kept. The cache is the pruned (event_type,
+    Caching the 2-column projected `ev` frame too (scan repeat 5
+    otherwise) measured faster warm and cold at sf0.1 — kept. The cache is the pruned (event_type,
     cents) projection, ~16 B/row; at extreme scale MEMORY_AND_DISK
     spills gracefully and the three consumers still beat three full
     parquet passes, but if executor memory is the binding constraint the
@@ -2099,8 +2093,8 @@ _BASKET_CAP = 100  # pair-gen skew guard, same role as LSH max_bucket_size
 
 def q_basket_rules(spark, sf_dir):
     """Association-rule mining over order baskets: support / confidence /
-    lift for part pairs co-ordered ≥2 times. Pair generation (r4 rewrite,
-    the 4.9x SCALING outlier): collect each basket ONCE (sorted array per
+    lift for part pairs co-ordered ≥2 times. Pair generation (the SCALING
+    outlier otherwise): collect each basket ONCE (sorted array per
     order — one keyed shuffle) and expand pairs JVM-side with nested
     array transforms, instead of the items-self-join that shuffled the
     items frame twice and sort-merge-joined it against itself. Baskets
@@ -2124,10 +2118,10 @@ def q_basket_rules(spark, sf_dir):
         F.slice(F.sort_array(F.collect_list("l_partkey")), 1, _BASKET_CAP).alias("ps")
     ).cache()
     n_orders = baskets.select(F.count(F.lit(1)).alias("n"))
-    # r12: c_item feeds BOTH broadcast sides of the rule join below, so
-    # the uncached form compiled (and ran) the basket explode→aggregate
-    # twice per action (the r11 plan dump shows two identical
-    # Generate→HashAggregate chains over the cached baskets). The
+    # c_item feeds BOTH broadcast sides of the rule join below, so the
+    # uncached form compiles (and runs) the basket explode→aggregate
+    # twice per action (two identical Generate→HashAggregate chains over
+    # the cached baskets in the plan). The
     # per-item count table is bounded by |parts| — cache it once.
     c_item = (
         baskets.select(F.explode("ps").alias("l_partkey"))
@@ -2312,7 +2306,7 @@ SPECS += [
 ]
 
 
-# ---------------------------------------------------------------- r4: dyadic EWMA
+# ---------------------------------------------------------------- dyadic EWMA
 def q_ewma(spark, sf_dir):
     """Per-user exponentially-weighted moving average of event values with
     a DYADIC kernel truncated to the trailing 8 events: weights 2^7..2^0
@@ -2383,7 +2377,7 @@ SPECS += [
 ]
 
 
-# ------------------------------------------------- r4: distribution statistics
+# ------------------------------------------------- distribution statistics
 def q_ks_test(spark, sf_dir):
     """Two-sample Kolmogorov-Smirnov distance between the order-total
     distributions of the BUILDING and MACHINERY market segments — the
@@ -2941,7 +2935,7 @@ SPECS += [
 ]
 
 
-# ---------------------------------------------------------------- r5: Benford first-digit audit
+# ---------------------------------------------------------------- Benford first-digit audit
 # log10(1 + 1/d) on a ppm grid, d = 1..9 — shared integer constants in
 # both engines, so no ln/log10 call whose libm rounding could differ.
 _BENFORD_PPM = (301030, 176091, 124939, 96910, 79181, 66947, 57992, 51153, 45757)
@@ -2964,7 +2958,7 @@ def q_benford(spark, sf_dir):
     digit). abs() BEFORE the string slice on BOTH sides: a negative value
     would put '-' in position 1, which Spark CAST nulls but DuckDB CAST
     raises on — an engine split that must not hide behind the fixture's
-    value >= 0.01 guarantee (r5 ADVICE).
+    value >= 0.01 guarantee.
 
     Scale shape: map-only digit extraction, one (event_type, digit) hash
     agg (<= 9 x |types| rows), a broadcast join against the 9-row
@@ -3053,7 +3047,7 @@ FROM per
 """
 
 
-# ---------------------------------------------------------------- r5: Pearson correlation pairs
+# ---------------------------------------------------------------- Pearson correlation pairs
 def q_corr_pairs(spark, sf_dir):
     """Pearson correlation between every PAIR of event types' daily-total
     series (shared days only — an inner join on day, so a type that is
@@ -3144,7 +3138,7 @@ SPECS += [
 ]
 
 
-# ---------------------------------------------------------------- r5: RFM segmentation
+# ---------------------------------------------------------------- RFM segmentation
 def q_rfm_segments(spark, sf_dir):
     """RFM customer segmentation — the retention-marketing classic: each
     user scored 1-3 on Recency (days since their last event, relative to
@@ -3159,10 +3153,10 @@ def q_rfm_segments(spark, sf_dir):
     CCNet cut. Scores are plain tercile indexes ascending in the metric
     (r_t=1 means MOST recent, f_t/m_t=3 mean most active/valuable).
 
-    Scale shape (consolidated r8, verdict #3 — the r7 form ran three
-    separate histogram→cumsum→threshold chains off an UNCACHED per-user
-    frame: 33 shuffles, 10 single-partition scalar-agg exchanges, the
-    grand-total block compiled ~3×): one cached per-user hash agg, the
+    Scale shape (not three separate histogram→cumsum→threshold chains off
+    an UNCACHED per-user frame, which cost 33 shuffles, 10
+    single-partition scalar-agg exchanges and the grand-total block
+    compiled ~3×): one cached per-user hash agg, the
     three metrics MELTED into one (metric, value) histogram — each metric
     contributes exactly n_users rows, so after ONE distributed_cumsum
     ordered by (midx, v) the per-metric cumulative count is simply
@@ -3291,7 +3285,7 @@ SPECS += [
 ]
 
 
-# ---------------------------------------------------------------- r5: CUSUM changepoint
+# ---------------------------------------------------------------- CUSUM changepoint
 def q_cusum_changepoint(spark, sf_dir):
     """CUSUM changepoint scan per event type: the day where the running
     sum of (daily_total - overall_daily_mean) attains its maximum
@@ -3373,7 +3367,7 @@ SPECS += [
 ]
 
 
-# ---------------------------------------------------------------- r5: weekly seasonality profile
+# ---------------------------------------------------------------- weekly seasonality profile
 def q_seasonal_profile(spark, sf_dir):
     """Day-of-week seasonality profile per event type: cent totals and
     event counts per (type, weekday), each day's share of the type's week
@@ -3432,7 +3426,7 @@ SPECS += [
 ]
 
 
-# ---------------------------------------------------------------- r5: survival curve
+# ---------------------------------------------------------------- survival curve
 def q_survival_curve(spark, sf_dir):
     """Kaplan-Meier-style retention/survival table over inter-event gaps:
     for each horizon t in {1, 3, 7, 14, 30} days, how many observed
@@ -3511,7 +3505,6 @@ SPECS += [
 ]
 
 
-# ================================================================ round 6
 def q_holt_winters(spark, sf_dir):
     """Holt's linear-trend exponential smoothing over per-type daily
     totals — the level+trend forecaster one notch past e_ewma's flat
@@ -3965,7 +3958,7 @@ SPECS += [
 ]
 
 
-# ---------------------------------------------------------------- r7: Spearman rank correlation
+# ---------------------------------------------------------------- Spearman rank correlation
 def q_spearman(spark, sf_dir):
     """Spearman rank correlation between customers' order COUNT and total
     SPEND — the monotone-association complement of Pearson (e_corr_pairs):
@@ -4043,7 +4036,7 @@ FROM d
 """
 
 
-# ---------------------------------------------------------------- r7: Welch t² A/B statistic
+# ---------------------------------------------------------------- Welch t² A/B statistic
 def q_welch_t2(spark, sf_dir):
     """Welch two-sample t² between the 'click' and 'view' event-value
     populations — the unequal-variance A/B significance statistic. Emitting
@@ -4115,7 +4108,7 @@ FROM agg
 """
 
 
-# ---------------------------------------------------------------- r7: inter-arrival gap quantiles
+# ---------------------------------------------------------------- inter-arrival gap quantiles
 def q_interarrival(spark, sf_dir):
     """Per-event-type inter-arrival profile: exact p50/p90/mean of the gap
     (microseconds) between a user's CONSECUTIVE events of that type — the
@@ -4198,7 +4191,7 @@ SPECS += [
 ]
 
 
-# ---------------------------------------------------------------- r7: lag-1 autocorrelation
+# ---------------------------------------------------------------- lag-1 autocorrelation
 def q_autocorr(spark, sf_dir):
     """Lag-1 autocorrelation of the daily revenue series — the persistence
     number behind "is yesterday predictive of today", i.e. whether the
@@ -4271,7 +4264,7 @@ SPECS += [
 ]
 
 
-# ---------------------------------------------------------------- r7: OHLC downsample
+# ---------------------------------------------------------------- OHLC downsample
 def q_ohlc(spark, sf_dir):
     """Daily OHLC (open/high/low/close) bars of the purchase value stream —
     the canonical time-series downsample every metrics store runs. Open/
@@ -4331,7 +4324,7 @@ SPECS += [
 ]
 
 
-# ---------------------------------------------------------------- r7: day-of-week mix divergence
+# ---------------------------------------------------------------- day-of-week mix divergence
 def q_dow_divergence(spark, sf_dir):
     """Per-event-type day-of-week MIX divergence from the overall traffic's
     dow mix: total-variation and chi-square distance on the exact ppm grid
@@ -4403,7 +4396,7 @@ SPECS += [
 ]
 
 
-# ---------------------------------------------------------------- r7: new vs returning actives
+# ---------------------------------------------------------------- new vs returning actives
 def q_new_vs_returning(spark, sf_dir):
     """Daily active users split into NEW (first-ever-seen that day) vs
     RETURNING — the growth-accounting twin of e_dau_wau (DAU says how
@@ -4447,4 +4440,917 @@ SPECS += [
     QuerySpec("e_new_vs_returning", q_new_vs_returning, ORACLE_NEW_VS_RETURNING,
               doc="daily actives split new vs returning via exact per-user first-seen day",
               tags=("ext", "analytics")),
+]
+
+
+# ------------------------------------------------------------- burst hours
+def q_burst_hours(spark, sf_dir):
+    """Rate-anomaly listing: the hours where an event type ran at ≥ 2.5×
+    its own average hourly rate — the load-spike shortlist an on-call
+    pulls before correlating incidents. The comparison is exact integer
+    cross-multiplication (cnt · n_hours · 10 ≥ 25 · total), no float
+    rate anywhere; n_hours counts the type's ACTIVE hours, so quiet
+    types aren't flattered by empty buckets. Two hash aggregates plus a
+    broadcast of the ≤|types| per-type totals."""
+    ev = load_table(spark, sf_dir, "events")
+    hourly = ev.groupBy(
+        "event_type", F.date_trunc("hour", F.col("ts")).cast("long").alias("hr")
+    ).agg(F.count(F.lit(1)).alias("cnt"))
+    totals = hourly.groupBy("event_type").agg(
+        F.sum("cnt").alias("_tot"), F.count(F.lit(1)).alias("_nh")
+    )
+    return (
+        hourly.join(F.broadcast(totals), "event_type")
+        .filter(F.expr("cnt * _nh * 10 >= 25 * _tot"))
+        .select(
+            "event_type",
+            F.col("hr").cast("bigint").alias("hr"),
+            F.col("cnt").cast("bigint").alias("cnt"),
+        )
+        .orderBy("event_type", "hr")
+    )
+
+
+ORACLE_BURST_HOURS = """
+WITH hourly AS (
+  SELECT event_type, epoch(date_trunc('hour', ts))::BIGINT AS hr, count(*) AS cnt
+  FROM events GROUP BY 1, 2
+),
+totals AS (
+  SELECT event_type, sum(cnt) AS tot, count(*) AS nh FROM hourly GROUP BY 1
+)
+SELECT h.event_type, h.hr, h.cnt::BIGINT AS cnt
+FROM hourly h JOIN totals t USING (event_type)
+WHERE h.cnt * t.nh * 10 >= 25 * t.tot
+ORDER BY event_type, hr
+"""
+
+
+# ------------------------------------------------------------- Mann-Whitney U
+def q_mann_whitney(spark, sf_dir):
+    """Mann-Whitney U rank-sum test: do 'click' and 'view' events draw
+    their `value` from the same distribution? The non-parametric
+    companion to e_welch_t2 (which compares means and assumes rough
+    normality) — rank tests are the workhorse for skewed engagement
+    metrics. Normal approximation WITHOUT tie correction (values sit on a
+    cent grid; ties are rare and the correction term is O(ties³/n³) —
+    documented choice, identical on both engines).
+
+    U is computed WITHOUT any global sort: bucket both samples on the
+    exact cent grid (one hash agg), then one distributed_cumsum over the
+    grid (range partition + bounded partition-total broadcast — never an
+    Exchange SinglePartition) gives each value's count-below; 2·U1 =
+    Σ n1(v)·(2·below2(v) + n2(v)) is exact in BIGINTs. At 100 TB the
+    cumsum frame is |distinct cents|, bounded by the value domain, not
+    the event count. The variance product n1·n2·(n1+n2+1) is computed
+    with each factor cast to DOUBLE first (identically in the oracle):
+    in BIGINT it overflows int64 once both samples reach ~1.5M rows, and
+    Spark would wrap silently (non-ANSI) where DuckDB raises."""
+
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("click", "view")
+    )
+    g = (
+        ev.select(
+            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+            (F.col("event_type") == "click").cast("bigint").alias("is1"),
+            (F.col("event_type") == "view").cast("bigint").alias("is2"),
+        )
+        .groupBy("cents")
+        .agg(F.sum("is1").alias("n1"), F.sum("is2").alias("n2"))
+    )
+    cum = distributed_cumsum(g, ["cents"], ["n1", "n2"], ["c1", "c2"])
+    agg = cum.agg(
+        F.sum("n1").cast("bigint").alias("n_click"),
+        F.sum("n2").cast("bigint").alias("n_view"),
+        F.sum(F.col("n1") * (2 * (F.col("c2") - F.col("n2")) + F.col("n2")))
+        .cast("bigint")
+        .alias("u1_x2"),
+    )
+    return agg.select(
+        "n_click", "n_view", "u1_x2",
+        F.floor(
+            (F.lit(1000) * (F.col("u1_x2") - F.col("n_click") * F.col("n_view")))
+            / (
+                F.lit(2)
+                * F.sqrt(
+                    F.col("n_click").cast("double")
+                    * F.col("n_view").cast("double")
+                    * (F.col("n_click") + F.col("n_view") + 1).cast("double")
+                    / F.lit(12.0)
+                )
+            )
+        )
+        .cast("bigint")
+        .alias("z_milli"),
+    )
+
+
+ORACLE_MANN_WHITNEY = """
+WITH g AS (
+  SELECT round(value * 100)::BIGINT AS cents,
+         sum((event_type = 'click')::BIGINT)::BIGINT AS n1,
+         sum((event_type = 'view')::BIGINT)::BIGINT AS n2
+  FROM events WHERE event_type IN ('click', 'view')
+  GROUP BY 1
+),
+cum AS (
+  SELECT n1, n2,
+         sum(n2) OVER (ORDER BY cents ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c2
+  FROM g
+),
+agg AS (
+  SELECT sum(n1)::BIGINT AS n_click, sum(n2)::BIGINT AS n_view,
+         sum(n1 * (2 * (c2 - n2) + n2))::BIGINT AS u1_x2
+  FROM cum
+)
+SELECT n_click, n_view, u1_x2,
+       floor((1000 * (u1_x2 - n_click * n_view))
+             / (2 * sqrt(n_click::DOUBLE * n_view::DOUBLE * (n_click + n_view + 1)::DOUBLE / 12.0)))::BIGINT AS z_milli
+FROM agg
+"""
+
+
+# ------------------------------------------------------------- Theil-Sen slope
+def q_theil_sen(spark, sf_dir):
+    """Theil-Sen robust trend per event type: the MEDIAN of all pairwise
+    slopes between daily revenue points — up to ~29% corrupted days
+    cannot move it, unlike e_ols_trend's least-squares line which one
+    flash-sale outlier drags arbitrarily. Reported as the lower median
+    (rank ⌈n/2⌉ on the deterministic slope grid) so both engines pick the
+    identical element — no percentile interpolation. The rank target is
+    INTEGER division ((n_pairs + 1) div 2) to match the oracle's `//` —
+    double division would miss the x.5 target whenever C(n,2) is even
+    (day count ≡ 0 or 1 mod 4) and silently drop the key.
+
+    Scale shape: the pairwise self-join is over the DAY GRID (bounded by
+    calendar × event types, ~30 rows per key — never over raw events), so
+    pair count is a few hundred per key; ranking is a KEYED window over
+    those bounded groups. The day rollup itself is one hash agg over the
+    event scan."""
+
+    daily = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("event_type", F.to_date("ts").alias("day"))
+        .agg(F.round(F.sum("value") * 100).cast("bigint").alias("y_cents"))
+    ).cache()
+    b = daily.select(
+        "event_type",
+        F.col("day").alias("day2"),
+        F.col("y_cents").alias("y2"),
+    )
+    pairs = daily.join(b, "event_type").filter(F.col("day") < F.col("day2")).select(
+        "event_type",
+        F.expr("(1000 * (y2 - y_cents)) div datediff(day2, day)")
+        .cast("bigint")
+        .alias("slope_milli"),
+    )
+    w = Window.partitionBy("event_type").orderBy("slope_milli")
+    ranked = pairs.withColumn("rk", F.row_number().over(w))
+    cnt = pairs.groupBy("event_type").agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
+    return (
+        ranked.join(F.broadcast(cnt), "event_type")
+        .filter(F.col("rk") == F.expr("(n_pairs + 1) div 2"))
+        .select("event_type", "n_pairs", F.col("slope_milli").alias("med_slope_milli"))
+        .orderBy("event_type")
+    )
+
+
+ORACLE_THEIL_SEN = """
+WITH daily AS (
+  SELECT event_type, ts::DATE AS day, round(sum(value) * 100)::BIGINT AS y_cents
+  FROM events GROUP BY event_type, ts::DATE
+),
+pairs AS (
+  SELECT a.event_type,
+         ((1000 * (b.y_cents - a.y_cents)) // (b.day - a.day))::BIGINT AS slope_milli
+  FROM daily a JOIN daily b
+    ON a.event_type = b.event_type AND a.day < b.day
+),
+ranked AS (
+  SELECT event_type, slope_milli,
+         row_number() OVER (PARTITION BY event_type ORDER BY slope_milli) AS rk,
+         count(*) OVER (PARTITION BY event_type) AS n_pairs
+  FROM pairs
+)
+SELECT event_type, n_pairs::BIGINT AS n_pairs, slope_milli AS med_slope_milli
+FROM ranked WHERE rk = (n_pairs + 1) // 2
+ORDER BY event_type
+"""
+
+
+# ------------------------------------------------------------- Kendall tau-a
+def q_kendall_tau(spark, sf_dir):
+    """Kendall tau-a concordance between the daily click series and the
+    daily purchase series: over all day pairs (i < j), do the two metrics
+    move the SAME way? The pair-counting alternative to e_spearman (rank
+    correlation) and x_quality_rank_corr — tau has a direct probabilistic
+    reading (P[concordant] − P[discordant]) and is the standard check
+    that an engagement proxy tracks the revenue metric.
+
+    Scale shape: the self-join is over the DAY GRID (bounded by calendar:
+    ~30 rows → ~435 pairs — never raw events); the day rollup is one
+    conditional hash agg over the event scan; the final reduce is one
+    scalar aggregate."""
+    daily = (
+        load_table(spark, sf_dir, "events")
+        .groupBy(F.to_date("ts").alias("day"))
+        .agg(
+            F.sum((F.col("event_type") == "click").cast("bigint")).alias("x"),
+            F.sum((F.col("event_type") == "purchase").cast("bigint")).alias("y"),
+        )
+    ).cache()
+    b = daily.select(
+        F.col("day").alias("day2"), F.col("x").alias("x2"), F.col("y").alias("y2")
+    )
+    pairs = daily.crossJoin(b).filter(F.col("day") < F.col("day2")).select(
+        F.signum((F.col("x2") - F.col("x")).cast("double")).cast("bigint").alias("sx"),
+        F.signum((F.col("y2") - F.col("y")).cast("double")).cast("bigint").alias("sy"),
+    )
+    return pairs.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+        F.sum((F.col("sx") * F.col("sy") == 1).cast("bigint")).alias("concordant"),
+        F.sum((F.col("sx") * F.col("sy") == -1).cast("bigint")).alias("discordant"),
+        F.sum((F.col("sx") == 0).cast("bigint")).alias("ties_x"),
+        F.sum((F.col("sy") == 0).cast("bigint")).alias("ties_y"),
+    ).select(
+        "n_pairs", "concordant", "discordant", "ties_x", "ties_y",
+        F.expr("(1000 * (concordant - discordant)) div n_pairs")
+        .cast("bigint")
+        .alias("tau_a_milli"),
+    )
+
+
+ORACLE_KENDALL_TAU = """
+WITH daily AS (
+  SELECT ts::DATE AS day,
+         sum((event_type = 'click')::BIGINT)::BIGINT AS x,
+         sum((event_type = 'purchase')::BIGINT)::BIGINT AS y
+  FROM events GROUP BY ts::DATE
+),
+pairs AS (
+  SELECT sign(b.x - a.x)::BIGINT AS sx, sign(b.y - a.y)::BIGINT AS sy
+  FROM daily a JOIN daily b ON a.day < b.day
+),
+agg AS (
+  SELECT count(*)::BIGINT AS n_pairs,
+         sum((sx * sy = 1)::BIGINT)::BIGINT AS concordant,
+         sum((sx * sy = -1)::BIGINT)::BIGINT AS discordant,
+         sum((sx = 0)::BIGINT)::BIGINT AS ties_x,
+         sum((sy = 0)::BIGINT)::BIGINT AS ties_y
+  FROM pairs
+)
+SELECT n_pairs, concordant, discordant, ties_x, ties_y,
+       ((1000 * (concordant - discordant)) // n_pairs)::BIGINT AS tau_a_milli
+FROM agg
+"""
+
+
+# ------------------------------------------------------------- chi-square independence
+def q_chisq_independence(spark, sf_dir):
+    """Chi-square test of independence between event type and day-of-week
+    plus Cramér's V — "is engagement mix a weekday phenomenon?" as a
+    single significance-tested number (e_dow_divergence reports the
+    per-type mix distances; this is the corpus-level test over the full
+    contingency table). Per-cell statistic: d = N·o − r·c stays exact
+    BIGINT (≤ ~3e11 at sf0.1); d² would overflow int64 at scale, so the
+    cell value floor(d·d·1e6 / (N·r·c)) is evaluated in DOUBLE with the
+    identical left-assoc operation order in both engines — every step is
+    one correctly-rounded IEEE op over identical operands, so the floors
+    agree bit-for-bit; V from one final sqrt.
+
+    Scale shape: one conditional hash agg over the event scan builds the
+    |types|×7 table; margins and the statistic are broadcast arithmetic
+    over ≤ dozens of rows."""
+    ev = load_table(spark, sf_dir, "events")
+    cells = (
+        ev.select(
+            "event_type",
+            F.expr("((cast(unix_timestamp(ts) as bigint) div 86400) + 4) % 7").alias("dow"),
+        )
+        .groupBy("event_type", "dow")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("o"))
+        .cache()
+    )
+    rows = cells.groupBy("event_type").agg(F.sum("o").cast("bigint").alias("r"))
+    colsf = cells.groupBy("dow").agg(F.sum("o").cast("bigint").alias("c"))
+    tot = cells.agg(
+        F.sum("o").cast("bigint").alias("n"),
+        F.countDistinct("event_type").cast("bigint").alias("nr"),
+        F.countDistinct("dow").cast("bigint").alias("nc"),
+    )
+    full = (
+        cells.join(F.broadcast(rows), "event_type")
+        .join(F.broadcast(colsf), "dow")
+        .crossJoin(F.broadcast(tot))
+    )
+    agg = full.agg(
+        F.max("n").alias("n_events"),
+        F.max("nr").alias("n_types"),
+        F.max("nc").alias("n_dows"),
+        F.sum(
+            F.expr(
+                "cast(floor(cast(n * o - r * c as double) * cast(n * o - r * c as double) "
+                "* 1000000.0 / (cast(n as double) * cast(r as double) * cast(c as double))) as bigint)"
+            )
+        ).cast("bigint").alias("chi2_micro"),
+    )
+    return agg.select(
+        "n_events", "n_types", "n_dows", "chi2_micro",
+        F.floor(
+            F.lit(1000)
+            * F.sqrt(
+                (F.col("chi2_micro") / F.lit(1000000.0))
+                / (
+                    F.col("n_events")
+                    * F.least(F.col("n_types") - 1, F.col("n_dows") - 1)
+                ).cast("double")
+            )
+        ).cast("bigint").alias("cramers_v_milli"),
+    )
+
+
+ORACLE_CHISQ_INDEPENDENCE = """
+WITH cells AS (
+  SELECT event_type, ((floor(epoch(ts))::BIGINT // 86400) + 4) % 7 AS dow,
+         count(*)::BIGINT AS o
+  FROM events GROUP BY 1, 2
+),
+r AS (SELECT event_type, sum(o)::BIGINT AS r FROM cells GROUP BY event_type),
+c AS (SELECT dow, sum(o)::BIGINT AS c FROM cells GROUP BY dow),
+t AS (SELECT sum(o)::BIGINT AS n, count(DISTINCT event_type)::BIGINT AS nr,
+             count(DISTINCT dow)::BIGINT AS nc FROM cells),
+agg AS (
+  SELECT max(t.n) AS n_events, max(t.nr) AS n_types, max(t.nc) AS n_dows,
+         sum(floor((t.n * cells.o - r.r * c.c)::DOUBLE * (t.n * cells.o - r.r * c.c)::DOUBLE
+             * 1000000.0 / (t.n::DOUBLE * r.r::DOUBLE * c.c::DOUBLE)))::BIGINT AS chi2_micro
+  FROM cells JOIN r USING (event_type) JOIN c USING (dow), t
+)
+SELECT n_events, n_types, n_dows, chi2_micro,
+       floor(1000 * sqrt((chi2_micro / 1000000.0)
+             / (n_events * least(n_types - 1, n_dows - 1))::DOUBLE))::BIGINT AS cramers_v_milli
+FROM agg
+"""
+
+
+# ------------------------------------------------------------- two-proportion z
+def q_two_proportion_z(spark, sf_dir):
+    """Two-proportion z-test on the purchase share between the two
+    hash-split user cohorts (user_id % 2 — the A/B assignment every
+    experiment table carries): pooled-variance normal approximation, the
+    proportions companion to e_welch_t2 (means) and e_mann_whitney
+    (distributions). Exact BIGINT counts; one final sqrt + floor to
+    milli.
+
+    Scale shape: ONE conditional hash aggregate over the event scan — no
+    joins, no windows; four counters in, one row out."""
+    ev = load_table(spark, sf_dir, "events")
+    agg = ev.agg(
+        F.sum(F.expr("case when user_id % 2 = 0 then 1 else 0 end")).cast("bigint").alias("n_a"),
+        F.sum(F.expr("case when user_id % 2 = 0 and event_type = 'purchase' then 1 else 0 end")).cast("bigint").alias("x_a"),
+        F.sum(F.expr("case when user_id % 2 = 1 then 1 else 0 end")).cast("bigint").alias("n_b"),
+        F.sum(F.expr("case when user_id % 2 = 1 and event_type = 'purchase' then 1 else 0 end")).cast("bigint").alias("x_b"),
+    )
+    return agg.select(
+        "n_a", "x_a", "n_b", "x_b",
+        F.floor(
+            (F.lit(1000.0) * (F.col("x_a") / F.col("n_a") - F.col("x_b") / F.col("n_b")))
+            / F.sqrt(
+                ((F.col("x_a") + F.col("x_b")) / (F.col("n_a") + F.col("n_b")))
+                * (1 - (F.col("x_a") + F.col("x_b")) / (F.col("n_a") + F.col("n_b")))
+                * (1 / F.col("n_a") + 1 / F.col("n_b"))
+            )
+        ).cast("bigint").alias("z_milli"),
+    )
+
+
+ORACLE_TWO_PROPORTION_Z = """
+WITH agg AS (
+  SELECT sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_a,
+         sum(CASE WHEN user_id % 2 = 0 AND event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS x_a,
+         sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)::BIGINT AS n_b,
+         sum(CASE WHEN user_id % 2 = 1 AND event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS x_b
+  FROM events
+)
+SELECT n_a, x_a, n_b, x_b,
+       floor((1000.0 * (x_a / n_a::DOUBLE - x_b / n_b::DOUBLE))
+             / sqrt(((x_a + x_b) / (n_a + n_b)::DOUBLE)
+                    * (1 - (x_a + x_b) / (n_a + n_b)::DOUBLE)
+                    * (1.0 / n_a + 1.0 / n_b)))::BIGINT AS z_milli
+FROM agg
+"""
+
+
+# ------------------------------------------------------------- Cohen's kappa
+def q_cohens_kappa(spark, sf_dir):
+    """Cohen's kappa agreement between two independent document-quality
+    screens — the length rule (n_chars ≥ 200) and the token-count rule
+    (≥ 40 normalized tokens): how much do two cheap raters agree BEYOND
+    chance? Raw percent-agreement overstates consensus when both rules
+    pass almost everything; kappa = (p_o − p_e)/(1 − p_e) is the standard
+    correction, the same statistic used to validate LLM-judge labels
+    against human raters before trusting them at corpus scale.
+
+    Exact discipline: the 2×2 table counts are one conditional hash agg
+    (exact BIGINTs); p_o and p_e are evaluated in DOUBLE on the single
+    aggregated row with the identical operation order in both engines,
+    one floor to milli. Scale shape: one corpus scan → 1 row."""
+    d = _docs_par(spark, sf_dir)
+    toks = dedup.whitespace_tokens(dedup.normalize_text(F.col("text")))
+    flags = d.select(
+        (F.col("n_chars") >= 200).cast("bigint").alias("a"),
+        (F.size(toks) >= 40).cast("bigint").alias("b"),
+    )
+    agg = flags.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum(F.expr("a * b")).cast("bigint").alias("n11"),
+        F.sum(F.expr("a * (1 - b)")).cast("bigint").alias("n10"),
+        F.sum(F.expr("(1 - a) * b")).cast("bigint").alias("n01"),
+        F.sum(F.expr("(1 - a) * (1 - b)")).cast("bigint").alias("n00"),
+    )
+    pe = (
+        (F.col("n11") + F.col("n10")).cast("double")
+        * (F.col("n11") + F.col("n01")).cast("double")
+        + (F.col("n01") + F.col("n00")).cast("double")
+        * (F.col("n10") + F.col("n00")).cast("double")
+    ) / (F.col("n").cast("double") * F.col("n").cast("double"))
+    po = (F.col("n11") + F.col("n00")).cast("double") / F.col("n").cast("double")
+    # pe == 1 (every doc in one agreement cell) makes kappa 0/0: NULL in
+    # BOTH engines (unguarded, Spark's NaN would cast to 0 while DuckDB
+    # casts NaN to NULL — the cross-engine divergence the repo's when()
+    # guards exist to prevent)
+    return agg.select(
+        "n", "n11", "n10", "n01", "n00",
+        F.when(pe < 1.0, F.floor(F.lit(1000.0) * (po - pe) / (F.lit(1.0) - pe)))
+        .cast("bigint")
+        .alias("kappa_milli"),
+    )
+
+
+ORACLE_COHENS_KAPPA = f"""
+WITH flags AS (
+  SELECT (n_chars >= 200)::BIGINT AS a, (len({_TOKS}) >= 40)::BIGINT AS b
+  FROM documents
+),
+agg AS (
+  SELECT count(*)::BIGINT AS n,
+         sum(a * b)::BIGINT AS n11, sum(a * (1 - b))::BIGINT AS n10,
+         sum((1 - a) * b)::BIGINT AS n01, sum((1 - a) * (1 - b))::BIGINT AS n00
+  FROM flags
+)
+SELECT n, n11, n10, n01, n00,
+       CASE WHEN ((n11 + n10)::DOUBLE * (n11 + n01)::DOUBLE
+                  + (n01 + n00)::DOUBLE * (n10 + n00)::DOUBLE) / (n::DOUBLE * n::DOUBLE) < 1.0
+            THEN floor(1000.0 * ((n11 + n00)::DOUBLE / n::DOUBLE
+                   - ((n11 + n10)::DOUBLE * (n11 + n01)::DOUBLE
+                      + (n01 + n00)::DOUBLE * (n10 + n00)::DOUBLE) / (n::DOUBLE * n::DOUBLE))
+                  / (1.0 - ((n11 + n10)::DOUBLE * (n11 + n01)::DOUBLE
+                      + (n01 + n00)::DOUBLE * (n10 + n00)::DOUBLE) / (n::DOUBLE * n::DOUBLE)))
+       END::BIGINT AS kappa_milli
+FROM agg
+"""
+
+
+# ------------------------------------------------------------- trimmed mean
+def q_trimmed_mean(spark, sf_dir):
+    """10%-two-sided trimmed mean of event value per type — the robust
+    location estimate between the mean (e_* aggregates) and the median
+    (e_mad_outliers): drop the bottom and top n div 10 observations, then
+    average the middle 80%. The estimator revenue dashboards want when a
+    few refunds and whale orders distort the mean but the median is too
+    coarse.
+
+    Exact integer arithmetic via the VALUE HISTOGRAM (the e_winsorize /
+    mad shape — never a global sort): per (type, cents) counts, keyed
+    cumsum over the bounded cent axis, then each bin's KEPT multiplicity
+    is clamp(min(cum, n−k) − max(cum−cnt, k), 0, cnt) — handles ties
+    across the trim boundary exactly; trimmed sum/count are exact BIGINTs
+    and the mean one integer division to milli-cents."""
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_type",
+        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+    )
+    hist = ev.groupBy("event_type", "cents").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt")
+    )
+    wc = (
+        Window.partitionBy("event_type")
+        .orderBy("cents")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = hist.select("event_type", "cents", "cnt", F.sum("cnt").over(wc).alias("cum"))
+    tot = hist.groupBy("event_type").agg(F.sum("cnt").cast("bigint").alias("n"))
+    kept = (
+        cum.join(F.broadcast(tot), "event_type")
+        .withColumn("k", F.expr("n div 10"))
+        .withColumn(
+            "keep",
+            F.greatest(
+                F.lit(0),
+                F.least(F.col("cum"), F.col("n") - F.col("k"))
+                - F.greatest(F.col("cum") - F.col("cnt"), F.col("k")),
+            ),
+        )
+    )
+    return (
+        kept.groupBy("event_type")
+        .agg(
+            F.max("n").cast("bigint").alias("n_rows"),
+            F.sum("keep").cast("bigint").alias("trimmed_n"),
+            F.sum(F.col("cents") * F.col("keep")).cast("bigint").alias("_ts"),
+        )
+        .select(
+            "event_type",
+            "n_rows",
+            "trimmed_n",
+            F.expr("_ts * 1000 div trimmed_n").cast("bigint").alias("trimmed_mean_milli"),
+        )
+        .orderBy("event_type")
+    )
+
+
+ORACLE_TRIMMED_MEAN = """
+WITH ev AS (
+  SELECT event_type, floor(value * 100 + 0.5)::BIGINT AS cents FROM events
+),
+hist AS (SELECT event_type, cents, count(*)::BIGINT AS cnt FROM ev GROUP BY 1, 2),
+cum AS (
+  SELECT event_type, cents, cnt,
+         sum(cnt) OVER (PARTITION BY event_type ORDER BY cents) AS cum
+  FROM hist
+),
+tot AS (SELECT event_type, sum(cnt)::BIGINT AS n FROM hist GROUP BY 1),
+kept AS (
+  SELECT c.event_type, c.cents, t.n,
+         greatest(0, least(c.cum, t.n - t.n // 10) - greatest(c.cum - c.cnt, t.n // 10)) AS keep
+  FROM cum c JOIN tot t USING (event_type)
+)
+SELECT event_type, max(n)::BIGINT AS n_rows, sum(keep)::BIGINT AS trimmed_n,
+       (sum(cents * keep) * 1000 // sum(keep))::BIGINT AS trimmed_mean_milli
+FROM kept GROUP BY event_type ORDER BY event_type
+"""
+
+
+# ------------------------------------------------------------- CUSUM change point
+def q_changepoint_cusum(spark, sf_dir):
+    """CUSUM change-point detection per event type: the day where the
+    cumulative daily revenue deviates FARTHEST from the straight line
+    between zero and the period total — the classic "when did the level
+    shift?" screen that flags a pricing change, an outage, or a feed
+    break, without assuming any distribution.
+
+    Exact integer arithmetic by cross-multiplication: dev_d =
+    |cum_d · D − C · d| (no division, so no float drift; ties broken by
+    the EARLIEST day). Scale shape: one hash agg to the bounded day grid,
+    a keyed cumsum + row-number window over ≤ calendar-many rows per
+    type, one keyed top-1 window."""
+
+    daily = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("event_type", F.to_date("ts").alias("day"))
+        .agg(
+            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+            .cast("bigint")
+            .alias("c")
+        )
+    )
+    wd = Window.partitionBy("event_type").orderBy("day")
+    wcum = wd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    g = daily.select(
+        "event_type",
+        "day",
+        F.row_number().over(wd).alias("d"),
+        F.sum("c").over(wcum).alias("cum"),
+    )
+    tot = g.groupBy("event_type").agg(
+        F.max("d").cast("bigint").alias("n_days"), F.max("cum").cast("bigint").alias("_c")
+    )
+    dev = g.join(F.broadcast(tot), "event_type").select(
+        "event_type",
+        "day",
+        "n_days",
+        F.abs(F.col("cum") * F.col("n_days") - F.col("_c") * F.col("d")).alias("dev"),
+    )
+    wr = Window.partitionBy("event_type").orderBy(F.col("dev").desc(), F.col("day"))
+    return (
+        dev.withColumn("rk", F.row_number().over(wr))
+        .filter(F.col("rk") == 1)
+        .select(
+            "event_type",
+            "n_days",
+            F.col("day").alias("change_day"),
+            F.col("dev").cast("bigint").alias("dev_max"),
+        )
+        .orderBy("event_type")
+    )
+
+
+ORACLE_CHANGEPOINT_CUSUM = """
+WITH daily AS (
+  SELECT event_type, ts::DATE AS day, sum(floor(value * 100 + 0.5)::BIGINT)::BIGINT AS c
+  FROM events GROUP BY 1, 2
+),
+g AS (
+  SELECT event_type, day,
+         row_number() OVER (PARTITION BY event_type ORDER BY day) AS d,
+         sum(c) OVER (PARTITION BY event_type ORDER BY day) AS cum
+  FROM daily
+),
+tot AS (
+  SELECT event_type, max(d)::BIGINT AS n_days, max(cum)::BIGINT AS ctot
+  FROM g GROUP BY 1
+),
+dev AS (
+  SELECT g.event_type, g.day, t.n_days,
+         abs(g.cum * t.n_days - t.ctot * g.d) AS dev
+  FROM g JOIN tot t USING (event_type)
+),
+rk AS (
+  SELECT event_type, day, n_days, dev,
+         row_number() OVER (PARTITION BY event_type ORDER BY dev DESC, day) AS rk
+  FROM dev
+)
+SELECT event_type, n_days, day AS change_day, dev::BIGINT AS dev_max
+FROM rk WHERE rk = 1 ORDER BY event_type
+"""
+
+
+# ------------------------------------------------------------- lag-1 autocorrelation
+def q_autocorr_daily(spark, sf_dir):
+    """Lag-1 autocorrelation of daily revenue PER EVENT TYPE: does today
+    predict tomorrow (momentum, r→1), anti-correlate (oscillating batch
+    effects, r→−1), or is the series white noise? The one-number
+    stationarity screen read before fitting any trend (e_ols_trend,
+    e_theil_sen) — autocorrelated residuals invalidate their confidence
+    story. The KEYED sibling of e_autocorr (analytics.py), which measures
+    the single global order-revenue series on the orders table; this one
+    runs the same gap-safe adjacent-day join per behavioral event type,
+    where per-type persistence differs (purchases cluster, views don't).
+
+    All five Pearson sums are exact BIGINTs over the bounded day-pair
+    frame (consecutive-day join on the calendar grid — never raw
+    events); every derived term is DOUBLE with identical operation order
+    in both engines (the x_degree_assortativity overflow discipline),
+    one floor to milli."""
+    daily = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("event_type", F.to_date("ts").alias("day"))
+        .agg(
+            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint"))
+            .cast("bigint")
+            .alias("y")
+        )
+    ).cache()
+    nxt = daily.select(
+        F.col("event_type").alias("_et2"),
+        F.col("day").alias("_d2"),
+        F.col("y").alias("y2"),
+    )
+    pairs = daily.join(
+        nxt,
+        (F.col("event_type") == F.col("_et2"))
+        & (F.col("_d2") == F.date_add(F.col("day"), 1)),
+    ).select("event_type", "y", "y2")
+    agg = pairs.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+        F.sum("y").cast("bigint").alias("sx"),
+        F.sum("y2").cast("bigint").alias("sy"),
+        F.sum(F.col("y") * F.col("y2")).cast("bigint").alias("sxy"),
+        F.sum(F.col("y") * F.col("y")).cast("bigint").alias("sxx"),
+        F.sum(F.col("y2") * F.col("y2")).cast("bigint").alias("syy"),
+    )
+    n = F.col("n_pairs").cast("double")
+    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
+    sxy = F.col("sxy").cast("double")
+    sxx, syy = F.col("sxx").cast("double"), F.col("syy").cast("double")
+    return agg.select(
+        "event_type",
+        "n_pairs",
+        F.when(
+            (n * sxx - sx * sx > 0) & (n * syy - sy * sy > 0),
+            F.floor(
+                (F.lit(1000.0) * (n * sxy - sx * sy))
+                / F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
+            ),
+        ).cast("bigint").alias("r1_milli"),
+    ).orderBy("event_type")
+
+
+ORACLE_AUTOCORR_DAILY = """
+WITH daily AS (
+  SELECT event_type, ts::DATE AS day, sum(floor(value * 100 + 0.5)::BIGINT)::BIGINT AS y
+  FROM events GROUP BY 1, 2
+),
+pairs AS (
+  SELECT a.event_type, a.y, b.y AS y2
+  FROM daily a JOIN daily b
+    ON a.event_type = b.event_type AND b.day = a.day + 1
+),
+agg AS (
+  SELECT event_type, count(*)::BIGINT AS n_pairs,
+         sum(y)::BIGINT AS sx, sum(y2)::BIGINT AS sy,
+         sum(y * y2)::BIGINT AS sxy, sum(y * y)::BIGINT AS sxx,
+         sum(y2 * y2)::BIGINT AS syy
+  FROM pairs GROUP BY 1
+)
+SELECT event_type, n_pairs,
+       CASE WHEN n_pairs::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE > 0
+             AND n_pairs::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE > 0 THEN
+         floor((1000.0 * (n_pairs::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE))
+               / sqrt((n_pairs::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)
+                      * (n_pairs::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE)))
+       END::BIGINT AS r1_milli
+FROM agg ORDER BY event_type
+"""
+
+
+# ------------------------------------------------------------- seasonal index
+def q_seasonal_index(spark, sf_dir):
+    """Day-of-week seasonal index per event type: average daily revenue on
+    each weekday relative to the type's overall daily average, as an exact
+    cross-multiplied milli ratio — the multiplicative seasonal profile a
+    forecast divides out before trend fitting (e_ols_trend / e_holt_winters
+    operate on the deseasonalized series this query defines).
+
+    index_milli(dow) = (sum_dow · n_days_all · 1000) div (sum_all ·
+    n_days_dow): every term an exact BIGINT from the bounded
+    (type, day) grid — no float averages. Daily totals are SUMS OF
+    PER-ROW CENTS (floor(value·100 + 0.5) per event — exact on the money
+    grid and ADDITIVE, so the streaming twin's per-batch partial sums
+    merge to the identical number; round-of-float-sum would not be
+    batch-invariant). One hash agg to the day grid, one to the
+    (type, dow) grid, a broadcast type-total join."""
+    daily = (
+        load_table(spark, sf_dir, "events")
+        .groupBy(
+            "event_type",
+            F.to_date("ts").alias("day"),
+        )
+        .agg(F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")).cast("bigint").alias("c"))
+        .withColumn(
+            # datediff from the epoch DATE is timezone-independent in both
+            # engines (unix_timestamp(DATE) evaluates at
+            # session-tz midnight and shifts every dow on a non-UTC host)
+            "dow",
+            F.expr("(datediff(day, date'1970-01-01') + 4) % 7"),
+        )
+    ).cache()  # bounded |types| x |days| grid, two consumers (per_dow, per_type)
+    per_dow = daily.groupBy("event_type", "dow").agg(
+        F.sum("c").cast("bigint").alias("sum_dow"),
+        F.count(F.lit(1)).cast("bigint").alias("n_days_dow"),
+    )
+    per_type = daily.groupBy("event_type").agg(
+        F.sum("c").cast("bigint").alias("sum_all"),
+        F.count(F.lit(1)).cast("bigint").alias("n_days_all"),
+    )
+    return (
+        per_dow.join(F.broadcast(per_type), "event_type")
+        .select(
+            "event_type",
+            F.col("dow").cast("bigint").alias("dow"),
+            "n_days_dow",
+            F.expr("sum_dow * n_days_all * 1000 div (sum_all * n_days_dow)")
+            .cast("bigint")
+            .alias("index_milli"),
+        )
+        .orderBy("event_type", "dow")
+    )
+
+
+ORACLE_SEASONAL_INDEX = """
+WITH daily AS (
+  SELECT event_type, ts::DATE AS day, sum(floor(value * 100 + 0.5)::BIGINT)::BIGINT AS c
+  FROM events GROUP BY 1, 2
+),
+d2 AS (
+  SELECT event_type, day, c,
+         ((day - DATE '1970-01-01') + 4) % 7 AS dow
+  FROM daily
+),
+per_dow AS (
+  SELECT event_type, dow, sum(c)::BIGINT AS sum_dow, count(*)::BIGINT AS n_days_dow
+  FROM d2 GROUP BY 1, 2
+),
+per_type AS (
+  SELECT event_type, sum(c)::BIGINT AS sum_all, count(*)::BIGINT AS n_days_all
+  FROM d2 GROUP BY 1
+)
+SELECT p.event_type, p.dow::BIGINT AS dow, p.n_days_dow,
+       (p.sum_dow * t.n_days_all * 1000 // (t.sum_all * p.n_days_dow))::BIGINT AS index_milli
+FROM per_dow p JOIN per_type t USING (event_type)
+ORDER BY p.event_type, p.dow
+"""
+
+
+# ------------------------------------------------------------- Mann-Kendall trend
+def q_mann_kendall(spark, sf_dir):
+    """Mann-Kendall trend test per event type: S = Σ_{i<j} sign(y_j − y_i)
+    over the daily-revenue day grid, with the normal-approximation z — the
+    nonparametric SIGNIFICANCE companion to e_theil_sen's slope (Theil-Sen
+    says how steep; Mann-Kendall says whether the monotone trend is real).
+    No distributional assumption, immune to outlier magnitudes.
+
+    S is an exact BIGINT over the calendar-bounded pairwise day join
+    (never raw events); the variance n(n−1)(2n+5)/18 is evaluated with
+    each factor cast to DOUBLE before multiplying (the e_mann_whitney
+    int64-overflow discipline — identical in the oracle), one floor to
+    milli. Tie correction is omitted (documented): daily cent totals on
+    this grid are effectively tie-free, and both engines omit it
+    identically."""
+    daily = (
+        load_table(spark, sf_dir, "events")
+        .groupBy("event_type", F.to_date("ts").alias("day"))
+        .agg(F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")).alias("y"))
+    ).cache()
+    b = daily.select(
+        F.col("event_type").alias("_et2"),
+        F.col("day").alias("_d2"),
+        F.col("y").alias("y2"),
+    )
+    pairs = daily.join(
+        b, (F.col("event_type") == F.col("_et2")) & (F.col("day") < F.col("_d2"))
+    ).select("event_type", F.signum(F.col("y2") - F.col("y")).cast("bigint").alias("sg"))
+    n_days = daily.groupBy("event_type").agg(F.count(F.lit(1)).cast("bigint").alias("n_days"))
+    agg = pairs.groupBy("event_type").agg(F.sum("sg").cast("bigint").alias("s_stat"))
+    nd = F.col("n_days").cast("double")
+    return (
+        agg.join(F.broadcast(n_days), "event_type")
+        .select(
+            "event_type",
+            "n_days",
+            "s_stat",
+            F.when(
+                F.col("n_days") >= 2,
+                F.floor(
+                    F.lit(1000.0)
+                    * F.col("s_stat").cast("double")
+                    / F.sqrt(nd * (nd - 1.0) * (2.0 * nd + 5.0) / 18.0)
+                ),
+            ).cast("bigint").alias("z_milli"),
+        )
+        .orderBy("event_type")
+    )
+
+
+ORACLE_MANN_KENDALL = """
+WITH daily AS (
+  SELECT event_type, ts::DATE AS day, sum(floor(value * 100 + 0.5)::BIGINT)::BIGINT AS y
+  FROM events GROUP BY 1, 2
+),
+pairs AS (
+  SELECT a.event_type, sign(b.y - a.y)::BIGINT AS sg
+  FROM daily a JOIN daily b
+    ON a.event_type = b.event_type AND a.day < b.day
+),
+nd AS (SELECT event_type, count(*)::BIGINT AS n_days FROM daily GROUP BY 1),
+agg AS (SELECT event_type, sum(sg)::BIGINT AS s_stat FROM pairs GROUP BY 1)
+SELECT a.event_type, n.n_days, a.s_stat,
+       CASE WHEN n.n_days >= 2 THEN
+         floor(1000.0 * a.s_stat::DOUBLE
+               / sqrt(n.n_days::DOUBLE * (n.n_days::DOUBLE - 1.0)
+                      * (2.0 * n.n_days::DOUBLE + 5.0) / 18.0))
+       END::BIGINT AS z_milli
+FROM agg a JOIN nd n USING (event_type)
+ORDER BY a.event_type
+"""
+
+
+SPECS += [
+    QuerySpec("e_burst_hours", q_burst_hours, ORACLE_BURST_HOURS,
+              doc="hours where an event type ran >= 2.5x its average hourly rate (integer cross-multiply)",
+              tags=("ext", "stats")),
+    QuerySpec("e_mann_whitney", q_mann_whitney, ORACLE_MANN_WHITNEY,
+              doc="Mann-Whitney U rank-sum z-score via value-grid cumsum (no global sort)",
+              tags=("analytics", "stats")),
+    QuerySpec("e_theil_sen", q_theil_sen, ORACLE_THEIL_SEN,
+              doc="Theil-Sen robust slope: median pairwise slope over the bounded day grid",
+              tags=("analytics", "stats")),
+    QuerySpec("e_kendall_tau", q_kendall_tau, ORACLE_KENDALL_TAU,
+              doc="Kendall tau-a concordance between daily click and purchase series",
+              tags=("analytics", "stats")),
+    QuerySpec("e_chisq_independence", q_chisq_independence, ORACLE_CHISQ_INDEPENDENCE,
+              doc="chi-square independence of event type x day-of-week + Cramer's V on the exact micro grid",
+              tags=("analytics", "stats")),
+    QuerySpec("e_two_proportion_z", q_two_proportion_z, ORACLE_TWO_PROPORTION_Z,
+              doc="two-proportion z-test of purchase share between hash-split cohorts",
+              tags=("analytics", "stats")),
+    QuerySpec("e_cohens_kappa", q_cohens_kappa, ORACLE_COHENS_KAPPA,
+              doc="Cohen's kappa between the length and token-count quality screens (2x2 exact counts, scalar double kappa)",
+              tags=("llm", "stats", "eval")),
+    QuerySpec("e_trimmed_mean", q_trimmed_mean, ORACLE_TRIMMED_MEAN,
+              doc="10% two-sided trimmed mean per event type via exact value-histogram trim counts",
+              tags=("ext", "stats", "robust")),
+    QuerySpec("e_changepoint_cusum", q_changepoint_cusum, ORACLE_CHANGEPOINT_CUSUM,
+              doc="CUSUM change-point day per event type, cross-multiplied integer deviation",
+              tags=("ext", "stats", "timeseries")),
+    QuerySpec("e_autocorr_daily", q_autocorr_daily, ORACLE_AUTOCORR_DAILY,
+              doc="lag-1 autocorrelation of daily revenue per event type, double-guarded Pearson",
+              tags=("ext", "stats", "timeseries")),
+    QuerySpec("e_seasonal_index", q_seasonal_index, ORACLE_SEASONAL_INDEX,
+              doc="day-of-week multiplicative seasonal index per event type, exact cross-multiplied milli",
+              tags=("ext", "stats", "timeseries")),
+    QuerySpec("e_mann_kendall", q_mann_kendall, ORACLE_MANN_KENDALL,
+              doc="Mann-Kendall monotone-trend z per event type over the daily grid (significance companion to Theil-Sen)",
+              tags=("ext", "stats", "timeseries")),
 ]

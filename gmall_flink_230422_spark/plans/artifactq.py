@@ -1,31 +1,31 @@
-"""Round-11 extension queries: the standing-artifact contract GENERALIZED.
+"""Standing artifacts: corpus-snapshot-level indexes and models built once
+and probed by every later session — the IVF ANN index, the LSH
+band-signature store, the BPE vocabulary, the bigram-LM count tables,
+and the ingest gate's fingerprint and benchmark-gram indexes.
 
-r10 made two artifacts outlive their sessions (the IVF ANN index and the
-contamination gram index). Three more registry families still rebuilt
-their corpus-snapshot-level artifacts on every invocation — the LSH
-band-signature store, the trained BPE vocabulary, and the bigram-LM count
-tables. These are exactly the artifacts a production pipeline materializes
-ONCE per corpus snapshot and serves to every later job; r11 gives each the
-same contract as the IVF index (r10 verdict item 1):
+- Every artifact is built IF ABSENT through ``io.ensure_artifact``: an
+  immutable, fingerprint-addressed ``fp=`` directory under the warehouse
+  root, published by a staged build plus an atomic rename, so a
+  concurrent reader never sees a partial artifact and racing builders
+  converge.
+- The fingerprint is the algorithm version, the build parameters and the
+  corpus FOOTER stats (``io.corpus_token`` — no corpus scan in the probe
+  path); any of them moving addresses a new directory, so a stale
+  artifact is never served.
+- Each probe query must equal its in-session form bit for bit, enforced
+  by sharing the SAME DuckDB oracle verbatim (the storage round-trip
+  proof); ``tests/test_persisted_ann.py`` and
+  ``tests/test_persisted_artifacts.py`` build in one process and probe,
+  rebuild-free, from another.
+- Artifacts are PATH-addressed parquet datasets (partitioned by the
+  column probes join on) rather than catalog tables: the driver harness
+  builds in-memory-catalog sessions whose catalog dies with the JVM, and
+  the parquet layout is what outlives sessions. On a metastore-backed
+  cluster the same layout is one ``saveAsTable`` away.
 
-- build-IF-ABSENT behind ``io.ensure_dataset`` — now with ATOMIC
-  publication (fingerprint-addressed immutable ``fp=`` directory, staged
-  build + rename, so a concurrent reader never sees a partial artifact and
-  racing builders converge);
-- fingerprint = algorithm version + build params + corpus FOOTER stats
-  (``corpus_token`` — no corpus scan in the probe path);
-- a probe query whose result must equal the in-session form BIT-FOR-BIT,
-  enforced by sharing the SAME DuckDB oracle verbatim (the storage
-  round-trip proof, the x_ann_ivf_persisted pattern);
-- a cross-JVM rebuild-freedom test (tests/test_persisted_artifacts.py):
-  build in one subprocess, probe from another, assert zero file mtime
-  changes.
-
-Reference parity note: the reference engine (Flink gmall tutorial) has no
-standing model artifacts; this is the LLM-data-pipeline extension surface
-(SURVEY.md §2-extension). The Spark-first shape: artifacts are parquet
-datasets (band-partitioned where probes key on the partition column), not
-server-side state.
+Reference parity note: the reference engine has no vector index or
+standing model artifacts; this is part of the LLM-data-pipeline
+extension surface (SURVEY.md §2-extension).
 """
 
 from __future__ import annotations
@@ -34,14 +34,235 @@ import os
 
 from pyspark.sql import functions as F
 
-from ..io import read_parquet, scratch_dir
-from ..operators import dedup, text
+from ..io import ensure_artifact, read_parquet, scratch_dir
+from ..operators import dedup, similarity, text
 from . import QuerySpec
-from .llm import ORACLE_BPE_APPLY, ORACLE_LM_SCORE, _docs_par
-from .r10 import _sf_tag, _warehouse_root, corpus_token
+from .common import _docs_par, _embs_par, _QUERY_IDS
+from .dedupq import ORACLE_LSH_BAND_HEALTH
 from .streamq import ORACLE_STREAM_LSH_INCR
+from .textq import ORACLE_BPE_APPLY, ORACLE_LM_SCORE
+from .vectorq import ORACLE_ANN_IVF
 
-SPECS: list[QuerySpec] = []
+
+# Bump when the index ALGORITHM changes (score truncation grid, assignment
+# tiebreak, storage layout): the fingerprint folds this in, so old persisted
+# artifacts are rebuilt instead of silently served to new-code probes (a
+# count-only gate cannot see code changes).
+_IVF_INDEX_VERSION = 1
+
+
+def ensure_ivf_index(spark, sf_dir, n_centroids: int = 16) -> tuple[str, str]:
+    """Build-if-absent persisted IVF index via io.ensure_artifact; returns
+    (index_path, centroids_path) — the ``index`` and ``cents`` companion
+    datasets inside ONE immutable fingerprint-addressed artifact directory
+    ``ann_ivf_<tag>/fp=<version_params_corpusstats>/``.
+
+    Freshness gate: the fingerprint folds the algorithm version, the
+    build parameter, and the corpus FOOTER stats (corpus_token — no
+    full-corpus job in the probe path); any of the three moving addresses
+    a new directory, so stale artifacts are never served. Both datasets
+    live inside the one atomically-published directory, so a gate-passing
+    index cannot be missing its centroids, publication is build-to-staging
+    + atomic rename (concurrent ensure calls race safely, losers discard),
+    and a crashed build leaves only unaddressed staging debris. The index
+    dataset is partitioned by
+    ``list_id``: a probe that joins on the partition column prunes every
+    unprobed list at the scan, which is the entire 100 TB read-path win
+    (touch n_probe/n_centroids of the data).
+    """
+    e = _embs_par(spark, sf_dir)
+
+    def _build(staging: str) -> None:
+        cents_s = os.path.join(staging, "cents")
+        cents = similarity.ivf_centroids(e, n_centroids=n_centroids)
+        cents.write.parquet(cents_s)
+        # assign against the read-back centroids so the persisted artifacts
+        # are self-consistent even if frame and files ever diverge
+        (
+            similarity.ivf_assign(e, read_parquet(spark, cents_s))
+            .write.partitionBy("list_id")
+            .parquet(os.path.join(staging, "index"))
+        )
+
+    art = ensure_artifact(
+        "ann_ivf", sf_dir, "embeddings", f"v{_IVF_INDEX_VERSION}-c{n_centroids}", _build
+    )
+    return os.path.join(art, "index"), os.path.join(art, "cents")
+
+
+def _read_index(spark, index_p: str):
+    # the partition column comes back type-inferred (int) — restore the
+    # bigint the join/oracle contract expects
+    return read_parquet(spark, index_p).withColumn(
+        "list_id", F.col("list_id").cast("bigint")
+    )
+
+
+def q_ann_ivf_persisted(spark, sf_dir):
+    """IVF probe against the PERSISTED index (build-if-absent): identical
+    semantics and oracle as x_ann_ivf — the equality is the
+    storage-round-trip guarantee. The probe itself reads only the
+    partition-pruned lists: the broadcast probe join on the partition
+    column list_id."""
+    index_p, cents_p = ensure_ivf_index(spark, sf_dir)
+    q = _embs_par(spark, sf_dir).filter(F.col("vec_id").isin(*_QUERY_IDS))
+    return similarity.ivf_probe_topk(
+        _read_index(spark, index_p), read_parquet(spark, cents_p), q, k=10, n_probe=4
+    )
+
+
+def q_stream_ann_ivf_persisted(spark, sf_dir):
+    """ANN serving against the SHARED persisted index: a query stream
+    (vec_id % 100 == 1 — disjoint from s_stream_ann_probe's % 100 == 0
+    set) arrives in micro-batches; each checkpointed batch probes the
+    persisted datasets ensure_ivf_index guarantees exist. Per-query
+    results are batch-boundary-invariant, so the batch IVF oracle applies
+    with the same predicate."""
+    from ..sources import files
+    from ..streaming.drain import drain
+
+    index_p, cents_p = ensure_ivf_index(spark, sf_dir)
+    e = _embs_par(spark, sf_dir)
+    stream = files.replay(e.filter(F.col("vec_id") % 100 == 1))
+
+    def _probe(batch, _i: int):
+        s = batch.sparkSession
+        return similarity.ivf_probe_topk(
+            _read_index(s, index_p), read_parquet(s, cents_p), batch, k=10, n_probe=4
+        )
+
+    return drain(stream, _probe)
+
+
+ORACLE_STREAM_ANN_IVF_PERSISTED = ORACLE_ANN_IVF.replace(
+    f"WHERE q.vec_id IN {_QUERY_IDS}", "WHERE q.vec_id % 100 = 1"
+)
+assert ORACLE_STREAM_ANN_IVF_PERSISTED != ORACLE_ANN_IVF, "predicate splice failed"
+
+
+# ------------------------------------------------------ index health stats
+def q_ann_index_stats(spark, sf_dir):
+    """Index-health audit of the PERSISTED IVF index: per-list vector
+    count and milli fraction of the corpus. The operational dashboard a
+    100 TB index owner reads before trusting probe latency: one hot list
+    (frac → 1000) means the centroids collapsed and every probe scans
+    the corpus; many empty lists mean wasted partitions. Reads only the
+    index's list_id column — a partition-column-only scan, no vector
+    bytes move."""
+    index_p, _cents_p = ensure_ivf_index(spark, sf_dir)
+    idx = _read_index(spark, index_p)
+    per = idx.groupBy("list_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs"))
+    tot = per.agg(F.sum("n_vecs").cast("bigint").alias("n_tot"))
+    return (
+        per.crossJoin(F.broadcast(tot))
+        .select(
+            "list_id",
+            "n_vecs",
+            F.expr("n_vecs * 1000 div n_tot").cast("bigint").alias("frac_milli"),
+        )
+        .orderBy("list_id")
+    )
+
+
+ORACLE_ANN_INDEX_STATS = """
+WITH cents AS (
+  SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
+  FROM embeddings ORDER BY vec_id LIMIT 16
+),
+assigned AS (
+  SELECT vec_id, cid AS list_id FROM (
+    SELECT c.vec_id, cents.cid,
+           row_number() OVER (
+             PARTITION BY c.vec_id
+             ORDER BY floor((list_cosine_similarity(c.embedding::DOUBLE[], cents.cvec)) * 1000000) / 1000000 DESC,
+                      cents.cid) AS rk
+    FROM embeddings c CROSS JOIN cents
+  ) WHERE rk = 1
+),
+per AS (SELECT list_id, count(*)::BIGINT AS n_vecs FROM assigned GROUP BY list_id),
+t AS (SELECT sum(n_vecs)::BIGINT AS n_tot FROM per)
+SELECT list_id, n_vecs, (n_vecs * 1000 // n_tot)::BIGINT AS frac_milli
+FROM per CROSS JOIN t ORDER BY list_id
+"""
+
+
+# -------------------------------------------------- streaming index upsert
+def q_stream_ann_index_upsert(spark, sf_dir):
+    """INCREMENTAL INDEX MAINTENANCE — the production shape after the
+    persisted contract: the index is built once over the standing corpus
+    (vec_id % 10 != 7), then NEW vectors stream in and each checkpointed
+    micro-batch assigns them to the FIXED centroids and lands them as an
+    idempotent per-batch delta (overwrite of delta/ingest_batch=<id> —
+    replay-safe, the repo's exactly-once file-sink pattern). The final
+    index = base ∪ deltas; at 100 TB a compactor folds deltas into the
+    list_id partitions on a schedule, probes read both sides until then.
+
+    Centroids are intentionally NOT retrained on arrival (assignment must
+    be immutable for the delta to be append-only); the oracle therefore
+    trains on the base slice but assigns the FULL corpus. Result: the
+    per-list census of the final index — equal to a from-scratch batch
+    build with the same centroids, which is the correctness statement of
+    incremental maintenance."""
+    from ..sources import files
+    from ..streaming.drain import drain
+
+    e = _embs_par(spark, sf_dir)
+    base = e.filter(F.col("vec_id") % 10 != 7)
+    fresh = e.filter(F.col("vec_id") % 10 == 7)
+    tmp = scratch_dir("streamq_annupsert_")
+    cents_p = os.path.join(tmp, "cents")
+    base_p = os.path.join(tmp, "base")
+    delta_p = os.path.join(tmp, "delta")
+
+    similarity.ivf_centroids(base, n_centroids=16).write.parquet(cents_p)
+    cents = read_parquet(spark, cents_p)
+    (
+        similarity.ivf_assign(base, cents)
+        .write.partitionBy("list_id")
+        .parquet(base_p)
+    )
+
+    stream = files.replay(fresh)
+
+    def _ingest(batch, batch_id: int) -> None:
+        s = batch.sparkSession
+        out = similarity.ivf_assign(batch, read_parquet(s, cents_p))
+        out.write.mode("overwrite").partitionBy("list_id").parquet(
+            os.path.join(delta_p, f"ingest_batch={batch_id}")
+        )
+
+    drain(stream, _ingest)
+
+    # hive-style discovery reads both partition levels (ingest_batch, list_id)
+    full = read_parquet(spark, base_p).select("vec_id", "list_id").unionByName(
+        read_parquet(spark, delta_p).select("vec_id", "list_id")
+    )
+    return (
+        full.groupBy(F.col("list_id").cast("bigint").alias("list_id"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs"))
+        .orderBy("list_id")
+    )
+
+
+ORACLE_STREAM_ANN_INDEX_UPSERT = """
+WITH cents AS (
+  SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
+  FROM embeddings WHERE vec_id % 10 <> 7 ORDER BY vec_id LIMIT 16
+),
+assigned AS (
+  SELECT vec_id, cid AS list_id FROM (
+    SELECT c.vec_id, cents.cid,
+           row_number() OVER (
+             PARTITION BY c.vec_id
+             ORDER BY floor((list_cosine_similarity(c.embedding::DOUBLE[], cents.cvec)) * 1000000) / 1000000 DESC,
+                      cents.cid) AS rk
+    FROM embeddings c CROSS JOIN cents
+  ) WHERE rk = 1
+)
+SELECT list_id, count(*)::BIGINT AS n_vecs
+FROM assigned GROUP BY list_id ORDER BY list_id
+"""
+
 
 # Bump on algorithm change (shingle width, hash family, band geometry /
 # merge tiebreak / smoothing formula): forces a rebuild instead of serving
@@ -60,19 +281,13 @@ def ensure_lsh_store(spark, sf_dir) -> str:
     probed band's partition at the scan; at 100 TB each band partition is
     further bucketed by band_sig. Returns the store path inside the
     atomically-published fingerprint directory."""
-    from ..io import ensure_dataset
-
-    base = str(_warehouse_root() / f"lsh_store_{_sf_tag(sf_dir)}")
     d = _docs_par(spark, sf_dir)
 
     def _build(staging: str) -> None:
         dedup.doc_bands(dedup.shingles(d)).write.partitionBy("band").parquet(staging)
 
-    return ensure_dataset(
-        base,
-        f"v{_LSH_STORE_VERSION}-h16-r4-"
-        + corpus_token(sf_dir, "documents"),
-        _build,
+    return ensure_artifact(
+        "lsh_store", sf_dir, "documents", f"v{_LSH_STORE_VERSION}-h16-r4", _build
     )
 
 
@@ -151,6 +366,8 @@ def q_stream_lsh_persisted(spark, sf_dir):
 
 
 _LSH_FROM = "FROM documents d LEFT JOIN dup ON d.doc_id = dup.doc_id"
+
+
 ORACLE_STREAM_LSH_PERSISTED = ORACLE_STREAM_LSH_INCR.replace(
     _LSH_FROM, _LSH_FROM + "\nWHERE d.doc_id % 3 = 1"
 )
@@ -274,12 +491,6 @@ def q_lsh_store_compact(spark, sf_dir):
     return _band_health(_read_lsh_store(spark, compact_p))
 
 
-def _oracle_lsh_persisted_health() -> str:
-    from .r8 import ORACLE_LSH_BAND_HEALTH
-
-    return ORACLE_LSH_BAND_HEALTH
-
-
 # ----------------------------------------------------- persisted BPE vocab
 def ensure_bpe_vocab(spark, sf_dir, n_merges: int = 3) -> tuple[str, str]:
     """Build-if-absent persisted BPE tokenizer artifact: the ``merges``
@@ -290,9 +501,6 @@ def ensure_bpe_vocab(spark, sf_dir, n_merges: int = 3) -> tuple[str, str]:
     gate-passing vocab always matches its merges. Unlike ``_bpe_trained``,
     which trains inside each query, training here is a per-snapshot cost,
     paid once, never per JVM."""
-    from ..io import ensure_dataset
-
-    base = str(_warehouse_root() / f"bpe_vocab_{_sf_tag(sf_dir)}")
     d = _docs_par(spark, sf_dir)
 
     def _build(staging: str) -> None:
@@ -302,10 +510,8 @@ def ensure_bpe_vocab(spark, sf_dir, n_merges: int = 3) -> tuple[str, str]:
         ).coalesce(1).write.parquet(os.path.join(staging, "merges"))
         vocab.write.parquet(os.path.join(staging, "vocab"))
 
-    art = ensure_dataset(
-        base,
-        f"v{_BPE_VOCAB_VERSION}-m{n_merges}-" + corpus_token(sf_dir, "documents"),
-        _build,
+    art = ensure_artifact(
+        "bpe_vocab", sf_dir, "documents", f"v{_BPE_VOCAB_VERSION}-m{n_merges}", _build
     )
     return os.path.join(art, "merges"), os.path.join(art, "vocab")
 
@@ -331,9 +537,6 @@ def ensure_lm_model(spark, sf_dir) -> tuple[str, str]:
     snapshot and every quality-scoring job joins against it; vocabulary
     size V is derived from ``uni`` at score time (one broadcast scalar),
     so the artifact needs no sidecar."""
-    from ..io import ensure_dataset
-
-    base = str(_warehouse_root() / f"lm_model_{_sf_tag(sf_dir)}")
     d = _docs_par(spark, sf_dir)
 
     def _build(staging: str) -> None:
@@ -341,11 +544,7 @@ def ensure_lm_model(spark, sf_dir) -> tuple[str, str]:
         uni.write.parquet(os.path.join(staging, "uni"))
         bg.write.parquet(os.path.join(staging, "bg"))
 
-    art = ensure_dataset(
-        base,
-        f"v{_LM_MODEL_VERSION}-" + corpus_token(sf_dir, "documents"),
-        _build,
-    )
+    art = ensure_artifact("lm_model", sf_dir, "documents", f"v{_LM_MODEL_VERSION}", _build)
     return os.path.join(art, "uni"), os.path.join(art, "bg")
 
 
@@ -373,6 +572,7 @@ def q_lm_persisted(spark, sf_dir):
 _FP_INDEX_VERSION = 1
 _BENCH_GRAMS_VERSION = 1
 
+
 # The ingest stream carries candidate TRAINING documents: benchmark docs
 # (doc_id % 17 == 0, the repo's held-out stand-in) are not arrivals, they
 # are the protected set the gate screens AGAINST.
@@ -392,9 +592,6 @@ def ensure_fp_index(spark, sf_dir) -> str:
     against (operators/dedup.exact_dedup_groups is the in-session form).
     At 100 TB this is corpus-cardinality but narrow (two columns), and the
     probe is a fingerprint-keyed equi join."""
-    from ..io import ensure_dataset
-
-    base = str(_warehouse_root() / f"fp_index_{_sf_tag(sf_dir)}")
     d = _docs_par(spark, sf_dir)
 
     def _build(staging: str) -> None:
@@ -405,9 +602,7 @@ def ensure_fp_index(spark, sf_dir) -> str:
             .write.parquet(staging)
         )
 
-    return ensure_dataset(
-        base, f"v{_FP_INDEX_VERSION}-" + corpus_token(sf_dir, "documents"), _build
-    )
+    return ensure_artifact("fp_index", sf_dir, "documents", f"v{_FP_INDEX_VERSION}", _build)
 
 
 def ensure_bench_grams(spark, sf_dir) -> str:
@@ -415,9 +610,6 @@ def ensure_bench_grams(spark, sf_dir) -> str:
     13-token grams of the held-out docs (doc_id % 17 == 0) — the
     decontamination side of the admission gate. Heaps-law small relative
     to the corpus, so at 100 TB this is the broadcast side of the probe."""
-    from ..io import ensure_dataset
-
-    base = str(_warehouse_root() / f"bench_grams_{_sf_tag(sf_dir)}")
     d = _docs_par(spark, sf_dir)
 
     def _build(staging: str) -> None:
@@ -428,10 +620,8 @@ def ensure_bench_grams(spark, sf_dir) -> str:
             .write.parquet(staging)
         )
 
-    return ensure_dataset(
-        base,
-        f"v{_BENCH_GRAMS_VERSION}-k13-" + corpus_token(sf_dir, "documents"),
-        _build,
+    return ensure_artifact(
+        "bench_grams", sf_dir, "documents", f"v{_BENCH_GRAMS_VERSION}-k13", _build
     )
 
 
@@ -505,7 +695,7 @@ def q_ingest_gate(spark, sf_dir):
     contract exists for: should this candidate training document enter the
     corpus? Every piece of admission state is a persisted artifact (the
     exact-dedup fingerprint index, the LSH band store, the benchmark
-    13-gram set — all build-if-absent behind atomic ensure_dataset), so
+    13-gram set — all build-if-absent behind io.ensure_artifact), so
     the gate itself is pure maps + keyed joins: no corpus scan, no
     training, no state owned by the session. Scale shape: fp probe is an
     equi join on a 128-bit key, the band probe prunes to the arrival's
@@ -532,8 +722,8 @@ def q_stream_ingest_gate(spark, sf_dir):
 
 
 def _oracle_ingest_gate() -> str:
-    from .llm import _minhash_band_ctes, _shingles_cte
-    from .r8 import _GRAM13, _TOKS_NORM
+    from .common import _minhash_band_ctes, _shingles_cte
+    from .common import _GRAM13, _TOKS
 
     return f"""
 WITH {_shingles_cte()},{_minhash_band_ctes()},
@@ -547,7 +737,7 @@ near AS (
   SELECT DISTINCT a.doc_id FROM banded a JOIN banded b
     ON a.band = b.band AND a.band_sig = b.band_sig AND b.doc_id < a.doc_id
 ),
-t13 AS (SELECT doc_id, {_TOKS_NORM} AS toks FROM documents),
+t13 AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 g13 AS (
   SELECT DISTINCT doc_id, {_GRAM13} AS gram
   FROM t13, unnest(range(1, len(toks) - 11)) AS u(i)
@@ -589,8 +779,6 @@ def q_ann_index_compact(spark, sf_dir):
     runs per-partition-group on a schedule, and probes flip to the
     compacted dataset atomically (the ensure_dataset staging+rename
     pattern)."""
-    from ..operators import similarity
-    from .llm import _embs_par
 
     e = _embs_par(spark, sf_dir)
     base = e.filter(F.col("vec_id") % 10 != 7)
@@ -629,12 +817,32 @@ def q_ann_index_compact(spark, sf_dir):
 
 
 def _oracle_index_compact() -> str:
-    from .r10 import ORACLE_STREAM_ANN_INDEX_UPSERT
-
     return ORACLE_STREAM_ANN_INDEX_UPSERT
 
 
-SPECS += [
+SPECS = [
+    QuerySpec(
+        "x_ann_ivf_persisted", q_ann_ivf_persisted, ORACLE_ANN_IVF,
+        doc="IVF probe against a persisted list_id-partitioned catalog index (build-if-absent, cross-session)",
+        tags=("llm", "similarity", "index"),
+    ),
+    QuerySpec(
+        "s_stream_ann_ivf_persisted", q_stream_ann_ivf_persisted,
+        ORACLE_STREAM_ANN_IVF_PERSISTED,
+        doc="streaming ANN serving against the shared persisted catalog index (disjoint query set)",
+        tags=("llm", "similarity", "index", "streaming", "T11"),
+    ),
+    QuerySpec(
+        "x_ann_index_stats", q_ann_index_stats, ORACLE_ANN_INDEX_STATS,
+        doc="persisted-IVF index health: per-list census + milli fraction from a partition-column-only scan",
+        tags=("llm", "similarity", "index"),
+    ),
+    QuerySpec(
+        "s_stream_ann_index_upsert", q_stream_ann_index_upsert,
+        ORACLE_STREAM_ANN_INDEX_UPSERT,
+        doc="incremental index maintenance: streamed vectors assigned to fixed centroids, idempotent per-batch deltas, final census equals from-scratch build",
+        tags=("llm", "similarity", "index", "streaming", "T11"),
+    ),
     QuerySpec(
         "x_ann_index_compact", q_ann_index_compact, _oracle_index_compact(),
         doc="index compaction: base ∪ accumulated deltas rewritten into one consolidated list_id-partitioned dataset; census equals from-scratch build (same oracle as the upsert twin)",
@@ -653,7 +861,7 @@ SPECS += [
     ),
     QuerySpec(
         "x_lsh_persisted_health", q_lsh_persisted_health,
-        _oracle_lsh_persisted_health(),
+        ORACLE_LSH_BAND_HEALTH,
         doc="LSH band-health dashboard read from the persisted signature store (two hash aggregates, corpus never touched); same oracle as x_lsh_band_health",
         tags=("llm", "dedup", "index"),
     ),
@@ -669,13 +877,13 @@ SPECS += [
     ),
     QuerySpec(
         "s_stream_lsh_store_upsert", q_stream_lsh_store_upsert,
-        _oracle_lsh_persisted_health(),
+        ORACLE_LSH_BAND_HEALTH,
         doc="incremental LSH-store maintenance: streamed docs land idempotent band-partitioned signature deltas; census of base ∪ deltas equals a from-scratch full-corpus build (x_lsh_band_health oracle verbatim)",
         tags=("llm", "dedup", "index", "streaming", "T11"),
     ),
     QuerySpec(
         "x_lsh_store_compact", q_lsh_store_compact,
-        _oracle_lsh_persisted_health(),
+        ORACLE_LSH_BAND_HEALTH,
         doc="LSH-store compaction: base ∪ accumulated ingest deltas rewritten into one consolidated band-partitioned dataset; census equals from-scratch build (x_lsh_band_health oracle verbatim)",
         tags=("llm", "dedup", "index"),
     ),

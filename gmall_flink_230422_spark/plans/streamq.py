@@ -13,7 +13,7 @@ Mechanics per query:
    (``operators/windows.py``) on the streaming DataFrame;
 3. run it to completion through ``streaming.drain`` (``foreachBatch`` +
    ``Trigger.AvailableNow``, process-everything-then-stop) — the one
-   micro-batch loop every twin here, in r10.py and in r11.py shares — and
+   micro-batch loop every twin here and in artifactq.py shares — and
    read the landed output back (the final image in complete mode).
 
 Because complete mode emits the full aggregate state and AvailableNow
@@ -44,13 +44,21 @@ from ..streaming import stateful as sstate
 from ..streaming.drain import drain
 from . import QuerySpec
 from .analytics import (
+    ORACLE_BENFORD,
+    ORACLE_BURST_HOURS,
     ORACLE_CUMULATE,
+    ORACLE_HOLT_WINTERS,
     ORACLE_MV_MERGE,
+    ORACLE_NEW_VS_RETURNING,
+    ORACLE_OHLC,
+    ORACLE_SEASONAL_INDEX,
     ORACLE_SESSION,
     ORACLE_SLIDING,
-    SESSION_GAP_S,
-    _oracle_hll,
+    ORACLE_WELCH_T2,
+    oracle_hll,
+    user_sessions,
 )
+from .dedupq import ORACLE_CONTAM_13GRAM, ORACLE_LSH_BAND_HEALTH
 from .gmall import (
     BOUNCE_GAP_S,
     ORACLE_DAILY_UV,
@@ -59,6 +67,8 @@ from .gmall import (
     ORACLE_UNION_PREAGG,
     ORACLE_UPSERT,
 )
+from .textq import ORACLE_CHAR_CLASS_MIX, ORACLE_ENTROPY_FILTER, ORACLE_SAFETY_SCREEN
+from .vectorq import ORACLE_EMBEDDING_COV
 
 
 def q_stream_tumble_keyed(spark, sf_dir):
@@ -284,23 +294,7 @@ def q_stream_session_window(spark, sf_dir):
     on each micro-batch, so after AvailableNow drains the replay the final
     image equals the batch e_session_window result exactly — same oracle."""
     ev = files.replay(load_table(spark, sf_dir, "events"))
-    out = (
-        ev.groupBy(
-            F.session_window("ts", f"{SESSION_GAP_S} seconds").alias("w"), "user_id"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("value_sum"),
-        )
-        .select(
-            F.col("user_id"),
-            F.col("w.start").cast("long").alias("session_start"),
-            F.col("w.end").cast("long").alias("session_end"),
-            "n_events",
-            "value_sum",
-        )
-    )
-    return drain(out, mode="complete")
+    return drain(user_sessions(ev), mode="complete")
 
 
 def q_stream_upsert_latest(spark, sf_dir):
@@ -578,12 +572,12 @@ def q_stream_dim_incremental(spark, sf_dir):
     generation-dependent state the batch twin s4_dim_app_sync_incremental
     proves: updated rows lose user_name, untouched rows keep it."""
     from ..apps import _dim_sync_batch
-    from .dwd import _union_envelope, _user_info_branches
+    from .dwd import union_envelope, user_info_branches
 
     base = os.path.join(scratch_dir("streamq_s4i_"), "dim")
     c = load_table(spark, sf_dir, "customer")
-    ins, upd = _user_info_branches(c)
-    cdc = _union_envelope([ins, upd], via_json=True)
+    ins, upd = user_info_branches(c)
+    cdc = union_envelope([ins, upd], via_json=True)
     chunked = cdc.withColumn(
         "_chunk", F.when(F.col("type") == "insert", 0).otherwise(1)
     )
@@ -694,7 +688,7 @@ def q_stream_lsh_incremental(spark, sf_dir):
 
 
 def _oracle_lsh_incremental() -> str:
-    from .llm import _minhash_band_ctes, _shingles_cte
+    from .common import _minhash_band_ctes, _shingles_cte
 
     return f"""
 WITH {_shingles_cte()},{_minhash_band_ctes()},
@@ -798,7 +792,7 @@ SPECS = (
         tags=("T1", "streaming", "window"),
     ),
     QuerySpec(
-        "s_stream_hll_distinct", q_stream_hll_distinct, _oracle_hll(),
+        "s_stream_hll_distinct", q_stream_hll_distinct, oracle_hll(),
         doc="streaming HLL: per-batch registers, idempotent landing, read-side max-merge",
         tags=("T11", "T1", "streaming", "sketch"),
     ),
@@ -949,7 +943,7 @@ def q_stream_order_preprocess(spark, sf_dir):
     which is also the only viable backend at production state sizes."""
     import datetime as dt
 
-    from .dwd import _base_dic, _trade_envelope
+    from .dwd import base_dic, trade_envelope
 
     _provider_key = "spark.sql.streaming.stateStore.providerClass"
     _old_provider = spark.conf.get(_provider_key, None)
@@ -957,7 +951,7 @@ def q_stream_order_preprocess(spark, sf_dir):
         _provider_key,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    env = _trade_envelope(spark, sf_dir).select("table", "type", "data", "old")
+    env = trade_envelope(spark, sf_dir).select("table", "type", "data", "old")
     d = F.col("data")
     ok = (
         F.when(F.col("table") == "order_detail", d["order_id"])
@@ -1040,7 +1034,7 @@ def q_stream_order_preprocess(spark, sf_dir):
         left_ts="od_ts", right_ts="oc_ts", watermark=None,
         lower="0 seconds", upper="0 seconds", how="left_outer",
     )
-    dic = _base_dic(spark, sf_dir).select(
+    dic = base_dic(spark, sf_dir).select(
         F.col("dic_code").alias("_src_code"),
         F.col("dic_name").alias("source_type_name"),
     )
@@ -1098,7 +1092,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
     because incoming docs never pair with each other (candidates are
     strictly incoming x base). Oracle: the batch twin's SQL VERBATIM."""
     from ..operators import dedup
-    from .llm import _docs_par
+    from .common import _docs_par
 
     d = _docs_par(spark, sf_dir)
     inc_pred = F.col("doc_id") % 5 == 0
@@ -1178,7 +1172,7 @@ def q_stream_dedup_incremental(spark, sf_dir):
     return drain(stream, _probe)
 
 
-from .llm import ORACLE_DEDUP_INCREMENTAL  # noqa: E402
+from .dedupq import ORACLE_DEDUP_INCREMENTAL  # noqa: E402
 
 SPECS = SPECS + (
     QuerySpec(
@@ -1202,7 +1196,7 @@ def q_stream_ann_probe(spark, sf_dir):
     boundaries cannot change results and the batch IVF oracle applies with
     the same query predicate."""
     from ..operators import similarity
-    from .llm import _embs_par
+    from .common import _embs_par
 
     e = _embs_par(spark, sf_dir)
     tmp = scratch_dir("streamq_annprobe_")
@@ -1230,7 +1224,8 @@ def q_stream_ann_probe(spark, sf_dir):
     return drain(stream, _probe)
 
 
-from .llm import ORACLE_ANN_IVF, _QUERY_IDS  # noqa: E402
+from .common import _QUERY_IDS  # noqa: E402
+from .vectorq import ORACLE_ANN_IVF  # noqa: E402
 
 ORACLE_STREAM_ANN_PROBE = ORACLE_ANN_IVF.replace(
     f"WHERE q.vec_id IN {_QUERY_IDS}", "WHERE q.vec_id % 100 = 0"
@@ -1363,7 +1358,7 @@ def q_stream_drift(spark, sf_dir):
     return scored.orderBy(F.col("drift_num").desc(), F.col("dim")).limit(8)
 
 
-from .llm import ORACLE_EMBEDDING_DRIFT  # noqa: E402
+from .vectorq import ORACLE_EMBEDDING_DRIFT  # noqa: E402
 
 SPECS = SPECS + (
     QuerySpec(
@@ -1517,7 +1512,7 @@ SPECS = SPECS + (
 )
 
 
-# ---------------------------------------------------------------- r5: windowed top-k at window close
+# ---------------------------------------------------------------- windowed top-k at window close
 def q_stream_window_topk(spark, sf_dir):
     """Hourly TOP-3 event types, ranked AT WINDOW CLOSE — the Flink
     "HotItems" exercise (keyed window agg -> ProcessWindowFunction sort)
@@ -1589,7 +1584,7 @@ SPECS = SPECS + (
 )
 
 
-# ---------------------------------------------------------------- r5: online CUSUM drift monitor
+# ---------------------------------------------------------------- online CUSUM drift monitor
 def q_stream_cusum(spark, sf_dir):
     """Online CUSUM (Page's test) through streaming state: per event type,
     the daily drift statistic against a baseline k (the type's mean daily
@@ -1677,7 +1672,7 @@ SPECS = SPECS + (
 )
 
 
-# ---------------------------------------------------------------- r5: streaming covariance monitor
+# ---------------------------------------------------------------- streaming covariance monitor
 def q_stream_embedding_cov(spark, sf_dir):
     """Streaming covariance monitor: each micro-batch of the replayed
     embedding stream reduces to its own bounded dim*(dim+1)/2-row
@@ -1716,24 +1711,15 @@ def q_stream_embedding_cov(spark, sf_dir):
     )
 
 
-def _oracle_stream_cov() -> str:
-    """Batch-equal by construction, so the oracle is x_embedding_cov's
-    single-pass covariance SQL VERBATIM."""
-    from .llm import ORACLE_EMBEDDING_COV
-
-    return ORACLE_EMBEDDING_COV
-
-
 SPECS = SPECS + (
     QuerySpec(
-        "s_stream_embedding_cov", q_stream_embedding_cov, _oracle_stream_cov(),
+        "s_stream_embedding_cov", q_stream_embedding_cov, ORACLE_EMBEDDING_COV,
         doc="streaming covariance monitor: per-batch partial grams, exact additive merge == single-pass batch matrix",
         tags=("T11", "streaming", "similarity", "stats"),
     ),
 )
 
 
-# ================================================================ round 6
 def q_stream_benford(spark, sf_dir):
     """Benford first-digit audit through the STREAMING engine: the digit
     extraction + (event_type, digit) count runs as a complete-mode
@@ -1753,15 +1739,9 @@ def q_stream_benford(spark, sf_dir):
     return benford_from_counts(drain(counts, mode="complete"))
 
 
-def _oracle_stream_benford() -> str:
-    from .analytics import ORACLE_BENFORD
-
-    return ORACLE_BENFORD
-
-
 SPECS = SPECS + (
     QuerySpec(
-        "s_stream_benford", q_stream_benford, _oracle_stream_benford(),
+        "s_stream_benford", q_stream_benford, ORACLE_BENFORD,
         doc="streaming Benford audit: complete-mode digit counts drained to an image, batch expectation tail shared verbatim",
         tags=("T11", "streaming", "stats"),
     ),
@@ -1773,14 +1753,14 @@ def q_stream_safety_screen(spark, sf_dir):
     -> broadcast term join -> per-(doc, category) hit count runs as a
     complete-mode aggregate over a chunked documents replay; the category
     rollup (rates + '__any__' union row) is the exact batch tail
-    (llm.safety_tail — shared code). Complete mode + AvailableNow make
+    (textq.safety_tail — shared code). Complete mode + AvailableNow make
     the drained per-doc image equal to the batch counts by construction,
     so x_safety_screen's oracle applies VERBATIM; the green row proves
     the moderation pre-filter works incrementally (the deployment shape:
     screen documents as they arrive, not in a nightly batch)."""
     from ..functions import tokenize
     from ..operators import dedup
-    from .llm import safety_tail, safety_terms_df
+    from .textq import safety_tail, safety_terms_df
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     stream = files.replay(d, order="doc_id")
@@ -1802,15 +1782,9 @@ def q_stream_safety_screen(spark, sf_dir):
     return safety_tail(image, n_docs)
 
 
-def _oracle_stream_safety() -> str:
-    from .llm import ORACLE_SAFETY_SCREEN
-
-    return ORACLE_SAFETY_SCREEN
-
-
 SPECS = SPECS + (
     QuerySpec(
-        "s_stream_safety_screen", q_stream_safety_screen, _oracle_stream_safety(),
+        "s_stream_safety_screen", q_stream_safety_screen, ORACLE_SAFETY_SCREEN,
         doc="streaming blocklist screen: complete-mode per-doc hit counts drained to an image, batch rollup shared verbatim",
         tags=("T11", "streaming", "filter", "safety"),
     ),
@@ -1863,15 +1837,9 @@ def q_stream_holt(spark, sf_dir):
     )
 
 
-def _oracle_stream_holt() -> str:
-    from .analytics import ORACLE_HOLT_WINTERS
-
-    return ORACLE_HOLT_WINTERS
-
-
 SPECS = SPECS + (
     QuerySpec(
-        "s_stream_holt", q_stream_holt, _oracle_stream_holt(),
+        "s_stream_holt", q_stream_holt, ORACLE_HOLT_WINTERS,
         doc="online Holt level+trend smoothing: 5-BIGINT GroupState per key, day-rollover recursion == batch recursive CTE",
         tags=("T2", "T11", "streaming", "timeseries"),
     ),
@@ -1882,14 +1850,14 @@ def q_stream_entropy_filter(spark, sf_dir):
     """The unigram-entropy repetitiveness filter through the STREAMING
     engine: per-(doc, token) counts run as a complete-mode aggregate
     over the chunked documents replay; the surprisal/entropy rollup and
-    top-20 selection are the exact batch tail (llm.entropy_tail — shared
+    top-20 selection are the exact batch tail (textq.entropy_tail — shared
     code). Complete mode + AvailableNow make the drained count image
     equal the batch counts by construction, so x_entropy_filter's oracle
     applies VERBATIM; the green row adds proof the quality screen works
     incrementally over arriving documents."""
     from ..functions import tokenize
     from ..operators import dedup
-    from .llm import entropy_tail
+    from .textq import entropy_tail
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     stream = files.replay(d, order="doc_id")
@@ -1906,22 +1874,16 @@ def q_stream_entropy_filter(spark, sf_dir):
     return entropy_tail(drain(tc, mode="complete"))
 
 
-def _oracle_stream_entropy() -> str:
-    from .llm import ORACLE_ENTROPY_FILTER
-
-    return ORACLE_ENTROPY_FILTER
-
-
 SPECS = SPECS + (
     QuerySpec(
-        "s_stream_entropy_filter", q_stream_entropy_filter, _oracle_stream_entropy(),
+        "s_stream_entropy_filter", q_stream_entropy_filter, ORACLE_ENTROPY_FILTER,
         doc="streaming entropy screen: complete-mode (doc, token) counts drained to an image, batch rollup shared verbatim",
         tags=("T11", "streaming", "quality"),
     ),
 )
 
 
-# ---------------------------------------------------------------- r7: streaming bottom-k sample
+# ---------------------------------------------------------------- streaming bottom-k sample
 def q_stream_bottomk(spark, sf_dir):
     """Streaming uniform sample via PER-BUCKET HASH MINIMA (the k-partition
     bottom-k sketch): each event hashes to one of 32 buckets with a salted
@@ -1996,7 +1958,7 @@ SPECS = SPECS + (
 )
 
 
-# ---------------------------------------------------------------- r7: streaming Welch A/B monitor
+# ---------------------------------------------------------------- streaming Welch A/B monitor
 def q_stream_welch_t2(spark, sf_dir):
     """Streaming A/B significance monitor: per micro-batch, the 'click'
     and 'view' populations reduce to their exact BIGINT cent MOMENTS
@@ -2051,20 +2013,14 @@ def q_stream_welch_t2(spark, sf_dir):
     )
 
 
-def _oracle_stream_welch() -> str:
-    from .analytics import ORACLE_WELCH_T2
-
-    return ORACLE_WELCH_T2
-
-
 SPECS = SPECS + (
-    QuerySpec("s_stream_welch_t2", q_stream_welch_t2, _oracle_stream_welch(),
+    QuerySpec("s_stream_welch_t2", q_stream_welch_t2, ORACLE_WELCH_T2,
               doc="streaming Welch t-squared from additive per-batch BIGINT moment grids; shares e_welch_t2's oracle verbatim",
               tags=("stream", "stats")),
 )
 
 
-# ---------------------------------------------------------------- r7: streaming OHLC bars
+# ---------------------------------------------------------------- streaming OHLC bars
 def q_stream_ohlc(spark, sf_dir):
     """Daily OHLC bars maintained INCREMENTALLY: each micro-batch lands its
     per-day partial bars — n, min/max cents, and the arg-extremes as
@@ -2111,20 +2067,14 @@ def q_stream_ohlc(spark, sf_dir):
     ).orderBy("dt")
 
 
-def _oracle_stream_ohlc() -> str:
-    from .analytics import ORACLE_OHLC
-
-    return ORACLE_OHLC
-
-
 SPECS = SPECS + (
-    QuerySpec("s_stream_ohlc", q_stream_ohlc, _oracle_stream_ohlc(),
+    QuerySpec("s_stream_ohlc", q_stream_ohlc, ORACLE_OHLC,
               doc="streaming daily OHLC via mergeable per-batch partial bars (arg-extreme struct keys); shares e_ohlc's oracle verbatim",
               tags=("stream", "timeseries")),
 )
 
 
-# ---------------------------------------------------------------- r7: streaming new-user split
+# ---------------------------------------------------------------- streaming new-user split
 def q_stream_new_users(spark, sf_dir):
     """The new-vs-returning daily split maintained INCREMENTALLY: each
     micro-batch lands its distinct (user, day) pairs AND its per-user min
@@ -2158,14 +2108,8 @@ def q_stream_new_users(spark, sf_dir):
     )
 
 
-def _oracle_stream_new_users() -> str:
-    from .analytics import ORACLE_NEW_VS_RETURNING
-
-    return ORACLE_NEW_VS_RETURNING
-
-
 SPECS = SPECS + (
-    QuerySpec("s_stream_new_users", q_stream_new_users, _oracle_stream_new_users(),
+    QuerySpec("s_stream_new_users", q_stream_new_users, ORACLE_NEW_VS_RETURNING,
               doc="incremental new-vs-returning split from an idempotent landed (user, day) index; shares e_new_vs_returning's oracle verbatim",
               tags=("stream", "analytics")),
 )
@@ -2289,21 +2233,15 @@ def q_stream_burst(spark, sf_dir):
     )
 
 
-def _oracle_stream_burst() -> str:
-    from .r8 import ORACLE_BURST_HOURS
-
-    return ORACLE_BURST_HOURS
-
-
 SPECS = SPECS + (
-    QuerySpec("s_stream_burst", q_stream_burst, _oracle_stream_burst(),
+    QuerySpec("s_stream_burst", q_stream_burst, ORACLE_BURST_HOURS,
               doc="incremental hourly-count grids merged by sum, then the >=2.5x-average burst filter; shares e_burst_hours' oracle verbatim",
               tags=("stream", "stats")),
 )
 
 
-# ===================================================================== r9:
-# streaming twins of the r8 batch heavies with natural incremental forms —
+# ----------------------------------------------------------------------
+# streaming twins of batch heavies with natural incremental forms —
 # 13-gram decontamination (persisted gram index probed per batch, the
 # s_stream_dedup_incremental pattern) and LSH band health (mergeable
 # per-batch bucket grids, the s_stream_quantile pattern).
@@ -2323,15 +2261,14 @@ def q_stream_contam_13gram(spark, sf_dir):
     ORACLE_CONTAM_13GRAM VERBATIM. Per-batch state: the incoming docs'
     gram lists; the index side stays parquet-pruned to the join.
 
-    The gram index is a STANDING artifact (io.ensure_dataset under the
+    The gram index is a STANDING artifact (io.ensure_artifact under the
     warehouse root, fingerprinted by the documents table's footer stats)
     — built on first touch per sf, reused by every later invocation and
     session, exactly like the persisted IVF index. A decontamination
     service does not re-shingle its train corpus per probe."""
-    from ..io import ensure_dataset
+    from ..io import ensure_artifact
     from ..operators import dedup
-    from .llm import _docs_par
-    from .r10 import _sf_tag, _warehouse_root, corpus_token
+    from .common import _docs_par
 
     d = _docs_par(spark, sf_dir)
 
@@ -2344,9 +2281,11 @@ def q_stream_contam_13gram(spark, sf_dir):
     # immutable dir, see io.ensure_dataset).
     _GRAM_INDEX_VERSION = 1
     train = d.filter(F.col("doc_id") % 17 != 0)
-    idx_dir = ensure_dataset(
-        str(_warehouse_root() / f"contam13_{_sf_tag(sf_dir)}"),
-        f"v{_GRAM_INDEX_VERSION}-k13-{corpus_token(sf_dir, 'documents')}",
+    idx_dir = ensure_artifact(
+        "contam13",
+        sf_dir,
+        "documents",
+        f"v{_GRAM_INDEX_VERSION}-k13",
         lambda p: dedup.shingles(train, k=13)
         .select("shingle")
         .distinct()
@@ -2391,7 +2330,7 @@ def q_stream_band_health(spark, sf_dir):
     grid; the merged table is the same band-signature index the batch
     query reads. Oracle: ORACLE_LSH_BAND_HEALTH VERBATIM."""
     from ..operators import dedup
-    from .llm import _docs_par
+    from .common import _docs_par
 
     d = _docs_par(spark, sf_dir)
     stream = files.replay(d)
@@ -2421,23 +2360,11 @@ def q_stream_band_health(spark, sf_dir):
     )
 
 
-def _oracle_stream_contam_13gram() -> str:
-    from .r8 import ORACLE_CONTAM_13GRAM
-
-    return ORACLE_CONTAM_13GRAM
-
-
-def _oracle_stream_band_health() -> str:
-    from .r8 import ORACLE_LSH_BAND_HEALTH
-
-    return ORACLE_LSH_BAND_HEALTH
-
-
 SPECS = SPECS + (
-    QuerySpec("s_stream_contam_13gram", q_stream_contam_13gram, _oracle_stream_contam_13gram(),
+    QuerySpec("s_stream_contam_13gram", q_stream_contam_13gram, ORACLE_CONTAM_13GRAM,
               doc="streaming 13-gram decontamination: persisted train-gram index probed per micro-batch; batch oracle verbatim",
               tags=("stream", "llm", "dedup")),
-    QuerySpec("s_stream_band_health", q_stream_band_health, _oracle_stream_band_health(),
+    QuerySpec("s_stream_band_health", q_stream_band_health, ORACLE_LSH_BAND_HEALTH,
               doc="streaming LSH band health: per-batch bucket grids merged by sum, quadratic term computed from sizes; batch oracle verbatim",
               tags=("stream", "llm", "dedup")),
 )
@@ -2454,7 +2381,7 @@ def q_stream_char_class(spark, sf_dir):
     micro-batch boundaries. The live "did the feed turn into markup?"
     screen as docs ingest; per-batch state is |sources| rows. Oracle:
     ORACLE_CHAR_CLASS_MIX VERBATIM."""
-    from .llm import _docs_par
+    from .common import _docs_par
 
     d = _docs_par(spark, sf_dir)
     stream = files.replay(d)
@@ -2505,14 +2432,8 @@ def q_stream_char_class(spark, sf_dir):
     )
 
 
-def _oracle_stream_char_class() -> str:
-    from .r9 import ORACLE_CHAR_CLASS_MIX
-
-    return ORACLE_CHAR_CLASS_MIX
-
-
 SPECS = SPECS + (
-    QuerySpec("s_stream_char_class", q_stream_char_class, _oracle_stream_char_class(),
+    QuerySpec("s_stream_char_class", q_stream_char_class, ORACLE_CHAR_CLASS_MIX,
               doc="streaming per-source char-class composition: additive count grids merged by sum; batch oracle verbatim",
               tags=("stream", "llm", "text")),
 )
@@ -2537,7 +2458,7 @@ def q_stream_seasonal_index(spark, sf_dir):
         .groupBy("event_type", "day")
         .agg(F.sum("c").cast("bigint").alias("c"))
         .withColumn(
-            # tz-independent dow (r9 advice; keep identical to e_seasonal_index)
+            # tz-independent dow (keep identical to e_seasonal_index)
             "dow",
             F.expr("(datediff(day, date'1970-01-01') + 4) % 7"),
         )
@@ -2565,14 +2486,8 @@ def q_stream_seasonal_index(spark, sf_dir):
     )
 
 
-def _oracle_stream_seasonal_index() -> str:
-    from .r9 import ORACLE_SEASONAL_INDEX
-
-    return ORACLE_SEASONAL_INDEX
-
-
 SPECS = SPECS + (
-    QuerySpec("s_stream_seasonal_index", q_stream_seasonal_index, _oracle_stream_seasonal_index(),
+    QuerySpec("s_stream_seasonal_index", q_stream_seasonal_index, ORACLE_SEASONAL_INDEX,
               doc="streaming dow seasonal index: additive per-batch cent grids merged by sum; batch oracle verbatim",
               tags=("stream", "stats", "timeseries")),
 )
@@ -2589,7 +2504,7 @@ def q_stream_shard_skew(spark, sf_dir):
     x_shard_skew's VERBATIM."""
     from ..functions.hashing import portable_hash64
     from ..operators import dedup as _dedup
-    from .llm import _docs_par
+    from .common import _docs_par
 
     d = _docs_par(spark, sf_dir)
     stream = files.replay(d)
@@ -2633,9 +2548,9 @@ def q_stream_shard_skew(spark, sf_dir):
 
 
 def _oracle_stream_shard_skew() -> str:
-    from .r9 import _oracle_shard_skew
+    from .curationq import oracle_shard_skew
 
-    return _oracle_shard_skew()
+    return oracle_shard_skew()
 
 
 SPECS = SPECS + (

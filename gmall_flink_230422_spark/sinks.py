@@ -113,63 +113,6 @@ def fan_out_sink(
     )
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-files compaction: rewrite a parquet directory into
-    ``ceil(total_bytes / target)`` balanced files and atomically swap it in.
-    Streaming micro-batch sinks accrete one-file-per-batch fragments; at
-    100 TB the resulting listing/open overhead dominates scans, and the
-    periodic compactor (this) is the standard fix.
-
-    The rewrite is one round-robin repartition (no key assumption, even
-    output sizes); the swap is rename-based (write to ``path.compact``,
-    move the old dir aside, move the new one in, drop the old). Readers
-    never observe a *half-written* directory, but the two-rename swap is
-    NOT atomic: there is a window between the renames where ``path`` does
-    not exist, and a crash inside it strands the data at ``path + ".old"``.
-    Mitigations here: stale ``.compact``/``.old`` dirs from a prior failed
-    run are reclaimed up front (restoring ``.old`` to ``path`` if ``path``
-    is gone), and a failed swap rolls the original directory back. On a
-    real deployment use a table format with a manifest commit (Delta /
-    Iceberg ``RewriteDataFiles``) for a truly atomic swap. Returns the new
-    file count.
-    """
-    import shutil
-
-    tmp = path.rstrip("/") + ".compact"
-    old = path.rstrip("/") + ".old"
-    # Crash recovery + pre-clean: a prior run may have died mid-swap
-    # (data stranded at .old) or mid-write (half-built .compact); either
-    # leftover would also make os.rename below raise (dest exists).
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-    for stale in (tmp, old):
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
-
-    df = read_parquet(spark, path)
-    files = df.inputFiles()
-    total = sum(
-        os.path.getsize(f[len("file:") :] if f.startswith("file:") else f)
-        for f in files
-    )
-    n_files = max(1, -(-total // target_file_bytes))
-    if n_files >= len(files):
-        return len(files)  # already compact enough
-    df.repartition(int(n_files)).write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    try:
-        os.rename(tmp, path)
-    except BaseException:
-        os.rename(old, path)  # roll back so readers keep the original data
-        raise
-    shutil.rmtree(old)
-    return int(n_files)
-
-
 def jdbc_sink(
     df: DataFrame,
     url: str,
@@ -193,57 +136,3 @@ def jdbc_sink(
         .option("batchsize", str(batch_size))
         .jdbc(url, table, properties=properties or {})
     )
-
-
-def snapshot_write(df: DataFrame, table_dir: str) -> int:
-    """Versioned snapshot write (poor-man's table format): each call lands
-    a new immutable ``v=N`` directory under ``table_dir`` and then commits
-    it by atomically renaming a manifest tempfile over ``_latest`` — the
-    Iceberg/Delta commit protocol reduced to its load-bearing move (data
-    first, single-file pointer swap last, so readers either see the old
-    version or the new one, never a partial write). Returns the new
-    version number.
-
-    Concurrency (ADVICE r3): the version number is CLAIMED atomically —
-    ``os.mkdir(v=N)`` either creates the directory or raises
-    FileExistsError, in which case the writer retries with N+1 — so two
-    concurrent writers can never both land in the same ``v=N`` and
-    silently clobber one commit. Last pointer swap still wins the
-    ``_latest`` race, which is the Iceberg/Delta last-committer-wins
-    semantic, but both versions' data survive."""
-    import json
-    import os
-
-    os.makedirs(table_dir, exist_ok=True)
-    versions = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    ]
-    v = max(versions, default=0) + 1
-    while True:
-        try:
-            os.mkdir(os.path.join(table_dir, f"v={v}"))
-            break
-        except FileExistsError:
-            v += 1
-    df.write.mode("overwrite").parquet(os.path.join(table_dir, f"v={v}"))
-    tmp = os.path.join(table_dir, f"_latest.tmp.{v}")
-    with open(tmp, "w") as fh:
-        json.dump({"version": v}, fh)
-    os.replace(tmp, os.path.join(table_dir, "_latest"))
-    return v
-
-
-def snapshot_read(spark, table_dir: str, version: int | None = None) -> DataFrame:
-    """Read a snapshot table written by :func:`snapshot_write` — the
-    committed latest by default, or time-travel to any retained ``version``.
-    Uncommitted/partial version dirs are invisible: the reader trusts only
-    the ``_latest`` pointer (or the explicit version argument)."""
-    import json
-    import os
-
-    if version is None:
-        with open(os.path.join(table_dir, "_latest")) as fh:
-            version = json.load(fh)["version"]
-    return read_parquet(spark, os.path.join(table_dir, f"v={version}"))

@@ -32,8 +32,8 @@ def daily_first_stream(df: DataFrame, key_cols: list[str], ts_col: str, watermar
     ``dropDuplicatesWithinWatermark``, NOT plain ``dropDuplicates``: the
     plain form only evicts state when the event-time column is itself a
     dedup key, so keying on (key, day) would retain every (key, day) pair
-    FOREVER — the r11 state-bounds test caught exactly that leak (state
-    grew linearly over a 6-day replay). The within-watermark form expires
+    FOREVER — tests/test_state_bounds.py catches exactly that leak (state
+    growing linearly over a 6-day replay). The within-watermark form expires
     each entry once the watermark passes first_ts + delay, which is
     precisely the reference's 1-day StateTtlConfig
     (DwdTrafficUniqueVisitorDetail.java:62-65). Semantics are unchanged
@@ -73,7 +73,7 @@ def repair_is_new_stream(df: DataFrame, key: str, ts_col: str) -> DataFrame:
         first_date = state.get[0] if state.exists else None
         # concat BEFORE sorting: a key's micro-batch may span several Arrow
         # chunks, and per-chunk sorts leave cross-chunk order arbitrary
-        # (the r5 cusum_stream bug class — latent here until a key exceeds
+        # (the cusum_stream bug class — latent here until a key exceeds
         # the ~10k-row chunk size in one batch)
         pdf = pd.concat(list(batches))
         if len(pdf):
@@ -234,9 +234,8 @@ def transitions_stream(df: DataFrame, key: str = "user_id") -> DataFrame:
     streamed pair multiset equals the batch lead() pairs exactly. State is
     exactly one (type, ts, id) triple per user: O(keys), watermark-free.
 
-    Out-of-order protection (ADVICE r3: the stored (ts, eid) used to be
-    dead fields): a row whose (ts, event_id) is <= the state's committed
-    last pair arrived LATE relative to already-emitted transitions and is
+    Out-of-order protection: a row whose (ts, event_id) is <= the state's
+    committed last pair arrived LATE relative to already-emitted transitions and is
     DROPPED — emitting it would fabricate a backwards transition the
     batch lead() window never produces. On an ordered replay the guard
     never fires, so batch parity is unchanged.
@@ -256,7 +255,7 @@ def transitions_stream(df: DataFrame, key: str = "user_id") -> DataFrame:
         )
         frm, to = [], []
         # concat before sorting — per-chunk sorts leave cross-chunk order
-        # arbitrary once a key spans Arrow chunks (r5 cusum bug class)
+        # arbitrary once a key spans Arrow chunks (the cusum bug class)
         allpdf = pd.concat(list(batches))
         if len(allpdf):
             pdf = allpdf.sort_values(["ts", "event_id"])
@@ -327,9 +326,9 @@ def trailing_features_stream(
     def fn(
         key_tuple, batches: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        # O(1) amortized per row (ADVICE r3: the old list.pop(0) +
-        # full-buffer comprehension per emit was quadratic per key per
-        # batch): a deque with running (count, cents) totals, plus a
+        # O(1) amortized per row (a list.pop(0) + full-buffer
+        # comprehension per emit would be quadratic per key per batch): a
+        # deque with running (count, cents) totals, plus a
         # trailing same-second subtotal so the STRICTLY-EARLIER frame
         # (t <= ep-1) is total minus current-second — initialized from
         # restored state so same-second pairs straddling a batch boundary
@@ -352,7 +351,7 @@ def trailing_features_stream(
                 sec_cents += c
         eids, cnts, sums = [], [], []
         # concat before sorting — per-chunk sorts leave cross-chunk order
-        # arbitrary once a key spans Arrow chunks (r5 cusum bug class)
+        # arbitrary once a key spans Arrow chunks (the cusum bug class)
         allpdf = pd.concat(list(batches))
         if len(allpdf):
             pdf = allpdf.sort_values(["epoch", "event_id"])
@@ -433,7 +432,7 @@ def funnel_stream(
         t1, t2, t3 = state.get if existed else (None, None, None)
         before = (t1, t2, t3)
         # concat before sorting — per-chunk sorts leave cross-chunk order
-        # arbitrary once a key spans Arrow chunks (r5 cusum bug class)
+        # arbitrary once a key spans Arrow chunks (the cusum bug class)
         allpdf = pd.concat(list(batches))
         if len(allpdf):
             pdf = allpdf.sort_values(ts_col)
@@ -501,7 +500,7 @@ def ewma_stream(df: DataFrame, key: str = "user_id", depth: int = 8) -> DataFram
         )
         eids, vals, ks, ew = [], [], [], []
         # concat before sorting — per-chunk sorts leave cross-chunk order
-        # arbitrary once a key spans Arrow chunks (r5 cusum bug class)
+        # arbitrary once a key spans Arrow chunks (the cusum bug class)
         allpdf = pd.concat(list(batches))
         if len(allpdf):
             pdf = allpdf.sort_values(["ts", "event_id"])
@@ -518,8 +517,8 @@ def ewma_stream(df: DataFrame, key: str = "user_id", depth: int = 8) -> DataFram
                 ks.append(k)
                 # truncate-toward-zero, matching the batch window's Spark
                 # DIV / DuckDB // semantics; Python // floors, which is 1
-                # lower for negative wsum (r4 ADVICE — latent while fixture
-                # values were all positive)
+                # lower for negative wsum (latent while fixture values are
+                # all positive)
                 ew.append(-((-wsum) // mass) if wsum < 0 else wsum // mass)
         state.update((list(buf),))
         yield pd.DataFrame(
@@ -537,7 +536,7 @@ def ewma_stream(df: DataFrame, key: str = "user_id", depth: int = 8) -> DataFram
     )
 
 
-# STATE-SCHEMA COMPATIBILITY: cur_k was added in r6 (day-open k capture),
+# STATE-SCHEMA COMPATIBILITY: cur_k (day-open k capture) was added later,
 # changing the GroupState layout from the original 4-field form. A
 # streaming checkpoint written by the old layout CANNOT be restored
 # against this schema — applyInPandasWithState state deserialization
@@ -635,7 +634,7 @@ def cusum_stream(
             # k of the row that happens to trigger finalization — the
             # next day's first row, or the sentinel. Identical under the
             # constant-per-key baseline contract; correct even if a
-            # time-varying baseline were joined upstream (r5 ADVICE).
+            # time-varying baseline were joined upstream.
             for row in rows_all.itertuples(index=False):
                 day = int(row.day_epoch)
                 if bool(row.is_sentinel):

@@ -1,5 +1,4 @@
-"""Lakehouse plumbing: footer-stats file skipping (io.prune_files_by_stats)
-and versioned snapshot write / time-travel read (sinks.snapshot_write/read).
+"""Lakehouse plumbing: footer-stats file skipping (io.prune_files_by_stats).
 Plumbing tier — no SQL-expressible oracle form, correctness asserted
 directly (pruning must be LOSSLESS: pruned read ≡ full read + filter)."""
 
@@ -8,7 +7,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from gmall_flink_230422_spark.io import prune_files_by_stats
-from gmall_flink_230422_spark.sinks import snapshot_read, snapshot_write
 
 
 def test_prune_files_by_stats_lossless_and_selective(spark, tmp_path):
@@ -34,37 +32,3 @@ def test_prune_missing_stats_keeps_file(spark, tmp_path):
     spark.range(0, 10).write.parquet(out)
     kept, total = prune_files_by_stats(out, "no_such_column", 0, 1)
     assert len(kept) == total  # cannot skip without stats: keep everything
-
-
-def test_snapshot_versioning_and_time_travel(spark, tmp_path):
-    table = str(tmp_path / "snap")
-    v1 = snapshot_write(spark.range(0, 5), table)
-    v2 = snapshot_write(spark.range(0, 8), table)
-    assert (v1, v2) == (1, 2)
-    assert snapshot_read(spark, table).count() == 8        # committed latest
-    assert snapshot_read(spark, table, version=1).count() == 5  # time travel
-
-    # a partial (uncommitted) write is invisible to readers
-    import os
-
-    os.makedirs(os.path.join(table, "v=3"))
-    assert snapshot_read(spark, table).count() == 8
-
-
-def test_snapshot_version_claim_skips_existing_dir(spark, tmp_path):
-    """ADVICE r3: the version number is claimed with an atomic os.mkdir —
-    a concurrently-claimed (but not yet committed) v=N dir must push this
-    writer to N+1 instead of overwriting the other writer's data."""
-    import os
-
-    table = str(tmp_path / "tbl")
-    v1 = snapshot_write(spark.range(0, 3), table)
-    assert v1 == 1
-    # another writer has claimed v=2 but not committed yet
-    os.mkdir(os.path.join(table, "v=2"))
-    v3 = snapshot_write(spark.range(0, 7), table)
-    assert v3 == 3
-    assert snapshot_read(spark, table).count() == 7
-    # the claimed-but-uncommitted v=2 is untouched and invisible to readers
-    assert os.listdir(os.path.join(table, "v=2")) == []
-    assert snapshot_read(spark, table, version=1).count() == 3

@@ -68,7 +68,7 @@ def test_snapshot_diff_classifies(spark):
 
 
 def test_rag_chunks_overlap_and_fingerprint(spark):
-    from gmall_flink_230422_spark.plans.llm import _RC_HOP, _RC_WIN, q_rag_chunks
+    from gmall_flink_230422_spark.plans.textq import _RC_HOP, _RC_WIN, q_rag_chunks
 
     out = q_rag_chunks(spark, "/root/testdata/sf0.001").collect()
     assert out

@@ -23,7 +23,7 @@ _BUILD = """
 import json, sys
 sys.path.insert(0, {repo!r})
 from gmall_flink_230422_spark.session import get_spark
-from gmall_flink_230422_spark.plans.r10 import ensure_ivf_index, q_ann_ivf_persisted
+from gmall_flink_230422_spark.plans.artifactq import ensure_ivf_index, q_ann_ivf_persisted
 spark = get_spark("persist-build")
 index_p, cents_p = ensure_ivf_index(spark, {sf!r})
 rows = q_ann_ivf_persisted(spark, {sf!r}).collect()
@@ -37,7 +37,7 @@ _PROBE = """
 import json, sys
 sys.path.insert(0, {repo!r})
 from gmall_flink_230422_spark.session import get_spark
-from gmall_flink_230422_spark.plans.r10 import q_ann_ivf_persisted
+from gmall_flink_230422_spark.plans.artifactq import q_ann_ivf_persisted
 spark = get_spark("persist-probe")
 rows = q_ann_ivf_persisted(spark, {sf!r}).collect()
 print("RESULT " + json.dumps({{

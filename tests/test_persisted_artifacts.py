@@ -1,7 +1,7 @@
 """Cross-session standing-artifact contract, generalized (r10 verdict
 item 1): the LSH band store, the trained BPE vocabulary, the bigram-LM
 count tables, the exact-dedup fingerprint index, and the benchmark
-13-gram set written by plans/r11's ensure_* functions must outlive the
+13-gram set written by plans/artifactq's ensure_* functions must outlive the
 JVM that built them, and probes from a different JVM must NOT rebuild
 them (the admission-gate probe exercises three artifacts at once).
 
@@ -26,7 +26,7 @@ _SESSION = """
 import json, sys
 sys.path.insert(0, {repo!r})
 from gmall_flink_230422_spark.session import get_spark
-from gmall_flink_230422_spark.plans.r11 import (
+from gmall_flink_230422_spark.plans.artifactq import (
     ensure_lsh_store, ensure_bpe_vocab, ensure_lm_model,
     ensure_fp_index, ensure_bench_grams,
     q_lsh_persisted, q_bpe_persisted, q_lm_persisted, q_ingest_gate,

@@ -12,7 +12,7 @@ either:
 - backoff_trigram_score caches its c1/c2 model tables and derives
   n_train from c1 — the corpus must not be scanned more than 4x in one
   plan (was 7x), and results must match the uncached brute computation;
-- plans.llm._materialize and the audit's identity patch of it return
+- plans.curationq._materialize and the audit's identity patch of it return
   the same rows (the audit's full-lineage plan must never drift from
   the default).
 """
@@ -145,11 +145,11 @@ def test_materialize_modes_agree(spark):
     patch of ``_materialize`` must produce identical rows."""
     from unittest import mock
 
-    from gmall_flink_230422_spark.plans import llm, registry
+    from gmall_flink_230422_spark.plans import curationq, registry
 
     sf = "/root/testdata/sf0.001"
     spec = registry()["x_select_pipeline"]
     want = sorted(map(tuple, spec.fn(spark, sf).collect()))
-    with mock.patch.object(llm, "_materialize", lambda df: df):
+    with mock.patch.object(curationq, "_materialize", lambda df: df):
         got = sorted(map(tuple, spec.fn(spark, sf).collect()))
     assert want == got

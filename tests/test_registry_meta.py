@@ -78,81 +78,65 @@ def test_every_query_has_oracle():
     assert not no_oracle, no_oracle
 
 
+def _sweep_names_missing(sweep: str, at_least: int) -> list[str]:
+    """Names of the committed sweep file ``sweep`` (which holds at least
+    ``at_least`` names) that the registry no longer has."""
+    names = json.load(open(Path(__file__).resolve().parent.parent / sweep))
+    assert len(names) >= at_least
+    return sorted(set(names) - set(_registry()))
+
+
 def test_registry_superset_of_r5_names():
-    """The driver samples the same 50 names round over round; name removal
-    would silently drop its evidence base (r5 verdict item 5)."""
-    reg = set(_registry())
-    r5 = json.load(open(Path(__file__).resolve().parent.parent / "CORRECTNESS_r05.json"))
-    missing = sorted(set(r5) - reg)
-    assert not missing, missing
+    """The 50-name sample of the first committed sweep stays in the
+    registry, so its evidence base is not silently dropped."""
+    assert _sweep_names_missing("CORRECTNESS_r05.json", 50) == []
 
 
 def test_registry_superset_of_r6_names():
-    """r6 shipped 287 queries, all green in the committed full-registry
-    sweep (CORRECTNESS_local_r06.json); the registry must stay an exact
-    superset so no later round silently drops an evidenced query (r6
-    verdict item 5 extends the r5 pin to the full name list)."""
-    reg = set(_registry())
-    r6 = json.load(
-        open(Path(__file__).resolve().parent.parent / "CORRECTNESS_local_r06.json")
-    )
-    assert len(r6) >= 287
-    missing = sorted(set(r6) - reg)
-    assert not missing, missing
+    """The 287 queries of the CORRECTNESS_local_r06.json sweep stay in the
+    registry."""
+    assert _sweep_names_missing("CORRECTNESS_local_r06.json", 287) == []
 
 
 def test_registry_superset_of_r7_names():
-    """r7 shipped 312 queries, all green at all four committed sweep tiers
-    (CORRECTNESS_local_r07{,_sf0001,_sf01,_vanilla}.json); the registry
-    must stay an exact superset so no later round silently drops an
-    evidenced query (r7 verdict item 5 extends the pin streak)."""
-    reg = set(_registry())
-    r7 = json.load(
-        open(Path(__file__).resolve().parent.parent / "CORRECTNESS_local_r07.json")
-    )
-    assert len(r7) >= 312
-    missing = sorted(set(r7) - reg)
-    assert not missing, missing
+    """The 312 queries of the CORRECTNESS_local_r07.json sweep stay in the
+    registry."""
+    assert _sweep_names_missing("CORRECTNESS_local_r07.json", 312) == []
 
 
 def test_registry_superset_of_r8_names():
-    """r8 shipped 349 queries, all green in the committed full-registry
-    sweeps (CORRECTNESS_local_r08*.json); keep the exact-superset streak."""
-    reg = set(_registry())
-    r8 = json.load(
-        open(Path(__file__).resolve().parent.parent / "CORRECTNESS_local_r08.json")
-    )
-    assert len(r8) >= 349
-    missing = sorted(set(r8) - reg)
-    assert not missing, missing
+    """The 349 queries of the CORRECTNESS_local_r08.json sweep stay in the
+    registry."""
+    assert _sweep_names_missing("CORRECTNESS_local_r08.json", 349) == []
 
 
 def test_registry_superset_of_r9_names():
-    """r9 shipped 373 queries (r8's 349 + 24), all green in the committed
-    full-registry sweeps (CORRECTNESS_local_r09*.json); keep the
-    exact-superset streak. (r9 verdict item 8: the pin previously said 369
-    because the last 4 queries landed after the pin was written — the
-    committed sweep file has 373 entries, so pin the real number.)"""
-    reg = set(_registry())
-    r9 = json.load(
-        open(Path(__file__).resolve().parent.parent / "CORRECTNESS_local_r09.json")
-    )
-    assert len(r9) >= 373
-    missing = sorted(set(r9) - reg)
-    assert not missing, missing
+    """The 373 queries of the CORRECTNESS_local_r09.json sweep stay in the
+    registry."""
+    assert _sweep_names_missing("CORRECTNESS_local_r09.json", 373) == []
 
 
 def test_registry_superset_of_r10_names():
-    """r10 shipped 377 queries (r9's 373 + the 4 persisted-index ANN
-    queries), all green across four committed sweep tiers
-    (CORRECTNESS_local_r10*.json); keep the exact-superset streak."""
-    reg = set(_registry())
-    r10 = json.load(
-        open(Path(__file__).resolve().parent.parent / "CORRECTNESS_local_r10.json")
-    )
-    assert len(r10) >= 377
-    missing = sorted(set(r10) - reg)
-    assert not missing, missing
+    """The 377 queries of the CORRECTNESS_local_r10.json sweep (r09's 373
+    plus the 4 persisted-index ANN queries) stay in the registry."""
+    assert _sweep_names_missing("CORRECTNESS_local_r10.json", 377) == []
+
+
+def test_registry_names_pinned_to_committed_sweeps():
+    """The registry is exactly the 387 names of the last committed
+    full-registry sweep, and every older committed sweep (the driver's
+    50-name sample and the full sweeps since) is a subset of it, so no
+    evidenced query can silently drop out of the registry."""
+    root = Path(__file__).resolve().parent.parent
+
+    def names(f: str) -> set[str]:
+        return set(json.load(open(root / f)))
+
+    current = names("CORRECTNESS_local_r12.json")
+    assert len(current) == 387
+    assert set(_registry()) == current
+    older = ["CORRECTNESS_r05.json"] + [f"CORRECTNESS_local_r{n:02d}.json" for n in range(6, 11)]
+    assert {f: sorted(names(f) - current) for f in older} == {f: [] for f in older}
 
 
 def test_make_evidence_name_set_gate():
@@ -201,16 +185,16 @@ def test_plans_build_near_dup_through_chain():
     over the chain's signatures with one lsh_candidate_pairs call."""
     plans = Path(__file__).resolve().parent.parent / "gmall_flink_230422_spark" / "plans"
     patterns = ("minhash_signatures(", "band_signatures(", "lsh_candidate_pairs(")
-    llm = (plans / "llm.py").read_text().splitlines()
-    start = llm.index("def q_lsh_tune(spark, sf_dir):") + 1
-    end = next(i for i in range(start, len(llm)) if llm[i].startswith("def "))
+    dedupq = (plans / "dedupq.py").read_text().splitlines()
+    start = dedupq.index("def q_lsh_tune(spark, sf_dir):") + 1
+    end = next(i for i in range(start, len(dedupq)) if dedupq[i].startswith("def "))
     hits = [
         (p.name, i, line.strip())
         for p in sorted(plans.glob("*.py"))
         for i, line in enumerate(p.read_text().splitlines(), 1)
         if any(pat in line for pat in patterns)
     ]
-    in_tune = [h for h in hits if h[0] == "llm.py" and start <= h[1] <= end]
+    in_tune = [h for h in hits if h[0] == "dedupq.py" and start <= h[1] <= end]
     assert [h for h in hits if h not in in_tune] == []
     assert len(in_tune) <= 1 and all("lsh_candidate_pairs(" in h[2] for h in in_tune)
 
@@ -380,7 +364,7 @@ def _query_state_outside_scope(sources: dict[str, str]) -> list[str]:
 def test_query_state_released_only_by_query_scope():
     """One owner for a query's state: only io.query_scope clears the cache
     or unpersists RDDs, and no module keeps a container that functions
-    fill across queries (the shape of the removed plans.llm memos). Covers
+    fill across queries (the shape of the removed cross-query memos). Covers
     the package, tools/ and bench.py. A planted clearCache and a planted
     memo are both caught."""
     root = Path(__file__).resolve().parent.parent
@@ -393,12 +377,104 @@ def test_query_state_released_only_by_query_scope():
     assert "gmall_flink_230422_spark/io.py" in sources and "bench.py" in sources
     assert _query_state_outside_scope(sources) == []
     planted = dict(sources)
-    llm = "gmall_flink_230422_spark/plans/llm.py"
-    memo_line = len(planted[llm].splitlines()) + 2
-    planted[llm] += "\n_SEEN: dict = {}\n\n\ndef _remember(k, v):\n    _SEEN[k] = v\n"
+    common = "gmall_flink_230422_spark/plans/common.py"
+    memo_line = len(planted[common].splitlines()) + 2
+    planted[common] += "\n_SEEN: dict = {}\n\n\ndef _remember(k, v):\n    _SEEN[k] = v\n"
     clear_line = len(planted["bench.py"].splitlines()) + 4
     planted["bench.py"] += "\n\ndef _reset(spark):\n    spark.catalog.clearCache()\n"
     assert _query_state_outside_scope(planted) == [
         f"bench.py:{clear_line}",
-        f"{llm}:{memo_line}",
+        f"{common}:{memo_line}",
     ]
+
+
+# Test files still named by the round that wrote them. Renaming them moves
+# the id of every test inside; the list may only shrink.
+_ROUND_NAMED_TESTS = {
+    "test_round4_ops.py",
+    "test_round5_ops.py",
+    "test_round6_ops.py",
+    "test_round7_ops.py",
+    "test_round8_ops.py",
+    "test_round8_properties.py",
+    "test_round8b_ops.py",
+    "test_round9_ops.py",
+    "test_round9_properties.py",
+    "test_round9_queries.py",
+    "test_r11_optimizations.py",
+    "test_r12_optimizations.py",
+}
+
+
+def _plan_boundary_violations(sources: dict[str, str]) -> list[str]:
+    """Boundary breaks among ``plans/`` and ``tests/`` files (``path ->
+    source``): a plan module importing an underscore name from a sibling
+    plan module other than ``plans/common.py`` (the one home of shared
+    helpers), a plan module calling ``ensure_dataset`` instead of
+    ``io.ensure_artifact``, and a plan or test file named by round."""
+    import ast
+    import re
+
+    plan_mods = {
+        Path(n).stem for n in sources if n.startswith("gmall_flink_230422_spark/plans/")
+    }
+    found = []
+    for name, text in sorted(sources.items()):
+        stem = Path(name).stem
+        if re.search(r"(?:^|_)(?:r|round)\d+", stem) and Path(name).name not in _ROUND_NAMED_TESTS:
+            found.append(f"{name}: named by round")
+        if not name.startswith("gmall_flink_230422_spark/plans/"):
+            continue
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.ImportFrom):
+                if node.level == 1:
+                    mod = node.module
+                elif (node.module or "").startswith("gmall_flink_230422_spark.plans."):
+                    mod = node.module.rsplit(".", 1)[1]
+                else:
+                    continue
+                if mod in plan_mods and mod not in ("common", stem):
+                    found += [
+                        f"{name}:{node.lineno}: {a.name} from {mod}"
+                        for a in node.names
+                        if a.name.startswith("_")
+                    ]
+            elif isinstance(node, ast.Call):
+                f = node.func
+                if getattr(f, "id", None) == "ensure_dataset" or getattr(f, "attr", None) == "ensure_dataset":
+                    found.append(f"{name}:{node.lineno}: ensure_dataset")
+    return found
+
+
+def test_plan_module_boundaries():
+    """Plan modules share private helpers only through plans/common.py,
+    build standing artifacts only through io.ensure_artifact, and no plan
+    or test file is named by round. Planted breaks of each kind are
+    caught."""
+    root = Path(__file__).resolve().parent.parent
+    paths = [
+        *(root / "gmall_flink_230422_spark" / "plans").glob("*.py"),
+        *(root / "tests").glob("*.py"),
+    ]
+    sources = {str(p.relative_to(root)): p.read_text() for p in paths}
+    assert "gmall_flink_230422_spark/plans/common.py" in sources
+    assert _plan_boundary_violations(sources) == []
+    planted = dict(sources)
+    textq = "gmall_flink_230422_spark/plans/textq.py"
+    n = len(planted[textq].splitlines())
+    planted[textq] += (
+        "\nfrom .dedupq import _SIMHASH_CTE\n"
+        "from gmall_flink_230422_spark.plans.vectorq import _BUCKET_SQL, ORACLE_ANN_IVF\n"
+        "from .common import _docs_par\n"
+        "\n\ndef _build(spark, sf_dir):\n"
+        "    return ensure_dataset(sf_dir, 'v1', print)\n"
+    )
+    planted["gmall_flink_230422_spark/plans/r13.py"] = ""
+    planted["tests/test_round13_ops.py"] = ""
+    assert sorted(_plan_boundary_violations(planted)) == sorted([
+        f"{textq}:{n + 2}: _SIMHASH_CTE from dedupq",
+        f"{textq}:{n + 3}: _BUCKET_SQL from vectorq",
+        f"{textq}:{n + 8}: ensure_dataset",
+        "gmall_flink_230422_spark/plans/r13.py: named by round",
+        "tests/test_round13_ops.py: named by round",
+    ])

@@ -61,7 +61,7 @@ def test_mad_outliers_flags_spike(spark):
 
 
 def test_token_budget_respects_budget(spark):
-    from gmall_flink_230422_spark.plans.llm import _TB_BUDGET, q_token_budget
+    from gmall_flink_230422_spark.plans.curationq import _TB_BUDGET, q_token_budget
 
     for r in q_token_budget(spark, "/root/testdata/sf0.001").collect():
         assert r["tokens_kept"] <= _TB_BUDGET
@@ -71,7 +71,7 @@ def test_token_budget_respects_budget(spark):
 
 
 def test_weighted_sample_deterministic_topk(spark):
-    from gmall_flink_230422_spark.plans.llm import q_weighted_sample
+    from gmall_flink_230422_spark.plans.curationq import q_weighted_sample
 
     a = [tuple(r) for r in q_weighted_sample(spark, "/root/testdata/sf0.001").collect()]
     b = [tuple(r) for r in q_weighted_sample(spark, "/root/testdata/sf0.001").collect()]
@@ -82,7 +82,7 @@ def test_weighted_sample_deterministic_topk(spark):
 
 
 def test_energy_segments_merge_consecutive(spark):
-    from gmall_flink_230422_spark.plans.llm import q_energy_segments
+    from gmall_flink_230422_spark.plans.mediaq import q_energy_segments
 
     segs = q_energy_segments(spark, "/root/testdata/sf0.001")
     rows = segs.collect()

@@ -245,7 +245,7 @@ def test_stream_cov_equals_batch_cov(spark):
     partial grams, additive merge) returns exactly x_embedding_cov's
     single-pass matrix — the batch-boundary invariance the exact BIGINT
     gram algebra guarantees."""
-    from gmall_flink_230422_spark.plans.llm import q_embedding_cov
+    from gmall_flink_230422_spark.plans.vectorq import q_embedding_cov
     from gmall_flink_230422_spark.plans.streamq import q_stream_embedding_cov
 
     sf = "/root/testdata/sf0.001"

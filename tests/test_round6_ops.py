@@ -287,7 +287,7 @@ def test_winnowing_guarantee_shared_run_shares_fingerprint(spark):
     text. Build doc pairs embedding the same 6-token run at different
     positions and check the selection frames intersect on raw hashes."""
     from pyspark.sql import functions as F
-    from gmall_flink_230422_spark.plans.llm import winnow_selected
+    from gmall_flink_230422_spark.plans.dedupq import winnow_selected
 
     run = "alpha beta gamma delta epsilon zeta"
     docs = spark.createDataFrame(

@@ -83,7 +83,7 @@ def test_label_propagate_contracts(spark):
 def test_ndcg_tables_consistent():
     """The inlined discount/prefix tables are exactly floor(1e6/log2(i+1))
     and its prefix sums — pinning the constants both engines share."""
-    from gmall_flink_230422_spark.plans.r8 import _NDCG_DISC, _NDCG_PS
+    from gmall_flink_230422_spark.plans.vectorq import _NDCG_DISC, _NDCG_PS
 
     assert len(_NDCG_DISC) == 10 and len(_NDCG_PS) == 11
     for i, d in enumerate(_NDCG_DISC, start=1):
@@ -95,7 +95,7 @@ def test_ndcg_tables_consistent():
 def test_rbo_suffix_table_consistent():
     """SUFFIX_W[m] - SUFFIX_W[m+1] == floor((1-p)p^(d-1)/d * 1e9) at
     p=0.9, and the identical-rankings total equals sum(w_d * d)."""
-    from gmall_flink_230422_spark.plans.r8 import _RBO_SUF
+    from gmall_flink_230422_spark.plans.evalq import _RBO_SUF
 
     p, D = 0.9, 50
     w = [int((1 - p) * p ** (d - 1) / d * 1e9) for d in range(1, D + 1)]

@@ -11,15 +11,9 @@ import math
 import pandas as pd
 from pyspark.sql import functions as F
 
-from gmall_flink_230422_spark.plans.r8 import (
-    _NDCG_DISC,
-    _NDCG_PS,
-    q_kendall_tau,
-    q_l_diversity,
-    q_mann_whitney,
-    q_ndcg_labels,
-    q_theil_sen,
-)
+from gmall_flink_230422_spark.plans.analytics import q_kendall_tau, q_mann_whitney, q_theil_sen
+from gmall_flink_230422_spark.plans.evalq import q_l_diversity
+from gmall_flink_230422_spark.plans.vectorq import _NDCG_DISC, _NDCG_PS, q_ndcg_labels
 
 SF = "/root/testdata/sf0.001"
 
@@ -142,7 +136,7 @@ def test_dp_counts_noise_mirror(spark):
     magnitude = trailing zeros of the low 16 hash bits, sign = bit 16."""
     import hashlib
 
-    from gmall_flink_230422_spark.plans.r8 import q_dp_counts
+    from gmall_flink_230422_spark.plans.evalq import q_dp_counts
 
     out = q_dp_counts(spark, SF).collect()
     docs = pd.read_parquet(f"{SF}/documents.parquet")
@@ -165,7 +159,7 @@ def test_kcenter_coreset_matches_greedy_mirror(spark):
     tie-break — centers and radii must match round for round."""
     import numpy as np
 
-    from gmall_flink_230422_spark.plans.r8 import _KC_ROUNDS, q_kcenter_coreset
+    from gmall_flink_230422_spark.plans.vectorq import _KC_ROUNDS, q_kcenter_coreset
 
     emb = pd.read_parquet(f"{SF}/embeddings.parquet").sort_values("vec_id")
     ids = emb.vec_id.to_numpy()
@@ -197,8 +191,8 @@ def test_label_prop_seeds_mirror_given_edges(spark):
     from collections import Counter
 
     from gmall_flink_230422_spark.operators import similarity as sim2
-    from gmall_flink_230422_spark.plans.llm import _embs_par
-    from gmall_flink_230422_spark.plans.r8 import _LP_ROUNDS, q_label_prop_seeds
+    from gmall_flink_230422_spark.plans.common import _embs_par
+    from gmall_flink_230422_spark.plans.vectorq import _LP_ROUNDS, q_label_prop_seeds
 
     e = _embs_par(spark, SF)
     edges = [(r["src"], r["dst"]) for r in sim2.knn_graph(e, k=3, dims=6).collect()]
@@ -227,8 +221,8 @@ def test_graph_modularity_mirror_given_edges(spark):
     """Given the mutual kNN edges, per-label tallies and the integer Q
     must match a plain-Python mirror; Q bounded in [-1000, 1000]."""
     from gmall_flink_230422_spark.operators import similarity as sim2
-    from gmall_flink_230422_spark.plans.llm import _embs_par
-    from gmall_flink_230422_spark.plans.r8 import q_graph_modularity
+    from gmall_flink_230422_spark.plans.common import _embs_par
+    from gmall_flink_230422_spark.plans.graphq import q_graph_modularity
 
     e = _embs_par(spark, SF)
     g = sim2.knn_graph(e, k=3, dims=6).collect()
@@ -263,8 +257,8 @@ def test_degree_assortativity_bounds(spark):
     """r_milli is a Pearson correlation scaled to milli: |r| <= 1000, and
     the edge count equals twice the undirected verified-pair count."""
     from gmall_flink_230422_spark.operators import dedup
-    from gmall_flink_230422_spark.plans.llm import _docs_par
-    from gmall_flink_230422_spark.plans.r8 import q_degree_assortativity
+    from gmall_flink_230422_spark.plans.common import _docs_par
+    from gmall_flink_230422_spark.plans.graphq import q_degree_assortativity
 
     n_pairs = dedup.near_dup_chain(dedup.shingles(_docs_par(spark, SF))).near.count()
     r = q_degree_assortativity(spark, SF).collect()[0]
@@ -277,8 +271,8 @@ def test_coverage_max_greedy_mirror(spark):
     """Given the (source, token) set, the 3 greedy picks, marginal gains
     and cumulative coverage must match a plain-Python greedy mirror."""
     from gmall_flink_230422_spark.operators.text import normalize_text, whitespace_tokens
-    from gmall_flink_230422_spark.plans.llm import _docs_par
-    from gmall_flink_230422_spark.plans.r8 import _MC_ROUNDS, q_coverage_max
+    from gmall_flink_230422_spark.plans.common import _docs_par
+    from gmall_flink_230422_spark.plans.curationq import _MC_ROUNDS, q_coverage_max
 
     d = _docs_par(spark, SF)
     st = (
@@ -314,8 +308,8 @@ def test_rbo_rankings_mirror(spark):
     """RBO@50 must equal the suffix-weight mirror over the two top-50
     lists built from the same integer score grids."""
     from gmall_flink_230422_spark.operators import text as _text
-    from gmall_flink_230422_spark.plans.llm import _docs_par
-    from gmall_flink_230422_spark.plans.r8 import _RBO_SUF, q_rbo_rankings
+    from gmall_flink_230422_spark.plans.common import _docs_par
+    from gmall_flink_230422_spark.plans.evalq import _RBO_SUF, q_rbo_rankings
 
     d = _docs_par(spark, SF)
     qf = {r["doc_id"]: r["qx"] for r in _text.quality_features(d).select(
@@ -338,7 +332,7 @@ def test_rbo_rankings_mirror(spark):
 
 
 def test_chisq_independence_mirror(spark):
-    from gmall_flink_230422_spark.plans.r8 import q_chisq_independence
+    from gmall_flink_230422_spark.plans.analytics import q_chisq_independence
 
     ev = pd.read_parquet(f"{SF}/events.parquet")
     # parquet ts is timestamp[us]; epoch seconds = int64 value // 1e6
@@ -363,7 +357,7 @@ def test_chisq_independence_mirror(spark):
 
 
 def test_two_proportion_z_mirror(spark):
-    from gmall_flink_230422_spark.plans.r8 import q_two_proportion_z
+    from gmall_flink_230422_spark.plans.analytics import q_two_proportion_z
 
     ev = pd.read_parquet(f"{SF}/events.parquet")
     a = ev[ev.user_id % 2 == 0]

@@ -20,7 +20,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from gmall_flink_230422_spark.operators import similarity as sim
-from gmall_flink_230422_spark.plans import r8
+from gmall_flink_230422_spark.plans import analytics, graphq
 
 
 def _write_events(spark, tmp_path, rows):
@@ -46,7 +46,7 @@ def test_theil_sen_even_pair_count(spark, tmp_path):
         for i, (day, v) in enumerate(zip(days, [1.0, 3.0, 2.0, 8.0]))
     ]
     sf = _write_events(spark, tmp_path, rows)
-    out = r8.q_theil_sen(spark, sf).collect()
+    out = analytics.q_theil_sen(spark, sf).collect()
     assert len(out) == 1, "even C(n,2) must still yield the median row"
     row = out[0]
     assert row["event_type"] == "click" and row["n_pairs"] == 6
@@ -55,7 +55,7 @@ def test_theil_sen_even_pair_count(spark, tmp_path):
     con.execute(
         f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'"
     )
-    oracle = con.execute(r8.ORACLE_THEIL_SEN).fetchall()
+    oracle = con.execute(analytics.ORACLE_THEIL_SEN).fetchall()
     assert len(oracle) == 1
     assert row["med_slope_milli"] == oracle[0][2]
 
@@ -77,7 +77,7 @@ def test_theil_sen_odd_pair_count_unchanged(spark, tmp_path):
         for i, (day, v) in enumerate(zip(days, [2.0, 5.0, 4.0]))
     ]
     sf = _write_events(spark, tmp_path, rows)
-    out = r8.q_theil_sen(spark, sf).collect()
+    out = analytics.q_theil_sen(spark, sf).collect()
     assert len(out) == 1 and out[0]["n_pairs"] == 3
     # cents 200,500,400 → slopes_milli {300000, -100000, 100000}; lower
     # median = rank (3+1) div 2 = 2 of the sorted grid = 100000
@@ -105,7 +105,7 @@ def test_mann_whitney_variance_in_double(spark, tmp_path):
     sf = _write_events(spark, tmp_path, rows)
     import re
 
-    df = r8.q_mann_whitney(spark, sf)
+    df = analytics.q_mann_whitney(spark, sf)
     # r9 advice: pin the OPTIMIZED PLAN, not source text (a rename or
     # reformat must not break this). The variance product must multiply
     # DOUBLE-cast factors; the only permitted raw BIGINT product is the
@@ -126,7 +126,7 @@ def test_mann_whitney_variance_in_double(spark, tmp_path):
     # n1=2, n2=3, exact U and z against the oracle
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet/*.parquet'")
-    oracle = con.execute(r8.ORACLE_MANN_WHITNEY).fetchall()
+    oracle = con.execute(analytics.ORACLE_MANN_WHITNEY).fetchall()
     assert (out[0]["n_click"], out[0]["n_view"], out[0]["u1_x2"], out[0]["z_milli"]) == oracle[0]
 
 
@@ -136,7 +136,7 @@ def test_degree_assortativity_double_numerator(spark):
     of n_edges with any Pearson sum), not source text."""
     import re
 
-    df = r8.q_degree_assortativity(spark, "/root/testdata/sf0.001")
+    df = graphq.q_degree_assortativity(spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert not re.search(
         r"n_edges#\d+L \* s[xy]", plan

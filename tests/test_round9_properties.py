@@ -12,7 +12,7 @@ import random
 
 from pyspark.sql import Row
 
-from gmall_flink_230422_spark.plans import r9
+from gmall_flink_230422_spark.plans import analytics, evalq
 
 
 def _ev_rows(vals_by_type_day):
@@ -51,7 +51,7 @@ def test_trimmed_mean_matches_sorted_reference(spark, tmp_path):
         vals = [rng.choice([1, 2, 2, 2, 3, 7, 7, 50, 99]) for _ in range(rng.randint(12, 40))]
         rows = _ev_rows({("click", "2023-04-01"): vals})
         sf = _write_events(spark, tmp_path, rows, sub=str(trial))
-        out = r9.q_trimmed_mean(spark, sf).collect()[0]
+        out = analytics.q_trimmed_mean(spark, sf).collect()[0]
         cents = sorted(round(v * 100) for v in vals)
         k = len(cents) // 10
         kept = cents[k : len(cents) - k]
@@ -66,7 +66,7 @@ def test_changepoint_matches_bruteforce(spark, tmp_path):
     days = [f"2023-05-{d:02d}" for d in range(1, 11)]
     series = {("view", day): [rng.randint(1, 50)] for day in days}
     sf = _write_events(spark, tmp_path, _ev_rows(series))
-    out = r9.q_changepoint_cusum(spark, sf).collect()[0]
+    out = analytics.q_changepoint_cusum(spark, sf).collect()[0]
     daily = [sum(round(v * 100) for v in series[("view", day)]) for day in days]
     D, C = len(daily), sum(daily)
     cum, best = 0, None
@@ -84,7 +84,7 @@ def test_mann_kendall_s_matches_pairwise(spark, tmp_path):
     days = [f"2023-06-{d:02d}" for d in range(1, 9)]
     series = {("click", day): [rng.randint(1, 30)] for day in days}
     sf = _write_events(spark, tmp_path, _ev_rows(series))
-    out = r9.q_mann_kendall(spark, sf).collect()[0]
+    out = analytics.q_mann_kendall(spark, sf).collect()[0]
     y = [sum(round(v * 100) for v in series[("click", day)]) for day in days]
     s = sum(
         (0 if y[j] == y[i] else (1 if y[j] > y[i] else -1))
@@ -109,7 +109,7 @@ def test_t_closeness_matches_direct_vd(spark, tmp_path):
     spark.createDataFrame(rows).coalesce(1).write.mode("overwrite").parquet(
         str(p / "documents.parquet")
     )
-    out = {r["source"]: r["vd_milli"] for r in r9.q_t_closeness(spark, str(p)).collect()}
+    out = {r["source"]: r["vd_milli"] for r in evalq.q_t_closeness(spark, str(p)).collect()}
     from collections import Counter
 
     allb = Counter()

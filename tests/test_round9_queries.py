@@ -10,7 +10,7 @@ import datetime as dt
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from gmall_flink_230422_spark.plans import r9
+from gmall_flink_230422_spark.plans import analytics, curationq, dedupq, evalq
 
 
 def _write_events(spark, tmp_path, rows):
@@ -49,7 +49,7 @@ def test_trimmed_mean_tie_across_boundary(spark, tmp_path):
     vals = [1, 2, 2, 2, 3, 4, 5, 6, 7, 100]
     rows = [_ev(i, "click", v) for i, v in enumerate(vals)]
     sf = _write_events(spark, tmp_path, rows)
-    out = r9.q_trimmed_mean(spark, sf).collect()
+    out = analytics.q_trimmed_mean(spark, sf).collect()
     assert len(out) == 1
     r = out[0]
     assert r["n_rows"] == 10 and r["trimmed_n"] == 8
@@ -68,7 +68,7 @@ def test_changepoint_finds_level_shift(spark, tmp_path):
         rows.append(_ev(i, "view", v, day=f"2023-04-{d:02d}"))
         i += 1
     sf = _write_events(spark, tmp_path, rows)
-    out = r9.q_changepoint_cusum(spark, sf).collect()
+    out = analytics.q_changepoint_cusum(spark, sf).collect()
     assert len(out) == 1
     assert str(out[0]["change_day"]) == "2023-04-06"
     assert out[0]["n_days"] == 12
@@ -84,7 +84,7 @@ def test_t_closeness_uniform_is_zero(spark, tmp_path):
             rows.append(_doc(i, "x" * ln, source=src))
             i += 1
     sf = _write_docs(spark, tmp_path, rows)
-    out = {r["source"]: r["vd_milli"] for r in r9.q_t_closeness(spark, sf).collect()}
+    out = {r["source"]: r["vd_milli"] for r in evalq.q_t_closeness(spark, sf).collect()}
     assert out == {"a": 0, "b": 0}
 
 
@@ -100,7 +100,7 @@ def test_contam_runs_exact_run_length(spark, tmp_path):
         _doc(17, f"{passage} " + " ".join(f"q{i}" for i in range(10))),  # eval
     ]
     sf = _write_docs(spark, tmp_path, rows)
-    out = r9.q_contam_runs(spark, sf).collect()
+    out = dedupq.q_contam_runs(spark, sf).collect()
     assert len(out) == 1
     assert out[0]["doc_id"] == 17
     assert out[0]["n_hits"] == 3 and out[0]["max_run"] == 3
@@ -128,10 +128,10 @@ def test_bloom_no_false_negatives(spark, tmp_path):
         ).alias("hb"),
     )
     mem = d.filter(F.col("doc_id") % 3 == 0)
-    s_seq = F.explode(F.sequence(F.lit(0), F.lit(r9._BLOOM_K - 1))).alias("s")
+    s_seq = F.explode(F.sequence(F.lit(0), F.lit(dedupq._BLOOM_K - 1))).alias("s")
     pos = F.expr(
         f"((1 + s * {MINHASH_A_STEP}) * hb + 7 + s * {MINHASH_B_STEP}) "
-        f"% {MINHASH_P} % {r9._BLOOM_M}"
+        f"% {MINHASH_P} % {dedupq._BLOOM_M}"
     )
     cells = (
         mem.select("hb", s_seq).withColumn("pos", pos)
@@ -157,7 +157,7 @@ def test_shard_skew_single_shard_degenerate(spark, tmp_path):
     n_shards counts only OCCUPIED shards, so the degenerate case is
     exactly 1000 (max == total, one shard)."""
     sf = _write_docs(spark, tmp_path, [_doc(7, "just one doc here")])
-    out = r9.q_shard_skew(spark, sf).collect()
+    out = curationq.q_shard_skew(spark, sf).collect()
     assert len(out) == 1
     assert out[0]["n_shards"] == 1 and out[0]["skew_milli"] == 1000
 
@@ -171,7 +171,7 @@ def test_cohens_kappa_perfect_agreement(spark, tmp_path):
         _doc(10 + i, "tiny") for i in range(5)
     ]
     sf = _write_docs(spark, tmp_path, rows)
-    out = r9.q_cohens_kappa(spark, sf).collect()
+    out = analytics.q_cohens_kappa(spark, sf).collect()
     assert len(out) == 1
     assert out[0]["n11"] == 5 and out[0]["n00"] == 5
     assert out[0]["kappa_milli"] == 1000
@@ -183,11 +183,11 @@ def test_cohens_kappa_degenerate_pe_is_null(spark, tmp_path):
     while DuckDB's is NULL — the r9 review find)."""
     long_text = " ".join(f"tok{i:03d}" for i in range(50))
     sf = _write_docs(spark, tmp_path, [_doc(i, long_text) for i in range(4)])
-    out = r9.q_cohens_kappa(spark, sf).collect()
+    out = analytics.q_cohens_kappa(spark, sf).collect()
     assert len(out) == 1 and out[0]["n11"] == 4
     assert out[0]["kappa_milli"] is None
     import duckdb
 
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'")
-    assert con.execute(r9.ORACLE_COHENS_KAPPA).fetchall()[0][-1] is None
+    assert con.execute(analytics.ORACLE_COHENS_KAPPA).fetchall()[0][-1] is None

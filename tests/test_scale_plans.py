@@ -349,7 +349,7 @@ def test_epoch_shuffle_uses_window_group_limit(spark):
     """The global top-100 permutation prefix must plan a distributed
     partial top-k (TakeOrderedAndProject, or WindowGroupLimit on older
     planners) — never a full global sort of the corpus."""
-    from gmall_flink_230422_spark.plans.llm import q_epoch_shuffle
+    from gmall_flink_230422_spark.plans.curationq import q_epoch_shuffle
 
     plan = (
         q_epoch_shuffle(spark, SF_DIR)

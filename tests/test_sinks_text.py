@@ -71,12 +71,6 @@ def test_multimodal_decode_stub(spark):
     assert out[1]["width"] == 100 % 64 + 1 and out[1]["height"] == (100 // 64) % 64 + 1
 
 
-def test_frame_sample(spark):
-    docs = spark.createDataFrame([(i, "t") for i in range(20)], ["doc_id", "text"])
-    decoded = multimodal.decode_media(multimodal.to_media_table(docs))
-    assert multimodal.frame_sample(decoded, every_n=10).count() == 2
-
-
 def test_resize_media_caps_bytes(spark):
     docs = spark.createDataFrame(
         [(1, "x" * 300), (2, "short")], ["doc_id", "text"]
@@ -118,62 +112,6 @@ def test_hash_split_stable_and_proportional(spark):
     assert 0.7 < c["train"] / 500 < 0.9
     assert 0.05 < c["val"] / 500 < 0.15
     assert 0.05 < c["test"] / 500 < 0.15
-
-
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    from gmall_flink_230422_spark import sinks
-
-    out = str(tmp_path / "frag")
-    # 40 single-row appends = 40 fragment files (a streaming sink's wake)
-    df = spark.range(200)
-    df.repartition(40).write.mode("overwrite").parquet(out)
-    before = spark.read.parquet(out)
-    n_before = len(before.inputFiles())
-    rows_before = sorted(r["id"] for r in before.collect())
-    assert n_before >= 40
-    n_after = sinks.compact_parquet(spark, out, target_file_bytes=1 << 30)
-    after = spark.read.parquet(out)
-    assert len(after.inputFiles()) == n_after <= 2
-    assert sorted(r["id"] for r in after.collect()) == rows_before
-    # idempotent second run: already compact, no rewrite
-    assert sinks.compact_parquet(spark, out, target_file_bytes=1 << 30) == n_after
-
-
-def test_compact_parquet_recovers_from_prior_crash(spark, tmp_path):
-    """Leftover .compact/.old dirs from a crashed prior run must not break
-    the next compaction, and data stranded at .old (crash between the two
-    swap renames) must be restored (ADVICE r2)."""
-    import os
-    import shutil
-
-    from gmall_flink_230422_spark import sinks
-
-    out = str(tmp_path / "frag")
-    spark.range(100).repartition(20).write.mode("overwrite").parquet(out)
-    rows = sorted(r["id"] for r in spark.read.parquet(out).collect())
-
-    # simulate a crash in the rename window: dataset stranded at .old,
-    # half-built .compact left behind
-    os.rename(out, out + ".old")
-    os.makedirs(out + ".compact")
-    with open(out + ".compact/garbage", "w") as f:
-        f.write("partial")
-
-    n_after = sinks.compact_parquet(spark, out, target_file_bytes=1 << 30)
-    after = spark.read.parquet(out)
-    assert len(after.inputFiles()) == n_after
-    assert sorted(r["id"] for r in after.collect()) == rows
-    assert not os.path.exists(out + ".old")
-    assert not os.path.exists(out + ".compact")
-
-    # stale dirs alongside an intact dataset are simply reclaimed
-    os.makedirs(out + ".old")
-    shutil.copytree(out, out + ".compact")
-    spark.range(100).repartition(20).write.mode("overwrite").parquet(out)
-    sinks.compact_parquet(spark, out, target_file_bytes=1 << 30)
-    assert sorted(r["id"] for r in spark.read.parquet(out).collect()) == rows
-    assert not os.path.exists(out + ".old")
-    assert not os.path.exists(out + ".compact")
 
 
 def test_jdbc_sink_contract(spark, monkeypatch):

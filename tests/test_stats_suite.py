@@ -193,7 +193,7 @@ def test_auc_histogram_matches_pairwise(spark, scored):
 # ------------------------------------------------------------------ Wilson
 def test_wilson_bound_sanity(spark):
     """3/3 must NOT outrank 950/1000; bound is below p-hat and within [0,1)."""
-    from gmall_flink_230422_spark.plans.llm import _WILSON_EXPR
+    from gmall_flink_230422_spark.plans.evalq import _WILSON_EXPR
 
     df = spark.createDataFrame(
         [("tiny", 3, 3), ("big", 1000, 950), ("half", 10, 5)],
@@ -268,7 +268,7 @@ def test_span_corruption_round_trip(spark):
     import re
 
     from gmall_flink_230422_spark.io import load_table
-    from gmall_flink_230422_spark.plans.llm import q_span_corruption
+    from gmall_flink_230422_spark.plans.textq import q_span_corruption
 
     out = {r["doc_id"]: r for r in q_span_corruption(spark, SF).collect()}
     docs = {

@@ -40,7 +40,7 @@ from unittest import mock
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from gmall_flink_230422_spark.io import query_scope
-from gmall_flink_230422_spark.plans import llm, registry
+from gmall_flink_230422_spark.plans import curationq, registry
 from gmall_flink_230422_spark.session import get_spark
 
 # Queries whose plan legitimately contains a NON-scalar-aggregate
@@ -75,7 +75,7 @@ SCAN_REPEAT_OK: dict[str, int] = {
     # The audit runs with _materialize patched out (full
     # construction lineage), so the capstones' plans
     # show one scan per CONSUMER of the frames production materializes
-    # behind plans.llm._materialize (funnel: shingles + 3 keep lists +
+    # behind plans.curationq._materialize (funnel: shingles + 3 keep lists +
     # s4 fan out to the contamination probe, dedup chain and the 6-stage
     # flag cascade). The repeat documents that fan-out — the executed
     # plan reads each frame's materialized leaf once; the mode-equality
@@ -253,17 +253,19 @@ def main() -> None:
     argv = sys.argv[1:]
     check = "--check" in argv
     names = [a for a in argv if not a.startswith("--")]
-    # r12 (r11 verdict item 6): after the capstones moved their
-    # multi-consumer frames behind localCheckpoint, the audited plans
-    # showed O(1) RDD leaves — zero FileScans — so the BatchEvalPython /
-    # CartesianProduct / scan-repeat / shuffle gates no longer saw the
-    # construction subtrees of the three widest queries. The audit now
-    # builds every plan with plans.llm._materialize patched to the
-    # identity (materialization DISABLED), so PLANS.md shows the full
-    # construction lineage. Production/bench runs keep the materialized
+    # The capstones keep their multi-consumer frames behind
+    # localCheckpoint, so their materialized plans show O(1) RDD leaves —
+    # zero FileScans — and the BatchEvalPython / CartesianProduct /
+    # scan-repeat / shuffle gates would not see the construction subtrees
+    # of the three widest queries. The audit builds every plan with
+    # _materialize patched to the identity in the module the capstones
+    # read it from, plans.curationq (patching plans.common would leave
+    # curationq's own binding, and so the checkpointed plan, in place), so
+    # PLANS.md shows the full construction lineage. Production/bench runs
+    # keep the materialized
     # form; the full-lineage plan is a strict superset of what executes,
     # so the invariants gate the right tree.
-    mock.patch.object(llm, "_materialize", lambda df: df).start()
+    mock.patch.object(curationq, "_materialize", lambda df: df).start()
     spark = get_spark("audit-plans")
     specs = registry()
     # Subset runs write PLANS_partial.md so a spot-check can never

@@ -294,8 +294,8 @@ def _indexed_builders():
     """query name -> ensure_* function whose first call IS the index
     build; timed separately in --sf1 mode so the table shows the
     write-time cost and the recurring probe cost as different numbers."""
-    from gmall_flink_230422_spark.plans.r10 import ensure_ivf_index
-    from gmall_flink_230422_spark.plans.r11 import (
+    from gmall_flink_230422_spark.plans.artifactq import (
+        ensure_ivf_index,
         ensure_bpe_vocab,
         ensure_lm_model,
         ensure_lsh_store,
@@ -400,7 +400,7 @@ def main_sf1_knob() -> None:
     Run after --sf1: python tools/scale_probe.py --sf1-knob
     """
     from gmall_flink_230422_spark.operators import similarity
-    from gmall_flink_230422_spark.plans.llm import _embs_par
+    from gmall_flink_230422_spark.plans.common import _embs_par
 
     p = Path("SCALING_SF1.md")
     if not p.exists():
